@@ -35,6 +35,29 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
+# Build artifacts (fits, staged fixture dirs, drained stream rows,
+# localCheckpointed frames) keyed on (name, sf_dir, session).  The key
+# holds the session object itself, so no later session can reuse its
+# identity: a new session always rebuilds.
+_ARTIFACTS: dict[tuple[str, str, SparkSession], object] = {}
+
+
+def _artifact(
+    name: str, spark: SparkSession, sf_dir: str, build: Callable[[], object]
+):
+    """The value ``build()`` returned the first time ``name`` was asked
+    for on this session and sf_dir."""
+    key = (name, sf_dir, spark)
+    if key not in _ARTIFACTS:
+        _ARTIFACTS[key] = build()
+    return _ARTIFACTS[key]
+
+
+def clear_artifacts() -> None:
+    """Drop every memoized artifact (e.g. after stopping a session)."""
+    _ARTIFACTS.clear()
+
+
 # --------------------------------------------------------------------------
 # Flagship (E1 analog): per-channel descriptive stats over the events
 # stream — the reference's core computation (SURVEY §2.4 A1,
@@ -1197,9 +1220,9 @@ def q_cluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     never duplicate a (query, candidate) pair."""
     emb = _t(spark, sf_dir, "embeddings")
     # The centroid fit is the offline index-build step of IVF — run it
-    # once per sf_dir (deterministic: exact fixed-point means), so
-    # repeated gate/bench calls measure assignment + search, not
-    # re-fitting.
+    # once per (session, sf_dir) (deterministic: exact fixed-point
+    # means), so repeated gate/bench calls measure assignment + search,
+    # not re-fitting.
     cent_rows = _ivf_centroids(spark, sf_dir)
     assigned = emb.withColumn(
         "cluster", SIM.assign_nearest("embedding", cent_rows)
@@ -1216,15 +1239,15 @@ def q_cluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
     """Memoized offline IVF index-build: exact per-dim fixed-point means
     per label (deterministic, so caching is safe)."""
-    cent_rows = _FIXTURE_CACHE.get(("ivf_centroids", sf_dir))
-    if cent_rows is None:
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         cents = SIM.centroids_from_labels(emb, "label", "embedding", digits=6)
-        cent_rows = sorted(
+        return sorted(
             (r["cluster"], list(r["centroid"])) for r in cents.collect()
         )
-        _FIXTURE_CACHE[("ivf_centroids", sf_dir)] = cent_rows
-    return cent_rows
+
+    return _artifact("ivf_centroids", spark, sf_dir, build)
 
 
 def q_ann_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1809,16 +1832,10 @@ def q_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = [
         [(c, v[s * sub : (s + 1) * sub]) for c, v in cents] for s in range(8)
     ]
-    # Cache value carries the session OBJECT (not just id(spark) in
-    # the key): holding the reference pins the id against CPython
-    # reuse, and the identity check below rejects a localCheckpoint
-    # bound to a stopped context (round-9 review).
-    key = ("adc_encoded", sf_dir)
-    got = _FIXTURE_CACHE.get(key)
-    enc = got[1] if got is not None and got[0] is spark else None
-    if enc is None:
-        enc = SIM.pq_encode_candidates(emb, cbs, cents).localCheckpoint()
-        _FIXTURE_CACHE[key] = (spark, enc)
+    enc = _artifact(
+        "adc_encoded", spark, sf_dir,
+        lambda: SIM.pq_encode_candidates(emb, cbs, cents).localCheckpoint(),
+    )
     queries = emb.filter(F.col("vec_id") < 10)
     flat = SIM.pq_adc_topk(
         queries, emb, cbs, k=5, shortlist=20, encoded=enc
@@ -1832,9 +1849,9 @@ def q_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ served from a PERSISTED index (sinks/ann_index.py): the
     offline build writes cluster-PARTITIONED parquet codes + metadata
-    tables (build memoized per sf_dir); serving filters the codes scan
-    to the query batch's probed clusters — parquet partition pruning,
-    plan-asserted — then runs the identical ADC + exact rerank.  Same
+    tables (build memoized per (session, sf_dir)); serving filters the
+    codes scan to the query batch's probed clusters — parquet partition
+    pruning, plan-asserted — then runs the identical ADC + exact rerank.  Same
     fixture parameters as ivfpq_ann, so its DuckDB oracle applies
     verbatim: the round trip must be bit-identical to the in-memory
     operator."""
@@ -1843,8 +1860,7 @@ def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.sinks.ann_index import ivfpq_topk_indexed, write_ann_index
 
-    idx = _FIXTURE_CACHE.get(("ann_index_dir", sf_dir))
-    if idx is None:
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         cents = _ivf_centroids(spark, sf_dir)
         sub = len(cents[0][1]) // 8
@@ -1854,7 +1870,9 @@ def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         idx = tempfile.mkdtemp(prefix="sparkgraft_annidx_")
         write_ann_index(idx, emb, cents, cbs)
-        _FIXTURE_CACHE[("ann_index_dir", sf_dir)] = idx
+        return idx
+
+    idx = _artifact("ann_index_dir", spark, sf_dir, build)
     emb = _t(spark, sf_dir, "embeddings")
     return ivfpq_topk_indexed(
         emb.filter(F.col("vec_id") < 10),
@@ -1887,8 +1905,8 @@ def q_ann_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     forget = [11, 13, 17]
-    idx = _FIXTURE_CACHE.get(("ann_forget_dir", sf_dir))
-    if idx is None:
+
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         cents = _ivf_centroids(spark, sf_dir)
         sub = len(cents[0][1]) // 8
@@ -1899,7 +1917,9 @@ def q_ann_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = tempfile.mkdtemp(prefix="sparkgraft_annforget_")
         write_ann_index(idx, emb, cents, cbs)
         delete_ann_index(spark, idx, forget)
-        _FIXTURE_CACHE[("ann_forget_dir", sf_dir)] = idx
+        return idx
+
+    idx = _artifact("ann_forget_dir", spark, sf_dir, build)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
 
@@ -2237,20 +2257,16 @@ def _suffix_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans are n_shards-invariant (sharding only groups docs; the
     duplicate count is global by hash), so ONE localCheckpointed table
     serves all three and the window-hash Arrow kernel runs once per
-    (session, sf_dir) instead of once per consumer.  localCheckpoint
-    is session-bound, so the key carries id(spark) — the 3-element
-    _FIXTURE_CACHE discipline the determinism audit clears between
-    sessions."""
-    key = ("suffix_spans25", sf_dir, id(spark))
-    spans = _FIXTURE_CACHE.get(key)
-    if spans is None:
+    (session, sf_dir) instead of once per consumer."""
+
+    def build():
         from sparkgraft.operators import suffixdedup as SFX
 
-        spans = SFX.exact_substring_spans(
+        return SFX.exact_substring_spans(
             _t(spark, sf_dir, "documents"), min_len=25, n_shards=16
         ).localCheckpoint()
-        _FIXTURE_CACHE[key] = spans
-    return spans
+
+    return _artifact("suffix_spans25", spark, sf_dir, build)
 
 
 def q_suffix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2481,12 +2497,10 @@ def q_suffix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-index tie rule, duplicate counting over the SELECTED stream
     only, and the widened island merge (gap > 28) — so the budget
     mode's span algebra is hash-for-hash oracle-checked, not just
-    recall-bound tested.  Served from a session span cache (the
-    _suffix_spans discipline — 3-element key, cleared between
-    determinism-audit sessions)."""
-    key = ("suffix_spans25_s4", sf_dir, id(spark))
-    spans = _FIXTURE_CACHE.get(key)
-    if spans is None:
+    recall-bound tested.  Served from a session span artifact, like
+    _suffix_spans."""
+
+    def build():
         from sparkgraft.operators import suffixdedup as SFX
 
         docs = _t(spark, sf_dir, "documents").select(
@@ -2498,11 +2512,11 @@ def q_suffix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("text"))
             .alias("text"),
         )
-        spans = SFX.exact_substring_spans(
+        return SFX.exact_substring_spans(
             docs, min_len=25, n_shards=8, stride=4
         ).localCheckpoint()
-        _FIXTURE_CACHE[key] = spans
-    return spans
+
+    return _artifact("suffix_spans25_s4", spark, sf_dir, build)
 
 
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2549,14 +2563,15 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The CC fit is an iterative driver loop over a deterministic
     # fixture — cache its labels per (session, sf_dir) like the other
     # iterative fits (BPE/classifier/PCA).
-    cached = _FIXTURE_CACHE.get(("er_labels", sf_dir, id(spark)))
-    if cached is None:
-        cached = [
+    def build():
+        return [
             (r["id"], r["cluster_id"])
             for r in connected_components_twophase(pairs).collect()
         ]
-        _FIXTURE_CACHE[("er_labels", sf_dir, id(spark))] = cached
-    labels = spark.createDataFrame(cached, "id long, cluster_id long")
+
+    labels = spark.createDataFrame(
+        _artifact("er_labels", spark, sf_dir, build), "id long, cluster_id long"
+    )
     joined = recs.join(
         labels, recs["rec_id"] == labels["id"], "left"
     ).select(
@@ -2582,7 +2597,7 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch weighted_sample of the WHOLE corpus, which SQL mirrors
     directly): docs arrive as two files (even/odd ids), k=40 sample
     weighted by n_chars maintained in O(k) batch-keyed state.
-    Memoized per sf_dir like the other streaming fixtures."""
+    Memoized per (session, sf_dir) like the other streaming fixtures."""
     import glob
     import os
     import shutil
@@ -2590,45 +2605,44 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.pipeline import sample_monitor
 
-    cached = _FIXTURE_CACHE.get(("stream_sample", sf_dir))
     schema = "doc_id long, source string, n_chars long"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_ssamp_")
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    for i, pred in (
-        (1, F.col("doc_id") % 2 == 0),
-        (2, F.col("doc_id") % 2 == 1),
-    ):
-        docs.filter(pred).coalesce(1).write.mode("overwrite").json(
-            f"{tmp}/stage_{i}"
+    def build():
+        docs = _t(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars"
         )
-        src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-        shutil.move(src, f"{tmp}/in/batch_{i}.json")
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_ssamp_")
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        for i, pred in (
+            (1, F.col("doc_id") % 2 == 0),
+            (2, F.col("doc_id") % 2 == 1),
+        ):
+            docs.filter(pred).coalesce(1).write.mode("overwrite").json(
+                f"{tmp}/stage_{i}"
+            )
+            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
+            shutil.move(src, f"{tmp}/in/batch_{i}.json")
 
-    got: dict[int, list] = {}
+        got: dict[int, list] = {}
 
-    def sink(df, batch_id):
-        got[batch_id] = [
-            (r["doc_id"], r["source"], r["n_chars"]) for r in df.collect()
-        ]
+        def sink(df, batch_id):
+            got[batch_id] = [
+                (r["doc_id"], r["source"], r["n_chars"]) for r in df.collect()
+            ]
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = sample_monitor(
-        stream, "n_chars", ["doc_id"], 40, f"{tmp}/ckpt", sink,
-        salt="stream", carry_cols=["source"],
-    )
-    q.awaitTermination(300)
-    rows = sorted(got[max(got)])
-    _FIXTURE_CACHE[("stream_sample", sf_dir)] = rows
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
+        )
+        q = sample_monitor(
+            stream, "n_chars", ["doc_id"], 40, f"{tmp}/ckpt", sink,
+            salt="stream", carry_cols=["source"],
+        )
+        q.awaitTermination(300)
+        return sorted(got[max(got)])
+
+    rows = _artifact("stream_sample", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -2695,13 +2709,18 @@ def q_snapshot_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v0's files), v2 overwrites with %4==2; every version is then read
     back THROUGH ITS MANIFEST and summarized.  Oracle-checkable
     because each snapshot's content is a deterministic slice of
-    orders.  Staging memoized per sf_dir."""
+    orders.  Staging memoized per (session, sf_dir)."""
+    return _multi_version_summary(spark, _snapshot_table(spark, sf_dir), 3)
+
+
+def _snapshot_table(spark: SparkSession, sf_dir: str) -> str:
+    """snapshot_travel's versioned orders table (three commits), staged
+    once per (session, sf_dir); versioned_reads reads it too."""
     import tempfile
 
-    from sparkgraft.sinks.versioned import read_versioned, write_versioned
+    from sparkgraft.sinks.versioned import write_versioned
 
-    t = _FIXTURE_CACHE.get(("snapshot_table", sf_dir))
-    if t is None:
+    def build():
         t = tempfile.mkdtemp(prefix="sparkgraft_vtbl_")
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -2722,27 +2741,22 @@ def q_snapshot_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.filter(k % 4 == 2), t, mode="overwrite",
             stats_cols=["o_orderkey"], sort_col="o_orderkey", n_files=4,
         )
-        _FIXTURE_CACHE[("snapshot_table", sf_dir)] = t
-    return _multi_version_summary(spark, t, 3)
+        return t
 
-
-# The unigram fit is deterministic per (session, sf_dir) — hard-EM
-# runs driver-side jobs over the word table, so cache it the way the
-# BPE merge table is cached (both unigram queries share one fit).
-_UNIGRAM_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return _artifact("snapshot_table", spark, sf_dir, build)
 
 
 def _unigram_pieces_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hard-EM unigram fit (driver-side jobs over the word table),
+    shared by both unigram queries."""
     from sparkgraft.operators.unigram import train_unigram
 
-    key = (id(spark), sf_dir)
-    got = _UNIGRAM_CACHE.get(key)
-    if got is None:
-        got = train_unigram(
+    return _artifact(
+        "unigram", spark, sf_dir,
+        lambda: train_unigram(
             _t(spark, sf_dir, "documents"), vocab_size=256, iters=2
-        )
-        _UNIGRAM_CACHE[key] = got
-    return got
+        ),
+    )
 
 
 def q_unigram_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2787,8 +2801,8 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from a PERSISTED inverted index (sinks/
     bm25_index.py): the offline build writes md5-bucket-partitioned
-    postings + term df + corpus stats (build memoized per sf_dir);
-    serving prunes the postings scan to the query terms' buckets
+    postings + term df + corpus stats (build memoized per (session,
+    sf_dir)); serving prunes the postings scan to the query terms' buckets
     (parquet PartitionFilters, plan-asserted) and replays bm25_rank's
     exact scoring — same fixture as bm25_search, so its DuckDB oracle
     applies verbatim: the round trip must be bit-identical to the
@@ -2797,11 +2811,12 @@ def q_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.sinks.bm25_index import bm25_topk_indexed, write_bm25_index
 
-    idx = _FIXTURE_CACHE.get(("bm25_index_dir", sf_dir))
-    if idx is None:
+    def build():
         idx = tempfile.mkdtemp(prefix="sparkgraft_bm25idx_")
         write_bm25_index(idx, _t(spark, sf_dir, "documents"))
-        _FIXTURE_CACHE[("bm25_index_dir", sf_dir)] = idx
+        return idx
+
+    idx = _artifact("bm25_index_dir", spark, sf_dir, build)
     return bm25_topk_indexed(spark, idx, ["hash", "join", "vector"], k=10)
 
 
@@ -2829,12 +2844,14 @@ def q_bm25_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     forget = [459, 292, 476]
-    idx = _FIXTURE_CACHE.get(("bm25_forget_dir", sf_dir))
-    if idx is None:
+
+    def build():
         idx = tempfile.mkdtemp(prefix="sparkgraft_bm25forget_")
         write_bm25_index(idx, _t(spark, sf_dir, "documents"))
         delete_bm25_index(spark, idx, forget)
-        _FIXTURE_CACHE[("bm25_forget_dir", sf_dir)] = idx
+        return idx
+
+    idx = _artifact("bm25_forget_dir", spark, sf_dir, build)
 
     def serve():
         return bm25_topk_indexed(
@@ -2865,11 +2882,6 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# PCA fit collects the d x d covariance to the driver — deterministic
-# per (session, sf_dir), so cache it like the BPE/classifier fits.
-_PCA_CACHE: dict[tuple[int, str], tuple] = {}
-
-
 def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA projection of the embedding corpus onto its top-8
     components (fit: exact distributed covariance → driver INTEGER
@@ -2884,14 +2896,13 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, no libm eigensolver on either side."""
     from sparkgraft.operators.linalg import pca_components, pca_project
 
-    key = (id(spark), sf_dir)
-    got = _PCA_CACHE.get(key)
-    if got is None:
-        got = pca_components(
+    # The fit collects the d x d covariance to the driver.
+    comps, _vals, mean = _artifact(
+        "pca", spark, sf_dir,
+        lambda: pca_components(
             _t(spark, sf_dir, "embeddings"), "embedding", 64, 8
-        )
-        _PCA_CACHE[key] = got
-    comps, _vals, mean = got
+        ),
+    )
     # Gate surface: one scalar DOUBLE row per (vector, component) —
     # array result columns are the r10 unproven-fetch class.
     return pca_project(
@@ -2899,29 +2910,24 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.posexplode("pc").alias("comp", "pc"))
 
 
-# The trained weight vector is deterministic per (session, sf_dir) —
-# training runs driver-side aggregate jobs, so cache it the way the
-# BPE merge table is cached (both classifier queries share one fit).
-_CLS_CACHE: dict[tuple[int, str], list] = {}
-
 _CLS_ITERS = 4
 
 
 def _trained_weights(spark: SparkSession, sf_dir: str) -> list:
+    """The classifier's weight vector (driver-side aggregate jobs),
+    shared by both classifier queries."""
     from sparkgraft.operators.trainer import doc_features, train_hard_logistic
 
-    key = (id(spark), sf_dir)
-    got = _CLS_CACHE.get(key)
-    if got is None:
+    def build():
         feats = doc_features(_t(spark, sf_dir, "documents"))
-        got = train_hard_logistic(
+        return train_hard_logistic(
             feats,
             ["x_words", "x_wordlen", "x_digit"],
             "label",
             n_iters=_CLS_ITERS,
         )
-        _CLS_CACHE[key] = got
-    return got
+
+    return _artifact("classifier", spark, sf_dir, build)
 
 
 def q_train_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3102,21 +3108,15 @@ def q_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.maxsim_rerank(q, d, k=3)
 
 
-# The learned merge table is deterministic per (session, sf_dir) — the
-# training loop runs driver-side jobs, so cache it the way read_table
-# caches scan plans (both gate queries share one training run).
-_BPE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The learned merge table (driver-side training loop), shared by
+    both gate queries."""
     from sparkgraft.operators.bpe import train_bpe
 
-    key = (id(spark), sf_dir)
-    got = _BPE_CACHE.get(key)
-    if got is None:
-        got = train_bpe(_t(spark, sf_dir, "documents"), n_merges=8)
-        _BPE_CACHE[key] = got
-    return got
+    return _artifact(
+        "bpe", spark, sf_dir,
+        lambda: train_bpe(_t(spark, sf_dir, "documents"), n_merges=8),
+    )
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3403,12 +3403,6 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Composite-query fixtures are deterministic per sf_dir — memoized so
-# repeated gate/bench invocations don't redo temp-dir IO (or re-drain a
-# stream) on every call.
-_FIXTURE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 end-to-end (rows-only check): SGRF binary sample files →
     mapInPandas decode (S1) → per-file channel stats (A1) → KV hash
@@ -3417,7 +3411,7 @@ def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fixture files are generated deterministically from the events
     table (two 10-minute "files" of 100 Hz-style samples), once per
-    sf_dir.
+    (session, sf_dir).
     """
     import tempfile
 
@@ -3429,8 +3423,7 @@ def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkgraft.sinks.kv import register_image, stats_to_kv
 
-    tmp = _FIXTURE_CACHE.get(("e1_flagship", sf_dir))
-    if tmp is None:
+    def build():
         events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 1000)
         pdf = events.select("event_id", "value").orderBy("event_id").toPandas()
         tmp = tempfile.mkdtemp(prefix="sparkgraft_e1_")
@@ -3448,7 +3441,9 @@ def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             blob = encode_sample_matrix(["T-T1_L2", "AL_GAL"], 100.0, mat)
             with open(f"{tmp}/Logger1_2024-01-0{i + 1}_00-00-00.dat", "wb") as fh:
                 fh.write(blob)
-        _FIXTURE_CACHE[("e1_flagship", sf_dir)] = tmp
+        return tmp
+
+    tmp = _artifact("e1_flagship", spark, sf_dir, build)
 
     samples = decode_sample_files(
         spark.read.format("binaryFile").load(tmp)
@@ -3658,60 +3653,59 @@ def q_streaming_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, drained through the FilePipeline with AvailableNow, and the
     per-file channel stats collected from the KV sink are returned.
 
-    The drained result is memoized per sf_dir: a second call returns
-    the cached rows without re-staging files or re-running the stream
-    (a fresh checkpoint would otherwise be required every call)."""
+    The drained result is memoized per (session, sf_dir): a second call
+    returns the cached rows without re-staging files or re-running the
+    stream (a fresh checkpoint would otherwise be required every call)."""
     import tempfile
 
     from sparkgraft.sinks.kv import stats_to_kv
     from sparkgraft.streaming.pipeline import FilePipeline
 
-    cached = _FIXTURE_CACHE.get(("streaming_stats", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(cached, "field string, value string")
-
-    events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_stream_")
-    inp = f"{tmp}/in"
-    for day in (1, 2):
-        (
-            events.filter(F.dayofmonth("ts") == day)
-            .select(
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-                F.col("event_type").alias("channel"),
-                "value",
+    def build():
+        events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_stream_")
+        inp = f"{tmp}/in"
+        for day in (1, 2):
+            (
+                events.filter(F.dayofmonth("ts") == day)
+                .select(
+                    F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+                    F.col("event_type").alias("channel"),
+                    "value",
+                )
+                .coalesce(1)
+                .write.mode("overwrite")
+                .option("header", "true")
+                .csv(f"{inp}/staging_{day}")
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .csv(f"{inp}/staging_{day}")
-        )
-    import glob
-    import os
-    import shutil
+        import glob
+        import os
+        import shutil
 
-    os.makedirs(f"{inp}/arrivals", exist_ok=True)
-    for day in (1, 2):
-        for i, f in enumerate(sorted(glob.glob(f"{inp}/staging_{day}/part-*.csv"))):
-            shutil.move(f, f"{inp}/arrivals/Logger1_2024-01-0{day}_00-00-0{i}.csv")
+        os.makedirs(f"{inp}/arrivals", exist_ok=True)
+        for day in (1, 2):
+            for i, f in enumerate(sorted(glob.glob(f"{inp}/staging_{day}/part-*.csv"))):
+                shutil.move(f, f"{inp}/arrivals/Logger1_2024-01-0{day}_00-00-0{i}.csv")
 
-    collected: list[tuple[str, str]] = []
+        collected: list[tuple[str, str]] = []
 
-    def sink(result: DataFrame, stem: str) -> None:
-        for r in stats_to_kv(result, "channel", file_stem=stem).collect():
-            collected.append((r["field"], r["value"]))
+        def sink(result: DataFrame, stem: str) -> None:
+            for r in stats_to_kv(result, "channel", file_stem=stem).collect():
+                collected.append((r["field"], r["value"]))
 
-    FilePipeline(
-        spark,
-        name="graded",
-        input_dir=f"{inp}/arrivals",
-        schema="ts TIMESTAMP, channel STRING, value DOUBLE",
-        transform=lambda df: S.channel_stats(df, ["channel"], "value"),
-        sink=sink,
-        checkpoint_dir=f"{tmp}/ckpt",
-    ).run_available()
-    _FIXTURE_CACHE[("streaming_stats", sf_dir)] = list(collected)
-    return spark.createDataFrame(collected, "field string, value string")
+        FilePipeline(
+            spark,
+            name="graded",
+            input_dir=f"{inp}/arrivals",
+            schema="ts TIMESTAMP, channel STRING, value DOUBLE",
+            transform=lambda df: S.channel_stats(df, ["channel"], "value"),
+            sink=sink,
+            checkpoint_dir=f"{tmp}/ckpt",
+        ).run_available()
+        return collected
+
+    rows = _artifact("streaming_stats", spark, sf_dir, build)
+    return spark.createDataFrame(rows, "field string, value string")
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3725,56 +3719,54 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.pipeline import dedup_stream
 
-    cached = _FIXTURE_CACHE.get(("stream_dedup", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(cached, "event_type string, n long")
-
-    events = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 1000)
-        .select(
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-            "event_id",
-            "event_type",
+    def build():
+        events = (
+            _t(spark, sf_dir, "events")
+            .filter(F.col("event_id") < 1000)
+            .select(
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+                "event_id",
+                "event_type",
+            )
         )
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_sdedup_")
-    for i in (1, 2):  # identical content: file 2 is 100% duplicates
-        events.coalesce(1).write.mode("overwrite").option(
-            "header", "true"
-        ).csv(f"{tmp}/staging_{i}")
-    import glob
-    import os
-    import shutil
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_sdedup_")
+        for i in (1, 2):  # identical content: file 2 is 100% duplicates
+            events.coalesce(1).write.mode("overwrite").option(
+                "header", "true"
+            ).csv(f"{tmp}/staging_{i}")
+        import glob
+        import os
+        import shutil
 
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    for i in (1, 2):
-        src = sorted(glob.glob(f"{tmp}/staging_{i}/part-*.csv"))[0]
-        shutil.move(src, f"{tmp}/in/batch_{i}.csv")
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        for i in (1, 2):
+            src = sorted(glob.glob(f"{tmp}/staging_{i}/part-*.csv"))[0]
+            shutil.move(src, f"{tmp}/in/batch_{i}.csv")
 
-    stream = (
-        spark.readStream.schema("ts TIMESTAMP, event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .option("header", "true")
-        .csv(f"{tmp}/in")
-    )
-    deduped = dedup_stream(stream, ["event_id"], ts_col="ts", watermark="1 hour")
-    qname = f"sdedup_{abs(hash(tmp)) % 10**8}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = [
-        (r["event_type"], r["n"])
-        for r in spark.sql(
-            f"SELECT event_type, count(*) AS n FROM {qname} GROUP BY 1"
-        ).collect()
-    ]
-    _FIXTURE_CACHE[("stream_dedup", sf_dir)] = rows
+        stream = (
+            spark.readStream.schema("ts TIMESTAMP, event_id LONG, event_type STRING")
+            .option("maxFilesPerTrigger", "1")
+            .option("header", "true")
+            .csv(f"{tmp}/in")
+        )
+        deduped = dedup_stream(stream, ["event_id"], ts_col="ts", watermark="1 hour")
+        qname = f"sdedup_{abs(hash(tmp)) % 10**8}"
+        q = (
+            deduped.writeStream.format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return [
+            (r["event_type"], r["n"])
+            for r in spark.sql(
+                f"SELECT event_type, count(*) AS n FROM {qname} GROUP BY 1"
+            ).collect()
+        ]
+
+    rows = _artifact("stream_dedup", spark, sf_dir, build)
     return spark.createDataFrame(rows, "event_type string, n long")
 
 
@@ -3786,67 +3778,63 @@ def q_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-batch MinHash check against the persisted signature index,
     admitted signatures appended).  Returns per-batch admit/reject
     counts; replay idempotence is asserted in tests/test_round4_ops.py.
-    Memoized per sf_dir like the other streaming fixtures."""
+    Memoized per (session, sf_dir) like the other streaming fixtures."""
     import json as _json
     import tempfile
 
     from sparkgraft.streaming.pipeline import dedup_admission
 
-    cached = _FIXTURE_CACHE.get(("stream_admission", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "batch long, admitted long, rejected long"
-        )
+    def build():
+        docs = [
+            (str(r["doc_id"]), r["text"])
+            for r in _t(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 60)
+            .select("doc_id", "text")
+            .orderBy("doc_id")
+            .collect()
+        ]
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_sadm_")
+        import os
 
-    docs = [
-        (str(r["doc_id"]), r["text"])
-        for r in _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_sadm_")
-    import os
-
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    b1 = docs[:40]
-    b2 = [(f"re_{i}", t) for i, t in b1[:20]] + docs[40:]
-    for n_batch, (name, rows) in enumerate(
-        (("batch_1", b1), ("batch_2", b2))
-    ):
-        with open(f"{tmp}/in/{name}.json", "w") as fh:
-            fh.write(
-                "\n".join(
-                    _json.dumps({"doc_id": i, "text": t}) for i, t in rows
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        b1 = docs[:40]
+        b2 = [(f"re_{i}", t) for i, t in b1[:20]] + docs[40:]
+        for n_batch, (name, rows) in enumerate(
+            (("batch_1", b1), ("batch_2", b2))
+        ):
+            with open(f"{tmp}/in/{name}.json", "w") as fh:
+                fh.write(
+                    "\n".join(
+                        _json.dumps({"doc_id": i, "text": t}) for i, t in rows
+                    )
                 )
+            # Distinct ascending mtimes pin the (order-sensitive) batch
+            # order — same-millisecond writes otherwise let the file
+            # source flip which file is batch 0 (the CUSUM fixture
+            # lesson; caught by the oracle-parity test going flaky).
+            os.utime(
+                f"{tmp}/in/{name}.json",
+                (1700000000 + n_batch, 1700000000 + n_batch),
             )
-        # Distinct ascending mtimes pin the (order-sensitive) batch
-        # order — same-millisecond writes otherwise let the file
-        # source flip which file is batch 0 (the CUSUM fixture
-        # lesson; caught by the oracle-parity test going flaky).
-        os.utime(
-            f"{tmp}/in/{name}.json",
-            (1700000000 + n_batch, 1700000000 + n_batch),
+        got: dict[int, tuple[int, int]] = {}
+
+        def sink(df, batch_id):
+            a = df.filter(~F.col("is_duplicate")).count()
+            r = df.count() - a
+            got[batch_id] = (a, r)
+
+        stream = (
+            spark.readStream.schema("doc_id string, text string")
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
         )
-    got: dict[int, tuple[int, int]] = {}
+        q = dedup_admission(
+            stream, f"{tmp}/hist", f"{tmp}/ckpt", sink, min_jaccard=0.5
+        )
+        q.awaitTermination(300)
+        return [(int(b), int(a), int(r)) for b, (a, r) in sorted(got.items())]
 
-    def sink(df, batch_id):
-        a = df.filter(~F.col("is_duplicate")).count()
-        r = df.count() - a
-        got[batch_id] = (a, r)
-
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = dedup_admission(
-        stream, f"{tmp}/hist", f"{tmp}/ckpt", sink, min_jaccard=0.5
-    )
-    q.awaitTermination(300)
-    rows = [(int(b), int(a), int(r)) for b, (a, r) in sorted(got.items())]
-    _FIXTURE_CACHE[("stream_admission", sf_dir)] = rows
+    rows = _artifact("stream_admission", spark, sf_dir, build)
     return spark.createDataFrame(rows, "batch long, admitted long, rejected long")
 
 
@@ -3861,7 +3849,7 @@ def q_dedup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     content re-admit; replicas of surviving docs stay flagged.  Output
     is batch 2's full per-doc verdict (streaming/pipeline.py:
     dedup_admission/delete_dedup_index/compact_dedup_index).
-    Memoized per sf_dir like the other streaming fixtures."""
+    Memoized per (session, sf_dir) like the other streaming fixtures."""
     import json as _json
     import os
     import tempfile
@@ -3872,55 +3860,54 @@ def q_dedup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_dedup_index,
     )
 
-    cached = _FIXTURE_CACHE.get(("dedup_forget", sf_dir))
     schema = "doc_id string, is_duplicate boolean, dup_of string, jaccard double"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    docs = [
-        (str(r["doc_id"]), r["text"])
-        for r in _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_dforget_")
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    hist, ckpt = f"{tmp}/hist", f"{tmp}/ckpt"
-    got: dict[int, list] = {}
+    def build():
+        docs = [
+            (str(r["doc_id"]), r["text"])
+            for r in _t(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 60)
+            .select("doc_id", "text")
+            .orderBy("doc_id")
+            .collect()
+        ]
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_dforget_")
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        hist, ckpt = f"{tmp}/hist", f"{tmp}/ckpt"
+        got: dict[int, list] = {}
 
-    def sink(df, batch_id):
-        got[batch_id] = sorted(
-            (r["doc_id"], bool(r["is_duplicate"]), r["dup_of"], r["jaccard"])
-            for r in df.collect()
-        )
-
-    def drain(name, rows, mtime):
-        with open(f"{tmp}/in/{name}", "w") as fh:
-            fh.write(
-                "\n".join(
-                    _json.dumps({"doc_id": i, "text": t}) for i, t in rows
-                )
+        def sink(df, batch_id):
+            got[batch_id] = sorted(
+                (r["doc_id"], bool(r["is_duplicate"]), r["dup_of"], r["jaccard"])
+                for r in df.collect()
             )
-        os.utime(f"{tmp}/in/{name}", (mtime, mtime))
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .json(f"{tmp}/in")
-        )
-        q = dedup_admission(stream, hist, ckpt, sink, min_jaccard=0.5)
-        q.awaitTermination(300)
 
-    b1 = docs[:40]
-    drain("batch_1.json", b1, 1700000000)
-    # Forget the 10 smallest-id docs: tombstone, then physical removal.
-    delete_dedup_index(spark, hist, [i for i, _ in b1[:10]])
-    compact_dedup_index(spark, hist)
-    b2 = [(f"re_{i}", t) for i, t in b1[:20]] + docs[40:]
-    drain("batch_2.json", b2, 1700000001)
-    rows = got[1]
-    _FIXTURE_CACHE[("dedup_forget", sf_dir)] = rows
+        def drain(name, rows, mtime):
+            with open(f"{tmp}/in/{name}", "w") as fh:
+                fh.write(
+                    "\n".join(
+                        _json.dumps({"doc_id": i, "text": t}) for i, t in rows
+                    )
+                )
+            os.utime(f"{tmp}/in/{name}", (mtime, mtime))
+            stream = (
+                spark.readStream.schema("doc_id string, text string")
+                .option("maxFilesPerTrigger", "1")
+                .json(f"{tmp}/in")
+            )
+            q = dedup_admission(stream, hist, ckpt, sink, min_jaccard=0.5)
+            q.awaitTermination(300)
+
+        b1 = docs[:40]
+        drain("batch_1.json", b1, 1700000000)
+        # Forget the 10 smallest-id docs: tombstone, then physical removal.
+        delete_dedup_index(spark, hist, [i for i, _ in b1[:10]])
+        compact_dedup_index(spark, hist)
+        b2 = [(f"re_{i}", t) for i, t in b1[:20]] + docs[40:]
+        drain("batch_2.json", b2, 1700000001)
+        return got[1]
+
+    rows = _artifact("dedup_forget", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -3930,56 +3917,52 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-batch one-pass sketch, cell-wise merge into bounded state);
     returns the FINAL per-type p50/p90/p99 — bit-identical to the
     batch ddsketch operator on the union (the merge law is exact;
-    asserted in tests).  Memoized per sf_dir like the other streaming
-    fixtures."""
+    asserted in tests).  Memoized per (session, sf_dir) like the other
+    streaming fixtures."""
     import tempfile
 
     from sparkgraft.streaming.pipeline import quantile_monitor
 
-    cached = _FIXTURE_CACHE.get(("stream_quantiles", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "event_type string, q double, n_values long, estimate double"
+    def build():
+        ev = (
+            _t(spark, sf_dir, "events")
+            .filter((F.col("event_id") < 2000) & ~F.isnan("value"))
+            .select("event_id", "event_type", "value")
         )
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_squant_")
+        import os
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter((F.col("event_id") < 2000) & ~F.isnan("value"))
-        .select("event_id", "event_type", "value")
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_squant_")
-    import os
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        for i, pred in ((1, F.col("event_id") % 2 == 0), (2, F.col("event_id") % 2 == 1)):
+            ev.filter(pred).coalesce(1).write.mode("overwrite").json(
+                f"{tmp}/stage_{i}"
+            )
+            import glob
+            import shutil
 
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    for i, pred in ((1, F.col("event_id") % 2 == 0), (2, F.col("event_id") % 2 == 1)):
-        ev.filter(pred).coalesce(1).write.mode("overwrite").json(
-            f"{tmp}/stage_{i}"
+            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
+            shutil.move(src, f"{tmp}/in/batch_{i}.json")
+
+        got: dict[int, list] = {}
+
+        def sink(df, batch_id):
+            got[batch_id] = [
+                (r["event_type"], r["q"], r["n_values"], r["estimate"])
+                for r in df.collect()
+            ]
+
+        stream = (
+            spark.readStream.schema("event_id long, event_type string, value double")
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
         )
-        import glob
-        import shutil
+        q = quantile_monitor(
+            stream, "value", f"{tmp}/ckpt", sink, group_cols=["event_type"]
+        )
+        q.awaitTermination(300)
+        return sorted(got[max(got)])
 
-        src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-        shutil.move(src, f"{tmp}/in/batch_{i}.json")
-
-    got: dict[int, list] = {}
-
-    def sink(df, batch_id):
-        got[batch_id] = [
-            (r["event_type"], r["q"], r["n_values"], r["estimate"])
-            for r in df.collect()
-        ]
-
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = quantile_monitor(
-        stream, "value", f"{tmp}/ckpt", sink, group_cols=["event_type"]
-    )
-    q.awaitTermination(300)
-    rows = sorted(got[max(got)])
-    _FIXTURE_CACHE[("stream_quantiles", sf_dir)] = rows
+    rows = _artifact("stream_quantiles", spark, sf_dir, build)
     return spark.createDataFrame(
         rows, "event_type string, q double, n_values long, estimate double"
     )
@@ -3994,7 +3977,7 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer KS vs the baseline after every batch).  Returns the final
     per-type verdicts; statistic is bit-identical to batch
     ks_test_binned on the streamed union (asserted in tests).
-    Memoized per sf_dir like the other streaming fixtures."""
+    Memoized per (session, sf_dir) like the other streaming fixtures."""
     import glob
     import os
     import shutil
@@ -4002,56 +3985,55 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.pipeline import ks_monitor
 
-    cached = _FIXTURE_CACHE.get(("stream_ks", sf_dir))
     schema = "event_type string, n_a long, n_b long, ks_stat double, drift boolean"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter((F.col("event_id") < 4000) & ~F.isnan("value"))
-        .select("event_id", "user_id", "event_type", "value")
-    )
-    baseline = ev.filter(F.col("user_id") % 2 == 0).select(
-        "event_type", "value"
-    )
-    cur = ev.filter(F.col("user_id") % 2 == 1)
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_sks_")
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    stages = (
-        (1, cur.filter(F.col("event_id") % 2 == 0).select("event_type", "value")),
-        (
-            2,
-            cur.filter(F.col("event_id") % 2 == 1).select(
-                "event_type", (F.col("value") * 1.5).alias("value")
+    def build():
+        ev = (
+            _t(spark, sf_dir, "events")
+            .filter((F.col("event_id") < 4000) & ~F.isnan("value"))
+            .select("event_id", "user_id", "event_type", "value")
+        )
+        baseline = ev.filter(F.col("user_id") % 2 == 0).select(
+            "event_type", "value"
+        )
+        cur = ev.filter(F.col("user_id") % 2 == 1)
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_sks_")
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        stages = (
+            (1, cur.filter(F.col("event_id") % 2 == 0).select("event_type", "value")),
+            (
+                2,
+                cur.filter(F.col("event_id") % 2 == 1).select(
+                    "event_type", (F.col("value") * 1.5).alias("value")
+                ),
             ),
-        ),
-    )
-    for i, df in stages:
-        df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-        src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-        shutil.move(src, f"{tmp}/in/batch_{i}.json")
+        )
+        for i, df in stages:
+            df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
+            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
+            shutil.move(src, f"{tmp}/in/batch_{i}.json")
 
-    got: dict[int, list] = {}
+        got: dict[int, list] = {}
 
-    def sink(df, batch_id):
-        got[batch_id] = [
-            (r["event_type"], r["n_a"], r["n_b"], r["ks_stat"], r["drift"])
-            for r in df.collect()
-        ]
+        def sink(df, batch_id):
+            got[batch_id] = [
+                (r["event_type"], r["n_a"], r["n_b"], r["ks_stat"], r["drift"])
+                for r in df.collect()
+            ]
 
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = ks_monitor(
-        stream, "value", baseline, f"{tmp}/ckpt", sink,
-        group_cols=["event_type"],
-    )
-    q.awaitTermination(300)
-    rows = sorted(got[max(got)])
-    _FIXTURE_CACHE[("stream_ks", sf_dir)] = rows
+        stream = (
+            spark.readStream.schema("event_type string, value double")
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
+        )
+        q = ks_monitor(
+            stream, "value", baseline, f"{tmp}/ckpt", sink,
+            group_cols=["event_type"],
+        )
+        q.awaitTermination(300)
+        return sorted(got[max(got)])
+
+    rows = _artifact("stream_ks", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -4061,7 +4043,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase bounded to [view, view+30 min] — watermarks on both sides
     bound the join state.  Per-user pair counts; equivalence with the
     batch interval join is asserted in tests/test_streaming_joins.py.
-    Memoized per sf_dir like the other streaming fixtures."""
+    Memoized per (session, sf_dir) like the other streaming fixtures."""
     import glob
     import os
     import shutil
@@ -4069,59 +4051,57 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.joins import interval_join_streams
 
-    cached = _FIXTURE_CACHE.get(("stream_join", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(cached, "user_id long, n_pairs long")
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 4000)
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("vts"),
-        "user_id",
-        F.col("event_id").alias("view_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("pts"),
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_sjoin_")
-    for name, df in (("views", views), ("purchases", purchases)):
-        df.coalesce(1).write.mode("overwrite").option("header", "true").csv(
-            f"{tmp}/stage_{name}"
+    def build():
+        ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 4000)
+        views = ev.filter(F.col("event_type") == "view").select(
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("vts"),
+            "user_id",
+            F.col("event_id").alias("view_id"),
         )
-        os.makedirs(f"{tmp}/{name}", exist_ok=True)
-        src = sorted(glob.glob(f"{tmp}/stage_{name}/part-*.csv"))[0]
-        shutil.move(src, f"{tmp}/{name}/data.csv")
-    vs = (
-        spark.readStream.schema("vts TIMESTAMP, user_id LONG, view_id LONG")
-        .option("header", "true")
-        .csv(f"{tmp}/views")
-    )
-    ps = (
-        spark.readStream.schema("pts TIMESTAMP, user_id LONG, purchase_id LONG")
-        .option("header", "true")
-        .csv(f"{tmp}/purchases")
-    )
-    joined = interval_join_streams(
-        vs, ps, "user_id", "vts", "pts",
-        watermark="2 hours", lower_sec=0, upper_sec=1800,
-    )
-    qname = f"sjoin_{abs(hash(tmp)) % 10**8}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = [
-        (r["user_id"], r["n_pairs"])
-        for r in spark.sql(
-            f"SELECT user_id, count(*) AS n_pairs FROM {qname} GROUP BY 1"
-        ).collect()
-    ]
-    _FIXTURE_CACHE[("stream_join", sf_dir)] = rows
+        purchases = ev.filter(F.col("event_type") == "purchase").select(
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("pts"),
+            "user_id",
+            F.col("event_id").alias("purchase_id"),
+        )
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_sjoin_")
+        for name, df in (("views", views), ("purchases", purchases)):
+            df.coalesce(1).write.mode("overwrite").option("header", "true").csv(
+                f"{tmp}/stage_{name}"
+            )
+            os.makedirs(f"{tmp}/{name}", exist_ok=True)
+            src = sorted(glob.glob(f"{tmp}/stage_{name}/part-*.csv"))[0]
+            shutil.move(src, f"{tmp}/{name}/data.csv")
+        vs = (
+            spark.readStream.schema("vts TIMESTAMP, user_id LONG, view_id LONG")
+            .option("header", "true")
+            .csv(f"{tmp}/views")
+        )
+        ps = (
+            spark.readStream.schema("pts TIMESTAMP, user_id LONG, purchase_id LONG")
+            .option("header", "true")
+            .csv(f"{tmp}/purchases")
+        )
+        joined = interval_join_streams(
+            vs, ps, "user_id", "vts", "pts",
+            watermark="2 hours", lower_sec=0, upper_sec=1800,
+        )
+        qname = f"sjoin_{abs(hash(tmp)) % 10**8}"
+        q = (
+            joined.writeStream.format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return [
+            (r["user_id"], r["n_pairs"])
+            for r in spark.sql(
+                f"SELECT user_id, count(*) AS n_pairs FROM {qname} GROUP BY 1"
+            ).collect()
+        ]
+
+    rows = _artifact("stream_join", spark, sf_dir, build)
     return spark.createDataFrame(rows, "user_id long, n_pairs long")
 
 
@@ -4131,55 +4111,53 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast — no stream-side state at all), aggregated to per-nation
     counts.  The standard dimension-enrichment shape: the static side
     is re-resolvable each batch, so dimension updates apply without
-    restarting the stream.  Memoized per sf_dir."""
+    restarting the stream.  Memoized per (session, sf_dir)."""
     import glob
     import os
     import shutil
     import tempfile
 
-    cached = _FIXTURE_CACHE.get(("stream_enrich", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(cached, "n_nationkey long, n_events long")
+    def build():
+        ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
+        cust = _t(spark, sf_dir, "customer").select(
+            F.col("c_custkey"), F.col("c_nationkey").alias("n_nationkey")
+        )
+        staged = ev.select(
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+            "event_id",
+            (F.col("user_id") % 1000 + 1).alias("c_custkey"),
+        )
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_senrich_")
+        staged.coalesce(1).write.mode("overwrite").option("header", "true").csv(
+            f"{tmp}/stage"
+        )
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        src = sorted(glob.glob(f"{tmp}/stage/part-*.csv"))[0]
+        shutil.move(src, f"{tmp}/in/batch.csv")
+        stream = (
+            spark.readStream.schema("ts TIMESTAMP, event_id LONG, c_custkey LONG")
+            .option("header", "true")
+            .csv(f"{tmp}/in")
+        )
+        enriched = stream.join(F.broadcast(cust), "c_custkey").groupBy(
+            "n_nationkey"
+        ).agg(F.count("*").alias("n_events"))
+        qname = f"senrich_{abs(hash(tmp)) % 10**8}"
+        q = (
+            enriched.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("complete")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return [
+            (r["n_nationkey"], r["n_events"])
+            for r in spark.sql(f"SELECT * FROM {qname}").collect()
+        ]
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey"), F.col("c_nationkey").alias("n_nationkey")
-    )
-    staged = ev.select(
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "event_id",
-        (F.col("user_id") % 1000 + 1).alias("c_custkey"),
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_senrich_")
-    staged.coalesce(1).write.mode("overwrite").option("header", "true").csv(
-        f"{tmp}/stage"
-    )
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    src = sorted(glob.glob(f"{tmp}/stage/part-*.csv"))[0]
-    shutil.move(src, f"{tmp}/in/batch.csv")
-    stream = (
-        spark.readStream.schema("ts TIMESTAMP, event_id LONG, c_custkey LONG")
-        .option("header", "true")
-        .csv(f"{tmp}/in")
-    )
-    enriched = stream.join(F.broadcast(cust), "c_custkey").groupBy(
-        "n_nationkey"
-    ).agg(F.count("*").alias("n_events"))
-    qname = f"senrich_{abs(hash(tmp)) % 10**8}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = [
-        (r["n_nationkey"], r["n_events"])
-        for r in spark.sql(f"SELECT * FROM {qname}").collect()
-    ]
-    _FIXTURE_CACHE[("stream_enrich", sf_dir)] = rows
+    rows = _artifact("stream_enrich", spark, sf_dir, build)
     return spark.createDataFrame(rows, "n_nationkey long, n_events long")
 
 
@@ -4197,7 +4175,7 @@ def q_stream_alarm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark so the AvailableNow drain flushes all real alarms —
     drain ≡ batch left-join mirror, asserted in
     tests/test_streaming_joins.py.  Per-(key, status) counts;
-    memoized per sf_dir like the other streaming fixtures."""
+    memoized per (session, sf_dir) like the other streaming fixtures."""
     import glob
     import os
     import shutil
@@ -4205,76 +4183,72 @@ def q_stream_alarm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.joins import alarm_correlation_streams
 
-    cached = _FIXTURE_CACHE.get(("stream_alarm_join", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "key long, status string, n long"
+    def build():
+        ev = _t(spark, sf_dir, "events")
+        trunc = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
+        key = (F.col("user_id") % 50).alias("key")
+        sentinel = "2024-03-01 00:00:00"
+        legs = {
+            "alarms": (
+                ev.filter(F.col("event_id") % 97 == 0)
+                .select(key, trunc.alias("alarm_ts")),
+                "alarm_ts",
+            ),
+            "files": (
+                ev.filter(F.col("event_type") == "view")
+                .select(key, trunc.alias("file_ts")),
+                "file_ts",
+            ),
+            "reports": (
+                ev.filter(F.col("event_type") == "purchase")
+                .select(key, trunc.alias("report_ts")),
+                "report_ts",
+            ),
+        }
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_alarmjoin_")
+        streams = {}
+        for name, (df, ts_col) in legs.items():
+            staged = df.unionByName(
+                spark.createDataFrame([(-1, sentinel)], f"key long, {ts_col} string")
+            )
+            staged.coalesce(1).write.mode("overwrite").option(
+                "header", "true"
+            ).csv(f"{tmp}/stage_{name}")
+            os.makedirs(f"{tmp}/{name}", exist_ok=True)
+            src = sorted(glob.glob(f"{tmp}/stage_{name}/part-*.csv"))[0]
+            shutil.move(src, f"{tmp}/{name}/data.csv")
+            streams[name] = (
+                spark.readStream.schema(f"key long, {ts_col} timestamp")
+                .option("header", "true")
+                .csv(f"{tmp}/{name}")
+            )
+        out = alarm_correlation_streams(
+            streams["alarms"], streams["files"], streams["reports"], "key",
+            file_window=(0, 900), report_window=(300, 1800),
+            watermark="60 seconds",
         )
+        qname = f"alarmjoin_{abs(hash(tmp)) % 10**8}"
+        q = (
+            out.writeStream.format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        # fail LOUDLY on a slow drain instead of memoizing a partial
+        # result for the whole session (the unreproducible-flake class)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("stream_alarm_join drain did not finish in 600s")
+        return [
+            (r["key"], r["status"], r["n"])
+            for r in spark.sql(
+                f"SELECT key, status, count(*) AS n FROM {qname} "
+                "WHERE key >= 0 GROUP BY 1, 2"
+            ).collect()
+        ]
 
-    ev = _t(spark, sf_dir, "events")
-    trunc = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
-    key = (F.col("user_id") % 50).alias("key")
-    sentinel = "2024-03-01 00:00:00"
-    legs = {
-        "alarms": (
-            ev.filter(F.col("event_id") % 97 == 0)
-            .select(key, trunc.alias("alarm_ts")),
-            "alarm_ts",
-        ),
-        "files": (
-            ev.filter(F.col("event_type") == "view")
-            .select(key, trunc.alias("file_ts")),
-            "file_ts",
-        ),
-        "reports": (
-            ev.filter(F.col("event_type") == "purchase")
-            .select(key, trunc.alias("report_ts")),
-            "report_ts",
-        ),
-    }
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_alarmjoin_")
-    streams = {}
-    for name, (df, ts_col) in legs.items():
-        staged = df.unionByName(
-            spark.createDataFrame([(-1, sentinel)], f"key long, {ts_col} string")
-        )
-        staged.coalesce(1).write.mode("overwrite").option(
-            "header", "true"
-        ).csv(f"{tmp}/stage_{name}")
-        os.makedirs(f"{tmp}/{name}", exist_ok=True)
-        src = sorted(glob.glob(f"{tmp}/stage_{name}/part-*.csv"))[0]
-        shutil.move(src, f"{tmp}/{name}/data.csv")
-        streams[name] = (
-            spark.readStream.schema(f"key long, {ts_col} timestamp")
-            .option("header", "true")
-            .csv(f"{tmp}/{name}")
-        )
-    out = alarm_correlation_streams(
-        streams["alarms"], streams["files"], streams["reports"], "key",
-        file_window=(0, 900), report_window=(300, 1800),
-        watermark="60 seconds",
-    )
-    qname = f"alarmjoin_{abs(hash(tmp)) % 10**8}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # fail LOUDLY on a slow drain instead of memoizing a partial
-    # result for the whole session (the unreproducible-flake class)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("stream_alarm_join drain did not finish in 600s")
-    rows = [
-        (r["key"], r["status"], r["n"])
-        for r in spark.sql(
-            f"SELECT key, status, count(*) AS n FROM {qname} "
-            "WHERE key >= 0 GROUP BY 1, 2"
-        ).collect()
-    ]
-    _FIXTURE_CACHE[("stream_alarm_join", sf_dir)] = rows
+    rows = _artifact("stream_alarm_join", spark, sf_dir, build)
     return spark.createDataFrame(rows, "key long, status string, n long")
 
 
@@ -4286,68 +4260,74 @@ def q_backfill_dated(spark: SparkSession, sf_dir: str) -> DataFrame:
     (helper/processing.py:8-34).  Partition pruning at the scan is
     asserted in tests/test_layout.py::test_backfill_date_pruning.
 
-    Memoized per sf_dir like the other streaming fixtures."""
+    Memoized per (session, sf_dir) like the other streaming fixtures."""
+    import os
+
+    def build():
+        landing = _backfill_landing(spark, sf_dir)
+        tmp = os.path.dirname(landing)
+        dates = sorted(
+            r["date"]
+            for r in spark.read.parquet(landing).select("date").distinct().collect()
+        )
+        backfill_from = dates[1] if len(dates) > 1 else dates[0]
+
+        stream = (
+            spark.readStream.schema(
+                "event_id long, event_type string, value double, date string"
+            )
+            .format("parquet")
+            .load(landing)
+            .filter(F.col("date") >= backfill_from)
+        )
+        collected: list = []
+        q = (
+            stream.groupBy("date", "event_type")
+            .agg(F.count("*").alias("n"))
+            .writeStream.foreachBatch(
+                lambda b, _i: collected.extend(b.collect())
+            )
+            .outputMode("complete")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # complete-mode re-emits the full aggregate per batch; keep the last
+        # emission's rows (one row per (date, event_type)).
+        final: dict[tuple, int] = {}
+        for r in collected:
+            final[(r["date"], r["event_type"])] = r["n"]
+        return sorted((d, t, n) for (d, t), n in final.items())
+
+    rows = _artifact("backfill_dated", spark, sf_dir, build)
+    return spark.createDataFrame(rows, "date string, event_type string, n long")
+
+
+def _backfill_landing(spark: SparkSession, sf_dir: str) -> str:
+    """The backfill's ``date=YYYY-MM-DD`` partitioned landing zone (an
+    events slice), staged once per (session, sf_dir).  Also read by the
+    pruning assert in tests/test_layout.py, so that test never globs
+    /tmp, where stale dirs from other sessions linger."""
     import tempfile
 
-    cached = _FIXTURE_CACHE.get(("backfill_dated", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "date string, event_type string, n long"
+    def build():
+        events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
+        landing = tempfile.mkdtemp(prefix="sparkgraft_backfill_") + "/landing"
+        (
+            events.select(
+                "event_id",
+                "event_type",
+                "value",
+                F.date_format("ts", "yyyy-MM-dd").alias("date"),
+            )
+            .repartition(4)
+            .write.partitionBy("date")
+            .parquet(landing)
         )
+        return landing
 
-    events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_backfill_")
-    landing = f"{tmp}/landing"
-    (
-        events.select(
-            "event_id",
-            "event_type",
-            "value",
-            F.date_format("ts", "yyyy-MM-dd").alias("date"),
-        )
-        .repartition(4)
-        .write.partitionBy("date")
-        .parquet(landing)
-    )
-    dates = sorted(
-        r["date"]
-        for r in spark.read.parquet(landing).select("date").distinct().collect()
-    )
-    backfill_from = dates[1] if len(dates) > 1 else dates[0]
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, event_type string, value double, date string"
-        )
-        .format("parquet")
-        .load(landing)
-        .filter(F.col("date") >= backfill_from)
-    )
-    collected: list = []
-    q = (
-        stream.groupBy("date", "event_type")
-        .agg(F.count("*").alias("n"))
-        .writeStream.foreachBatch(
-            lambda b, _i: collected.extend(b.collect())
-        )
-        .outputMode("complete")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # complete-mode re-emits the full aggregate per batch; keep the last
-    # emission's rows (one row per (date, event_type)).
-    final: dict[tuple, int] = {}
-    for r in collected:
-        final[(r["date"], r["event_type"])] = r["n"]
-    rows = sorted((d, t, n) for (d, t), n in final.items())
-    _FIXTURE_CACHE[("backfill_dated", sf_dir)] = rows
-    # This process's landing dir, for the pruning assert in
-    # tests/test_layout.py (a /tmp glob would race with stale dirs from
-    # other sessions at other scale factors).
-    _FIXTURE_CACHE[("backfill_landing", sf_dir)] = landing
-    return spark.createDataFrame(rows, "date string, event_type string, n long")
+    return _artifact("backfill_landing", spark, sf_dir, build)
 
 
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4632,51 +4612,47 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom keyed streaming state in the graded loop (ORACLE-checked
     via a recursive-CTE replay of the identical IEEE fold):
     per-channel EWMA via applyInPandasWithState over a file stream,
-    drained with AvailableNow.  Memoized per sf_dir (see
+    drained with AvailableNow.  Memoized per (session, sf_dir) (see
     q_streaming_stats)."""
     import tempfile
 
     from sparkgraft.streaming.stateful import ewma_stream
 
-    cached = _FIXTURE_CACHE.get(("streaming_ewma", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "channel string, ewma double, n_samples long"
+    def build():
+        events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 500)
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_ewma_")
+        (
+            events.select(
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+                F.col("event_type").alias("channel"),
+                "value",
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .option("header", "true")
+            .csv(f"{tmp}/in")
         )
+        stream = (
+            spark.readStream.format("csv")
+            .schema("ts TIMESTAMP, channel STRING, value DOUBLE")
+            .option("header", "true")
+            .load(f"{tmp}/in")
+        )
+        out = ewma_stream(stream, alpha=0.3)
+        collected: list = []
+        q = (
+            out.writeStream.foreachBatch(lambda b, _i: collected.extend(b.collect()))
+            .outputMode("append")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return [
+            (r["channel"], round(r["ewma"], 6), r["n_samples"]) for r in collected
+        ]
 
-    events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 500)
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_ewma_")
-    (
-        events.select(
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            F.col("event_type").alias("channel"),
-            "value",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("header", "true")
-        .csv(f"{tmp}/in")
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("ts TIMESTAMP, channel STRING, value DOUBLE")
-        .option("header", "true")
-        .load(f"{tmp}/in")
-    )
-    out = ewma_stream(stream, alpha=0.3)
-    collected: list = []
-    q = (
-        out.writeStream.foreachBatch(lambda b, _i: collected.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = [
-        (r["channel"], round(r["ewma"], 6), r["n_samples"]) for r in collected
-    ]
-    _FIXTURE_CACHE[("streaming_ewma", sf_dir)] = rows
+    rows = _artifact("streaming_ewma", spark, sf_dir, build)
     return spark.createDataFrame(
         rows, "channel string, ewma double, n_samples long"
     )
@@ -4690,7 +4666,7 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     diffed against the previous batch's k-row profile via
     drift_report.  Batch 1 drops every 5th event (rows+range drift);
     batch 2 additionally nulls event_type for every 13th user (nulls
-    drift).  The drained verdicts are memoized per sf_dir."""
+    drift).  The drained verdicts are memoized per (session, sf_dir)."""
     import os
     import tempfile
 
@@ -4700,79 +4676,79 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch long, column string, rows_base long, rows_cur long, "
         "drift_flags string, verdict string"
     )
-    cached = _FIXTURE_CACHE.get(("streaming_drift", sf_dir))
-    if cached is not None:
-        return spark.createDataFrame(cached, schema_str)
 
-    events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 1500)
-    snap0 = events
-    snap1 = events.filter(F.col("event_id") % 5 != 0)
-    snap2 = snap1.withColumn(
-        "event_type",
-        F.when(F.col("user_id") % 13 == 0, F.lit(None)).otherwise(
-            F.col("event_type")
-        ),
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_drift_")
-    inp = f"{tmp}/in"
-    os.makedirs(inp, exist_ok=True)
-    for i, snap in enumerate((snap0, snap1, snap2)):
-        (
-            snap.select(
-                "event_id",
-                "user_id",
-                "event_type",
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .csv(f"{tmp}/staging_{i}")
+    def build():
+        events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 1500)
+        snap0 = events
+        snap1 = events.filter(F.col("event_id") % 5 != 0)
+        snap2 = snap1.withColumn(
+            "event_type",
+            F.when(F.col("user_id") % 13 == 0, F.lit(None)).otherwise(
+                F.col("event_type")
+            ),
         )
-        import glob
-        import shutil
-
-        (part,) = glob.glob(f"{tmp}/staging_{i}/part-*.csv")
-        dst = f"{inp}/snapshot_{i:03d}.csv"
-        shutil.move(part, dst)
-        # Distinct ascending mtimes pin the file-source batch order.
-        os.utime(dst, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("csv")
-        .schema(
-            "event_id LONG, user_id LONG, event_type STRING, "
-            "ts TIMESTAMP, value DOUBLE"
-        )
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .load(inp)
-    )
-    collected: list[tuple] = []
-
-    def sink(verdicts: DataFrame, batch_id: int) -> None:
-        collected.extend(
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_drift_")
+        inp = f"{tmp}/in"
+        os.makedirs(inp, exist_ok=True)
+        for i, snap in enumerate((snap0, snap1, snap2)):
             (
-                batch_id,
-                r["column"],
-                r["rows_base"],
-                r["rows_cur"],
-                r["drift_flags"],
-                r["verdict"],
+                snap.select(
+                    "event_id",
+                    "user_id",
+                    "event_type",
+                    F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+                    "value",
+                )
+                .coalesce(1)
+                .write.mode("overwrite")
+                .option("header", "true")
+                .csv(f"{tmp}/staging_{i}")
             )
-            for r in verdicts.collect()
-        )
+            import glob
+            import shutil
 
-    q = drift_monitor(
-        stream,
-        ["event_id", "user_id", "event_type"],
-        sink,
-        checkpoint_dir=f"{tmp}/ckpt",
-    )
-    q.awaitTermination()
-    collected.sort()
-    _FIXTURE_CACHE[("streaming_drift", sf_dir)] = collected
+            (part,) = glob.glob(f"{tmp}/staging_{i}/part-*.csv")
+            dst = f"{inp}/snapshot_{i:03d}.csv"
+            shutil.move(part, dst)
+            # Distinct ascending mtimes pin the file-source batch order.
+            os.utime(dst, (1700000000 + i, 1700000000 + i))
+
+        stream = (
+            spark.readStream.format("csv")
+            .schema(
+                "event_id LONG, user_id LONG, event_type STRING, "
+                "ts TIMESTAMP, value DOUBLE"
+            )
+            .option("header", "true")
+            .option("maxFilesPerTrigger", "1")
+            .load(inp)
+        )
+        collected: list[tuple] = []
+
+        def sink(verdicts: DataFrame, batch_id: int) -> None:
+            collected.extend(
+                (
+                    batch_id,
+                    r["column"],
+                    r["rows_base"],
+                    r["rows_cur"],
+                    r["drift_flags"],
+                    r["verdict"],
+                )
+                for r in verdicts.collect()
+            )
+
+        q = drift_monitor(
+            stream,
+            ["event_id", "user_id", "event_type"],
+            sink,
+            checkpoint_dir=f"{tmp}/ckpt",
+        )
+        q.awaitTermination()
+        collected.sort()
+        return collected
+
+    collected = _artifact("streaming_drift", spark, sf_dir, build)
     return spark.createDataFrame(collected, schema_str)
 
 
@@ -4838,13 +4814,30 @@ def q_version_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back THROUGH TIME TRAVEL, diffed, and summarized per
     (change_type, changed-column signature).  Deterministic slice
     definitions make the DuckDB full-outer-join mirror exact."""
+    from sparkgraft.operators.merge import snapshot_diff
+    from sparkgraft.sinks.versioned import read_versioned
+
+    t = _version_cdc_table(spark, sf_dir)
+    diff = snapshot_diff(
+        read_versioned(spark, t, version=0),
+        read_versioned(spark, t, version=1),
+        ["o_orderkey"],
+        ["o_totalprice", "o_orderpriority"],
+    )
+    return diff.groupBy(
+        F.col("change_type"),
+        F.concat_ws(",", "changed_cols").alias("cols"),
+    ).agg(F.count("*").alias("n"))
+
+
+def _version_cdc_table(spark: SparkSession, sf_dir: str) -> str:
+    """version_cdc's two-commit versioned orders table, staged once per
+    (session, sf_dir); stream_cdc drains the same commits."""
     import tempfile
 
-    from sparkgraft.operators.merge import snapshot_diff
-    from sparkgraft.sinks.versioned import read_versioned, write_versioned
+    from sparkgraft.sinks.versioned import write_versioned
 
-    t = _FIXTURE_CACHE.get(("version_cdc_table", sf_dir))
-    if t is None:
+    def build():
         t = tempfile.mkdtemp(prefix="sparkgraft_cdc_")
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -4859,17 +4852,9 @@ def q_version_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_versioned(v0, t, mode="overwrite")
         write_versioned(v1, t, mode="overwrite")
-        _FIXTURE_CACHE[("version_cdc_table", sf_dir)] = t
-    diff = snapshot_diff(
-        read_versioned(spark, t, version=0),
-        read_versioned(spark, t, version=1),
-        ["o_orderkey"],
-        ["o_totalprice", "o_orderpriority"],
-    )
-    return diff.groupBy(
-        F.col("change_type"),
-        F.concat_ws(",", "changed_cols").alias("cols"),
-    ).agg(F.count("*").alias("n"))
+        return t
+
+    return _artifact("version_cdc_table", spark, sf_dir, build)
 
 
 SQL_QUANTIFIED = """
@@ -4995,9 +4980,7 @@ def q_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_with_stats,
     )
 
-    key = ("bloom_skipping_dir", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
+    def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="sparkgraft_bloomskip_") + "/events"
@@ -5006,7 +4989,9 @@ def q_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_files=8,
         )
         write_bloom_manifest(spark, path, ["user_id"])
-        _FIXTURE_CACHE[key] = path
+        return path
+
+    path = _artifact("bloom_skipping_dir", spark, sf_dir, build)
     # BATCHED point lookups (round-5 steady-state fix): one pruned read
     # over the UNION of the per-id bloom predicates, one aggregate —
     # the 5-sequential-sub-query form paid the manifest/scan overhead
@@ -5046,9 +5031,7 @@ def q_bloom_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    key = ("bloom_travel_dir", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
+    def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="sparkgraft_bloomtravel_") + "/events"
@@ -5062,7 +5045,9 @@ def q_bloom_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_id") % 2 == 1), path, mode="append",
             stats_cols=["ts"], sort_col="ts", n_files=8,
         )
-        _FIXTURE_CACHE[key] = path
+        return path
+
+    path = _artifact("bloom_travel_dir", spark, sf_dir, build)
     uids = [3, 17, 42, 71, 99]
 
     def leg(df, method: str) -> DataFrame:
@@ -5169,16 +5154,15 @@ def q_ds_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     posterior.  Memoized per (session, sf_dir)."""
     from sparkgraft.operators.annotate import dawid_skene
 
-    key = ("ds_labels", sf_dir, id(spark))
-    cached = _FIXTURE_CACHE.get(key)
     schema = "item_id long, ds_label int, posterior double"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
-    out = dawid_skene(
-        _synthetic_votes(spark, sf_dir), n_classes=4, iters=5
-    )
-    rows = sorted(tuple(r) for r in out.collect())
-    _FIXTURE_CACHE[key] = rows
+
+    def build():
+        out = dawid_skene(
+            _synthetic_votes(spark, sf_dir), n_classes=4, iters=5
+        )
+        return sorted(tuple(r) for r in out.collect())
+
+    rows = _artifact("ds_labels", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5229,21 +5213,20 @@ def q_topic_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts of the served batch.  Fit cached per (session, sf_dir)."""
     from sparkgraft.operators.topics import assign_topics, fit_topic_space
 
-    key = ("topic_assign", sf_dir, id(spark))
-    cached = _FIXTURE_CACHE.get(key)
     schema = "topic int, n_docs long"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
-    docs = _t(spark, sf_dir, "documents")
-    space = fit_topic_space(
-        docs.filter(F.col("doc_id") % 2 == 0), k=4, dim=64, kmeans_iters=3
-    )
-    served = assign_topics(docs.filter(F.col("doc_id") % 2 == 1), space)
-    rows = sorted(
-        (r["topic"], r["n"])
-        for r in served.groupBy("topic").agg(F.count("*").alias("n")).collect()
-    )
-    _FIXTURE_CACHE[key] = rows
+
+    def build():
+        docs = _t(spark, sf_dir, "documents")
+        space = fit_topic_space(
+            docs.filter(F.col("doc_id") % 2 == 0), k=4, dim=64, kmeans_iters=3
+        )
+        served = assign_topics(docs.filter(F.col("doc_id") % 2 == 1), space)
+        return sorted(
+            (r["topic"], r["n"])
+            for r in served.groupBy("topic").agg(F.count("*").alias("n")).collect()
+        )
+
+    rows = _artifact("topic_assign", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5350,16 +5333,16 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-level data skipping (sinks/layout.py write_with_stats /
-    read_skipping): events staged once per sf_dir as a ts-range-sorted
-    table + min/max manifest; a 3-day window reads ONLY the manifest-
-    surviving files (pruning asserted in tests/test_layout.py), then
+    read_skipping): events staged once per (session, sf_dir) as a
+    ts-range-sorted table + min/max manifest; a 3-day window reads ONLY
+    the manifest-surviving files (pruning asserted in
+    tests/test_layout.py), then
     the exact channel-stats aggregate runs on the pruned scan.  The
     skipping contract — pruned-read ∘ filter ≡ full-scan ∘ filter —
     makes the plain-SQL oracle exact."""
     from sparkgraft.sinks.layout import read_skipping, write_with_stats
 
-    path = _FIXTURE_CACHE.get(("file_skipping", sf_dir))
-    if path is None:
+    def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="sparkgraft_skip_") + "/events"
@@ -5367,7 +5350,9 @@ def q_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             _t(spark, sf_dir, "events"), path, ["ts", "value"],
             sort_col="ts", n_files=8,
         )
-        _FIXTURE_CACHE[("file_skipping", sf_dir)] = path
+        return path
+
+    path = _artifact("file_skipping", spark, sf_dir, build)
     lo = F.lit("2024-01-10").cast("timestamp")
     hi = F.lit("2024-01-13").cast("timestamp")
     keep = (F.col("max_ts") >= lo) & (F.col("min_ts") <= hi)
@@ -5398,26 +5383,24 @@ def q_topic_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         topic_terms,
     )
 
-    key = ("topic_model", sf_dir, id(spark))
-    cached = _FIXTURE_CACHE.get(key)
     schema = "topic int, rnk int, term string, weight long, topic_docs long"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    docs = _t(spark, sf_dir, "documents")
-    dt, wt = topic_model(docs, k=4, dim=64, kmeans_iters=3, em_iters=3)
-    sizes = {
-        r["topic"]: r["n"]
-        for r in dominant_topic(dt)
-        .groupBy("topic")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    rows = sorted(
-        (r["topic"], r["rnk"], r["term"], r["weight"], sizes.get(r["topic"], 0))
-        for r in topic_terms(wt, top_m=8).collect()
-    )
-    _FIXTURE_CACHE[key] = rows
+    def build():
+        docs = _t(spark, sf_dir, "documents")
+        dt, wt = topic_model(docs, k=4, dim=64, kmeans_iters=3, em_iters=3)
+        sizes = {
+            r["topic"]: r["n"]
+            for r in dominant_topic(dt)
+            .groupBy("topic")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        return sorted(
+            (r["topic"], r["rnk"], r["term"], r["weight"], sizes.get(r["topic"], 0))
+            for r in topic_terms(wt, top_m=8).collect()
+        )
+
+    rows = _artifact("topic_model", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5428,7 +5411,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay discipline.  Alarms are bit-identical to the batch operator
     on the union (asserted in tests/test_cusum_monitor.py); returns
     the same per-(type, side) summary shape as cusum_shift.  Memoized
-    per sf_dir like the other streaming fixtures."""
+    per (session, sf_dir) like the other streaming fixtures."""
     import glob
     import os
     import shutil
@@ -5436,79 +5419,78 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.pipeline import cusum_monitor
 
-    cached = _FIXTURE_CACHE.get(("stream_cusum", sf_dir))
     schema = (
         "event_type string, side string, n_alarms long, "
         "first_alarm_ts timestamp, max_stat double"
     )
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .withColumn(
-            "value",
-            F.col("value")
-            + F.when(
-                F.col("ts") >= F.lit("2024-01-16").cast("timestamp"),
-                F.lit(4.0),
-            ).otherwise(F.lit(0.0)),
+    def build():
+        ev = (
+            _t(spark, sf_dir, "events")
+            .withColumn(
+                "value",
+                F.col("value")
+                + F.when(
+                    F.col("ts") >= F.lit("2024-01-16").cast("timestamp"),
+                    F.lit(4.0),
+                ).otherwise(F.lit(0.0)),
+            )
+            .select(
+                "event_type",
+                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
+                "event_id",
+                "value",
+            )
         )
-        .select(
-            "event_type",
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-            "event_id",
-            "value",
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_scusum_")
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        cuts = ("2024-01-11", "2024-01-21")
+        stages = (
+            (1, ev.filter(F.col("ts") < cuts[0])),
+            (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
+            (3, ev.filter(F.col("ts") >= cuts[1])),
         )
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_scusum_")
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    cuts = ("2024-01-11", "2024-01-21")
-    stages = (
-        (1, ev.filter(F.col("ts") < cuts[0])),
-        (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
-        (3, ev.filter(F.col("ts") >= cuts[1])),
-    )
-    for i, df in stages:
-        df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-        src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-        dst = f"{tmp}/in/batch_{i}.json"
-        shutil.move(src, dst)
-        # Distinct ascending mtimes pin the (order-sensitive) batch order.
-        os.utime(dst, (1700000000 + i, 1700000000 + i))
+        for i, df in stages:
+            df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
+            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
+            dst = f"{tmp}/in/batch_{i}.json"
+            shutil.move(src, dst)
+            # Distinct ascending mtimes pin the (order-sensitive) batch order.
+            os.utime(dst, (1700000000 + i, 1700000000 + i))
 
-    union = ev.withColumn("ts", F.to_timestamp("ts"))
-    alarms: list[tuple] = []
+        union = ev.withColumn("ts", F.to_timestamp("ts"))
+        alarms: list[tuple] = []
 
-    def sink(df, batch_id):
-        alarms.extend(
-            (r["event_type"], r["side"], r["ts"], r["stat"])
-            for r in df.collect()
+        def sink(df, batch_id):
+            alarms.extend(
+                (r["event_type"], r["side"], r["ts"], r["stat"])
+                for r in df.collect()
+            )
+
+        stream = (
+            spark.readStream.schema(
+                "event_type string, ts timestamp, event_id long, value double"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
+        )
+        q = cusum_monitor(
+            stream, union, "event_type", "ts", "event_id", "value",
+            f"{tmp}/ckpt", sink, k=0.5, h=10.0, baseline_n=50, digits=6,
+        )
+        q.awaitTermination(300)
+        agg: dict[tuple, list] = {}
+        for et, side, ts, stat in alarms:
+            cur = agg.setdefault((et, side), [0, None, float("-inf")])
+            cur[0] += 1
+            cur[1] = ts if cur[1] is None or ts < cur[1] else cur[1]
+            cur[2] = max(cur[2], stat)
+        return sorted(
+            (et, side, n, first_ts, mx)
+            for (et, side), (n, first_ts, mx) in agg.items()
         )
 
-    stream = (
-        spark.readStream.schema(
-            "event_type string, ts timestamp, event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = cusum_monitor(
-        stream, union, "event_type", "ts", "event_id", "value",
-        f"{tmp}/ckpt", sink, k=0.5, h=10.0, baseline_n=50, digits=6,
-    )
-    q.awaitTermination(300)
-    agg: dict[tuple, list] = {}
-    for et, side, ts, stat in alarms:
-        cur = agg.setdefault((et, side), [0, None, float("-inf")])
-        cur[0] += 1
-        cur[1] = ts if cur[1] is None or ts < cur[1] else cur[1]
-        cur[2] = max(cur[2], stat)
-    rows = sorted(
-        (et, side, n, first_ts, mx)
-        for (et, side), (n, first_ts, mx) in agg.items()
-    )
-    _FIXTURE_CACHE[("stream_cusum", sf_dir)] = rows
+    rows = _artifact("stream_cusum", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5620,8 +5602,7 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    t = _FIXTURE_CACHE.get(("versioned_merge_table", sf_dir))
-    if t is None:
+    def build():
         t = tempfile.mkdtemp(prefix="sparkgraft_vmerge_")
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -5649,7 +5630,9 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_versioned(
             spark, t, src, ["o_orderkey"], sort_col="o_orderkey", n_files=2
         )
-        _FIXTURE_CACHE[("versioned_merge_table", sf_dir)] = t
+        return t
+
+    t = _artifact("versioned_merge_table", spark, sf_dir, build)
     return _multi_version_summary(spark, t, 3)
 
 
@@ -5662,7 +5645,7 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     price+1000; inserts land as 'NEW') — never re-aggregated.  The
     oracle replays the slice algebra directly; equality with the
     direct aggregate and replay idempotence are additionally asserted
-    in tests/test_versioned.py.  Fixture memoized per sf_dir."""
+    in tests/test_versioned.py.  Fixture memoized per (session, sf_dir)."""
     import tempfile
 
     from sparkgraft.sinks.versioned import (
@@ -5673,56 +5656,55 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkgraft.streaming.pipeline import view_maintainer
 
-    cached = _FIXTURE_CACHE.get(("materialized_view", sf_dir))
     schema = "o_orderpriority string, n_rows long, spend double"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    t = tempfile.mkdtemp(prefix="sparkgraft_ivm_")
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    write_versioned(
-        orders, t, mode="overwrite",
-        stats_cols=["o_orderkey"], sort_col="o_orderkey", n_files=8,
-    )
-    delete_versioned(
-        spark, t,
-        F.col("o_orderkey").between(2000, 2999),
-        stats_keep=(F.col("max_o_orderkey") >= 2000)
-        & (F.col("min_o_orderkey") <= 2999),
-        sort_col="o_orderkey", n_files=2,
-    )
-    upd = orders.filter(F.col("o_orderkey") % 500 == 0)
-    src = upd.select(
-        "o_orderkey",
-        F.lit("MOVED").alias("o_orderpriority"),
-        (F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
-    ).unionByName(
-        upd.select(
-            (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
-            F.lit("NEW").alias("o_orderpriority"),
-            F.lit(1.0).alias("o_totalprice"),
+    def build():
+        t = tempfile.mkdtemp(prefix="sparkgraft_ivm_")
+        orders = _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority", "o_totalprice"
         )
-    )
-    upsert_versioned(spark, t, src, ["o_orderkey"], sort_col="o_orderkey",
-                     n_files=2)
-    view_dir = f"{t}_view"
-    q = view_maintainer(
-        spark, t, ["o_orderpriority"], ["o_totalprice"], ["o_orderkey"],
-        view_dir, f"{t}_ckpt",
-    )
-    q.awaitTermination(300)
-    out = read_versioned(spark, view_dir).select(
-        "o_orderpriority",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.round(F.col("sum_o_totalprice"), 2)
-        .cast("decimal(38,2)")
-        .cast("double")
-        .alias("spend"),
-    )
-    rows = [tuple(r) for r in out.collect()]
-    _FIXTURE_CACHE[("materialized_view", sf_dir)] = rows
+        write_versioned(
+            orders, t, mode="overwrite",
+            stats_cols=["o_orderkey"], sort_col="o_orderkey", n_files=8,
+        )
+        delete_versioned(
+            spark, t,
+            F.col("o_orderkey").between(2000, 2999),
+            stats_keep=(F.col("max_o_orderkey") >= 2000)
+            & (F.col("min_o_orderkey") <= 2999),
+            sort_col="o_orderkey", n_files=2,
+        )
+        upd = orders.filter(F.col("o_orderkey") % 500 == 0)
+        src = upd.select(
+            "o_orderkey",
+            F.lit("MOVED").alias("o_orderpriority"),
+            (F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
+        ).unionByName(
+            upd.select(
+                (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
+                F.lit("NEW").alias("o_orderpriority"),
+                F.lit(1.0).alias("o_totalprice"),
+            )
+        )
+        upsert_versioned(spark, t, src, ["o_orderkey"], sort_col="o_orderkey",
+                         n_files=2)
+        view_dir = f"{t}_view"
+        q = view_maintainer(
+            spark, t, ["o_orderpriority"], ["o_totalprice"], ["o_orderkey"],
+            view_dir, f"{t}_ckpt",
+        )
+        q.awaitTermination(300)
+        out = read_versioned(spark, view_dir).select(
+            "o_orderpriority",
+            F.col("n_rows").cast("long").alias("n_rows"),
+            F.round(F.col("sum_o_totalprice"), 2)
+            .cast("decimal(38,2)")
+            .cast("double")
+            .alias("spend"),
+        )
+        return [tuple(r) for r in out.collect()]
+
+    rows = _artifact("materialized_view", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5737,7 +5719,7 @@ def q_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate excluding the forgotten users.  Physical forgetting
     (vacuum removes the rewritten files' predecessors; pre-delete time
     travel then fails while history stays auditable) is asserted in
-    tests/test_versioned.py.  Fixture memoized per sf_dir."""
+    tests/test_versioned.py.  Fixture memoized per (session, sf_dir)."""
     import tempfile
 
     from sparkgraft.sinks.versioned import (
@@ -5747,42 +5729,41 @@ def q_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkgraft.streaming.pipeline import view_maintainer
 
-    cached = _FIXTURE_CACHE.get(("forget_flow", sf_dir))
     schema = "user_id long, n_rows long, sum_amount double"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    t = tempfile.mkdtemp(prefix="sparkgraft_forget_")
-    events = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id",
-        ((F.col("event_id") % 1000) / F.lit(10.0)).alias("amount"),
-    )
-    write_versioned(
-        events, t, mode="overwrite",
-        stats_cols=["user_id"], sort_col="user_id", n_files=8,
-    )
-    delete_versioned(
-        spark, t, F.col("user_id").isin(7, 23),
-        stats_keep=(F.col("max_user_id") >= 7)
-        & (F.col("min_user_id") <= 23),
-        sort_col="user_id", n_files=2,
-    )
-    view_dir = f"{t}_view"
-    q = view_maintainer(
-        spark, t, ["user_id"], ["amount"], ["event_id"],
-        view_dir, f"{t}_ckpt",
-    )
-    q.awaitTermination(300)
-    out = read_versioned(spark, view_dir).select(
-        "user_id",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.round(F.col("sum_amount"), 2)
-        .cast("decimal(38,2)")
-        .cast("double")
-        .alias("sum_amount"),
-    )
-    rows = [tuple(r) for r in out.collect()]
-    _FIXTURE_CACHE[("forget_flow", sf_dir)] = rows
+    def build():
+        t = tempfile.mkdtemp(prefix="sparkgraft_forget_")
+        events = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id",
+            ((F.col("event_id") % 1000) / F.lit(10.0)).alias("amount"),
+        )
+        write_versioned(
+            events, t, mode="overwrite",
+            stats_cols=["user_id"], sort_col="user_id", n_files=8,
+        )
+        delete_versioned(
+            spark, t, F.col("user_id").isin(7, 23),
+            stats_keep=(F.col("max_user_id") >= 7)
+            & (F.col("min_user_id") <= 23),
+            sort_col="user_id", n_files=2,
+        )
+        view_dir = f"{t}_view"
+        q = view_maintainer(
+            spark, t, ["user_id"], ["amount"], ["event_id"],
+            view_dir, f"{t}_ckpt",
+        )
+        q.awaitTermination(300)
+        out = read_versioned(spark, view_dir).select(
+            "user_id",
+            F.col("n_rows").cast("long").alias("n_rows"),
+            F.round(F.col("sum_amount"), 2)
+            .cast("decimal(38,2)")
+            .cast("double")
+            .alias("sum_amount"),
+        )
+        return [tuple(r) for r in out.collect()]
+
+    rows = _artifact("forget_flow", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5794,7 +5775,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     max/null-count FROM THE COMMIT LOG ALONE — zero data files opened.
     The streamed union is exactly the events table, so the plain SQL
     aggregate is an exact mirror; exactly-once replay is asserted in
-    tests/test_versioned.py.  Fixture memoized per sf_dir."""
+    tests/test_versioned.py.  Fixture memoized per (session, sf_dir)."""
     import glob
     import os
     import shutil
@@ -5803,59 +5784,58 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkgraft.sinks.versioned import stats_summary
     from sparkgraft.streaming.pipeline import versioned_sink
 
-    cached = _FIXTURE_CACHE.get(("stream_ingest", sf_dir))
     schema = (
         "n_rows long, min_user long, max_user long, nulls_user long, "
         "min_value double, max_value double"
     )
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "value",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-    )
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_singest_")
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    cuts = ("2024-01-11", "2024-01-21")
-    stages = (
-        (1, ev.filter(F.col("ts") < cuts[0])),
-        (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
-        (3, ev.filter(F.col("ts") >= cuts[1])),
-    )
-    for i, df in stages:
-        df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-        src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-        dst = f"{tmp}/in/batch_{i}.json"
-        shutil.move(src, dst)
-        os.utime(dst, (1700000000 + i, 1700000000 + i))
-    stream = (
-        spark.readStream.schema("user_id long, value double, ts string")
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = versioned_sink(
-        stream,
-        f"{tmp}/table",
-        f"{tmp}/ckpt",
-        stats_cols=["user_id", "value"],
-        sort_col="user_id",
-        n_files=2,
-    )
-    q.awaitTermination(300)
-    s = stats_summary(spark, f"{tmp}/table").first()
-    rows = [
-        (
-            s["n_rows"],
-            s["min_user_id"],
-            s["max_user_id"],
-            s["nulls_user_id"],
-            s["min_value"],
-            s["max_value"],
+    def build():
+        ev = _t(spark, sf_dir, "events").select(
+            "user_id",
+            "value",
+            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
         )
-    ]
-    _FIXTURE_CACHE[("stream_ingest", sf_dir)] = rows
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_singest_")
+        os.makedirs(f"{tmp}/in", exist_ok=True)
+        cuts = ("2024-01-11", "2024-01-21")
+        stages = (
+            (1, ev.filter(F.col("ts") < cuts[0])),
+            (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
+            (3, ev.filter(F.col("ts") >= cuts[1])),
+        )
+        for i, df in stages:
+            df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
+            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
+            dst = f"{tmp}/in/batch_{i}.json"
+            shutil.move(src, dst)
+            os.utime(dst, (1700000000 + i, 1700000000 + i))
+        stream = (
+            spark.readStream.schema("user_id long, value double, ts string")
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
+        )
+        q = versioned_sink(
+            stream,
+            f"{tmp}/table",
+            f"{tmp}/ckpt",
+            stats_cols=["user_id", "value"],
+            sort_col="user_id",
+            n_files=2,
+        )
+        q.awaitTermination(300)
+        s = stats_summary(spark, f"{tmp}/table").first()
+        return [
+            (
+                s["n_rows"],
+                s["min_user_id"],
+                s["max_user_id"],
+                s["nulls_user_id"],
+                s["min_value"],
+                s["max_value"],
+            )
+        ]
+
+    rows = _artifact("stream_ingest", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5872,37 +5852,36 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.streaming.pipeline import cdc_feed
 
-    cached = _FIXTURE_CACHE.get(("stream_cdc", sf_dir))
     schema = "commit_version long, change_type string, cols string, n long"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
-    q_version_cdc(spark, sf_dir)  # stages + caches the versioned table
-    t = _FIXTURE_CACHE[("version_cdc_table", sf_dir)]
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_scdc_")
-    agg: dict[tuple, int] = {}
 
-    def sink(df, batch_id):
-        # per-commit summary only — CDC rows stay distributed
-        summ = df.groupBy(
-            "_commit_version",
-            "change_type",
-            F.concat_ws(",", "changed_cols").alias("cols"),
-        ).agg(F.count("*").alias("n"))
-        for r in summ.collect():
-            key = (r["_commit_version"], r["change_type"], r["cols"])
-            agg[key] = agg.get(key, 0) + r["n"]
+    def build():
+        t = _version_cdc_table(spark, sf_dir)
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_scdc_")
+        agg: dict[tuple, int] = {}
 
-    q = cdc_feed(
-        spark,
-        t,
-        ["o_orderkey"],
-        ["o_totalprice", "o_orderpriority"],
-        f"{tmp}/ckpt",
-        sink,
-    )
-    q.awaitTermination(300)
-    rows = sorted((v, ct, cols, n) for (v, ct, cols), n in agg.items())
-    _FIXTURE_CACHE[("stream_cdc", sf_dir)] = rows
+        def sink(df, batch_id):
+            # per-commit summary only — CDC rows stay distributed
+            summ = df.groupBy(
+                "_commit_version",
+                "change_type",
+                F.concat_ws(",", "changed_cols").alias("cols"),
+            ).agg(F.count("*").alias("n"))
+            for r in summ.collect():
+                key = (r["_commit_version"], r["change_type"], r["cols"])
+                agg[key] = agg.get(key, 0) + r["n"]
+
+        q = cdc_feed(
+            spark,
+            t,
+            ["o_orderkey"],
+            ["o_totalprice", "o_orderpriority"],
+            f"{tmp}/ckpt",
+            sink,
+        )
+        q.awaitTermination(300)
+        return sorted((v, ct, cols, n) for (v, ct, cols), n in agg.items())
+
+    rows = _artifact("stream_cdc", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5948,72 +5927,71 @@ def q_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events table, so clean = rows passing all rules and quarantine
     groups by the ordered failed-rule list: plain slice algebra.
     Replay/torn-crash healing is asserted in tests/test_versioned.py.
-    Fixture memoized per sf_dir."""
+    Fixture memoized per (session, sf_dir)."""
     import tempfile
 
     from sparkgraft.sinks.versioned import read_versioned
     from sparkgraft.streaming.pipeline import versioned_sink
 
-    cached = _FIXTURE_CACHE.get(("expectations_gate", sf_dir))
     schema = "leg string, rules string, n long, amount double"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_expgate_")
-    _stage_event_batches(
-        spark, sf_dir, tmp, ["event_id", "user_id", "event_type", "value"]
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, "
-            "value double, ts string"
+    def build():
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_expgate_")
+        _stage_event_batches(
+            spark, sf_dir, tmp, ["event_id", "user_id", "event_type", "value"]
         )
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = versioned_sink(
-        stream,
-        f"{tmp}/table",
-        f"{tmp}/ckpt",
-        stats_cols=["user_id"],
-        sort_col="user_id",
-        n_files=2,
-        expectations={
-            "type_ok": F.col("event_type") != "error",
-            "value_cap": F.col("value") <= 140.0,
-        },
-        quarantine_dir=f"{tmp}/quarantine",
-    )
-    q.awaitTermination(300)
-    clean_leg = (
-        read_versioned(spark, f"{tmp}/table")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(27,6)"))
-            .cast("decimal(38,2)")
-            .cast("double")
-            .alias("amount"),
+        stream = (
+            spark.readStream.schema(
+                "event_id long, user_id long, event_type string, "
+                "value double, ts string"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
         )
-        .select(
-            F.lit("clean").alias("leg"),
-            F.lit(None).cast("string").alias("rules"),
-            "n",
-            "amount",
+        q = versioned_sink(
+            stream,
+            f"{tmp}/table",
+            f"{tmp}/ckpt",
+            stats_cols=["user_id"],
+            sort_col="user_id",
+            n_files=2,
+            expectations={
+                "type_ok": F.col("event_type") != "error",
+                "value_cap": F.col("value") <= 140.0,
+            },
+            quarantine_dir=f"{tmp}/quarantine",
         )
-    )
-    quar_leg = (
-        read_versioned(spark, f"{tmp}/quarantine")
-        .groupBy(F.col("_failed_rules").alias("rules"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.lit("quarantine").alias("leg"),
-            "rules",
-            "n",
-            F.lit(None).cast("double").alias("amount"),
+        q.awaitTermination(300)
+        clean_leg = (
+            read_versioned(spark, f"{tmp}/table")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.col("value").cast("decimal(27,6)"))
+                .cast("decimal(38,2)")
+                .cast("double")
+                .alias("amount"),
+            )
+            .select(
+                F.lit("clean").alias("leg"),
+                F.lit(None).cast("string").alias("rules"),
+                "n",
+                "amount",
+            )
         )
-    )
-    rows = [tuple(r) for r in clean_leg.unionByName(quar_leg).collect()]
-    _FIXTURE_CACHE[("expectations_gate", sf_dir)] = rows
+        quar_leg = (
+            read_versioned(spark, f"{tmp}/quarantine")
+            .groupBy(F.col("_failed_rules").alias("rules"))
+            .agg(F.count("*").alias("n"))
+            .select(
+                F.lit("quarantine").alias("leg"),
+                "rules",
+                "n",
+                F.lit(None).cast("double").alias("amount"),
+            )
+        )
+        return [tuple(r) for r in clean_leg.unionByName(quar_leg).collect()]
+
+    rows = _artifact("expectations_gate", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -6026,42 +6004,41 @@ def q_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     table therefore holds, per user, the max-event_id row of the LAST
     slice containing that user — plain slice algebra, SQL-exact.
     Replay idempotence is asserted in tests/test_versioned.py.
-    Fixture memoized per sf_dir."""
+    Fixture memoized per (session, sf_dir)."""
     import tempfile
 
     from sparkgraft.sinks.versioned import read_versioned
     from sparkgraft.streaming.pipeline import merge_sink
 
-    cached = _FIXTURE_CACHE.get(("merge_stream", sf_dir))
     schema = "user_id long, last_event long, value double"
-    if cached is not None:
-        return spark.createDataFrame(cached, schema)
 
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_mstream_")
-    _stage_event_batches(spark, sf_dir, tmp, ["event_id", "user_id", "value"])
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, value double, ts string"
+    def build():
+        tmp = tempfile.mkdtemp(prefix="sparkgraft_mstream_")
+        _stage_event_batches(spark, sf_dir, tmp, ["event_id", "user_id", "value"])
+        stream = (
+            spark.readStream.schema(
+                "event_id long, user_id long, value double, ts string"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .json(f"{tmp}/in")
         )
-        .option("maxFilesPerTrigger", "1")
-        .json(f"{tmp}/in")
-    )
-    q = merge_sink(
-        stream,
-        f"{tmp}/table",
-        ["user_id"],
-        "event_id",
-        f"{tmp}/ckpt",
-        stats_cols=["user_id"],
-        sort_col="user_id",
-        n_files=2,
-    )
-    q.awaitTermination(300)
-    final = read_versioned(spark, f"{tmp}/table").select(
-        "user_id", F.col("event_id").alias("last_event"), "value"
-    )
-    rows = [tuple(r) for r in final.collect()]
-    _FIXTURE_CACHE[("merge_stream", sf_dir)] = rows
+        q = merge_sink(
+            stream,
+            f"{tmp}/table",
+            ["user_id"],
+            "event_id",
+            f"{tmp}/ckpt",
+            stats_cols=["user_id"],
+            sort_col="user_id",
+            n_files=2,
+        )
+        q.awaitTermination(300)
+        final = read_versioned(spark, f"{tmp}/table").select(
+            "user_id", F.col("event_id").alias("last_event"), "value"
+        )
+        return [tuple(r) for r in final.collect()]
+
+    rows = _artifact("merge_stream", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -6254,8 +6231,7 @@ def q_versioned_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"),
         F.lit(None).cast("double").alias("amount"),
     )
-    # q_snapshot_travel built (and cached) the versioned table.
-    t = _FIXTURE_CACHE[("snapshot_table", sf_dir)]
+    t = _snapshot_table(spark, sf_dir)
     lo, hi = 1000, 5000
     keep = (F.col("max_o_orderkey") >= lo) & (F.col("min_o_orderkey") <= hi)
     pruned_leg = (

@@ -700,7 +700,7 @@ def audio_match(
     pair information but their posting lists square in the self-join).
     Without it a popular landmark's join output grows quadratically in
     corpus size — measured: the 5k-track soak fixture went 530 s →
-    8.4 s at identical planted-pair recall (tools/soak_round4c.py).
+    8.4 s at identical planted-pair recall (SCALE.md, round-4 soak).
     The surviving hot-hash table is tiny and broadcast into an
     anti-join.
 

@@ -326,8 +326,13 @@ def widen_narrow_scan(
     driver-side parquet-footer stat on the narrow path only; a wide
     scan never reads it (zero driver stats at 100 TB, where the min
     binds to defaultParallelism anyway).  Row-identical either way —
-    only the RoundRobin partition count changes.
+    only the RoundRobin partition count changes.  The footer counts
+    the rows of the scanned files BEFORE any filter, so a selective
+    filter over the scan sizes the fan-out by the whole table (a
+    conservative over-widening).  ``rows_per_task`` must be >= 1.
     """
+    if rows_per_task is not None and rows_per_task < 1:
+        raise ValueError(f"rows_per_task must be >= 1, got {rows_per_task}")
     sc = df.sparkSession.sparkContext
     est = _estimated_scan_partitions(df)
     if est is None:

@@ -1460,11 +1460,19 @@ def _dedup_within_groups(
         # small aggregate (≤ n_clusters + Σ n_sub rows) broadcast back;
         # block = md5(id) % blocks(cluster, sub) — the expression (and
         # the ceil'd count) is identical to the r13 literal-map form.
+        # Left join: a NULL-cluster row matches no group and keeps one
+        # block, so it survives as a non-duplicate like the uncapped path.
         gc = assigned.groupBy("cluster", "sub").agg(
             F.ceil(F.count("*") / F.lit(M)).alias("__blocks")
         )
-        assigned = assigned.join(F.broadcast(gc), ["cluster", "sub"]).select(
-            "cluster", "__id", "__v", "sub", (mb % F.col("__blocks")).alias("block")
+        assigned = assigned.join(
+            F.broadcast(gc), ["cluster", "sub"], "left"
+        ).select(
+            "cluster",
+            "__id",
+            "__v",
+            "sub",
+            (mb % F.coalesce(F.col("__blocks"), F.lit(1))).alias("block"),
         )
     else:
         # Uncapped: constant sub/block — kept OUT of the pair-join

@@ -1499,7 +1499,6 @@ def setsim_join(
     text_col: str = "text",
     threshold: float = 0.6,
     digits: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """EXACT set-similarity self-join — every pair with token-set
     Jaccard >= ``threshold``, found WITHOUT blocking keys and WITHOUT
@@ -1528,12 +1527,11 @@ def setsim_join(
     tokens by construction; the verify join is candidate-sized.
     Output ``(id_a, id_b, jaccard)``, jaccard rounded to ``digits``.
 
-    ``checkpoint`` (default True) localCheckpoints the tokenized base
-    (referenced by the frequency count AND both verify sides) and the
-    prefix table (referenced by both candidate sides), so tokenization
-    and the rank window each run ONCE instead of once per plan branch —
-    the LSH-bands signature-table discipline.  Results are identical
-    either way.
+    The tokenized base (referenced by the frequency count AND both
+    verify sides) and the prefix table (referenced by both candidate
+    sides) are localCheckpointed, so tokenization and the rank window
+    each run ONCE instead of once per plan branch — the LSH-bands
+    signature-table discipline.
     """
     from sparkgraft.operators.scale import widen_narrow_scan
 
@@ -1545,9 +1543,7 @@ def setsim_join(
     base = widen_narrow_scan(docs).select(
         F.col(id_col).cast("string").alias("id"),
         F.array_distinct(tokenize(F.col(text_col))).alias("toks"),
-    ).filter(F.size("toks") > 0)
-    if checkpoint:
-        base = base.localCheckpoint()
+    ).filter(F.size("toks") > 0).localCheckpoint()
     tok = base.select("id", F.size("toks").alias("n"),
                       F.explode("toks").alias("w"))
     freq = tok.groupBy("w").agg(F.count("*").alias("c"))
@@ -1557,9 +1553,7 @@ def setsim_join(
     )
     prefix = ranked.filter(
         F.col("rn") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
-    ).select("w", "id", "n")
-    if checkpoint:
-        prefix = prefix.localCheckpoint()
+    ).select("w", "id", "n").localCheckpoint()
     a = prefix.select(
         "w", F.col("id").alias("id_a"), F.col("n").alias("n_a")
     )

@@ -69,10 +69,16 @@ def get_spark(
     if master and master.startswith("local"):
         # Local mode runs every executor thread inside ONE JVM whose heap
         # defaults to 1g — 32 concurrent tasks starve at soak scale (the
-        # harness box has 128 GiB).  Only effective when this call is the
-        # one that launches the JVM; a cluster manager overrides it.
+        # harness box has 128 GiB).  The 24g default is capped at a third
+        # of this machine's RAM: a heap ceiling above what the JVM, the
+        # Python driver and its workers can share lets the JVM defer
+        # collection until the kernel kills it.  Only effective when this
+        # call is the one that launches the JVM; a cluster manager
+        # overrides it.
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(24 * 1024, ram_mb // 3)}m"),
         )
     conf = dict(DEFAULT_CONF)
     if extra_conf:

@@ -30,6 +30,7 @@ import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -161,25 +162,25 @@ class FilePipeline:
         # moving file N during the loop would make file N+1's action throw
         # FileNotFoundException (then be wrongly quarantined while the
         # checkpoint still marks it consumed).
-        moves: list[tuple[str, str | None]] = []
+        moves: list[tuple[Path, str | None]] = []
         for f in files:
             sub = batch.filter(F.col("_file") == f).drop("_file")
-            stem = Path(f.replace("file:", "")).name
+            # input_file_name() is a percent-encoded URI ("Logger%201_...").
+            src = Path(unquote(urlparse(f).path))
             try:
                 result = self.transform(sub)
-                self.sink(result, stem)
+                self.sink(result, src.name)
                 self.health.set(f"health:{self.name}_file_processing", 0)
-                moves.append((f, self.archive_dir))  # T4 finished/
+                moves.append((src, self.archive_dir))  # T4 finished/
             except Exception:
                 self.health.set(f"health:{self.name}_file_processing", 1)
-                moves.append((f, self.quarantine_dir))  # T3 failed/
-        for f, target in moves:
-            self._move(f, target)
+                moves.append((src, self.quarantine_dir))  # T3 failed/
+        for src, target in moves:
+            self._move(src, target)
 
-    def _move(self, file_url: str, target_dir: str | None) -> None:
+    def _move(self, src: Path, target_dir: str | None) -> None:
         if not target_dir:
             return
-        src = Path(file_url.replace("file:", ""))
         Path(target_dir).mkdir(parents=True, exist_ok=True)
         if src.exists():
             shutil.move(str(src), str(Path(target_dir) / src.name))

@@ -71,10 +71,9 @@ def test_backfill_date_pruning(spark):
     }
     assert got, "backfill returned no rows"
 
-    # The memoized fixture records ITS landing zone — never glob /tmp,
-    # where stale dirs from other sessions (other scale factors) linger.
-    landing = m._FIXTURE_CACHE.get(("backfill_landing", sf_dir))
-    assert landing is not None
+    # The memoized landing zone the drain read — never glob /tmp, where
+    # stale dirs from other sessions (other scale factors) linger.
+    landing = m._backfill_landing(spark, sf_dir)
 
     # Batch partition inference types `date` as DateType (the streaming
     # schema declares it string) — compare on the string form.

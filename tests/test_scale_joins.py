@@ -216,6 +216,10 @@ def test_widen_narrow_scan_rows_per_task_bounds_fanout(spark, tmp_path):
     mem = spark.range(100).coalesce(1)
     assert _scan_row_count(mem) is None
     assert widen_narrow_scan(mem, rows_per_task=300).rdd.getNumPartitions() == par
+    # a non-positive bound is rejected before any planning
+    for bad in (0, -3):
+        with pytest.raises(ValueError, match="rows_per_task"):
+            widen_narrow_scan(df, rows_per_task=bad)
 
 
 def test_read_table_caches_plan_per_session(spark):

@@ -1,13 +1,16 @@
 """Adversarial corners of the capped-semdedup split policy (the
 round-12 witness-mutation discipline applied to the round-13
 operator): minimal oversize, empty seed slots, and shuffle-partition
-invariance of the full capped pipeline."""
+invariance of the full capped pipeline, and NULL-label rows."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkgraft.operators.similarity import semantic_dedup
+from sparkgraft.operators.similarity import (
+    semantic_dedup,
+    semantic_dedup_labeled,
+)
 
 CENTS = [(0, [2.0, 0.0, 0.0, 0.0]), (1, [-2.0, 0.0, 0.0, 0.0])]
 
@@ -82,3 +85,23 @@ def test_capped_pipeline_is_shuffle_partition_invariant(spark):
     clusters = {r[1] for r in results[0]}
     subs = {r[2] for r in results[0]}
     assert clusters == {0, 1} and len(subs) > 1
+
+
+def test_capped_keeps_null_label_rows(spark):
+    """One output row per input row on the capped path too: a row whose
+    label is NULL matches no group count in the hard-cap join, and must
+    come back as a non-duplicate, exactly as on the uncapped path."""
+    rows = [
+        (i, [1.0, 0.001 * i, 0.0, 0.0], None if i == 4 else i % 2)
+        for i in range(9)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    for cap in (None, 2):
+        got = semantic_dedup_labeled(
+            df, "label", 0.9, max_cluster_size=cap
+        ).collect()
+        assert sorted(r["vec_id"] for r in got) == list(range(9)), cap
+        (null_row,) = [r for r in got if r["vec_id"] == 4]
+        assert not null_row["is_duplicate"] and null_row["dup_of"] is None

@@ -80,6 +80,20 @@ def test_stats_quarantine_archive_health(spark, tmp_path):
     assert ("health:lpi_100hz_file_processing", 1) in health.history
 
 
+def test_file_name_with_space_keeps_stem_and_is_archived(spark, tmp_path):
+    # input_file_name() percent-encodes the space; the sink must see the
+    # file's own name, and the file must still move to finished/.
+    inp = tmp_path / "in"
+    inp.mkdir()
+    stem = "Logger 1_2025-01-01_00-00-00.csv"
+    _write_file(inp, stem, ["2025-01-01T00:00:00,C1,1.0"])
+    kv: dict[str, str] = {}
+    _mk_pipeline(spark, tmp_path, HealthBoard(), kv).run_available()
+    assert kv[f"{stem}:C1:mean"] == "1.0"
+    assert (tmp_path / "finished" / stem).exists()
+    assert not (inp / stem).exists()
+
+
 def test_exactly_once_across_restart(spark, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()

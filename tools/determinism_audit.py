@@ -2,9 +2,9 @@
 every ``queries()`` entry TWICE — separate SparkSessions with shuffle
 partitions 7 vs 64 — and diff the canonicalized result sets.  Any
 difference is a partitioning-dependent result that WILL flake the
-driver gate.  Temp-dir streaming fixtures are memoized per sf_dir, so
-they compare trivially equal (their determinism is covered by the
-streaming tests instead).
+driver gate.  Every memoized artifact (fits, staged fixtures,
+drained streams) is rebuilt in each session, so both runs compute
+every query from scratch.
 
 Run:  python tools/determinism_audit.py [sf_dir]
 Exit code 0 = every query partition-count-invariant.
@@ -50,21 +50,7 @@ def run(n_partitions: int, sf_dir: str) -> dict[str, str]:
         )
         out[name] = hashlib.md5(repr(rows).encode()).hexdigest()
     spark.stop()
-    # Session-keyed caches must rebuild next session (id(spark) can be
-    # reused after gc, and a cached DataFrame from a stopped session is
-    # unusable anyway).
-    for cache in (
-        entrymod._BPE_CACHE,
-        entrymod._CLS_CACHE,
-        entrymod._PCA_CACHE,
-        entrymod._UNIGRAM_CACHE,
-    ):
-        cache.clear()
-    # Session-keyed _FIXTURE_CACHE entries carry id(spark) as the third
-    # key element (er_labels, topic_model) — drop those too; sf_dir-keyed
-    # streaming fixtures (2-element keys) stay memoized by design.
-    for key in [k for k in entrymod._FIXTURE_CACHE if len(k) == 3]:
-        del entrymod._FIXTURE_CACHE[key]
+    entrymod.clear_artifacts()
     return out
 
 

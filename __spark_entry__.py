@@ -2654,10 +2654,12 @@ def _multi_version_summary(spark: SparkSession, t: str, n_versions: int) -> Data
     every version whose manifest lists it (append/merge versions carry
     parent files forward, so file sets overlap), and one grouped
     aggregate replaces ``n_versions`` global ones — N scans + N
-    exchanges + union -> 1 scan + 1 exchange.  Counts and the exact
-    decimal spend sums are per-version row-identical to the
-    read-each-snapshot form (same multiset of rows per version,
-    order-free decimal sum)."""
+    exchanges + union -> 1 scan + 1 exchange.  Precondition: every
+    version holds at least one row — the grouped aggregate emits no
+    row for an empty version.  Both callers stage fixed commits that
+    all have rows; under that precondition the counts and exact
+    decimal spend sums equal the read-each-snapshot form (same
+    multiset of rows per version, order-free decimal sum)."""
     from sparkgraft.sinks.versioned import _read_manifest
 
     import os as _os

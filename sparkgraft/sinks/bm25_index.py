@@ -423,10 +423,9 @@ def append_bm25_index(
     # content is _ensure_nonempty_dir's zero-row schema file at the
     # incoming ROOT (bucket as a data column), and the journal apply
     # would move that flat file into the live bucket-partitioned
-    # postings dir — the exact mixed flat/partitioned layout
-    # _migrate_flat_dedup_layout documents as breaking partition
-    # discovery, in a dir promised as 'plain parquet readable by any
-    # engine'.  Skipped incoming dirs are removed here so a later
+    # postings dir — a mixed flat/partitioned layout, which breaks
+    # partition discovery, in a dir promised as 'plain parquet
+    # readable by any engine'.  Skipped incoming dirs are removed here so a later
     # repair can't resurrect them.
     import shutil as _shutil
 

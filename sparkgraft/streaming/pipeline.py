@@ -25,7 +25,9 @@ first by filename timestamp, matching Pipeline.py:135-160.
 
 from __future__ import annotations
 
+import json
 import logging
+import os
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -237,7 +239,6 @@ def upsert_sink(
 
     Returns the started StreamingQuery.
     """
-    from pyspark.sql import functions as F
 
     def _read_current(spark):
         """The stored table, surviving a crash mid-commit: if
@@ -306,12 +307,84 @@ def upsert_sink(
             "overwrite"
         ).parquet(table_path)
 
+    return _drain(stream, apply_batch, checkpoint_dir)
+
+
+def _drain(stream, on_batch, checkpoint_dir: str):
+    """Start ``on_batch`` as a ``foreachBatch`` query that drains what
+    the source holds now (``Trigger.AvailableNow``), then stops."""
     return (
-        stream.writeStream.foreachBatch(apply_batch)
+        stream.writeStream.foreachBatch(on_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
+
+
+class _BatchState:
+    """Replay-safe driver-side state of one ``foreachBatch`` monitor.
+
+    A monitor folds each micro-batch into a small JSON-serializable
+    state (a k-row profile, sketch cells, a reservoir, per-key
+    scalars) kept in ``<checkpoint_dir>/<file_name>`` as
+    ``{batch_id, state, prev, pinned}``:
+
+    * A restarted query reloads the stored state, so it resumes
+      instead of silently starting again from ``empty``.
+    * The state is written before Spark commits the batch, so after a
+      crash the same batch id can be delivered again.
+      ``before(batch_id)`` then returns ``prev``, the pre-batch
+      snapshot: the replay is folded in once, not twice, and re-emits
+      the same sink output.
+    * ``pinned`` is an optional fixed reference (the ks and cusum
+      baselines), computed by ``pin()`` on the first start only and
+      reloaded afterwards, so restarts compare against the identical
+      baseline.
+    * ``commit`` writes a temp file, ``fsync``s it and renames it over
+      the old one, so a crash or power loss leaves the old or the new
+      state, never a torn or empty file.
+
+    Reloaded rows come back as JSON lists.
+    """
+
+    def __init__(self, checkpoint_dir: str, file_name: str, empty, pin=None):
+        self.path = os.path.join(checkpoint_dir, file_name)
+        self.batch_id = None
+        self.state = self.prev = empty
+        self.pinned = None
+        if os.path.exists(self.path):
+            with open(self.path) as fh:
+                stored = json.load(fh)
+            self.batch_id = stored["batch_id"]
+            self.state, self.prev = stored["state"], stored["prev"]
+            self.pinned = stored["pinned"]
+        if pin is not None and self.pinned is None:
+            self.pinned = pin()
+
+    def before(self, batch_id: int):
+        """The state batch ``batch_id`` folds into."""
+        return self.prev if batch_id == self.batch_id else self.state
+
+    def commit(self, batch_id: int, state) -> None:
+        """Persist ``state`` as the state after batch ``batch_id``."""
+        if batch_id != self.batch_id:
+            self.prev = self.state
+        self.batch_id, self.state = batch_id, state
+        os.makedirs(os.path.dirname(self.path), exist_ok=True)
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(
+                {
+                    "batch_id": batch_id,
+                    "state": state,
+                    "prev": self.prev,
+                    "pinned": self.pinned,
+                },
+                fh,
+            )
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self.path)
 
 
 def drift_monitor(
@@ -319,10 +392,8 @@ def drift_monitor(
     cols: list[str],
     sink,
     checkpoint_dir: str,
-    baseline_rows: list | None = None,
     tol_pct: int = 10,
     null_tol_permille: int = 20,
-    trigger: dict | None = None,
 ):
     """Streaming drift monitoring over ``foreachBatch`` snapshots: each
     micro-batch is profiled with :func:`profile_columns` (one
@@ -330,101 +401,43 @@ def drift_monitor(
     and diffed against the PREVIOUS batch's profile via
     :func:`drift_report`; ``sink(verdicts_df, batch_id)`` receives the
     per-column verdict table for every batch after the first.  The
-    first batch (or an explicit ``baseline_rows`` list of profile rows)
-    seeds the baseline — the live version of the batch `drift_report`
-    query, and the monitoring loop the reference's per-cycle health
-    flags imply (README.txt:7-12, helper/redis_utility.py:10-35).
+    first batch seeds the baseline — the live version of the batch
+    `drift_report` query, and the monitoring loop the reference's
+    per-cycle health flags imply (README.txt:7-12,
+    helper/redis_utility.py:10-35).
 
     Scale shape: the per-batch profile is one row PER PROFILED COLUMN
     (k rows, k ≈ 10s), so holding it on the driver between batches is
     bounded state, not data — the expensive aggregation stays fully
-    distributed inside profile_columns.  The baseline survives query
-    RESTARTS: each batch persists its k-row profile as JSON next to
-    the checkpoint, and a restarted query reloads it — otherwise the
-    first post-restart batch would silently re-seed the baseline and
-    its drift would go unreported.  The persisted baseline is KEYED BY
-    BATCH ID: the profile is written before the checkpoint commits, so
-    a ``foreachBatch`` replay of batch N after a crash would otherwise
-    diff N against its own pre-crash profile and report 'ok' — the
-    stored predecessor profile is kept alongside, and a replayed batch
-    diffs against that instead, re-emitting the real verdict.
-
-    ``trigger`` passes through to ``writeStream.trigger`` (e.g.
-    ``{"processingTime": "10 seconds"}`` for live monitoring); default
-    is ``{"availableNow": True}`` (drain-style).  Returns the started
-    query.
+    distributed inside profile_columns.  The profile is kept in
+    ``drift_baseline.json`` under :class:`_BatchState`'s replay and
+    restart policy: a restarted query diffs its first batch against
+    the stored profile, and a crash replay of batch N diffs against
+    N's predecessor, re-emitting the real verdict.  Returns the
+    started query.
     """
-    import json
-    import os
-
     from sparkgraft.operators.stats import drift_report, profile_columns
 
-    baseline_file = os.path.join(checkpoint_dir, "drift_baseline.json")
-    state = {"rows": baseline_rows, "batch_id": None, "prev_rows": None}
-    if baseline_rows is None and os.path.exists(baseline_file):
-        with open(baseline_file) as fh:
-            stored = json.load(fh)
-        if isinstance(stored, dict):
-            state["rows"] = (
-                [tuple(r) for r in stored["rows"]]
-                if stored.get("rows") is not None
-                else None
-            )
-            state["batch_id"] = stored.get("batch_id")
-            state["prev_rows"] = (
-                [tuple(r) for r in stored["prev_rows"]]
-                if stored.get("prev_rows") is not None
-                else None
-            )
-        else:  # pre-round-4 format: bare row list, no batch key
-            state["rows"] = [tuple(r) for r in stored]
+    store = _BatchState(checkpoint_dir, "drift_baseline.json", None)
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
         prof = profile_columns(batch, cols)
-        schema = prof.schema
         rows = prof.collect()  # k rows — one per profiled column
-        if state["batch_id"] is not None and batch_id == state["batch_id"]:
-            # Replay of the same batch after a crash: the stored
-            # profile IS this batch's own — diff against its
-            # predecessor so the real verdict is re-emitted, not 'ok'.
-            baseline = state["prev_rows"]
-        else:
-            baseline = state["rows"]
-            state["prev_rows"] = state["rows"]
+        baseline = store.before(batch_id)
         if baseline is not None:
             verdicts = drift_report(
-                spark.createDataFrame(baseline, schema),
-                spark.createDataFrame(rows, schema),
+                spark.createDataFrame(baseline, prof.schema),
+                spark.createDataFrame(rows, prof.schema),
                 tol_pct=tol_pct,
                 null_tol_permille=null_tol_permille,
             )
             sink(verdicts, batch_id)
-        state["rows"] = rows
-        state["batch_id"] = batch_id
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = baseline_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "batch_id": batch_id,
-                    "rows": [list(r) for r in rows],
-                    "prev_rows": (
-                        [list(r) for r in state["prev_rows"]]
-                        if state["prev_rows"] is not None
-                        else None
-                    ),
-                },
-                fh,
-            )
-        os.replace(tmp, baseline_file)  # atomic like the K5 event store
+        store.commit(batch_id, rows)
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return _drain(stream, on_batch, checkpoint_dir)
+
+
 
 
 def dedup_admission(
@@ -438,7 +451,6 @@ def dedup_admission(
     num_hashes: int = 12,
     bands: int = 2,
     min_jaccard: float = 0.5,
-    trigger: dict | None = None,
 ):
     """Streaming near-dup ADMISSION — the live form of
     ``textops.incremental_dedup`` and the production daily-ingest
@@ -474,21 +486,13 @@ def dedup_admission(
     content is not resurrected from source).  To ingest NEW data into
     an existing index, keep the original checkpoint.
     """
-    import os
-
     from sparkgraft.operators.textops import crossside_verdicts, minhash_prep
 
     base_dir = os.path.join(history_dir, "base")
     banded_dir = os.path.join(history_dir, "banded")
 
     def _read_or_empty(spark, path, schema):
-        if not os.path.isdir(path):
-            # a crashed layout migration may have left the table
-            # swapped aside — recover it rather than reading 'empty
-            # history' (which would silently re-admit known dups)
-            _repair_dedup_layout(path)
         if os.path.isdir(path):
-            _migrate_flat_dedup_layout(spark, path, schema)
             return spark.read.schema(schema).parquet(path)
         return spark.createDataFrame([], schema)
 
@@ -571,101 +575,11 @@ def dedup_admission(
         verdicts.unpersist()
         new_base.unpersist()
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
-
-
-def _repair_dedup_layout(path: str) -> None:
-    """Recover a crashed :func:`_migrate_flat_dedup_layout` (round-8
-    hardening).  The migration commits via a journal file naming its
-    unique backup dir: once the journal exists the staged partitioned
-    copy is the table's truth and repair finishes the swap; without a
-    journal, staging leftovers are pre-commit garbage.  Also restores
-    the two crash states the pre-round-8 migration could leave (table
-    dir swapped aside with a complete staging copy, or an orphaned
-    ``*_layout_old`` backup that would ENOTEMPTY the next migration).
-    Called before every migration AND before any history read that
-    finds the table dir missing — a crashed migration must never read
-    as 'empty dedup history' (silent false admits)."""
-    import glob
-    import os
-    import shutil
-
-    journal = path + "_layout_journal"
-    staging = path + "_layout_staging"
-    if os.path.isfile(journal):
-        with open(journal) as f:
-            backup = f.read().strip()
-        if os.path.isdir(staging):
-            if os.path.isdir(path):
-                if os.path.isdir(backup):
-                    shutil.rmtree(path)
-                else:
-                    os.replace(path, backup)
-            os.replace(staging, path)
-        if backup and os.path.isdir(backup):
-            shutil.rmtree(backup)
-        os.remove(journal)
-        return
-    legacy = sorted(glob.glob(path + "_layout_old*"))
-    if not os.path.isdir(path):
-        if os.path.isdir(staging):
-            # pre-commit staging is written in full before any swap,
-            # so if the table dir is gone the staging copy is complete
-            os.replace(staging, path)
-        elif legacy:
-            os.replace(legacy[0], path)
-            legacy = legacy[1:]
-    if os.path.isdir(staging) and os.path.isdir(path):
-        shutil.rmtree(staging)
-    for b in legacy:
-        if os.path.isdir(b):
-            shutil.rmtree(b)
-
-
-def _migrate_flat_dedup_layout(spark, path: str, schema) -> None:
-    """One-time layout upgrade for dedup-admission index tables built
-    before the `_batch_id`-partitioned appends: flat root-level files
-    (with `_batch_id` as a data column) mixed with partition
-    directories would make partition discovery fail on the next read,
-    and compaction would miss the flat rows.  Rewrite the flat table
-    into the partitioned layout BEFORE the first partitioned append,
-    so a mixed layout never forms.  The swap commits through an atomic
-    journal rename (unique backup name — a leftover backup can never
-    ENOTEMPTY a later run) and any crash is finished by
-    :func:`_repair_dedup_layout` on the next entry."""
-    import os
-    import shutil
-    import uuid
-
-    _repair_dedup_layout(path)
-    flat = [n for n in os.listdir(path) if n.endswith(".parquet")]
-    if not flat:
-        return
-    df = spark.read.schema(schema).parquet(path)
-    staging = path + "_layout_staging"
-    df.write.partitionBy("_batch_id").mode("overwrite").parquet(staging)
-    backup = path + "_layout_old_" + uuid.uuid4().hex[:8]
-    journal = path + "_layout_journal"
-    tmp = journal + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(backup)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, journal)  # COMMIT: staging is now the table's truth
-    os.replace(path, backup)
-    os.replace(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
-    os.remove(journal)
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def _dedup_tombstones(spark, history_dir: str):
     """Distinct tombstoned ids of the dedup-admission index, or None."""
-    import os
-
     p = os.path.join(history_dir, "tombstones")
     if os.path.isdir(p):
         return spark.read.parquet(p).select("id").distinct()
@@ -675,8 +589,6 @@ def _dedup_tombstones(spark, history_dir: str):
 def _compacted_batch_ids(spark, history_dir: str) -> set:
     """Batch ids fully emptied by compact_dedup_index (bounded: one
     entry per forgotten-out batch)."""
-    import os
-
     p = os.path.join(history_dir, "compacted_batches")
     if not os.path.isdir(p):
         return set()
@@ -720,9 +632,6 @@ def compact_dedup_index(spark, history_dir: str) -> int:
     unchanged (the logical delete already excluded the rows); after
     this the forgotten shingle bytes are gone.  Returns the number of
     partition directories rewritten or dropped."""
-    import os
-    import shutil
-
     tomb = _dedup_tombstones(spark, history_dir)
     if tomb is None:
         return 0
@@ -732,10 +641,6 @@ def compact_dedup_index(spark, history_dir: str) -> int:
         table_dir = os.path.join(history_dir, sub)
         if not os.path.isdir(table_dir):
             continue
-        # pre-partitioning layouts migrate before the partition swap
-        _migrate_flat_dedup_layout(
-            spark, table_dir, spark.read.parquet(table_dir).schema
-        )
         t = spark.read.parquet(table_dir)
         # bounded collect: one row per batch containing forgotten docs
         affected = sorted(
@@ -774,6 +679,27 @@ def compact_dedup_index(spark, history_dir: str) -> int:
     return n_touched
 
 
+def _merge_sketch(spark, sk, base_rows, gc, schema_str):
+    """Cell-wise DDSketch merge of the batch sketch ``sk`` into the
+    stored sketch rows; returns the merged cells (bounded: log-buckets
+    per group)."""
+    if base_rows:
+        sk = (
+            sk.unionByName(spark.createDataFrame(base_rows, schema_str))
+            .groupBy(*gc, "sign", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+    return [tuple(r) for r in sk.collect()]
+
+
+def _sketch_schema(batch, gc) -> str:
+    """DDL of the sketch cells: group columns, then sign/bucket/cnt."""
+    return ", ".join(
+        [f"`{c}` {batch.schema[c].dataType.simpleString()}" for c in gc]
+        + ["sign int", "bucket long", "cnt long"]
+    )
+
+
 def quantile_monitor(
     stream,
     value_col: str,
@@ -782,7 +708,6 @@ def quantile_monitor(
     group_cols: list[str] | None = None,
     alpha: float = 0.01,
     qs: tuple = (0.5, 0.9, 0.99),
-    trigger: dict | None = None,
 ):
     """Streaming percentiles via the DDSketch merge law — the way
     live p99s are actually computed at scale: each micro-batch is
@@ -792,79 +717,35 @@ def quantile_monitor(
     ``sink(quantiles_df, batch_id)`` receives the updated
     p50/p90/p99 per group after every batch.
 
-    The running sketch persists as JSON rows next to the checkpoint,
-    KEYED BY BATCH ID (the drift_monitor discipline): a foreachBatch
-    replay of batch N merges into the PRE-N snapshot instead of
-    double-counting N's values, and a restarted query resumes from the
-    stored sketch instead of silently restarting percentiles from
-    empty.  Estimates match the batch operator exactly on the same
-    data — the merge law is exact, so streaming vs batch is
+    The running sketch is kept in ``ddsketch_state.json`` under
+    :class:`_BatchState`'s replay and restart policy, so a replayed
+    batch is never double-counted and a restart never resets the
+    percentiles.  Estimates match the batch operator exactly on the
+    same data — the merge law is exact, so streaming vs batch is
     bit-identical (asserted in tests).
     """
-    import json
-    import os
-
     from sparkgraft.operators.sketch import ddsketch_build, ddsketch_quantiles
 
     gc = list(group_cols or [])
-    state_file = os.path.join(checkpoint_dir, "ddsketch_state.json")
-    state = {"rows": [], "batch_id": None, "prev_rows": []}
-    if os.path.exists(state_file):
-        with open(state_file) as fh:
-            stored = json.load(fh)
-        state["rows"] = [tuple(r) for r in stored["rows"]]
-        state["batch_id"] = stored.get("batch_id")
-        state["prev_rows"] = [tuple(r) for r in stored.get("prev_rows", [])]
+    store = _BatchState(checkpoint_dir, "ddsketch_state.json", [])
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
-        sk = ddsketch_build(batch, value_col, gc, alpha=alpha)
-        schema_str = ", ".join(
-            [f"`{c}` {batch.schema[c].dataType.simpleString()}" for c in gc]
-            + ["sign int", "bucket long", "cnt long"]
+        schema_str = _sketch_schema(batch, gc)
+        rows = _merge_sketch(
+            spark,
+            ddsketch_build(batch, value_col, gc, alpha=alpha),
+            store.before(batch_id),
+            gc,
+            schema_str,
         )
-        # Replay of batch N: merge into the PRE-N snapshot.
-        base_rows = (
-            state["prev_rows"]
-            if state["batch_id"] is not None and batch_id == state["batch_id"]
-            else state["rows"]
-        )
-        if base_rows:
-            prev = spark.createDataFrame(base_rows, schema_str)
-            merged = (
-                sk.unionByName(prev)
-                .groupBy(*gc, "sign", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = sk
-        rows = [tuple(r) for r in merged.collect()]  # bounded: log-buckets
         quants = ddsketch_quantiles(
             spark.createDataFrame(rows, schema_str), gc, qs=qs, alpha=alpha
         )
         sink(quants, batch_id)
-        if state["batch_id"] is None or batch_id != state["batch_id"]:
-            state["prev_rows"] = state["rows"]
-        state["rows"] = rows
-        state["batch_id"] = batch_id
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "rows": [list(r) for r in state["rows"]],
-                    "prev_rows": [list(r) for r in state["prev_rows"]],
-                    "batch_id": batch_id,
-                },
-                fh,
-            )
-        os.replace(tmp, state_file)
+        store.commit(batch_id, rows)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def ks_monitor(
@@ -875,7 +756,6 @@ def ks_monitor(
     sink,
     group_cols: list[str] | None = None,
     alpha: float = 0.01,
-    trigger: dict | None = None,
 ):
     """Streaming distribution-drift monitor: two-sample KS between a
     PINNED baseline and everything streamed so far, after every
@@ -889,68 +769,46 @@ def ks_monitor(
     union of values (the statistic depends only on bucket ORDER and
     counts, asserted in tests).
 
-    Replay discipline is quantile_monitor's: running state persists
-    KEYED BY BATCH ID, so a foreachBatch replay of batch N merges into
-    the pre-N snapshot instead of double-counting; the baseline
-    histogram is computed once at monitor start and persisted beside
-    the state, so restarts compare against the identical baseline.
+    The running histogram is kept in ``ks_state.json`` under
+    :class:`_BatchState`'s replay and restart policy; the baseline
+    histogram is its pinned value, built once at the first start.
     ``sink(verdicts_df, batch_id)`` receives one row per group with
     (n_a, n_b, ks_stat, drift) after every batch.
     """
-    import json
-    import os
-
     from sparkgraft.operators.sketch import ddsketch_build
     from sparkgraft.operators.stats import ks_from_counts
 
     gc = list(group_cols or [])
-    state_file = os.path.join(checkpoint_dir, "ks_state.json")
-    state = {"rows": [], "batch_id": None, "prev_rows": [], "base": None}
-    if os.path.exists(state_file):
-        with open(state_file) as fh:
-            stored = json.load(fh)
-        state["rows"] = [tuple(r) for r in stored["rows"]]
-        state["batch_id"] = stored.get("batch_id")
-        state["prev_rows"] = [tuple(r) for r in stored.get("prev_rows", [])]
-        state["base"] = [tuple(r) for r in stored["base"]]
-    if state["base"] is None:
-        state["base"] = [
+    store = _BatchState(
+        checkpoint_dir,
+        "ks_state.json",
+        [],
+        pin=lambda: [
             tuple(r)
             for r in ddsketch_build(
                 baseline, value_col, gc, alpha=alpha
             ).collect()  # bounded: log-bucket cells per group
-        ]
+        ],
+    )
 
     # monotone single-column encoding of (sign asc, sign*bucket asc)
     big = 1 << 40
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
-        sk = ddsketch_build(batch, value_col, gc, alpha=alpha)
-        schema_str = ", ".join(
-            [f"`{c}` {batch.schema[c].dataType.simpleString()}" for c in gc]
-            + ["sign int", "bucket long", "cnt long"]
+        schema_str = _sketch_schema(batch, gc)
+        rows = _merge_sketch(
+            spark,
+            ddsketch_build(batch, value_col, gc, alpha=alpha),
+            store.before(batch_id),
+            gc,
+            schema_str,
         )
-        base_rows = (
-            state["prev_rows"]
-            if state["batch_id"] is not None and batch_id == state["batch_id"]
-            else state["rows"]
-        )
-        if base_rows:
-            prev = spark.createDataFrame(base_rows, schema_str)
-            merged = (
-                sk.unionByName(prev)
-                .groupBy(*gc, "sign", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = sk
-        rows = [tuple(r) for r in merged.collect()]
         v_ord = (
             F.col("sign").cast("long") * big
             + F.col("sign") * F.col("bucket")
         ).alias("v")
-        a = spark.createDataFrame(state["base"], schema_str).select(
+        a = spark.createDataFrame(store.pinned, schema_str).select(
             *gc, v_ord, F.col("cnt").alias("ca"), F.lit(0).alias("cb")
         )
         b = spark.createDataFrame(rows, schema_str).select(
@@ -962,29 +820,9 @@ def ks_monitor(
             .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
         )
         sink(ks_from_counts(counts, gc), batch_id)
-        if state["batch_id"] is None or batch_id != state["batch_id"]:
-            state["prev_rows"] = state["rows"]
-        state["rows"] = rows
-        state["batch_id"] = batch_id
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "rows": [list(r) for r in state["rows"]],
-                    "prev_rows": [list(r) for r in state["prev_rows"]],
-                    "base": [list(r) for r in state["base"]],
-                    "batch_id": batch_id,
-                },
-                fh,
-            )
-        os.replace(tmp, state_file)
+        store.commit(batch_id, rows)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def sample_monitor(
@@ -996,7 +834,6 @@ def sample_monitor(
     sink,
     salt: str = "ws",
     carry_cols: list[str] | None = None,
-    trigger: dict | None = None,
 ):
     """Streaming weighted reservoir (the live form of
     ``scale.weighted_sample``): maintain the k highest A-ES priorities
@@ -1007,24 +844,15 @@ def sample_monitor(
     the running reservoir after any prefix is EXACTLY the batch
     ``weighted_sample`` of that prefix's union (merge law: top-k of
     (state ∪ batch top-k) = top-k of the union) — asserted in tests
-    and by the oracle-checked ``stream_sample`` query.  State persists
-    KEYED BY BATCH ID (the quantile_monitor replay discipline), so
-    crash replays never re-admit duplicates.  ``sink(reservoir_df,
-    batch_id)`` receives the current sample after every batch.
+    and by the oracle-checked ``stream_sample`` query.  The reservoir
+    is kept in ``reservoir_state.json`` under :class:`_BatchState`'s
+    replay and restart policy, so crash replays never re-admit
+    duplicates.  ``sink(reservoir_df, batch_id)`` receives the current
+    sample after every batch.
     """
-    import json
-    import os
-
     from sparkgraft.operators.scale import weighted_sample
 
-    state_file = os.path.join(checkpoint_dir, "reservoir_state.json")
-    state = {"rows": [], "batch_id": None, "prev_rows": []}
-    if os.path.exists(state_file):
-        with open(state_file) as fh:
-            stored = json.load(fh)
-        state["rows"] = [tuple(r) for r in stored["rows"]]
-        state["batch_id"] = stored.get("batch_id")
-        state["prev_rows"] = [tuple(r) for r in stored.get("prev_rows", [])]
+    store = _BatchState(checkpoint_dir, "reservoir_state.json", [])
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -1036,12 +864,7 @@ def sample_monitor(
         local = weighted_sample(
             batch.select(*cols), weight_col, key_cols, k, salt=salt
         )
-        base_rows = (
-            state["prev_rows"]
-            if state["batch_id"] is not None and batch_id == state["batch_id"]
-            else state["rows"]
-        )
-        cand = [tuple(r) for r in local.collect()] + base_rows
+        cand = [tuple(r) for r in local.collect()] + store.before(batch_id)
         merged_df = weighted_sample(
             spark.createDataFrame(cand, schema_str)
             .dropDuplicates(list(key_cols)),
@@ -1052,28 +875,9 @@ def sample_monitor(
         )
         rows = [tuple(r) for r in merged_df.collect()]
         sink(merged_df, batch_id)
-        if state["batch_id"] is None or batch_id != state["batch_id"]:
-            state["prev_rows"] = state["rows"]
-        state["rows"] = rows
-        state["batch_id"] = batch_id
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "rows": [list(r) for r in state["rows"]],
-                    "prev_rows": [list(r) for r in state["prev_rows"]],
-                    "batch_id": batch_id,
-                },
-                fh,
-            )
-        os.replace(tmp, state_file)
+        store.commit(batch_id, rows)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def cusum_monitor(
@@ -1089,7 +893,6 @@ def cusum_monitor(
     h: float = 5.0,
     baseline_n: int = 50,
     digits: int = 6,
-    trigger: dict | None = None,
 ):
     """Streaming CUSUM mean-shift monitor — the live form of
     ``stats.cusum_changepoints``, in O(1) state per (key, side): the
@@ -1099,14 +902,14 @@ def cusum_monitor(
     Per batch, the window computation runs distributed in Spark; only
     one (C, M) row per key collects.
 
-    μ₀ is PINNED at monitor start from the first ``baseline_n`` rows
-    per key of ``baseline`` (the ks_monitor discipline) and persisted
-    beside the state, so restarts monitor against the identical
-    target.  Only keys present in the baseline are monitored — batch
-    rows for unknown keys are dropped by the baseline join (new keys
-    need a monitor restart with a refreshed baseline).  State persists KEYED BY BATCH ID, so a foreachBatch
-    replay of batch N resumes from the pre-N snapshot instead of
-    double-advancing the recurrence (asserted in tests).
+    μ₀ is PINNED at the first start from the first ``baseline_n``
+    rows per key of ``baseline``.  Only keys present in the baseline
+    are monitored — batch rows for unknown keys are dropped by the
+    baseline join (new keys need a monitor restart with a refreshed
+    baseline).  The per-key state and μ₀ are kept in
+    ``cusum_state.json`` under :class:`_BatchState`'s replay and
+    restart policy, so a replayed batch never double-advances the
+    recurrence (asserted in tests).
 
     Alarms are bit-identical to the batch operator run over the union
     of all batches (same integer arithmetic), PROVIDED rows arrive in
@@ -1115,8 +918,6 @@ def cusum_monitor(
     file-cadence ingestion; within a batch, order is free.
     ``sink(alarms_df, batch_id)`` receives that batch's alarm rows.
     """
-    import json
-    import os
     from decimal import Decimal
 
     from pyspark.sql import Window
@@ -1125,16 +926,8 @@ def cusum_monitor(
 
     k_s = int(round(k * MEAN_SCALE))
     h_s = int(round(h * MEAN_SCALE))
-    state_file = os.path.join(checkpoint_dir, "cusum_state.json")
-    state = {"keys": {}, "batch_id": None, "prev_keys": None, "base": None}
-    if os.path.exists(state_file):
-        with open(state_file) as fh:
-            stored = json.load(fh)
-        state["keys"] = stored["keys"]
-        state["batch_id"] = stored.get("batch_id")
-        state["prev_keys"] = stored.get("prev_keys")
-        state["base"] = stored["base"]
-    if state["base"] is None:
+
+    def pin() -> dict:
         w_rn = Window.partitionBy(key_col).orderBy(
             F.col(ts_col).asc(), F.col(id_col).asc()
         )
@@ -1152,31 +945,22 @@ def cusum_monitor(
             .agg(F.count("*").alias("nb"), F.sum("xs").alias("sb"))
             .collect()  # bounded: one row per monitored key
         )
-        state["base"] = {
-            str(r["key"]): [int(r["nb"]), int(r["sb"])] for r in base_rows
-        }
+        return {str(r["key"]): [int(r["nb"]), int(r["sb"])] for r in base_rows}
+
+    store = _BatchState(checkpoint_dir, "cusum_state.json", {}, pin=pin)
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
-        keys = (
-            state["prev_keys"]
-            if state["batch_id"] is not None
-            and batch_id == state["batch_id"]
-            and state["prev_keys"] is not None
-            else state["keys"]
-        )
+        keys = store.before(batch_id)
         # Tiny broadcast tables: pinned baseline + per-key (C, M) state.
         meta_rows = [
             (
                 kk,
                 nb,
                 Decimal(sb),
-                Decimal(int(keys.get(kk, ["0", "0", "0", "0"])[0])),
-                Decimal(int(keys.get(kk, ["0", "0", "0", "0"])[1])),
-                Decimal(int(keys.get(kk, ["0", "0", "0", "0"])[2])),
-                Decimal(int(keys.get(kk, ["0", "0", "0", "0"])[3])),
+                *(Decimal(int(s)) for s in keys.get(kk, ["0"] * 4)),
             )
-            for kk, (nb, sb) in state["base"].items()
+            for kk, (nb, sb) in store.pinned.items()
         ]
         meta = spark.createDataFrame(
             meta_rows,
@@ -1260,29 +1044,9 @@ def cusum_monitor(
                 str(cp_new), str(mp_new), str(cn_new), str(mn_new)
             ]
         sink(alarms, batch_id)
-        if state["batch_id"] is None or batch_id != state["batch_id"]:
-            state["prev_keys"] = state["keys"]
-        state["keys"] = new_keys
-        state["batch_id"] = batch_id
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "keys": state["keys"],
-                    "prev_keys": state["prev_keys"],
-                    "base": state["base"],
-                    "batch_id": batch_id,
-                },
-                fh,
-            )
-        os.replace(tmp, state_file)
+        store.commit(batch_id, new_keys)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def alert_monitor(
@@ -1294,7 +1058,6 @@ def alert_monitor(
     sink,
     cooldown: int,
     escalate_after: int,
-    trigger: dict | None = None,
 ):
     """Streaming alert cooldown/escalation — the live form of
     ``operators.alerts.alert_lifecycle`` (the reference's retry-after-
@@ -1307,9 +1070,9 @@ def alert_monitor(
     operator distributed with the carried state broadcast in, and only
     one carry-out row per key collects (the evaluation stream is
     health-flag-sized, one row per key per batch, never fact-table-
-    sized).  State persists KEYED BY BATCH ID, so a foreachBatch
-    replay of batch N resumes from the pre-N snapshot instead of
-    double-advancing the fold (the cusum_monitor discipline).
+    sized).  The per-key state is kept in ``alert_state.json`` under
+    :class:`_BatchState`'s replay and restart policy, so a replayed
+    batch never double-advances the fold.
 
     Emitted events are bit-identical to ``alert_lifecycle`` run over
     the union of all batches, PROVIDED evaluations arrive in ``ts``
@@ -1318,24 +1081,12 @@ def alert_monitor(
     strings.  ``sink(events_df, batch_id)`` receives that batch's
     alert events.
     """
-    import json
-    import os
-
     from sparkgraft.operators.alerts import (
         _annotate,
         alert_carry_out,
     )
 
-    state_file = os.path.join(checkpoint_dir, "alert_state.json")
-    state: dict = {"keys": {}, "batch_id": None, "prev_keys": None}
-    if os.path.exists(state_file):
-        with open(state_file) as fh:
-            stored = json.load(fh)
-        state.update(
-            keys=stored["keys"],
-            batch_id=stored.get("batch_id"),
-            prev_keys=stored.get("prev_keys"),
-        )
+    store = _BatchState(checkpoint_dir, "alert_state.json", {})
 
     carry_schema = (
         f"{key_col} string, in_streak boolean, streak_len0 long, "
@@ -1344,13 +1095,7 @@ def alert_monitor(
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
-        keys = (
-            state["prev_keys"]
-            if state["batch_id"] is not None
-            and batch_id == state["batch_id"]
-            and state["prev_keys"] is not None
-            else state["keys"]
-        )
+        keys = store.before(batch_id)
         carry = None
         if keys:
             carry = spark.createDataFrame(
@@ -1399,28 +1144,9 @@ def alert_monitor(
                 None if r["streak_start0"] is None else int(r["streak_start0"]),
                 None if r["prev_bucket0"] is None else int(r["prev_bucket0"]),
             ]
-        if state["batch_id"] is None or batch_id != state["batch_id"]:
-            state["prev_keys"] = state["keys"]
-        state["keys"] = new_keys
-        state["batch_id"] = batch_id
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "keys": state["keys"],
-                    "prev_keys": state["prev_keys"],
-                    "batch_id": batch_id,
-                },
-                fh,
-            )
-        os.replace(tmp, state_file)
+        store.commit(batch_id, new_keys)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def cdc_feed(
@@ -1430,7 +1156,6 @@ def cdc_feed(
     compare_cols: list[str],
     checkpoint_dir: str,
     sink,
-    trigger: dict | None = None,
     include_values: bool = False,
     append_fast_path: bool = True,
 ):
@@ -1448,7 +1173,7 @@ def cdc_feed(
     manifest is DELIVERED once; the feed itself is stateless — CDC
     rows are a pure function of the immutable manifests — so a crash
     replay of batch N re-emits bit-identical rows (asserted in tests),
-    the idempotence discipline the other monitors carry as state here
+    the replay safety the monitors get from :class:`_BatchState`
     falling out of the commit protocol's immutability.
 
     Scale: APPEND commits (the dominant type under streaming ingest)
@@ -1475,8 +1200,6 @@ def cdc_feed(
 
     Returns the started StreamingQuery.
     """
-    import os
-
     from sparkgraft.operators.merge import snapshot_diff
     from sparkgraft.sinks.versioned import read_versioned
 
@@ -1562,8 +1285,6 @@ def cdc_feed(
         return overlap == 0
 
     def on_batch(batch, batch_id: int) -> None:
-        import os as _os
-
         from sparkgraft.sinks.versioned import _read_manifest
 
         bs = batch.sparkSession
@@ -1607,7 +1328,7 @@ def cdc_feed(
                 if not fresh:
                     continue  # metadata-only commit: no row changes
                 df = bs.read.parquet(
-                    *[_os.path.join(table_dir, f) for f in fresh]
+                    *[os.path.join(table_dir, f) for f in fresh]
                 )
                 if append_fast_path == "assume" or _keys_provably_new(
                     bs, parent, df
@@ -1646,11 +1367,7 @@ def cdc_feed(
         if out is not None:
             sink(out, batch_id)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def versioned_sink(
@@ -1660,7 +1377,6 @@ def versioned_sink(
     stats_cols: list[str] | None = None,
     sort_col: str | None = None,
     n_files: int | None = None,
-    trigger: dict | None = None,
     expectations: dict | None = None,
     quarantine_dir: str | None = None,
     auto_compact_every: int | None = None,
@@ -1689,8 +1405,8 @@ def versioned_sink(
     ``auto_compact_every=N`` runs OPTIMIZE as part of the sink: after
     every N ingest commits the snapshot rewrites into
     ``compact_target_files`` files (one compaction commit; data
-    bit-identical — compact_table parity is tested) so a long-running
-    trigger cadence can't accumulate unbounded small files.  Ingest
+    bit-identical — compact_table parity is tested) so many small
+    drains can't accumulate unbounded small files.  Ingest
     commits are counted from the manifests (operation == 'append') and
     each compaction commit records the append count it covered
     (``appends_at_compact`` in its manifest), so the policy is both
@@ -1815,11 +1531,7 @@ def versioned_sink(
             )
             committed_q.add(batch_id)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)
 
 
 def view_maintainer(
@@ -1830,7 +1542,6 @@ def view_maintainer(
     key_cols: list[str],
     view_dir: str,
     checkpoint_dir: str,
-    trigger: dict | None = None,
     append_fast_path: bool = True,
 ):
     """Incremental materialized-view maintenance (IVM): a per-group
@@ -1942,7 +1653,6 @@ def view_maintainer(
         compare_cols,
         checkpoint_dir,
         apply_delta,
-        trigger=trigger,
         include_values=True,
         append_fast_path=append_fast_path,
     )
@@ -1957,7 +1667,6 @@ def merge_sink(
     stats_cols: list[str] | None = None,
     sort_col: str | None = None,
     n_files: int | None = None,
-    trigger: dict | None = None,
 ):
     """Streaming MERGE into a versioned table: each micro-batch
     upserts (matched keys update, new keys insert) as ONE committed
@@ -2013,8 +1722,4 @@ def merge_sink(
             )
         committed.add(batch_id)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _drain(stream, on_batch, checkpoint_dir)

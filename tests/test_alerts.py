@@ -140,7 +140,7 @@ def test_alert_monitor_matches_batch_and_replays(spark, tmp_path):
     # Cleared keys are EVICTED from carry state (B recovered in b2;
     # only A is still alarming) — state tracks currently-alarming
     # keys, not every key ever seen.
-    assert set(state_full["keys"]) == {"A"}
+    assert set(state_full["state"]) == {"A"}
     src3 = tmp_path / "in3"
     src3.mkdir()
     _write_batch(src3 / "b2.json", b2, 1700000003)

@@ -1,12 +1,12 @@
 """Crash atomicity of the multi-artifact index rewrites (round-8
 ADVICE fixes): delete_bm25_index/compact_bm25_index commit all their
-artifact swaps through one atomic journal rename, the dedup-layout
-migration never loses the history table to a mid-swap crash, and
-legacy bucket counts are layout-verified before a destructive rewrite.
+artifact swaps through one atomic journal rename, appends survive a
+crash before or at their commit, and legacy bucket counts are
+layout-verified before a destructive rewrite.
 
 Crash states are constructed by intercepting the commit helper (crash
-exactly at / just before the commit point) or by rearranging the
-directories the way the crashed pre-round-8 code would have left them.
+exactly at / just before the commit point) or by creating the leftover
+directories a crashed writer leaves behind.
 """
 
 from __future__ import annotations
@@ -25,10 +25,6 @@ from sparkgraft.sinks.bm25_index import (
     compact_bm25_index,
     delete_bm25_index,
     write_bm25_index,
-)
-from sparkgraft.streaming.pipeline import (
-    _migrate_flat_dedup_layout,
-    _repair_dedup_layout,
 )
 
 
@@ -246,93 +242,6 @@ def test_legacy_index_unverifiable_bucket_count_raises(spark, tmp_path):
     delete_bm25_index(spark, idx, [0], n_buckets=8)
     t = spark.read.parquet(f"{idx}/terms").select("term", "bucket").collect()
     assert t and all(r["bucket"] == _bucket(r["term"], 8) for r in t)
-
-
-def _flat_table(spark, path: str):
-    spark.createDataFrame(
-        [(1, "x", 0), (2, "y", 0), (3, "z", 1)],
-        "id long, sig string, _batch_id long",
-    ).write.mode("overwrite").parquet(path)
-
-
-def _rowset(spark, path: str, schema="id long, sig string, _batch_id long"):
-    return sorted(
-        tuple(r) for r in spark.read.schema(schema).parquet(path).collect()
-    )
-
-
-def test_dedup_layout_crash_between_swaps_is_recovered(spark, tmp_path):
-    """The pre-round-8 crash state — table dir moved aside, complete
-    staging present — must repair to the full history, never read as
-    empty (false dedup admits)."""
-    path = str(tmp_path / "base")
-    _flat_table(spark, path)
-    want = _rowset(spark, path)
-    df = spark.read.parquet(path)
-    df.write.partitionBy("_batch_id").mode("overwrite").parquet(
-        path + "_layout_staging"
-    )
-    os.replace(path, path + "_layout_old")  # legacy crash point
-    assert not os.path.isdir(path)
-
-    _repair_dedup_layout(path)
-    assert os.path.isdir(path)
-    assert not os.path.isdir(path + "_layout_old")
-    assert not os.path.isdir(path + "_layout_staging")
-    assert _rowset(spark, path) == want
-    # and the recovered layout is the partitioned one
-    assert any(n.startswith("_batch_id=") for n in os.listdir(path))
-
-
-def test_dedup_layout_journaled_migration_and_leftover_backup(
-    spark, tmp_path
-):
-    """A committed-but-unapplied migration (journal present) finishes
-    on repair; an orphaned legacy backup dir neither blocks the next
-    migration (the old ENOTEMPTY failure) nor survives it."""
-    path = str(tmp_path / "base")
-    _flat_table(spark, path)
-    want = _rowset(spark, path)
-    df = spark.read.parquet(path)
-    df.write.partitionBy("_batch_id").mode("overwrite").parquet(
-        path + "_layout_staging"
-    )
-    backup = path + "_layout_old_deadbeef"
-    with open(path + "_layout_journal", "w") as f:
-        f.write(backup)
-
-    _repair_dedup_layout(path)
-    assert not os.path.isfile(path + "_layout_journal")
-    assert not os.path.isdir(backup)
-    assert _rowset(spark, path) == want
-    assert any(n.startswith("_batch_id=") for n in os.listdir(path))
-
-    # orphaned legacy backup + a fresh flat table: migration proceeds
-    path2 = str(tmp_path / "b2")
-    _flat_table(spark, path2)
-    want2 = _rowset(spark, path2)
-    os.makedirs(path2 + "_layout_old/junk")
-    _migrate_flat_dedup_layout(
-        spark, path2, spark.read.parquet(path2).schema
-    )
-    assert _rowset(spark, path2) == want2
-    assert any(n.startswith("_batch_id=") for n in os.listdir(path2))
-    assert not os.path.isdir(path2 + "_layout_old")
-
-
-def test_dedup_layout_precommit_staging_is_discarded(spark, tmp_path):
-    """Staging without a journal is a pre-commit crash leftover: the
-    flat table is still the truth; repair discards the staging and the
-    migration then runs cleanly."""
-    path = str(tmp_path / "base")
-    _flat_table(spark, path)
-    want = _rowset(spark, path)
-    os.makedirs(path + "_layout_staging/partial")
-
-    _migrate_flat_dedup_layout(spark, path, spark.read.parquet(path).schema)
-    assert _rowset(spark, path) == want
-    assert not os.path.isdir(path + "_layout_staging")
-    assert any(n.startswith("_batch_id=") for n in os.listdir(path))
 
 
 def _more_docs(spark):

@@ -126,44 +126,3 @@ def test_forget_accepts_dataframe_ids(spark, tmp_path):
     ids = {r["id"] for r in spark.read.parquet(f"{hist}/base").collect()}
     assert ids == {"a"}
 
-
-def test_flat_layout_index_migrates_before_partitioned_append(spark, tmp_path):
-    """Regression: indexes built before the _batch_id-partitioned
-    appends stored flat root-level files; appending partitioned on top
-    used to create a mixed layout partition discovery rejects, and
-    compaction missed the flat rows."""
-    src = tmp_path / "in"
-    src.mkdir()
-    hist = str(tmp_path / "hist")
-    # build a modern index, then flatten it to the legacy layout
-    _write_batch(src, "b1.json", [("a", TEXTS["a"])], 1700000000)
-    _drain(spark, src, hist, str(tmp_path / "c1"), lambda df, bid: df.count())
-    for sub in ("base", "banded"):
-        legacy = spark.read.parquet(f"{hist}/{sub}")  # _batch_id inlined
-        legacy.write.mode("overwrite").parquet(f"{hist}/{sub}_flat")
-        import shutil
-
-        shutil.rmtree(f"{hist}/{sub}")
-        shutil.move(f"{hist}/{sub}_flat", f"{hist}/{sub}")
-    # next batch triggers the one-time migration, then appends
-    _write_batch(
-        src, "b2.json", [("a2", TEXTS["a"]), ("b", TEXTS["b"])], 1700000001
-    )
-    got: dict = {}
-    _drain(
-        spark, src, hist, str(tmp_path / "c1"),
-        lambda df, bid: got.setdefault(
-            bid, {r["doc_id"]: (r["is_duplicate"], r["dup_of"]) for r in df.collect()}
-        ),
-    )
-    assert got[1]["a2"] == (True, "a")  # legacy history still matches
-    assert got[1]["b"] == (False, None)  # admitted -> partitioned append
-    import os
-
-    assert os.path.isdir(f"{hist}/base/_batch_id=0")  # migrated
-    assert os.path.isdir(f"{hist}/base/_batch_id=1")  # appended
-    # and compaction sees the migrated rows
-    delete_dedup_index(spark, hist, ["a"])
-    compact_dedup_index(spark, hist)
-    ids = {r["id"] for r in spark.read.parquet(f"{hist}/base").collect()}
-    assert ids == {"b"}

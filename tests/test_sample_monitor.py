@@ -13,9 +13,20 @@ def _write_batch(path, rows):
         fh.write("\n".join(json.dumps({"id": i, "w": w}) for i, w in rows))
 
 
-def test_sample_monitor_matches_batch_and_replays(spark, tmp_path):
+def test_sample_monitor_matches_batch_and_replays(
+    spark, tmp_path, monkeypatch
+):
     from sparkgraft.operators.scale import weighted_sample
     from sparkgraft.streaming.pipeline import sample_monitor
+
+    synced = []  # inodes fsync()ed by the monitor's state writes
+    real_fsync = os.fsync
+
+    def spy_fsync(fd):
+        synced.append(os.fstat(fd).st_ino)
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
 
     b1 = [(i, float(1 + i % 7)) for i in range(0, 300)]
     b2 = [(i, float(1 + i % 5)) for i in range(300, 600)]
@@ -50,8 +61,12 @@ def test_sample_monitor_matches_batch_and_replays(spark, tmp_path):
     assert got[min(got)] == batch_ref(b1)
     assert got[max(got)] == batch_ref(b1 + b2)
 
+    # the state file was fsync()ed before it was renamed into place
+    state_path = os.path.join(ckpt, "reservoir_state.json")
+    assert os.stat(state_path).st_ino in synced
+
     # replay the last batch against the stored state — identical output
-    state = json.load(open(os.path.join(ckpt, "reservoir_state.json")))
+    state = json.load(open(state_path))
     state["batch_id"] = 0
     src2 = tmp_path / "in2"
     src2.mkdir()

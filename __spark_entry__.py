@@ -14,6 +14,11 @@ rounded on BOTH sides at a precision far above the engines' noise floor.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -56,6 +61,96 @@ def _artifact(
 def clear_artifacts() -> None:
     """Drop every memoized artifact (e.g. after stopping a session)."""
     _ARTIFACTS.clear()
+
+
+def _scratch_rows(
+    name: str, spark: SparkSession, sf_dir: str, build: Callable[[str], list]
+) -> list:
+    """``_artifact`` for a fixture whose value is a row list:
+    ``build(tmp)`` stages and drains inside a scratch directory that is
+    deleted once it returns."""
+
+    def run():
+        with tempfile.TemporaryDirectory(prefix=f"sparkgraft_{name}_") as tmp:
+            return build(tmp)
+
+    return _artifact(name, spark, sf_dir, run)
+
+
+def _arrivals(root: str, frames: list[tuple[str, DataFrame]], fmt: str) -> None:
+    """Land each ``(name, frame)`` as exactly one arrival file
+    ``root/name``: JSON lines (``fmt="json"``) or header CSV
+    (``fmt="csv"``).  Frames are written in a sibling staging directory,
+    so ``root`` only ever holds finished files.  The files get strictly
+    ascending whole-second mtimes in list order, all later than any
+    file already in ``root``: the file source orders micro-batches by
+    mtime, and same-instant writes would let it flip the order.  A
+    fresh directory starts from a fixed epoch (2023-11-14), so its
+    mtimes are the same on every run."""
+    os.makedirs(root, exist_ok=True)
+    t = max((e.stat().st_mtime for e in os.scandir(root)), default=1_699_999_999)
+    parent = os.path.dirname(os.path.abspath(root))
+    with tempfile.TemporaryDirectory(dir=parent) as stage:
+        for name, frame in frames:
+            out = f"{stage}/{name}"
+            writer = frame.coalesce(1).write.option("header", fmt == "csv")
+            writer.format(fmt).save(out)
+            (part,) = glob.glob(f"{out}/part-*")
+            t = int(t) + 1
+            shutil.move(part, f"{root}/{name}")
+            os.utime(f"{root}/{name}", (t, t))
+
+
+def _ts_slices(frame: DataFrame) -> list[tuple[str, DataFrame]]:
+    """``frame`` cut on its string ``ts`` column into three JSON
+    arrivals ``batch_1..3.json``.  Their union is exactly ``frame``, so
+    downstream summaries mirror as plain slice algebra."""
+    ts, cuts = F.col("ts"), ("2024-01-11", "2024-01-21")
+    slices = (
+        frame.filter(ts < cuts[0]),
+        frame.filter((ts >= cuts[0]) & (ts < cuts[1])),
+        frame.filter(ts >= cuts[1]),
+    )
+    return [(f"batch_{i}.json", s) for i, s in enumerate(slices, 1)]
+
+
+# The bound on every streaming drain (they all run Trigger.AvailableNow).
+_DRAIN_TIMEOUT_S = 600
+
+
+def _await(q, name: str) -> None:
+    """Wait for the drain ``q`` to finish.  One that outlives
+    ``_DRAIN_TIMEOUT_S`` is stopped and raises, so its partial rows are
+    never memoized for the session."""
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise RuntimeError(f"{name} drain did not finish in {_DRAIN_TIMEOUT_S}s")
+
+
+def _drain_memory(
+    stream: DataFrame,
+    ckpt: str,
+    name: str,
+    summarize: Callable[[DataFrame], DataFrame],
+    mode: str = "append",
+) -> list[tuple]:
+    """Drain ``stream`` into a memory table and return the rows of
+    ``summarize(table)``; the table is dropped afterwards."""
+    spark = stream.sparkSession
+    table = f"{name}_{uuid.uuid4().hex}"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(table)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(q, name)
+    try:
+        return [tuple(r) for r in summarize(spark.table(table)).collect()]
+    finally:
+        spark.catalog.dropTempView(table)
 
 
 # --------------------------------------------------------------------------
@@ -2598,31 +2693,18 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly): docs arrive as two files (even/odd ids), k=40 sample
     weighted by n_chars maintained in O(k) batch-keyed state.
     Memoized per (session, sf_dir) like the other streaming fixtures."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from sparkgraft.streaming.pipeline import sample_monitor
 
     schema = "doc_id long, source string, n_chars long"
 
-    def build():
+    def build(tmp):
         docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "source", "n_chars"
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_ssamp_")
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        for i, pred in (
-            (1, F.col("doc_id") % 2 == 0),
-            (2, F.col("doc_id") % 2 == 1),
-        ):
-            docs.filter(pred).coalesce(1).write.mode("overwrite").json(
-                f"{tmp}/stage_{i}"
-            )
-            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-            shutil.move(src, f"{tmp}/in/batch_{i}.json")
-
+        _arrivals(f"{tmp}/in", [
+            ("batch_1.json", docs.filter(F.col("doc_id") % 2 == 0)),
+            ("batch_2.json", docs.filter(F.col("doc_id") % 2 == 1)),
+        ], "json")
         got: dict[int, list] = {}
 
         def sink(df, batch_id):
@@ -2639,10 +2721,10 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, "n_chars", ["doc_id"], 40, f"{tmp}/ckpt", sink,
             salt="stream", carry_cols=["source"],
         )
-        q.awaitTermination(300)
+        _await(q, "stream_sample")
         return sorted(got[max(got)])
 
-    rows = _artifact("stream_sample", spark, sf_dir, build)
+    rows = _scratch_rows("stream_sample", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -3658,37 +3740,22 @@ def q_streaming_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The drained result is memoized per (session, sf_dir): a second call
     returns the cached rows without re-staging files or re-running the
     stream (a fresh checkpoint would otherwise be required every call)."""
-    import tempfile
-
     from sparkgraft.sinks.kv import stats_to_kv
     from sparkgraft.streaming.pipeline import FilePipeline
 
-    def build():
+    def build(tmp):
         events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_stream_")
-        inp = f"{tmp}/in"
-        for day in (1, 2):
+        _arrivals(f"{tmp}/in", [
             (
-                events.filter(F.dayofmonth("ts") == day)
-                .select(
+                f"Logger1_2024-01-0{day}_00-00-00.csv",
+                events.filter(F.dayofmonth("ts") == day).select(
                     F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
                     F.col("event_type").alias("channel"),
                     "value",
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("header", "true")
-                .csv(f"{inp}/staging_{day}")
+                ),
             )
-        import glob
-        import os
-        import shutil
-
-        os.makedirs(f"{inp}/arrivals", exist_ok=True)
-        for day in (1, 2):
-            for i, f in enumerate(sorted(glob.glob(f"{inp}/staging_{day}/part-*.csv"))):
-                shutil.move(f, f"{inp}/arrivals/Logger1_2024-01-0{day}_00-00-0{i}.csv")
-
+            for day in (1, 2)
+        ], "csv")
         collected: list[tuple[str, str]] = []
 
         def sink(result: DataFrame, stem: str) -> None:
@@ -3698,7 +3765,7 @@ def q_streaming_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         FilePipeline(
             spark,
             name="graded",
-            input_dir=f"{inp}/arrivals",
+            input_dir=f"{tmp}/in",
             schema="ts TIMESTAMP, channel STRING, value DOUBLE",
             transform=lambda df: S.channel_stats(df, ["channel"], "value"),
             sink=sink,
@@ -3706,7 +3773,7 @@ def q_streaming_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).run_available()
         return collected
 
-    rows = _artifact("streaming_stats", spark, sf_dir, build)
+    rows = _scratch_rows("streaming_stats", spark, sf_dir, build)
     return spark.createDataFrame(rows, "field string, value string")
 
 
@@ -3717,11 +3784,9 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     — surviving per-type counts equal the batch-side distinct counts,
     state bounded by the 1-hour watermark horizon.  Memoized per
     sf_dir like the other streaming fixtures."""
-    import tempfile
-
     from sparkgraft.streaming.pipeline import dedup_stream
 
-    def build():
+    def build(tmp):
         events = (
             _t(spark, sf_dir, "events")
             .filter(F.col("event_id") < 1000)
@@ -3731,20 +3796,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
             )
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_sdedup_")
-        for i in (1, 2):  # identical content: file 2 is 100% duplicates
-            events.coalesce(1).write.mode("overwrite").option(
-                "header", "true"
-            ).csv(f"{tmp}/staging_{i}")
-        import glob
-        import os
-        import shutil
-
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        for i in (1, 2):
-            src = sorted(glob.glob(f"{tmp}/staging_{i}/part-*.csv"))[0]
-            shutil.move(src, f"{tmp}/in/batch_{i}.csv")
-
+        # identical content: file 2 is 100% duplicates
+        _arrivals(
+            f"{tmp}/in", [("batch_1.csv", events), ("batch_2.csv", events)], "csv"
+        )
         stream = (
             spark.readStream.schema("ts TIMESTAMP, event_id LONG, event_type STRING")
             .option("maxFilesPerTrigger", "1")
@@ -3752,23 +3807,12 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(f"{tmp}/in")
         )
         deduped = dedup_stream(stream, ["event_id"], ts_col="ts", watermark="1 hour")
-        qname = f"sdedup_{abs(hash(tmp)) % 10**8}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        return _drain_memory(
+            deduped, f"{tmp}/ckpt", "stream_dedup",
+            lambda t: t.groupBy("event_type").agg(F.count("*").alias("n")),
         )
-        q.awaitTermination(300)
-        return [
-            (r["event_type"], r["n"])
-            for r in spark.sql(
-                f"SELECT event_type, count(*) AS n FROM {qname} GROUP BY 1"
-            ).collect()
-        ]
 
-    rows = _artifact("stream_dedup", spark, sf_dir, build)
+    rows = _scratch_rows("stream_dedup", spark, sf_dir, build)
     return spark.createDataFrame(rows, "event_type string, n long")
 
 
@@ -3781,12 +3825,11 @@ def q_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted signatures appended).  Returns per-batch admit/reject
     counts; replay idempotence is asserted in tests/test_round4_ops.py.
     Memoized per (session, sf_dir) like the other streaming fixtures."""
-    import json as _json
-    import tempfile
-
     from sparkgraft.streaming.pipeline import dedup_admission
 
-    def build():
+    doc_schema = "doc_id string, text string"
+
+    def build(tmp):
         docs = [
             (str(r["doc_id"]), r["text"])
             for r in _t(spark, sf_dir, "documents")
@@ -3795,29 +3838,13 @@ def q_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .collect()
         ]
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_sadm_")
-        import os
-
-        os.makedirs(f"{tmp}/in", exist_ok=True)
         b1 = docs[:40]
         b2 = [(f"re_{i}", t) for i, t in b1[:20]] + docs[40:]
-        for n_batch, (name, rows) in enumerate(
-            (("batch_1", b1), ("batch_2", b2))
-        ):
-            with open(f"{tmp}/in/{name}.json", "w") as fh:
-                fh.write(
-                    "\n".join(
-                        _json.dumps({"doc_id": i, "text": t}) for i, t in rows
-                    )
-                )
-            # Distinct ascending mtimes pin the (order-sensitive) batch
-            # order — same-millisecond writes otherwise let the file
-            # source flip which file is batch 0 (the CUSUM fixture
-            # lesson; caught by the oracle-parity test going flaky).
-            os.utime(
-                f"{tmp}/in/{name}.json",
-                (1700000000 + n_batch, 1700000000 + n_batch),
-            )
+        # order-sensitive: batch 2 is checked against batch 1's index
+        _arrivals(f"{tmp}/in", [
+            ("batch_1.json", spark.createDataFrame(b1, doc_schema)),
+            ("batch_2.json", spark.createDataFrame(b2, doc_schema)),
+        ], "json")
         got: dict[int, tuple[int, int]] = {}
 
         def sink(df, batch_id):
@@ -3826,17 +3853,17 @@ def q_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             got[batch_id] = (a, r)
 
         stream = (
-            spark.readStream.schema("doc_id string, text string")
+            spark.readStream.schema(doc_schema)
             .option("maxFilesPerTrigger", "1")
             .json(f"{tmp}/in")
         )
         q = dedup_admission(
             stream, f"{tmp}/hist", f"{tmp}/ckpt", sink, min_jaccard=0.5
         )
-        q.awaitTermination(300)
+        _await(q, "stream_admission")
         return [(int(b), int(a), int(r)) for b, (a, r) in sorted(got.items())]
 
-    rows = _artifact("stream_admission", spark, sf_dir, build)
+    rows = _scratch_rows("stream_admission", spark, sf_dir, build)
     return spark.createDataFrame(rows, "batch long, admitted long, rejected long")
 
 
@@ -3852,10 +3879,6 @@ def q_dedup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     is batch 2's full per-doc verdict (streaming/pipeline.py:
     dedup_admission/delete_dedup_index/compact_dedup_index).
     Memoized per (session, sf_dir) like the other streaming fixtures."""
-    import json as _json
-    import os
-    import tempfile
-
     from sparkgraft.streaming.pipeline import (
         compact_dedup_index,
         dedup_admission,
@@ -3863,8 +3886,9 @@ def q_dedup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     schema = "doc_id string, is_duplicate boolean, dup_of string, jaccard double"
+    doc_schema = "doc_id string, text string"
 
-    def build():
+    def build(tmp):
         docs = [
             (str(r["doc_id"]), r["text"])
             for r in _t(spark, sf_dir, "documents")
@@ -3873,8 +3897,6 @@ def q_dedup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .collect()
         ]
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_dforget_")
-        os.makedirs(f"{tmp}/in", exist_ok=True)
         hist, ckpt = f"{tmp}/hist", f"{tmp}/ckpt"
         got: dict[int, list] = {}
 
@@ -3884,32 +3906,28 @@ def q_dedup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in df.collect()
             )
 
-        def drain(name, rows, mtime):
-            with open(f"{tmp}/in/{name}", "w") as fh:
-                fh.write(
-                    "\n".join(
-                        _json.dumps({"doc_id": i, "text": t}) for i, t in rows
-                    )
-                )
-            os.utime(f"{tmp}/in/{name}", (mtime, mtime))
+        def drain(name, rows):
+            _arrivals(
+                f"{tmp}/in", [(name, spark.createDataFrame(rows, doc_schema))], "json"
+            )
             stream = (
-                spark.readStream.schema("doc_id string, text string")
+                spark.readStream.schema(doc_schema)
                 .option("maxFilesPerTrigger", "1")
                 .json(f"{tmp}/in")
             )
             q = dedup_admission(stream, hist, ckpt, sink, min_jaccard=0.5)
-            q.awaitTermination(300)
+            _await(q, "dedup_forget")
 
         b1 = docs[:40]
-        drain("batch_1.json", b1, 1700000000)
+        drain("batch_1.json", b1)
         # Forget the 10 smallest-id docs: tombstone, then physical removal.
         delete_dedup_index(spark, hist, [i for i, _ in b1[:10]])
         compact_dedup_index(spark, hist)
         b2 = [(f"re_{i}", t) for i, t in b1[:20]] + docs[40:]
-        drain("batch_2.json", b2, 1700000001)
+        drain("batch_2.json", b2)
         return got[1]
 
-    rows = _artifact("dedup_forget", spark, sf_dir, build)
+    rows = _scratch_rows("dedup_forget", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -3921,30 +3939,18 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ddsketch operator on the union (the merge law is exact;
     asserted in tests).  Memoized per (session, sf_dir) like the other
     streaming fixtures."""
-    import tempfile
-
     from sparkgraft.streaming.pipeline import quantile_monitor
 
-    def build():
+    def build(tmp):
         ev = (
             _t(spark, sf_dir, "events")
             .filter((F.col("event_id") < 2000) & ~F.isnan("value"))
             .select("event_id", "event_type", "value")
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_squant_")
-        import os
-
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        for i, pred in ((1, F.col("event_id") % 2 == 0), (2, F.col("event_id") % 2 == 1)):
-            ev.filter(pred).coalesce(1).write.mode("overwrite").json(
-                f"{tmp}/stage_{i}"
-            )
-            import glob
-            import shutil
-
-            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-            shutil.move(src, f"{tmp}/in/batch_{i}.json")
-
+        _arrivals(f"{tmp}/in", [
+            ("batch_1.json", ev.filter(F.col("event_id") % 2 == 0)),
+            ("batch_2.json", ev.filter(F.col("event_id") % 2 == 1)),
+        ], "json")
         got: dict[int, list] = {}
 
         def sink(df, batch_id):
@@ -3961,10 +3967,10 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = quantile_monitor(
             stream, "value", f"{tmp}/ckpt", sink, group_cols=["event_type"]
         )
-        q.awaitTermination(300)
+        _await(q, "stream_quantiles")
         return sorted(got[max(got)])
 
-    rows = _artifact("stream_quantiles", spark, sf_dir, build)
+    rows = _scratch_rows("stream_quantiles", spark, sf_dir, build)
     return spark.createDataFrame(
         rows, "event_type string, q double, n_values long, estimate double"
     )
@@ -3980,16 +3986,11 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type verdicts; statistic is bit-identical to batch
     ks_test_binned on the streamed union (asserted in tests).
     Memoized per (session, sf_dir) like the other streaming fixtures."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from sparkgraft.streaming.pipeline import ks_monitor
 
     schema = "event_type string, n_a long, n_b long, ks_stat double, drift boolean"
 
-    def build():
+    def build(tmp):
         ev = (
             _t(spark, sf_dir, "events")
             .filter((F.col("event_id") < 4000) & ~F.isnan("value"))
@@ -3999,22 +4000,18 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "value"
         )
         cur = ev.filter(F.col("user_id") % 2 == 1)
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_sks_")
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        stages = (
-            (1, cur.filter(F.col("event_id") % 2 == 0).select("event_type", "value")),
+        _arrivals(f"{tmp}/in", [
             (
-                2,
+                "batch_1.json",
+                cur.filter(F.col("event_id") % 2 == 0).select("event_type", "value"),
+            ),
+            (
+                "batch_2.json",
                 cur.filter(F.col("event_id") % 2 == 1).select(
                     "event_type", (F.col("value") * 1.5).alias("value")
                 ),
             ),
-        )
-        for i, df in stages:
-            df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-            shutil.move(src, f"{tmp}/in/batch_{i}.json")
-
+        ], "json")
         got: dict[int, list] = {}
 
         def sink(df, batch_id):
@@ -4032,10 +4029,10 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, "value", baseline, f"{tmp}/ckpt", sink,
             group_cols=["event_type"],
         )
-        q.awaitTermination(300)
+        _await(q, "stream_ks")
         return sorted(got[max(got)])
 
-    rows = _artifact("stream_ks", spark, sf_dir, build)
+    rows = _scratch_rows("stream_ks", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -4046,14 +4043,9 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound the join state.  Per-user pair counts; equivalence with the
     batch interval join is asserted in tests/test_streaming_joins.py.
     Memoized per (session, sf_dir) like the other streaming fixtures."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from sparkgraft.streaming.joins import interval_join_streams
 
-    def build():
+    def build(tmp):
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 4000)
         views = ev.filter(F.col("event_type") == "view").select(
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("vts"),
@@ -4065,14 +4057,8 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.col("event_id").alias("purchase_id"),
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_sjoin_")
-        for name, df in (("views", views), ("purchases", purchases)):
-            df.coalesce(1).write.mode("overwrite").option("header", "true").csv(
-                f"{tmp}/stage_{name}"
-            )
-            os.makedirs(f"{tmp}/{name}", exist_ok=True)
-            src = sorted(glob.glob(f"{tmp}/stage_{name}/part-*.csv"))[0]
-            shutil.move(src, f"{tmp}/{name}/data.csv")
+        _arrivals(f"{tmp}/views", [("data.csv", views)], "csv")
+        _arrivals(f"{tmp}/purchases", [("data.csv", purchases)], "csv")
         vs = (
             spark.readStream.schema("vts TIMESTAMP, user_id LONG, view_id LONG")
             .option("header", "true")
@@ -4087,23 +4073,12 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             vs, ps, "user_id", "vts", "pts",
             watermark="2 hours", lower_sec=0, upper_sec=1800,
         )
-        qname = f"sjoin_{abs(hash(tmp)) % 10**8}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        return _drain_memory(
+            joined, f"{tmp}/ckpt", "stream_join",
+            lambda t: t.groupBy("user_id").agg(F.count("*").alias("n_pairs")),
         )
-        q.awaitTermination(300)
-        return [
-            (r["user_id"], r["n_pairs"])
-            for r in spark.sql(
-                f"SELECT user_id, count(*) AS n_pairs FROM {qname} GROUP BY 1"
-            ).collect()
-        ]
 
-    rows = _artifact("stream_join", spark, sf_dir, build)
+    rows = _scratch_rows("stream_join", spark, sf_dir, build)
     return spark.createDataFrame(rows, "user_id long, n_pairs long")
 
 
@@ -4114,12 +4089,8 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts.  The standard dimension-enrichment shape: the static side
     is re-resolvable each batch, so dimension updates apply without
     restarting the stream.  Memoized per (session, sf_dir)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
 
-    def build():
+    def build(tmp):
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
         cust = _t(spark, sf_dir, "customer").select(
             F.col("c_custkey"), F.col("c_nationkey").alias("n_nationkey")
@@ -4129,13 +4100,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             (F.col("user_id") % 1000 + 1).alias("c_custkey"),
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_senrich_")
-        staged.coalesce(1).write.mode("overwrite").option("header", "true").csv(
-            f"{tmp}/stage"
-        )
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        src = sorted(glob.glob(f"{tmp}/stage/part-*.csv"))[0]
-        shutil.move(src, f"{tmp}/in/batch.csv")
+        _arrivals(f"{tmp}/in", [("batch.csv", staged)], "csv")
         stream = (
             spark.readStream.schema("ts TIMESTAMP, event_id LONG, c_custkey LONG")
             .option("header", "true")
@@ -4144,22 +4109,11 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched = stream.join(F.broadcast(cust), "c_custkey").groupBy(
             "n_nationkey"
         ).agg(F.count("*").alias("n_events"))
-        qname = f"senrich_{abs(hash(tmp)) % 10**8}"
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        return _drain_memory(
+            enriched, f"{tmp}/ckpt", "stream_enrich", lambda t: t, mode="complete"
         )
-        q.awaitTermination(300)
-        return [
-            (r["n_nationkey"], r["n_events"])
-            for r in spark.sql(f"SELECT * FROM {qname}").collect()
-        ]
 
-    rows = _artifact("stream_enrich", spark, sf_dir, build)
+    rows = _scratch_rows("stream_enrich", spark, sf_dir, build)
     return spark.createDataFrame(rows, "n_nationkey long, n_events long")
 
 
@@ -4178,14 +4132,9 @@ def q_stream_alarm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain ≡ batch left-join mirror, asserted in
     tests/test_streaming_joins.py.  Per-(key, status) counts;
     memoized per (session, sf_dir) like the other streaming fixtures."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from sparkgraft.streaming.joins import alarm_correlation_streams
 
-    def build():
+    def build(tmp):
         ev = _t(spark, sf_dir, "events")
         trunc = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
         key = (F.col("user_id") % 50).alias("key")
@@ -4207,18 +4156,12 @@ def q_stream_alarm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "report_ts",
             ),
         }
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_alarmjoin_")
         streams = {}
         for name, (df, ts_col) in legs.items():
             staged = df.unionByName(
                 spark.createDataFrame([(-1, sentinel)], f"key long, {ts_col} string")
             )
-            staged.coalesce(1).write.mode("overwrite").option(
-                "header", "true"
-            ).csv(f"{tmp}/stage_{name}")
-            os.makedirs(f"{tmp}/{name}", exist_ok=True)
-            src = sorted(glob.glob(f"{tmp}/stage_{name}/part-*.csv"))[0]
-            shutil.move(src, f"{tmp}/{name}/data.csv")
+            _arrivals(f"{tmp}/{name}", [("data.csv", staged)], "csv")
             streams[name] = (
                 spark.readStream.schema(f"key long, {ts_col} timestamp")
                 .option("header", "true")
@@ -4229,28 +4172,14 @@ def q_stream_alarm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             file_window=(0, 900), report_window=(300, 1800),
             watermark="60 seconds",
         )
-        qname = f"alarmjoin_{abs(hash(tmp)) % 10**8}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        return _drain_memory(
+            out, f"{tmp}/ckpt", "stream_alarm_join",
+            lambda t: t.filter(F.col("key") >= 0)
+            .groupBy("key", "status")
+            .agg(F.count("*").alias("n")),
         )
-        # fail LOUDLY on a slow drain instead of memoizing a partial
-        # result for the whole session (the unreproducible-flake class)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_alarm_join drain did not finish in 600s")
-        return [
-            (r["key"], r["status"], r["n"])
-            for r in spark.sql(
-                f"SELECT key, status, count(*) AS n FROM {qname} "
-                "WHERE key >= 0 GROUP BY 1, 2"
-            ).collect()
-        ]
 
-    rows = _artifact("stream_alarm_join", spark, sf_dir, build)
+    rows = _scratch_rows("stream_alarm_join", spark, sf_dir, build)
     return spark.createDataFrame(rows, "key long, status string, n long")
 
 
@@ -4263,11 +4192,9 @@ def q_backfill_dated(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_layout.py::test_backfill_date_pruning.
 
     Memoized per (session, sf_dir) like the other streaming fixtures."""
-    import os
 
-    def build():
+    def build(tmp):
         landing = _backfill_landing(spark, sf_dir)
-        tmp = os.path.dirname(landing)
         dates = sorted(
             r["date"]
             for r in spark.read.parquet(landing).select("date").distinct().collect()
@@ -4294,7 +4221,7 @@ def q_backfill_dated(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _await(q, "backfill_dated")
         # complete-mode re-emits the full aggregate per batch; keep the last
         # emission's rows (one row per (date, event_type)).
         final: dict[tuple, int] = {}
@@ -4302,7 +4229,7 @@ def q_backfill_dated(spark: SparkSession, sf_dir: str) -> DataFrame:
             final[(r["date"], r["event_type"])] = r["n"]
         return sorted((d, t, n) for (d, t), n in final.items())
 
-    rows = _artifact("backfill_dated", spark, sf_dir, build)
+    rows = _scratch_rows("backfill_dated", spark, sf_dir, build)
     return spark.createDataFrame(rows, "date string, event_type string, n long")
 
 
@@ -4616,24 +4543,16 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-channel EWMA via applyInPandasWithState over a file stream,
     drained with AvailableNow.  Memoized per (session, sf_dir) (see
     q_streaming_stats)."""
-    import tempfile
-
     from sparkgraft.streaming.stateful import ewma_stream
 
-    def build():
+    def build(tmp):
         events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 500)
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_ewma_")
-        (
-            events.select(
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-                F.col("event_type").alias("channel"),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .csv(f"{tmp}/in")
+        staged = events.select(
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+            F.col("event_type").alias("channel"),
+            "value",
         )
+        _arrivals(f"{tmp}/in", [("events.csv", staged)], "csv")
         stream = (
             spark.readStream.format("csv")
             .schema("ts TIMESTAMP, channel STRING, value DOUBLE")
@@ -4649,12 +4568,12 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _await(q, "streaming_ewma")
         return [
             (r["channel"], round(r["ewma"], 6), r["n_samples"]) for r in collected
         ]
 
-    rows = _artifact("streaming_ewma", spark, sf_dir, build)
+    rows = _scratch_rows("streaming_ewma", spark, sf_dir, build)
     return spark.createDataFrame(
         rows, "channel string, ewma double, n_samples long"
     )
@@ -4669,9 +4588,6 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift_report.  Batch 1 drops every 5th event (rows+range drift);
     batch 2 additionally nulls event_type for every 13th user (nulls
     drift).  The drained verdicts are memoized per (session, sf_dir)."""
-    import os
-    import tempfile
-
     from sparkgraft.streaming.pipeline import drift_monitor
 
     schema_str = (
@@ -4679,7 +4595,7 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "drift_flags string, verdict string"
     )
 
-    def build():
+    def build(tmp):
         events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 1500)
         snap0 = events
         snap1 = events.filter(F.col("event_id") % 5 != 0)
@@ -4689,32 +4605,17 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("event_type")
             ),
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_drift_")
-        inp = f"{tmp}/in"
-        os.makedirs(inp, exist_ok=True)
-        for i, snap in enumerate((snap0, snap1, snap2)):
-            (
-                snap.select(
-                    "event_id",
-                    "user_id",
-                    "event_type",
-                    F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-                    "value",
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("header", "true")
-                .csv(f"{tmp}/staging_{i}")
-            )
-            import glob
-            import shutil
-
-            (part,) = glob.glob(f"{tmp}/staging_{i}/part-*.csv")
-            dst = f"{inp}/snapshot_{i:03d}.csv"
-            shutil.move(part, dst)
-            # Distinct ascending mtimes pin the file-source batch order.
-            os.utime(dst, (1700000000 + i, 1700000000 + i))
-
+        cols = (
+            "event_id",
+            "user_id",
+            "event_type",
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+            "value",
+        )
+        _arrivals(f"{tmp}/in", [
+            (f"snapshot_{i:03d}.csv", snap.select(*cols))
+            for i, snap in enumerate((snap0, snap1, snap2))
+        ], "csv")
         stream = (
             spark.readStream.format("csv")
             .schema(
@@ -4723,7 +4624,7 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .option("header", "true")
             .option("maxFilesPerTrigger", "1")
-            .load(inp)
+            .load(f"{tmp}/in")
         )
         collected: list[tuple] = []
 
@@ -4746,11 +4647,11 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink,
             checkpoint_dir=f"{tmp}/ckpt",
         )
-        q.awaitTermination()
+        _await(q, "streaming_drift")
         collected.sort()
         return collected
 
-    collected = _artifact("streaming_drift", spark, sf_dir, build)
+    collected = _scratch_rows("streaming_drift", spark, sf_dir, build)
     return spark.createDataFrame(collected, schema_str)
 
 
@@ -5414,11 +5315,6 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the union (asserted in tests/test_cusum_monitor.py); returns
     the same per-(type, side) summary shape as cusum_shift.  Memoized
     per (session, sf_dir) like the other streaming fixtures."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from sparkgraft.streaming.pipeline import cusum_monitor
 
     schema = (
@@ -5426,7 +5322,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first_alarm_ts timestamp, max_stat double"
     )
 
-    def build():
+    def build(tmp):
         ev = (
             _t(spark, sf_dir, "events")
             .withColumn(
@@ -5444,22 +5340,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value",
             )
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_scusum_")
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        cuts = ("2024-01-11", "2024-01-21")
-        stages = (
-            (1, ev.filter(F.col("ts") < cuts[0])),
-            (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
-            (3, ev.filter(F.col("ts") >= cuts[1])),
-        )
-        for i, df in stages:
-            df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-            dst = f"{tmp}/in/batch_{i}.json"
-            shutil.move(src, dst)
-            # Distinct ascending mtimes pin the (order-sensitive) batch order.
-            os.utime(dst, (1700000000 + i, 1700000000 + i))
-
+        _arrivals(f"{tmp}/in", _ts_slices(ev), "json")
         union = ev.withColumn("ts", F.to_timestamp("ts"))
         alarms: list[tuple] = []
 
@@ -5480,7 +5361,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, union, "event_type", "ts", "event_id", "value",
             f"{tmp}/ckpt", sink, k=0.5, h=10.0, baseline_n=50, digits=6,
         )
-        q.awaitTermination(300)
+        _await(q, "stream_cusum")
         agg: dict[tuple, list] = {}
         for et, side, ts, stat in alarms:
             cur = agg.setdefault((et, side), [0, None, float("-inf")])
@@ -5492,7 +5373,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             for (et, side), (n, first_ts, mx) in agg.items()
         )
 
-    rows = _artifact("stream_cusum", spark, sf_dir, build)
+    rows = _scratch_rows("stream_cusum", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5648,8 +5529,6 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the slice algebra directly; equality with the
     direct aggregate and replay idempotence are additionally asserted
     in tests/test_versioned.py.  Fixture memoized per (session, sf_dir)."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import (
         delete_versioned,
         read_versioned,
@@ -5660,8 +5539,8 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "o_orderpriority string, n_rows long, spend double"
 
-    def build():
-        t = tempfile.mkdtemp(prefix="sparkgraft_ivm_")
+    def build(tmp):
+        t, view_dir = f"{tmp}/table", f"{tmp}/view"
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
@@ -5690,12 +5569,11 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         upsert_versioned(spark, t, src, ["o_orderkey"], sort_col="o_orderkey",
                          n_files=2)
-        view_dir = f"{t}_view"
         q = view_maintainer(
             spark, t, ["o_orderpriority"], ["o_totalprice"], ["o_orderkey"],
-            view_dir, f"{t}_ckpt",
+            view_dir, f"{tmp}/ckpt",
         )
-        q.awaitTermination(300)
+        _await(q, "materialized_view")
         out = read_versioned(spark, view_dir).select(
             "o_orderpriority",
             F.col("n_rows").cast("long").alias("n_rows"),
@@ -5706,7 +5584,7 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [tuple(r) for r in out.collect()]
 
-    rows = _artifact("materialized_view", spark, sf_dir, build)
+    rows = _scratch_rows("materialized_view", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5722,8 +5600,6 @@ def q_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vacuum removes the rewritten files' predecessors; pre-delete time
     travel then fails while history stays auditable) is asserted in
     tests/test_versioned.py.  Fixture memoized per (session, sf_dir)."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import (
         delete_versioned,
         read_versioned,
@@ -5733,8 +5609,8 @@ def q_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "user_id long, n_rows long, sum_amount double"
 
-    def build():
-        t = tempfile.mkdtemp(prefix="sparkgraft_forget_")
+    def build(tmp):
+        t, view_dir = f"{tmp}/table", f"{tmp}/view"
         events = _t(spark, sf_dir, "events").select(
             "event_id", "user_id",
             ((F.col("event_id") % 1000) / F.lit(10.0)).alias("amount"),
@@ -5749,12 +5625,11 @@ def q_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("min_user_id") <= 23),
             sort_col="user_id", n_files=2,
         )
-        view_dir = f"{t}_view"
         q = view_maintainer(
             spark, t, ["user_id"], ["amount"], ["event_id"],
-            view_dir, f"{t}_ckpt",
+            view_dir, f"{tmp}/ckpt",
         )
-        q.awaitTermination(300)
+        _await(q, "forget_flow")
         out = read_versioned(spark, view_dir).select(
             "user_id",
             F.col("n_rows").cast("long").alias("n_rows"),
@@ -5765,7 +5640,7 @@ def q_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [tuple(r) for r in out.collect()]
 
-    rows = _artifact("forget_flow", spark, sf_dir, build)
+    rows = _scratch_rows("forget_flow", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5778,11 +5653,6 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streamed union is exactly the events table, so the plain SQL
     aggregate is an exact mirror; exactly-once replay is asserted in
     tests/test_versioned.py.  Fixture memoized per (session, sf_dir)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from sparkgraft.sinks.versioned import stats_summary
     from sparkgraft.streaming.pipeline import versioned_sink
 
@@ -5791,26 +5661,13 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_value double, max_value double"
     )
 
-    def build():
+    def build(tmp):
         ev = _t(spark, sf_dir, "events").select(
             "user_id",
             "value",
             F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
         )
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_singest_")
-        os.makedirs(f"{tmp}/in", exist_ok=True)
-        cuts = ("2024-01-11", "2024-01-21")
-        stages = (
-            (1, ev.filter(F.col("ts") < cuts[0])),
-            (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
-            (3, ev.filter(F.col("ts") >= cuts[1])),
-        )
-        for i, df in stages:
-            df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-            src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-            dst = f"{tmp}/in/batch_{i}.json"
-            shutil.move(src, dst)
-            os.utime(dst, (1700000000 + i, 1700000000 + i))
+        _arrivals(f"{tmp}/in", _ts_slices(ev), "json")
         stream = (
             spark.readStream.schema("user_id long, value double, ts string")
             .option("maxFilesPerTrigger", "1")
@@ -5824,7 +5681,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             sort_col="user_id",
             n_files=2,
         )
-        q.awaitTermination(300)
+        _await(q, "stream_ingest")
         s = stats_summary(spark, f"{tmp}/table").first()
         return [
             (
@@ -5837,7 +5694,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
 
-    rows = _artifact("stream_ingest", spark, sf_dir, build)
+    rows = _scratch_rows("stream_ingest", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5850,15 +5707,12 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (commit, change_type, changed-cols).  The v1 slice of this summary
     equals the batch ``version_cdc`` summary minus its 'unchanged'
     row — the feed drops unchanged rows by construction."""
-    import tempfile
-
     from sparkgraft.streaming.pipeline import cdc_feed
 
     schema = "commit_version long, change_type string, cols string, n long"
 
-    def build():
+    def build(tmp):
         t = _version_cdc_table(spark, sf_dir)
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_scdc_")
         agg: dict[tuple, int] = {}
 
         def sink(df, batch_id):
@@ -5880,41 +5734,11 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{tmp}/ckpt",
             sink,
         )
-        q.awaitTermination(300)
+        _await(q, "stream_cdc")
         return sorted((v, ct, cols, n) for (v, ct, cols), n in agg.items())
 
-    rows = _artifact("stream_cdc", spark, sf_dir, build)
+    rows = _scratch_rows("stream_cdc", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
-
-
-def _stage_event_batches(spark: SparkSession, sf_dir: str, tmp: str,
-                         cols: list[str]) -> None:
-    """Stage events as three ts-sliced JSON micro-batch files with
-    DISTINCT ASCENDING mtimes (every multi-file streaming fixture pins
-    them — the stream_admission lesson: same-ms mtimes flip batch
-    order).  The union of the slices is exactly the events table, so
-    downstream summaries mirror as plain slice algebra."""
-    import glob
-    import os
-    import shutil
-
-    ev = _t(spark, sf_dir, "events").select(
-        *cols,
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-    )
-    os.makedirs(f"{tmp}/in", exist_ok=True)
-    cuts = ("2024-01-11", "2024-01-21")
-    stages = (
-        (1, ev.filter(F.col("ts") < cuts[0])),
-        (2, ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]))),
-        (3, ev.filter(F.col("ts") >= cuts[1])),
-    )
-    for i, df in stages:
-        df.coalesce(1).write.mode("overwrite").json(f"{tmp}/stage_{i}")
-        src = sorted(glob.glob(f"{tmp}/stage_{i}/part-*.json"))[0]
-        dst = f"{tmp}/in/batch_{i}.json"
-        shutil.move(src, dst)
-        os.utime(dst, (1700000000 + i, 1700000000 + i))
 
 
 def q_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5930,18 +5754,17 @@ def q_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups by the ordered failed-rule list: plain slice algebra.
     Replay/torn-crash healing is asserted in tests/test_versioned.py.
     Fixture memoized per (session, sf_dir)."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import read_versioned
     from sparkgraft.streaming.pipeline import versioned_sink
 
     schema = "leg string, rules string, n long, amount double"
 
-    def build():
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_expgate_")
-        _stage_event_batches(
-            spark, sf_dir, tmp, ["event_id", "user_id", "event_type", "value"]
+    def build(tmp):
+        ev = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value",
+            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
         )
+        _arrivals(f"{tmp}/in", _ts_slices(ev), "json")
         stream = (
             spark.readStream.schema(
                 "event_id long, user_id long, event_type string, "
@@ -5963,7 +5786,7 @@ def q_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             quarantine_dir=f"{tmp}/quarantine",
         )
-        q.awaitTermination(300)
+        _await(q, "expectations_gate")
         clean_leg = (
             read_versioned(spark, f"{tmp}/table")
             .agg(
@@ -5993,7 +5816,7 @@ def q_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [tuple(r) for r in clean_leg.unionByName(quar_leg).collect()]
 
-    rows = _artifact("expectations_gate", spark, sf_dir, build)
+    rows = _scratch_rows("expectations_gate", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -6007,16 +5830,17 @@ def q_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice containing that user — plain slice algebra, SQL-exact.
     Replay idempotence is asserted in tests/test_versioned.py.
     Fixture memoized per (session, sf_dir)."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import read_versioned
     from sparkgraft.streaming.pipeline import merge_sink
 
     schema = "user_id long, last_event long, value double"
 
-    def build():
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_mstream_")
-        _stage_event_batches(spark, sf_dir, tmp, ["event_id", "user_id", "value"])
+    def build(tmp):
+        ev = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "value",
+            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
+        )
+        _arrivals(f"{tmp}/in", _ts_slices(ev), "json")
         stream = (
             spark.readStream.schema(
                 "event_id long, user_id long, value double, ts string"
@@ -6034,13 +5858,13 @@ def q_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             sort_col="user_id",
             n_files=2,
         )
-        q.awaitTermination(300)
+        _await(q, "merge_stream")
         final = read_versioned(spark, f"{tmp}/table").select(
             "user_id", F.col("event_id").alias("last_event"), "value"
         )
         return [tuple(r) for r in final.collect()]
 
-    rows = _artifact("merge_stream", spark, sf_dir, build)
+    rows = _scratch_rows("merge_stream", spark, sf_dir, build)
     return spark.createDataFrame(rows, schema)
 
 

@@ -143,7 +143,6 @@ from sparkgraft.operators.similarity import (
     pq_adc_topk,
     pq_codebooks_from_labels,
     pq_decode,
-    pq_decode_nearest,
     pq_encode,
     quantization_stats,
     quantize_embeddings,

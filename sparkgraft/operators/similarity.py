@@ -1639,51 +1639,6 @@ def pq_decode(
     return F.concat(*parts)
 
 
-def pq_decode_nearest(
-    vec: Column,
-    codebooks: list[list[tuple[int, list[float]]]],
-    digits: int = 9,
-) -> Column:
-    """Fused encode+decode: per subspace, pick the nearest
-    sub-centroid VECTOR directly (one argmin over (rounded d2, code,
-    vec) structs — identical assignment rule to :func:`pq_encode`, the
-    code field breaks ties before the vector is ever compared).
-
-    Equivalent to ``pq_decode(pq_encode(v))`` but ~8x cheaper in plan
-    size: decode-of-encode re-embeds the full 8-subspace encode
-    expression once per ``element_at`` reference (measured 84 s vs
-    ~2 s on the sf0.1 corpus), while the fused form evaluates each
-    subspace exactly once."""
-    sub = len(codebooks[0][0][1])
-    vd = F.transform(vec, lambda x: x.cast("double"))
-    parts = []
-    for s, cb in enumerate(codebooks):
-        ctab = _literal_vec_table(cb, "code")
-        sub_v = F.slice(vd, s * sub + 1, sub)
-        # One-argument lambda (closure over sub_v is safe — transform
-        # consumes it eagerly this iteration); a second parameter would
-        # flip F.transform into its (element, index) form.
-        scored = F.transform(
-            ctab,
-            lambda c: F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            sub_v, c["vec"], lambda x, cc: (x - cc) * (x - cc)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    digits,
-                ).alias("d"),
-                c["code"].alias("code"),
-                c["vec"].alias("vec"),
-            ),
-        )
-        parts.append(F.array_min(scored).getField("vec"))
-    return F.concat(*parts)
-
-
 def _adc_tables(
     qv: Column | str,
     codebooks: list[list[tuple[int, list[float]]]],

@@ -139,18 +139,6 @@ def _dec_lit(v: int) -> Column:
     return F.expr(f"CAST('{int(v)}' AS DECIMAL(38,0))")
 
 
-def _kmv_frac(h: Column) -> Column:
-    """md5 hex -> uniform fraction in [0, 1): first 15 hex chars (60
-    bits — exact in a double) over 2^60.  The zero draw (probability
-    2^-60) is mirrored identically by the DuckDB oracles, so the
-    estimate formula stays bit-parity; only ln()-consuming draws
-    (weighted_sample) need the shifted (0, 1] form."""
-    return (
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long").cast("double")
-        / F.lit(float(1 << 60))
-    )
-
-
 def kmv_build(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -4,6 +4,7 @@ success, health flags, and exactly-once across restarts."""
 
 from __future__ import annotations
 
+import os
 import time
 from pathlib import Path
 
@@ -183,6 +184,51 @@ def test_empty_directory_drains_cleanly(spark, tmp_path):
     )
     p.run_available()  # must not raise on an empty directory
     assert seen == []
+
+
+def test_entry_arrivals_order_and_bounded_await(spark, tmp_path):
+    """The entry file's streaming-fixture helpers: a drain that outlives
+    its bound is stopped and raises (its partial rows are never
+    memoized); arrival staging lands exactly one file per frame, under
+    its name, with mtimes strictly ascending across calls on one
+    directory, and leaves no staging directory behind."""
+    import __spark_entry__ as m
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = StuckQuery()
+    with pytest.raises(RuntimeError, match="stuck drain"):
+        m._await(q, "stuck")
+    assert q.stopped
+
+    root = tmp_path / "in"
+    df = spark.range(6).selectExpr("id", "CAST(id * 10 AS STRING) AS s")
+    m._arrivals(
+        str(root),
+        [("b1.json", df.filter("id < 2")), ("b2.json", df.filter("id >= 2"))],
+        "json",
+    )
+    # A file already in the directory may be newer than the wall clock
+    # (copied in, clock skew); a later arrival must still sort after it.
+    future = time.time() + 3600
+    os.utime(root / "b2.json", (future, future))
+    m._arrivals(str(root), [("b3.json", df.filter("id = 0"))], "json")
+    names = ["b1.json", "b2.json", "b3.json"]
+    assert sorted(os.listdir(root)) == names
+    assert os.listdir(tmp_path) == ["in"]
+    mtimes = [os.stat(root / n).st_mtime for n in names]
+    assert mtimes[0] < mtimes[1] < mtimes[2]
+    got = spark.read.schema("id long, s string").json(str(root / "b2.json"))
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (i, str(i * 10)) for i in range(2, 6)
+    ]
 
 
 def test_stable_files_debounce(spark):

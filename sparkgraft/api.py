@@ -53,7 +53,6 @@ from sparkgraft.operators.merge import (
 from sparkgraft.operators.relational import (
     rrf_fuse,
     asof_join,
-    asof_join_pandas,
     broadcast_lookup,
     merge_intervals,
     range_join,
@@ -126,12 +125,10 @@ from sparkgraft.operators.similarity import (
     mmr_rerank,
     assign_nearest,
     assign_nearest_multi,
-    assign_nearest_pandas,
     brute_force_topk,
     hard_negative_topk,
     centroids_from_labels,
     cosine,
-    cosine_pandas_udf,
     hyperplane_signs,
     kmeans_iterate,
     dequantize_error,

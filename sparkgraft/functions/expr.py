@@ -23,12 +23,17 @@ FILENAME_TS_RE = r"(\d{4}-\d{2}-\d{2})_(\d{2}-\d{2}-\d{2})"
 
 def sql_ident(name: str) -> str:
     """Backtick-quote a column name for interpolation into a SQL text
-    (the r13 SQL-text fast paths): embedded backticks are doubled —
-    the Spark identifier escape — so a hostile or odd name can never
-    break out of the quoted identifier and change the expression
-    (r13 advice item; internal call sites pass plain names, but the
-    operators taking column names are public API)."""
-    return f"`{str(name).replace('`', '``')}`"
+    (the SQL-text kernels): embedded backticks are doubled — the Spark
+    identifier escape — so a hostile or odd name can never break out
+    of the quoted identifier and change the expression.  Anything but
+    a ``str`` raises ``TypeError``: a Column here would otherwise
+    become the identifier ```Column<'...'>``` and fail later as an
+    unresolved column."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"sql_ident expects a column name (str), got {type(name).__name__}"
+        )
+    return f"`{name.replace('`', '``')}`"
 
 
 def ole_to_timestamp(days: Column) -> Column:

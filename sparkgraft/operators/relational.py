@@ -98,65 +98,6 @@ def asof_join(
     return out.select(*lcols, *sel)
 
 
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_payload: Sequence[str],
-) -> DataFrame:
-    """As-of join via per-group ``pd.merge_asof`` (``applyInPandas``) —
-    the Arrow-kernel alternative to :func:`asof_join`'s union+window
-    plan.  Same single shuffle on the key; the per-group sort+merge
-    runs in numpy instead of Tungsten.  Prefer :func:`asof_join` (no
-    Python workers); this variant exists for kernels that need pandas
-    anyway (e.g. interpolation instead of last-known-value).
-    Both variants are equality-tested against each other.
-    """
-    import pandas as pd
-
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields
-    )
-    payload_fields = ", ".join(
-        f"`{c}` {right.schema[c].dataType.simpleString()}" for c in right_payload
-    )
-    schema = f"{out_fields}, {payload_fields}"
-
-    lcols = list(left.columns)
-
-    def cogroup_merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(left_ts)
-        if len(rpdf) == 0:
-            out = lpdf[lcols].copy()
-            for c in right_payload:
-                out[c] = pd.NaT if c == right_ts else None
-            return out
-        rcols = list(dict.fromkeys([right_ts, *right_payload]))
-        rsel = rpdf[rcols].sort_values(right_ts)
-        merged = pd.merge_asof(
-            lpdf,
-            rsel,
-            left_on=left_ts,
-            right_on=right_ts,
-            direction="backward",
-            suffixes=("", "__r"),
-        )
-        out_cols = [
-            c if c in merged.columns else f"{c}__r" for c in right_payload
-        ]
-        result = merged[[*lcols, *out_cols]]
-        result.columns = [*lcols, *right_payload]
-        return result
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInPandas(cogroup_merge, schema)
-    )
-
-
 def range_join(
     points: DataFrame,
     intervals: DataFrame,

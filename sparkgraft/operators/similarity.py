@@ -16,8 +16,6 @@ recall/cost trade at 10^9+ vectors.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,8 +41,7 @@ def _norm(a: Column) -> Column:
 
 
 def _norm_sql(vec_sql: str) -> str:
-    """SQL text of :func:`_norm` (identical fold; see
-    :func:`_centroid_dists_sql` for why the text paths exist)."""
+    """SQL text of :func:`_norm` (identical fold)."""
     return (
         f"sqrt(aggregate(transform({vec_sql}, "
         f"x -> cast(x as double) * cast(x as double)), "
@@ -64,30 +61,6 @@ def _dot_sql(a_sql: str, b_sql: str) -> str:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity between two float-array columns."""
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def cosine_pandas_udf(dim: int):
-    """Arrow-batched vectorized cosine kernel — the numpy alternative to
-    the expression-based :func:`cosine` for when batch math beats
-    codegen (very high dimensions, fused multi-metric kernels).
-
-    Returns a pandas_udf suitable for ``df.select(kernel(a, b))``; the
-    two paths produce identical rounded results (tested).  Prefer the
-    expression form by default: it stays in whole-stage codegen and
-    needs no Python workers.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack(a.to_numpy()).astype("float64").reshape(len(a), dim)
-        bm = np.stack(b.to_numpy()).astype("float64").reshape(len(b), dim)
-        dots = np.einsum("ij,ij->i", am, bm)
-        na = np.sqrt(np.einsum("ij,ij->i", am, am))
-        nb = np.sqrt(np.einsum("ij,ij->i", bm, bm))
-        return pd.Series(dots / (na * nb))
-
-    return _cos
 
 
 def brute_force_topk(
@@ -294,8 +267,8 @@ def brute_force_topk_qint(
 def _literal_vec_table_sql(
     rows: list[tuple[int, list[float]]], id_name: str
 ) -> str:
-    """SQL text of :func:`_literal_vec_table` (shared by the Column
-    builder and the whole-expression SQL fast paths below)."""
+    """SQL text of :func:`_literal_vec_table` (shared by it and the
+    SQL-text kernels below)."""
     parts = ", ".join(
         "named_struct('{id}', {i}, 'vec', array({xs}))".format(
             id=id_name,
@@ -323,19 +296,19 @@ def _literal_vec_table(rows: list[tuple[int, list[float]]], id_name: str) -> Col
 def _centroid_dists_sql(
     vec_sql: str, centroids: list[tuple[int, list[float]]], digits: int
 ) -> str:
-    """SQL text of :func:`_centroid_dists` over a column reference /
-    SQL snippet — parses to the identical expression tree (same struct
-    field names and order, same fold, same rounding), so distances and
-    tie-breaks are bit-identical to the Column builder.
+    """Per-centroid rounded L2 distances as SQL text of an
+    ``array<struct<d, cluster>>`` — ONE ``transform`` over the literal
+    centroid table (the per-pair fold is the only per-row work).
+    ``vec_sql`` is a quoted column reference or a SQL snippet.
 
-    Why a text path exists at all (r13 optimization round, guide §1.2
-    per-task→driver feedback): composing these kernels through the
-    Column API costs one Py4J round-trip per operator node — profiled
-    at sf0.1 as ~0.35 s per :func:`_adc_tables`/:func:`pq_encode` CALL
-    (pure driver time, before any job runs), which dominated the ANN
-    family's per-query wall — while rendering the same expression as
-    ONE SQL string is microseconds of Python and a single lazy-parsed
-    ``F.expr``."""
+    Kernel convention: :func:`assign_nearest`,
+    :func:`assign_nearest_multi`, :func:`_cands_argmin`,
+    :func:`pq_encode`, :func:`_adc_tables` and textops'
+    ``minhash_signature``/``lsh_bands`` take COLUMN NAMES, not
+    Columns, and each renders as one SQL text parsed by a single
+    ``F.expr`` (one Py4J call per kernel, not one per expression
+    node).  Names are quoted by ``sql_ident``, which rejects anything
+    but a ``str``."""
     ctab = _literal_vec_table_sql(centroids, "cluster")
     return (
         f"transform({ctab}, c -> named_struct("
@@ -343,35 +316,6 @@ def _centroid_dists_sql(
         f"(x, cc) -> (cast(x as double) - cc) * (cast(x as double) - cc)), "
         f"0.0D, (acc, x) -> acc + x), {int(digits)}), "
         f"'cluster', c.cluster))"
-    )
-
-
-def _centroid_dists(
-    vec: Column, centroids: list[tuple[int, list[float]]], digits: int
-) -> Column:
-    """Per-centroid rounded L2 distances as ``array<struct<d, cluster>>``
-    — ONE ``transform`` over the literal centroid table (the per-pair
-    fold is the only per-row work), shared by :func:`assign_nearest`
-    and :func:`assign_nearest_multi`."""
-    ctab = _literal_vec_table(centroids, "cluster")
-    return F.transform(
-        ctab,
-        lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        c["vec"],
-                        lambda x, cc: (x.cast("double") - cc)
-                        * (x.cast("double") - cc),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                digits,
-            ).alias("d"),
-            c["cluster"].alias("cluster"),
-        ),
     )
 
 
@@ -715,7 +659,7 @@ def assign_nearest_exact6(
 
 
 def assign_nearest(
-    vec: Column | str,
+    vec: str,
     centroids: list[tuple[int, list[float]]],
     digits: int = 9,
 ) -> Column:
@@ -731,36 +675,20 @@ def assign_nearest(
     Like :func:`lsh_bucket`, a vector whose length differs from the
     centroid dimension raises instead of silently mis-assigning via
     ``zip_with`` null-padding.
-
-    ``vec`` may be a COLUMN NAME (string): the whole expression is then
-    rendered as one SQL text — the same parsed tree for a fraction of
-    the Py4J construction cost (see :func:`_centroid_dists_sql`).
     """
     dim = len(centroids[0][1])
-    if isinstance(vec, str):
-        v = _sql_ident(vec)
-        d = _centroid_dists_sql(v, centroids, digits)
-        return F.expr(
-            f"CASE WHEN size({v}) = {dim} THEN array_min({d}).cluster "
-            f"ELSE raise_error(format_string("
-            f"'assign_nearest: embedding length %s != centroid dim {dim}', "
-            f"size({v}))) END"
-        )
-    assigned = F.array_min(_centroid_dists(vec, centroids, digits)).getField(
-        "cluster"
-    )
-    return F.when(F.size(vec) == F.lit(dim), assigned).otherwise(
-        F.raise_error(
-            F.format_string(
-                "assign_nearest: embedding length %s != centroid dim " + str(dim),
-                F.size(vec),
-            )
-        )
+    v = _sql_ident(vec)
+    d = _centroid_dists_sql(v, centroids, digits)
+    return F.expr(
+        f"CASE WHEN size({v}) = {dim} THEN array_min({d}).cluster "
+        f"ELSE raise_error(format_string("
+        f"'assign_nearest: embedding length %s != centroid dim {dim}', "
+        f"size({v}))) END"
     )
 
 
 def assign_nearest_multi(
-    vec: Column | str,
+    vec: str,
     centroids: list[tuple[int, list[float]]],
     nprobe: int,
     digits: int = 9,
@@ -772,80 +700,19 @@ def assign_nearest_multi(
 
     Same literal-table/no-shuffle construction as
     :func:`assign_nearest`; ties break on cluster id via the struct
-    sort, so probe order is deterministic.  ``vec`` may be a column
-    name (string) — the SQL fast path, same tree (see
-    :func:`_centroid_dists_sql`).
+    sort, so probe order is deterministic.
     """
     dim = len(centroids[0][1])
-    if isinstance(vec, str):
-        v = _sql_ident(vec)
-        d = _centroid_dists_sql(v, centroids, digits)
-        return F.expr(
-            f"CASE WHEN size({v}) = {dim} THEN "
-            f"transform(slice(array_sort({d}), 1, {int(nprobe)}), "
-            f"s -> s.cluster) "
-            f"ELSE raise_error(format_string("
-            f"'assign_nearest_multi: embedding length %s != centroid dim "
-            f"{dim}', size({v}))) END"
-        )
-    probes = F.transform(
-        F.slice(F.array_sort(_centroid_dists(vec, centroids, digits)), 1, nprobe),
-        lambda s: s["cluster"],
+    v = _sql_ident(vec)
+    d = _centroid_dists_sql(v, centroids, digits)
+    return F.expr(
+        f"CASE WHEN size({v}) = {dim} THEN "
+        f"transform(slice(array_sort({d}), 1, {int(nprobe)}), "
+        f"s -> s.cluster) "
+        f"ELSE raise_error(format_string("
+        f"'assign_nearest_multi: embedding length %s != centroid dim "
+        f"{dim}', size({v}))) END"
     )
-    return F.when(F.size(vec) == F.lit(dim), probes).otherwise(
-        F.raise_error(
-            F.format_string(
-                "assign_nearest_multi: embedding length %s != centroid dim "
-                + str(dim),
-                F.size(vec),
-            )
-        )
-    )
-
-
-def assign_nearest_pandas(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
-    digits: int = 9,
-) -> DataFrame:
-    """Arrow-vectorized nearest-centroid assignment — the throughput
-    kernel beside :func:`assign_nearest` (same contract: L2 distances
-    rounded at ``digits``, ties break on the lowest cluster id, raises
-    on a dimension mismatch), equality-tested against the expression
-    form in tests/test_similarity_kernels.py.
-
-    The expression form is the oracle-parity default (its sequential
-    fold matches DuckDB's list aggregation order bit-for-bit); this
-    numpy batch kernel is ~5-10x faster per row when assignment
-    dominates (large re-fit scans, Lloyd iterations at scale) because
-    the distance matrix is one BLAS-backed broadcast subtract instead
-    of per-row interpreted higher-order functions.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cids = np.array([int(c) for c, _ in sorted(centroids)])
-    cmat = np.array([v for _, v in sorted(centroids)], dtype=np.float64)
-
-    @pandas_udf("int")
-    def _assign(batch: pd.Series) -> pd.Series:
-        x = np.stack(batch.to_numpy()).astype(np.float64)
-        if x.shape[1] != cmat.shape[1]:
-            raise ValueError(
-                f"assign_nearest_pandas: embedding length {x.shape[1]} "
-                f"!= centroid dim {cmat.shape[1]}"
-            )
-        d2 = ((x[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=-1)
-        d2 = np.round(d2, digits)
-        # argmin returns the FIRST minimum; rows sorted by cluster id
-        # make that the lowest id — same tie-break as the struct
-        # array_min in assign_nearest.
-        return pd.Series(cids[np.argmin(d2, axis=1)])
-
-    return df.withColumn(out_col, _assign(F.col(vec_col)))
 
 
 def quantization_stats(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -1082,11 +949,13 @@ def kmeans_iterate(
             "integer distances scale at 10^6, and an exact_mean refit at "
             f"digits={digits} would leave the 6-digit-decimal space"
         )
-    assign = assign_nearest_exact6 if exact6 else assign_nearest
     for _ in range(iters):
-        assigned = df.withColumn(
-            "cluster", assign(F.col(vec_col), centroids)
+        cluster = (
+            assign_nearest_exact6(F.col(vec_col), centroids)
+            if exact6
+            else assign_nearest(vec_col, centroids)
         )
+        assigned = df.withColumn("cluster", cluster)
         cents_df = centroids_from_labels(assigned, "cluster", vec_col, digits)
         centroids = sorted(
             (r["cluster"], list(r["centroid"])) for r in cents_df.collect()
@@ -1105,49 +974,20 @@ def _md5_bucket_long(col: Column) -> Column:
     ).cast("long")
 
 
-def _cands_argmin(
-    vec: Column | str, cands: Column | str, digits: int = 9
-) -> Column:
+def _cands_argmin(vec: str, cands: str, digits: int = 9) -> Column:
     """Nearest-seed argmin over a per-row candidate array
     ``array<struct<sidx:int, vec:array<double>>>``: rounded-L2 at
     ``digits`` with the sidx tie-break — the :func:`assign_nearest`
     distance/tie semantics.  NULL candidates (rows whose cluster has
-    no seed entries) yield NULL.
-
-    ``vec``/``cands`` may be COLUMN NAMES (strings): the expression is
-    then rendered as one SQL text — the same parsed tree for a
-    fraction of the Py4J construction cost (the :func:`assign_nearest`
-    r13 discipline; every higher-order DSL lambda costs ~10 driver
-    round-trips, the text costs one)."""
-    if isinstance(vec, str) and isinstance(cands, str):
-        v, cs = _sql_ident(vec), _sql_ident(cands)
-        return F.expr(
-            f"array_min(transform({cs}, c -> named_struct("
-            f"'d', round(aggregate(zip_with({v}, c.vec, "
-            f"(x, cc) -> (cast(x as double) - cc) * (cast(x as double) - cc)), "
-            f"0.0D, (acc, x) -> acc + x), {int(digits)}), "
-            f"'sidx', c.sidx))).sidx"
-        )
-    dists = F.transform(
-        cands,
-        lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        c["vec"],
-                        lambda x, cc: (x.cast("double") - cc)
-                        * (x.cast("double") - cc),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                digits,
-            ).alias("d"),
-            c["sidx"].alias("sidx"),
-        ),
+    no seed entries) yield NULL."""
+    v, cs = _sql_ident(vec), _sql_ident(cands)
+    return F.expr(
+        f"array_min(transform({cs}, c -> named_struct("
+        f"'d', round(aggregate(zip_with({v}, c.vec, "
+        f"(x, cc) -> (cast(x as double) - cc) * (cast(x as double) - cc)), "
+        f"0.0D, (acc, x) -> acc + x), {int(digits)}), "
+        f"'sidx', c.sidx))).sidx"
     )
-    return F.array_min(dists).getField("sidx")
 
 
 def semantic_dedup(
@@ -1569,7 +1409,7 @@ def pq_codebooks_from_labels(
 
 
 def pq_encode(
-    vec: Column | str,
+    vec: str,
     codebooks: list[list[tuple[int, list[float]]]],
     digits: int = 9,
 ) -> Column:
@@ -1577,43 +1417,22 @@ def pq_encode(
     nearest sub-centroid (rounded L2, code-id tie-break) — m small
     argmins over literal tables, no shuffle, no UDF.  A 64-dim float
     vector becomes m=8 small ints: the 4-32x compression that makes
-    billion-scale ANN candidate scans memory-resident.
-
-    ``vec`` may be a column name (string) — the SQL fast path, same
-    tree (see :func:`_centroid_dists_sql`)."""
+    billion-scale ANN candidate scans memory-resident."""
     sub = len(codebooks[0][0][1])
     dim = sub * len(codebooks)
-    if isinstance(vec, str):
-        v = _sql_ident(vec)
-        vd = f"transform({v}, x -> cast(x as double))"
-        codes = ", ".join(
-            "array_min({d}).cluster".format(
-                d=_centroid_dists_sql(
-                    f"slice({vd}, {s * sub + 1}, {sub})", cb, digits
-                )
-            )
-            for s, cb in enumerate(codebooks)
+    v = _sql_ident(vec)
+    vd = f"transform({v}, x -> cast(x as double))"
+    codes = ", ".join(
+        "array_min({d}).cluster".format(
+            d=_centroid_dists_sql(f"slice({vd}, {s * sub + 1}, {sub})", cb, digits)
         )
-        return F.expr(
-            f"CASE WHEN size({v}) = {dim} THEN array({codes}) "
-            f"ELSE raise_error(format_string("
-            f"'pq_encode: embedding length %s != codebook dim {dim}', "
-            f"size({v}))) END"
-        )
-    codes = []
-    for s, cb in enumerate(codebooks):
-        sub_v = F.slice(
-            F.transform(vec, lambda x: x.cast("double")), s * sub + 1, sub
-        )
-        codes.append(F.array_min(_centroid_dists(sub_v, cb, digits)).getField("cluster"))
-    out = F.array(*codes)
-    return F.when(F.size(vec) == F.lit(dim), out).otherwise(
-        F.raise_error(
-            F.format_string(
-                "pq_encode: embedding length %s != codebook dim " + str(dim),
-                F.size(vec),
-            )
-        )
+        for s, cb in enumerate(codebooks)
+    )
+    return F.expr(
+        f"CASE WHEN size({v}) = {dim} THEN array({codes}) "
+        f"ELSE raise_error(format_string("
+        f"'pq_encode: embedding length %s != codebook dim {dim}', "
+        f"size({v}))) END"
     )
 
 
@@ -1640,7 +1459,7 @@ def pq_decode(
 
 
 def _adc_tables(
-    qv: Column | str,
+    qv: str,
     codebooks: list[list[tuple[int, list[float]]]],
     digits: int = 9,
 ) -> Column:
@@ -1655,55 +1474,22 @@ def _adc_tables(
     Each entry is ``round(Σ (q_i − c_i)², 9)`` with the identical
     fold order the decoded-vector form used, so pair distances are
     BIT-IDENTICAL to scoring against decoded sub-centroids — the
-    shortlist, the oracle SQL, and every tie-break are unchanged.
-
-    ``qv`` may be a column name (string) — the SQL fast path, same
-    tree (see :func:`_centroid_dists_sql`)."""
+    shortlist, the oracle SQL, and every tie-break are unchanged."""
     sub = len(codebooks[0][0][1])
-    if isinstance(qv, str):
-        v = _sql_ident(qv)
-        vd = f"transform({v}, x -> cast(x as double))"
-        tabs = []
-        for s, cb in enumerate(codebooks):
-            ctab = _literal_vec_table_sql(cb, "code")
-            entries = (
-                f"transform({ctab}, c -> named_struct("
-                f"'key', c.code, "
-                f"'value', round(aggregate(zip_with("
-                f"slice({vd}, {s * sub + 1}, {sub}), c.vec, "
-                f"(a, b) -> (a - b) * (a - b)), "
-                f"0.0D, (acc, x) -> acc + x), {int(digits)})))"
-            )
-            tabs.append(f"map_from_entries({entries})")
-        return F.expr("array({})".format(", ".join(tabs)))
-    vd = F.transform(qv, lambda x: x.cast("double"))
+    vd = f"transform({_sql_ident(qv)}, x -> cast(x as double))"
     tabs = []
     for s, cb in enumerate(codebooks):
-        ctab = _literal_vec_table(cb, "code")
-        sub_v = F.slice(vd, s * sub + 1, sub)
-        # ONE transform per subspace over the literal struct table
-        # (instead of one aggregate chain per code): ~10x smaller
-        # expression tree, which keeps plan analysis/codegen cheap.
-        # One-argument lambda — closure over sub_v is safe (transform
-        # consumes it eagerly this iteration).
-        entries = F.transform(
-            ctab,
-            lambda c: F.struct(
-                c["code"].alias("key"),
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            sub_v, c["vec"], lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    digits,
-                ).alias("value"),
-            ),
+        ctab = _literal_vec_table_sql(cb, "code")
+        entries = (
+            f"transform({ctab}, c -> named_struct("
+            f"'key', c.code, "
+            f"'value', round(aggregate(zip_with("
+            f"slice({vd}, {s * sub + 1}, {sub}), c.vec, "
+            f"(a, b) -> (a - b) * (a - b)), "
+            f"0.0D, (acc, x) -> acc + x), {int(digits)})))"
         )
-        tabs.append(F.map_from_entries(entries))
-    return F.array(*tabs)
+        tabs.append(f"map_from_entries({entries})")
+    return F.expr("array({})".format(", ".join(tabs)))
 
 
 def _adc_lookup(tabs: Column, codes: Column, m: int) -> Column:

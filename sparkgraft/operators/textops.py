@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkgraft.functions.expr import sql_ident
 from sparkgraft.operators.stats import exact_ratio
 
 HEX_HIGH = list("89abcdef")  # md5 nibble with top bit set
@@ -48,70 +49,42 @@ def char_shingles(text: Column, k: int) -> Column:
     return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_signature(
-    shingles: Column | str, num_hashes: int
-) -> list[Column]:
+def minhash_signature(shingles: str, num_hashes: int) -> list[Column]:
     """MinHash signature: one min-hash per simulated permutation.
 
     ``min(md5(seed|shingle))`` over the shingle set; empty set → NULL.
-
-    ``shingles`` may be a COLUMN NAME (string): each hash column is
-    then one lazily-parsed SQL text instead of ~10 py4j expression
-    nodes — same parsed tree, a fraction of the per-call driver cost
-    (the r13 ANN-kernel discipline; num_hashes=12 built ~150 nodes
-    per signature table).
+    ``shingles`` is a column name; each hash column is one SQL text
+    (the similarity kernel convention, see
+    ``similarity._centroid_dists_sql``).
     """
-    if isinstance(shingles, str):
-        from sparkgraft.functions.expr import sql_ident
-
-        sh = sql_ident(shingles)
-        return [
-            F.expr(
-                f"array_min(transform({sh}, "
-                f"s -> md5(concat('{j}|', s))))"
-            ).alias(f"mh_{j}")
-            for j in range(num_hashes)
-        ]
+    sh = sql_ident(shingles)
     return [
-        F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{j}|"), s)))
+        F.expr(
+            f"array_min(transform({sh}, "
+            f"s -> md5(concat('{j}|', s))))"
         ).alias(f"mh_{j}")
         for j in range(num_hashes)
     ]
 
 
-def lsh_bands(
-    sig_cols: list[Column] | list[str], bands: int, rows: int
-) -> Column:
+def lsh_bands(sig_cols: list[str], bands: int, rows: int) -> Column:
     """Group a signature into ``bands`` band-hashes of ``rows`` each.
 
     Returns ``array<struct<band:int, bucket:string>>`` — explode and
     equi-join on (band, bucket) for candidate pairs.  Scale: the band
     join shuffles only (band, bucket, id), and bucket collisions are
     rare by construction, so the pair blow-up is bounded.
-
-    Accepts COLUMN NAMES (strings) for the SQL-text fast path (see
-    :func:`minhash_signature`).
+    ``sig_cols`` are column names (see :func:`minhash_signature`).
     """
     assert len(sig_cols) == bands * rows
-    if sig_cols and isinstance(sig_cols[0], str):
-        from sparkgraft.functions.expr import sql_ident
-
-        entries = []
-        for b in range(bands):
-            names = ", ".join(
-                sql_ident(c) for c in sig_cols[b * rows : (b + 1) * rows]
-            )
-            entries.append(
-                f"named_struct('band', {b}, "
-                f"'bucket', md5(concat_ws('|', {names})))"
-            )
-        return F.expr("array({})".format(", ".join(entries)))
     entries = []
     for b in range(bands):
-        bucket = F.md5(F.concat_ws("|", *sig_cols[b * rows : (b + 1) * rows]))
-        entries.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
-    return F.array(*entries)
+        names = ", ".join(sql_ident(c) for c in sig_cols[b * rows : (b + 1) * rows])
+        entries.append(
+            f"named_struct('band', {b}, "
+            f"'bucket', md5(concat_ws('|', {names})))"
+        )
+    return F.expr("array({})".format(", ".join(entries)))
 
 
 def jaccard(a: Column, b: Column) -> Column:

@@ -54,32 +54,3 @@ def test_asof_equals_bruteforce(spark, left_rows, right_rows):
             best_ts = max(rt for rt, _ in cands)
             best_vals = {rv for rt, rv in cands if rt == best_ts}
             assert got[i] in best_vals, (i, k, t, cands, got[i])
-
-
-def test_pandas_asof_kernel_equals_window_asof(spark):
-    """The cogrouped pd.merge_asof kernel and the union+window plan
-    produce identical results on the harness data."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.operators.relational import asof_join_pandas
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    events = read_table(spark, SF_DIR, "events")
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "ts", "user_id"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts").alias("ts_r")
-    )
-    a = asof_join(
-        purchases, signups, on=["user_id"], left_ts="ts", right_ts="ts_r",
-        right_payload=["ts_r"],
-    )
-    b = asof_join_pandas(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="ts_r",
-        right_payload=["ts_r"],
-    )
-    sa = sorted(map(tuple, a.select("event_id", "ts_r").collect()))
-    sb = sorted(map(tuple, b.select("event_id", "ts_r").collect()))
-    assert sa == sb

@@ -99,14 +99,12 @@ def test_lsh_multiprobe_stays_broadcast(spark):
 def test_assign_nearest_is_projection(spark):
     # Centroid assignment is literal-argmin arithmetic: adding the
     # cluster column must introduce no exchange over the scan.
-    from pyspark.sql import functions as F
-
     from sparkgraft.operators.similarity import assign_nearest
     from sparkgraft.sources.readers import read_table
 
     emb = read_table(spark, SF_DIR, "embeddings")
     cents = [(i, [float(i)] * 64) for i in range(4)]
-    df = emb.withColumn("cluster", assign_nearest(F.col("embedding"), cents))
+    df = emb.withColumn("cluster", assign_nearest("embedding", cents))
     assert audit.count_shuffles(df) == 0, audit.explain_str(df)
 
 

@@ -1,28 +1,9 @@
-"""The expression-based and Arrow-batched cosine kernels agree."""
+"""Vector-similarity kernels: argmin assignment, IVF/PQ/ADC search,
+quantization, reranking and their guards."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from sparkgraft.operators.similarity import cosine, cosine_pandas_udf
-from sparkgraft.sources.readers import read_table
-from tests.conftest import SF_DIR
-
-
-def test_expression_and_pandas_udf_cosine_agree(spark):
-    emb = read_table(spark, SF_DIR, "embeddings").limit(50)
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("ia") < F.col("ib"))
-    kernel = cosine_pandas_udf(dim=64)
-    out = pairs.select(
-        "ia",
-        "ib",
-        F.round(cosine(F.col("va"), F.col("vb")), 6).alias("expr_cos"),
-        F.round(kernel(F.col("va"), F.col("vb")), 6).alias("udf_cos"),
-    )
-    mismatched = out.filter(F.col("expr_cos") != F.col("udf_cos")).count()
-    assert mismatched == 0
 
 
 def test_lsh_bucket_dim_mismatch_raises(spark):
@@ -106,7 +87,7 @@ def test_assign_nearest_matches_numpy_argmin(spark):
     got = {
         r["vec_id"]: r["cluster"]
         for r in emb.withColumn(
-            "cluster", assign_nearest(F.col("embedding"), cents)
+            "cluster", assign_nearest("embedding", cents)
         ).collect()
     }
     cmat = np.array([c for _, c in cents])
@@ -119,15 +100,38 @@ def test_assign_nearest_matches_numpy_argmin(spark):
 
 
 def test_assign_nearest_dim_mismatch_raises(spark):
+    """Every name-only kernel's SQL-text dimension guard raises on a
+    short vector instead of mis-assigning via zip_with null-padding."""
     import pytest
-    from pyspark.sql import functions as F
+
+    from sparkgraft.operators.similarity import (
+        assign_nearest,
+        assign_nearest_multi,
+        pq_encode,
+    )
+
+    cents = [(0, [0.0] * 8), (1, [1.0] * 8)]
+    cbs = [[(c, v[s * 4 : (s + 1) * 4]) for c, v in cents] for s in range(2)]
+    bad = spark.createDataFrame([([1.0] * 5,)], "v array<double>")
+    for name, kernel in [
+        ("assign_nearest", assign_nearest("v", cents)),
+        ("assign_nearest_multi", assign_nearest_multi("v", cents, 2)),
+        ("pq_encode", pq_encode("v", cbs)),
+    ]:
+        with pytest.raises(Exception, match=f"{name}: embedding length 5 "):
+            bad.select(kernel).collect()
+
+
+def test_name_only_kernel_rejects_column(spark):
+    """The vector kernels take column names: a Column is a TypeError
+    when the kernel is built, not an unresolved column at run time."""
+    import pytest
 
     from sparkgraft.operators.similarity import assign_nearest
 
     cents = [(0, [0.0] * 8), (1, [1.0] * 8)]
-    bad = spark.createDataFrame([([1.0] * 5,)], "v array<double>")
-    with pytest.raises(Exception, match="assign_nearest|USER_RAISED"):
-        bad.select(assign_nearest(F.col("v"), cents)).collect()
+    with pytest.raises(TypeError, match="got Column"):
+        assign_nearest(F.col("embedding"), cents)
 
 
 def test_ivf_nprobe2_recall_beats_nprobe1(spark):
@@ -150,7 +154,7 @@ def test_ivf_nprobe2_recall_beats_nprobe1(spark):
         for r in centroids_from_labels(emb, "label", "embedding").collect()
     )
     assigned = emb.withColumn(
-        "cluster", assign_nearest(F.col("embedding"), cents)
+        "cluster", assign_nearest("embedding", cents)
     )
     q = emb.filter("vec_id < 30")
     exact = _topk_sets(brute_force_topk(q, emb, k=5))
@@ -158,7 +162,7 @@ def test_ivf_nprobe2_recall_beats_nprobe1(spark):
     def ivf(nprobe):
         probing = q.withColumn(
             "cluster",
-            F.explode(assign_nearest_multi(F.col("embedding"), cents, nprobe)),
+            F.explode(assign_nearest_multi("embedding", cents, nprobe)),
         )
         return _topk_sets(partitioned_topk(probing, assigned, k=5, partition_col="cluster"))
 
@@ -204,32 +208,6 @@ def test_kmeans_iterate_monotone_and_deterministic(spark):
     # Determinism: same seed, same result.
     again = kmeans_iterate(emb, seed, iters=1)
     assert again == c1
-
-
-def test_assign_nearest_pandas_matches_expression(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from sparkgraft.operators import similarity as SIM
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    emb = read_table(spark, SF_DIR, "embeddings")
-    cents_df = SIM.centroids_from_labels(emb, "label", "embedding", digits=6)
-    cents = sorted((r["cluster"], list(r["centroid"])) for r in cents_df.collect())
-
-    expr = emb.withColumn(
-        "cluster", SIM.assign_nearest(F.col("embedding"), cents)
-    ).select("vec_id", "cluster")
-    pand = SIM.assign_nearest_pandas(emb, cents).select("vec_id", "cluster")
-    a = {r["vec_id"]: r["cluster"] for r in expr.collect()}
-    b = {r["vec_id"]: r["cluster"] for r in pand.collect()}
-    assert a == b
-
-    # dimension mismatch raises instead of silently mis-assigning
-    bad = emb.withColumn("embedding", F.slice("embedding", 1, 3))
-    with pytest.raises(Exception, match="centroid dim"):
-        SIM.assign_nearest_pandas(bad, cents).collect()
 
 
 def test_quantization_roundtrip_error_bound(spark):
@@ -330,7 +308,7 @@ def test_pq_decode_reduces_distance_vs_random_code(spark):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
         SIM.pq_decode(
-            SIM.pq_encode(F.col("embedding"), cbs), cbs
+            SIM.pq_encode("embedding", cbs), cbs
         ).alias("dec"),
     )
     err = enc.select(
@@ -418,11 +396,11 @@ def test_ivfpq_prunes_to_probed_clusters(spark):
     )
     assigned = embeddings_df.select(
         F.col("vec_id").alias("neighbor_id"),
-        SIM.assign_nearest(F.col("embedding"), cents).alias("ncl"),
+        SIM.assign_nearest("embedding", cents).alias("ncl"),
     )
     probe1 = embeddings_df.select(
         F.col("vec_id").alias("query_id"),
-        SIM.assign_nearest_multi(F.col("embedding"), cents, 1)[0].alias("qcl"),
+        SIM.assign_nearest_multi("embedding", cents, 1)[0].alias("qcl"),
     )
     joined = out.join(assigned, "neighbor_id").join(probe1, "query_id")
     assert joined.count() > 0

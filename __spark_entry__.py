@@ -3596,10 +3596,10 @@ def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unordered pair meets in exactly one of the B(B+1)/2 cells per
     label, the heaviest task does |c|²/B² work, and block ids never
     reach the output, so the result is bit-identical to the plain
-    join.  Norms are hoisted per row (|C| norm computations instead of
-    |pairs|); the hoisted expression tree matches SIM.cosine's, so the
-    rounded cosines are unchanged."""
-    from sparkgraft.operators.similarity import _dot, _norm
+    join.  Pairs score with the operators' exact-cosine scorer
+    (``similarity._cosine``) over per-row hoisted norms, zero-norm
+    rows dropped."""
+    from sparkgraft.operators.similarity import _cosine, _drop_zero_norm, _vec_norm
 
     B = 8
     emb = _t(spark, sf_dir, "embeddings")
@@ -3619,24 +3619,20 @@ def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("part"),
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("v"),
-        _norm(F.col("embedding")).alias("n"),
+        _vec_norm("embedding").alias("n"),
     )
-    pairs = (
+    return (
         SCALE.triangle_self_pairs(
-            corpus, ["part"], "vid", ["v", "n"], n_blocks=B
+            _drop_zero_norm(corpus, "n"), ["part"], "vid", ["v", "n"], n_blocks=B
         )
         .select(
             "part",
             "id_a",
             "id_b",
-            F.round(
-                _dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")),
-                6,
-            ).alias("cos_sim"),
+            _cosine(6, "v_a", "v_b", "n_a", "n_b").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.999)
     )
-    return pairs
 
 
 def q_embedding_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -128,7 +128,6 @@ from sparkgraft.operators.similarity import (
     brute_force_topk,
     hard_negative_topk,
     centroids_from_labels,
-    cosine,
     hyperplane_signs,
     kmeans_iterate,
     dequantize_error,

@@ -20,47 +20,72 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparkgraft.functions.expr import sql_ident as _sql_ident
+from sparkgraft.operators.scale import triangle_self_pairs, widen_narrow_scan
+from sparkgraft.operators.stats import exact_mean, scaled_long
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def _norm_sql(vec_sql: str) -> str:
-    """SQL text of :func:`_norm` (identical fold)."""
-    return (
-        f"sqrt(aggregate(transform({vec_sql}, "
+def _vec_norm(vec: str) -> Column:
+    """The hoisted L2 norm of float-array column ``vec``: ``sqrt`` of
+    the double square-sum, computed once per row before any pair join
+    (|Q|+|C| norms instead of one per pair)."""
+    return F.expr(
+        f"sqrt(aggregate(transform({_sql_ident(vec)}, "
         f"x -> cast(x as double) * cast(x as double)), "
         f"0.0D, (acc, x) -> acc + x))"
     )
 
 
-def _dot_sql(a_sql: str, b_sql: str) -> str:
-    """SQL text of :func:`_dot` (identical zip_with fold)."""
-    return (
-        f"aggregate(zip_with({a_sql}, {b_sql}, "
+def _cosine(
+    digits: int, a: str = "qv", b: str = "cv", an: str = "qn", bn: str = "cn"
+) -> Column:
+    """The exact-cosine scorer of every vector-search operator:
+    ``round(dot(a, b) / (an * bn), digits)`` over two float-array
+    columns and their hoisted norms (:func:`_vec_norm`), as one SQL
+    text.  The dot is a ``zip_with`` fold in array order, so the value
+    does not depend on which side is ``a``.  Sides reach it through
+    :func:`_drop_zero_norm` (the rule is stated at :func:`_top_k`)."""
+    a, b, an, bn = (_sql_ident(c) for c in (a, b, an, bn))
+    return F.expr(
+        f"round(aggregate(zip_with({a}, {b}, "
         f"(x, y) -> cast(x as double) * cast(y as double)), "
-        f"0.0D, (acc, x) -> acc + x)"
+        f"0.0D, (acc, x) -> acc + x) / ({an} * {bn}), {int(digits)})"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity between two float-array columns."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _drop_zero_norm(side: DataFrame, *norms: str) -> DataFrame:
+    """Drop the rows of one pair-join side whose hoisted norm in any of
+    ``norms`` is zero; a NULL norm passes (see :func:`_top_k`)."""
+    return side.filter(
+        " AND ".join(f"NOT ({_sql_ident(n)} <=> 0.0D)" for n in norms)
+    )
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    score: str = "cos_sim",
+    ascending: bool = False,
+    rank: str = "rnk",
+) -> DataFrame:
+    """The ranking policy of every vector-search operator: per
+    ``query_id``, ``row_number`` into ``rank`` ordered by ``score``
+    (descending for a similarity, ascending for a distance), ties
+    broken by ``neighbor_id`` ascending, kept while ``<= k``.
+
+    Scores are rounded (or exact integers) before they reach the
+    window, so the order is reproducible across engines, runs and
+    partitionings.  A zero-norm vector is never scored: cosine is
+    undefined for it (ANSI raises ``DIVIDE_BY_ZERO``), so every
+    exact-cosine site drops it from the side it is on before the pair
+    join (:func:`_drop_zero_norm`) — it neither gets nor is a
+    neighbor.  A NULL vector keeps a NULL cosine, which ranks last."""
+    s = F.col(score)
+    w = Window.partitionBy("query_id").orderBy(
+        s.asc() if ascending else s.desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
 
 
 def brute_force_topk(
@@ -73,44 +98,26 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: every query against every candidate.
 
-    ``queries`` is broadcast (small); similarity is rounded *before*
-    ranking so the ordering is reproducible across engines/runs, with
-    candidate id as the final tie-break.
+    ``queries`` is broadcast (small); scoring is :func:`_cosine` and
+    ranking :func:`_top_k`.
     """
-    # Norms are hoisted to per-row columns BEFORE the join: |Q|+|C| norm
-    # computations instead of |Q|x|C| (the dot product is the only
-    # per-pair work).
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
+        _vec_norm(vec_col).alias("qn"),
     )
     c = widen_narrow_scan(candidates).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
     )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _drop_zero_norm(c, "cn")
+        .crossJoin(F.broadcast(_drop_zero_norm(q, "qn")))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                digits,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "neighbor_id", _cosine(digits).alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def brute_force_topk_qint(
@@ -168,8 +175,6 @@ def brute_force_topk_qint(
     Scale: identical plan shape to :func:`brute_force_topk` — queries
     broadcast, candidates never shuffle, per-partition rank-limit.
     """
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     s = 10**comp_digits
     big = "decimal(38,0)"
     m = int(round(comp_max * s))  # per-component integer magnitude cap
@@ -254,14 +259,7 @@ def brute_force_topk_qint(
         "neighbor_id",
         F.when(F.col("dp") < 0, -key_mag).otherwise(key_mag).alias("rk"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rk").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        keyed.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk")
-    )
+    return _top_k(keyed, k, "rk").select("query_id", "neighbor_id", "rnk")
 
 
 def _literal_vec_table_sql(
@@ -303,7 +301,8 @@ def _centroid_dists_sql(
 
     Kernel convention: :func:`assign_nearest`,
     :func:`assign_nearest_multi`, :func:`_cands_argmin`,
-    :func:`pq_encode`, :func:`_adc_tables` and textops'
+    :func:`pq_encode`, :func:`_adc_tables`, the exact-cosine scorer
+    :func:`_cosine` (with its hoisted :func:`_vec_norm`) and textops'
     ``minhash_signature``/``lsh_bands`` take COLUMN NAMES, not
     Columns, and each renders as one SQL text parsed by a single
     ``F.expr`` (one Py4J call per kernel, not one per expression
@@ -412,7 +411,7 @@ def lsh_bucketed_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
+        _vec_norm(vec_col).alias("qn"),
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     if hamming_radius > 0 or (max_probes is not None and max_probes > 1):
@@ -432,35 +431,22 @@ def lsh_bucketed_topk(
             *[F.col("bucket").bitwiseXOR(F.lit(m)).cast("int") for m in masks]
         )
         q = q.withColumn("bucket", F.explode(probes))
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     # The broadcast join keeps the candidate scan's partitioning — a
     # narrow scan would serialize bucketing + pair scoring into one
     # task (no-op on a production-wide scan).
     c = widen_narrow_scan(candidates).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     scored = (
-        c.join(F.broadcast(q), "bucket")
+        _drop_zero_norm(c, "cn")
+        .join(F.broadcast(_drop_zero_norm(q, "qn")), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                digits,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "neighbor_id", _cosine(digits).alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
-    )
+    return _top_k(scored, k)
 
 
 def partitioned_topk(
@@ -484,35 +470,21 @@ def partitioned_topk(
         F.col(id_col).alias("query_id"),
         F.col(partition_col).alias("part"),
         F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
+        _vec_norm(vec_col).alias("qn"),
     )
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     c = widen_narrow_scan(candidates).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(partition_col).alias("part"),
         F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
     )
     scored = (
-        c.join(F.broadcast(q), "part")
+        _drop_zero_norm(c, "cn")
+        .join(F.broadcast(_drop_zero_norm(q, "qn")), "part")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                digits,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "neighbor_id", _cosine(digits).alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def centroids_from_labels(
@@ -534,8 +506,6 @@ def centroids_from_labels(
     combined partial aggregate, and runs once per (re)fit, not per
     query — the standard offline IVF training cost.
     """
-    from sparkgraft.operators.stats import exact_mean, scaled_long
-
     expl = df.select(
         F.col(label_col).alias("cluster"),
         F.posexplode(F.col(vec_col)).alias("pos", "v"),
@@ -828,9 +798,9 @@ def quantized_rerank_topk(
     per query; stage 2 re-ranks those m with full-precision cosine and
     returns the top-``k`` — the standard compress-then-rerank recipe.
 
-    Both stages round before ranking with id tie-breaks, so the whole
-    pipeline is deterministic and oracle-checkable.  The decode is the
-    round-trip of :func:`quantize_embeddings` fused into one projection
+    Both stages score with :func:`_cosine` and rank with
+    :func:`_top_k`.  The decode is the round-trip of
+    :func:`quantize_embeddings` fused into one projection
     (code = round((v-mn)*L/(mx-mn)), dec = mn + code*(mx-mn)/L).
     """
 
@@ -866,52 +836,31 @@ def quantized_rerank_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         F.col("qd"),
-        _norm(F.col(vec_col)).alias("qn"),
-        _norm(F.col("qd")).alias("qdn"),
+        _vec_norm(vec_col).alias("qn"),
+        _vec_norm("qd").alias("qdn"),
     )
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     c = decoded(widen_narrow_scan(candidates), "cd").select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.col("cd"),
-        _norm(F.col(vec_col)).alias("cn"),
-        _norm(F.col("cd")).alias("cdn"),
+        _vec_norm(vec_col).alias("cn"),
+        _vec_norm("cd").alias("cdn"),
     )
-    approx = (
-        c.join(F.broadcast(q), c["neighbor_id"] != q["query_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            "qv",
-            "cv",
-            "qn",
-            "cn",
-            F.round(
-                _dot(F.col("qd"), F.col("cd")) / (F.col("qdn") * F.col("cdn")),
-                digits,
-            ).alias("approx_sim"),
-        )
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = approx.withColumn("arnk", F.row_number().over(w1)).filter(
-        F.col("arnk") <= m
-    )
-    exact = shortlist.select(
+    c, q = _drop_zero_norm(c, "cn", "cdn"), _drop_zero_norm(q, "qn", "qdn")
+    approx = c.join(F.broadcast(q), c["neighbor_id"] != q["query_id"]).select(
         "query_id",
         "neighbor_id",
-        F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), digits
-        ).alias("cos_sim"),
+        "qv",
+        "cv",
+        "qn",
+        "cn",
+        _cosine(digits, "qd", "cd", "qdn", "cdn").alias("approx_sim"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    shortlist = _top_k(approx, m, "approx_sim", rank="arnk")
+    exact = shortlist.select(
+        "query_id", "neighbor_id", _cosine(digits).alias("cos_sim")
     )
-    return exact.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= k
-    )
+    return _top_k(exact, k)
 
 
 def kmeans_iterate(
@@ -1073,8 +1022,6 @@ def semantic_dedup(
     in the same final group within τ (NULL for survivors);
     ``subcluster`` is 0 everywhere on the uncapped path.
     """
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     B = max(1, int(n_blocks))
     # CPU-dense from the first projection (centroid argmin, per-pair
     # dots): a narrow scan (single small file, or a broadcast-joined
@@ -1110,8 +1057,6 @@ def semantic_dedup_labeled(
     verbatim with :func:`semantic_dedup`, so a single policy caps both
     legs of the panel.  Output schema and semantics identical:
     (id, cluster = the label, subcluster, is_duplicate, dup_of)."""
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     assigned = widen_narrow_scan(
         df.select(
             F.col(id_col).alias("__id"),
@@ -1236,8 +1181,6 @@ def _dedup_within_groups(
         # and REJECTED in r13: 3.2 s of py4j Column construction +
         # a 2.0 s 64-decimal-agg job at sf0.1 vs ~0.6 s for
         # explode+mean; guide §1.2 feedback step.)
-        from sparkgraft.operators.stats import exact_mean, scaled_long
-
         refit_src = (
             assigned.join(F.broadcast(seed_cands), "cluster")
             .select(
@@ -1325,17 +1268,12 @@ def _dedup_within_groups(
     pair_keys = (
         ["cluster", "sub", "block"] if M is not None else ["cluster"]
     )
-    # Norms are hoisted to per-row scalars BEFORE the pairwise join —
-    # same expression tree as cosine() (sqrt of the square-sum, then
-    # the product in the divisor), so results are bit-identical, but
-    # each pair costs one array scan (the dot) instead of three.
-    from sparkgraft.operators.scale import triangle_self_pairs
-
+    # Pairs score with :func:`_cosine` over norms hoisted per row, so
+    # each pair costs one array scan (the dot) instead of three.  A
+    # zero-norm row never pairs (:func:`_top_k`); it stays in the
+    # verdict side below as a non-duplicate.
     base = assigned.select(
-        *pair_keys,
-        "__id",
-        "__v",
-        F.expr(_norm_sql("`__v`")).alias("__n"),
+        *pair_keys, "__id", "__v", _vec_norm("__v").alias("__n")
     )
     # Round-10: the cell construction lives in the shared
     # scale.triangle_self_pairs helper (this operator's round-2 fix,
@@ -1344,14 +1282,13 @@ def _dedup_within_groups(
     # commutative and summed in the same array order, so the rounded
     # cosines are bit-identical to the pre-helper operand order.
     dup_links = (
-        triangle_self_pairs(base, pair_keys, "__id", ["__v", "__n"], B)
+        triangle_self_pairs(
+            _drop_zero_norm(base, "__n"), pair_keys, "__id", ["__v", "__n"], B
+        )
         .select(
             F.col("id_b").alias("cand_id"),
             F.col("id_a").alias("keep_id"),
-            F.expr(
-                f"round({_dot_sql('`__v_a`', '`__v_b`')}"
-                f" / (`__n_a` * `__n_b`), {int(digits)})"
-            ).alias("cos_sim"),
+            _cosine(digits, "__v_a", "__v_b", "__n_a", "__n_b").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= F.lit(threshold))
         .groupBy("cand_id")
@@ -1535,17 +1472,63 @@ def pq_encode_candidates(
     max(component) instead of Σ components).  Results are
     bit-identical to the inline path: this is the same expression
     tree, only materialized."""
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     cols = [
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        F.expr(_norm_sql(_sql_ident(vec_col))).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
         pq_encode(vec_col, codebooks).alias("codes"),
     ]
     if centroids is not None:
         cols.insert(1, assign_nearest(vec_col, centroids).alias("part"))
     return widen_narrow_scan(candidates).select(*cols)
+
+
+def _adc_queries(
+    queries: DataFrame,
+    codebooks: list[list[tuple[int, list[float]]]],
+    id_col: str,
+    vec_col: str,
+    probes: Column | None = None,
+) -> DataFrame:
+    """The query side of an ADC search: ``query_id``, the exploded IVF
+    ``part`` when ``probes`` (an :func:`assign_nearest_multi` list) is
+    given, ``qv``, its norm ``qn`` and the per-query ADC ``tabs`` —
+    zero-norm queries dropped (:func:`_top_k`)."""
+    cols = [
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        _vec_norm(vec_col).alias("qn"),
+        _adc_tables(vec_col, codebooks).alias("tabs"),
+    ]
+    if probes is not None:
+        cols.insert(1, F.explode(probes).alias("part"))
+    return _drop_zero_norm(queries.select(*cols), "qn")
+
+
+def _adc_rerank(
+    pairs: DataFrame, m: int, shortlist: int, k: int, digits: int
+) -> DataFrame:
+    """The ADC shortlist → exact-rerank tail of :func:`pq_adc_topk`,
+    :func:`ivfpq_topk` and ``ann_index.ivfpq_topk_indexed``: ``pairs``
+    (an :func:`_adc_queries` side joined to zero-norm-free candidates
+    ``neighbor_id, cv, cn, codes``) are ADC-scored as an exact
+    1e9-scaled LONG (:func:`_adc_lookup` — no re-round, no boundary),
+    the ``shortlist`` nearest per query survive, and those re-rank by
+    exact cosine to the top ``k``."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        "qv",
+        "cv",
+        "qn",
+        "cn",
+        _adc_lookup(F.col("tabs"), F.col("codes"), m).alias("approx_dist"),
+    )
+    top = _top_k(scored, shortlist, "approx_dist", ascending=True, rank="arnk")
+    exact = top.select(
+        "query_id", "neighbor_id", _cosine(digits).alias("cos_sim")
+    )
+    return _top_k(exact, k)
 
 
 def pq_adc_topk(
@@ -1568,12 +1551,10 @@ def pq_adc_topk(
     (:func:`quantized_rerank_topk`).
 
     Determinism: table entries round at 9 with the identical fold the
-    decoded-vector form used, the sum is a FIXED-ORDER chain
+    decoded-vector form used, and the sum is a FIXED-ORDER chain
     (s = 0..m-1 — the oracle mirrors the same order via an ordered
-    list_sum), ranks tie-break on id — results are bit-identical to
-    decode-and-score.
+    list_sum) — results are bit-identical to decode-and-score.
     """
-    m = len(codebooks)
     # pq_encode + ADC scoring are CPU-dense and run at the candidate
     # scan's parallelism (the query side broadcasts) — widen a narrow
     # scan or the whole scoring stage serializes into one task.
@@ -1586,44 +1567,11 @@ def pq_adc_topk(
             candidates, codebooks, id_col=id_col, vec_col=vec_col
         )
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.expr(_norm_sql(_sql_ident(vec_col))).alias("qn"),
-        _adc_tables(vec_col, codebooks).alias("tabs"),
+    q = _adc_queries(queries, codebooks, id_col, vec_col)
+    pairs = _drop_zero_norm(enc, "cn").join(
+        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
     )
-    pairs = enc.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    # Exact 1e9-scaled LONG (see _adc_lookup) — no re-round, no boundary.
-    adist = _adc_lookup(F.col("tabs"), F.col("codes"), m)
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        "qv",
-        "cv",
-        "qn",
-        "cn",
-        adist.alias("approx_dist"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    top = scored.withColumn("arnk", F.row_number().over(w1)).filter(
-        F.col("arnk") <= shortlist
-    )
-    exact = top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-            digits,
-        ).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= k
-    )
+    return _adc_rerank(pairs, len(codebooks), shortlist, k, digits)
 
 
 def ivfpq_topk(
@@ -1657,10 +1605,9 @@ def ivfpq_topk(
     duplicates a (query, candidate) pair.
 
     Determinism: probe lists, codes, per-subspace rounding, fixed-
-    order ADC sums and id tie-breaks are all inherited from the
+    order ADC sums and the ranking are all inherited from the
     composed parts — bit-identical under any partitioning.
     """
-    m = len(codebooks)
     # Same widening rationale as pq_adc_topk: centroid assignment +
     # pq_encode + ADC all run at the candidate scan's parallelism.
     # ``encoded`` must carry the IVF ``part`` column
@@ -1676,48 +1623,14 @@ def ivfpq_topk(
         enc = pq_encode_candidates(
             candidates, codebooks, centroids, id_col=id_col, vec_col=vec_col
         )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            assign_nearest_multi(vec_col, centroids, nprobe)
-        ).alias("part"),
-        F.col(vec_col).alias("qv"),
-        F.expr(_norm_sql(_sql_ident(vec_col))).alias("qn"),
-        _adc_tables(vec_col, codebooks).alias("tabs"),
+    probes = assign_nearest_multi(vec_col, centroids, nprobe)
+    q = _adc_queries(queries, codebooks, id_col, vec_col, probes)
+    pairs = (
+        _drop_zero_norm(enc, "cn")
+        .join(F.broadcast(q), "part")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    pairs = enc.join(F.broadcast(q), "part").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        "qv",
-        "cv",
-        "qn",
-        "cn",
-        # Exact 1e9-scaled LONG (see _adc_lookup) — no re-round.
-        _adc_lookup(F.col("tabs"), F.col("codes"), m).alias("approx_dist"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    top = scored.withColumn("arnk", F.row_number().over(w1)).filter(
-        F.col("arnk") <= shortlist
-    )
-    exact = top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-            digits,
-        ).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= k
-    )
+    return _adc_rerank(pairs, len(codebooks), shortlist, k, digits)
 
 
 def embedding_stats(
@@ -1732,8 +1645,6 @@ def embedding_stats(
     combined aggregate keyed by dimension — one shuffle of (pos,
     partial) rows, never raw vectors.
     """
-    from sparkgraft.operators.stats import exact_mean, scaled_long
-
     expl = df.select(F.posexplode(F.col(vec_col)).alias("pos", "v")).select(
         "pos", F.col("v").cast("double").alias("v")
     )
@@ -1820,27 +1731,26 @@ def maxsim_rerank(
     per-document sum runs over DECIMAL(18,6) (exact, order-free), and
     ranks tie-break on d_doc.
     """
-    from pyspark.sql import Window
-
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     # Norms hoisted to one computation per TOKEN (not per pair — the
-    # pair count is |q| x |corpus|, the token count is |q| + |corpus|).
+    # pair count is |q| x |corpus|, the token count is |q| + |corpus|);
+    # zero-norm tokens are never scored (:func:`_top_k`).
     # The corpus side carries the |q|x per-token cosine work of the
     # broadcast crossJoin — widen a narrow (single-file) scan or that
     # stage runs single-task (r13 optimization round, guide §2.6;
     # no-op on a wide scan).
     q = query_tokens.select(
-        "q_doc", "q_tok", F.col("qv"), _norm("qv").alias("qn")
+        "q_doc", "q_tok", F.col("qv"), _vec_norm("qv").alias("qn")
     )
     d = widen_narrow_scan(corpus_tokens).select(
-        "d_doc", F.col("dv"), _norm("dv").alias("dn")
+        "d_doc", F.col("dv"), _vec_norm("dv").alias("dn")
     )
-    cos6 = F.round(
-        _dot(F.col("qv"), F.col("dv")) / (F.col("qn") * F.col("dn")), digits
-    )
-    pairs = d.crossJoin(F.broadcast(q)).select(
-        "q_doc", "q_tok", "d_doc", cos6.alias("c")
+    pairs = (
+        _drop_zero_norm(d, "dn")
+        .crossJoin(F.broadcast(_drop_zero_norm(q, "qn")))
+        .select(
+            "q_doc", "q_tok", "d_doc",
+            _cosine(digits, b="dv", bn="dn").alias("c"),
+        )
     )
     best = pairs.groupBy("q_doc", "q_tok", "d_doc").agg(F.max("c").alias("b"))
     scored = best.groupBy("q_doc", "d_doc").agg(
@@ -1873,51 +1783,35 @@ def hard_negative_topk(
     unlabeled positives, the standard false-negative guard).
 
     Same plan shape as :func:`brute_force_topk` (queries broadcast
-    with their labels, norms hoisted, similarity rounded before
-    ranking, id tie-break) with the negativity predicate fused into
-    the pair filter — so the exact-scoring scan stays a single
-    broadcast-join stage.  For corpus-scale mining swap the candidate
+    with their labels, :func:`_cosine`, :func:`_top_k`) with the
+    negativity predicate fused into the pair filter — so the
+    exact-scoring scan stays a single broadcast-join stage.  For corpus-scale mining swap the candidate
     side for the IVF/LSH-pruned variants; semantics stay identical
     above the shortlist.
     """
-    from sparkgraft.operators.scale import widen_narrow_scan
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("qlabel"),
         F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
+        _vec_norm(vec_col).alias("qn"),
     )
     c = widen_narrow_scan(candidates).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).alias("clabel"),
         F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
     )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _drop_zero_norm(c, "cn")
+        .crossJoin(F.broadcast(_drop_zero_norm(q, "qn")))
         .filter(
             (F.col("neighbor_id") != F.col("query_id"))
             & (F.col("clabel") != F.col("qlabel"))
         )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                digits,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "neighbor_id", _cosine(digits).alias("cos_sim"))
         .filter(F.col("cos_sim") < max_sim)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _top_k(scored, k).select("query_id", "neighbor_id", "cos_sim", "rnk")
 
 
 def mmr_rerank(
@@ -1946,7 +1840,7 @@ def mmr_rerank(
 
     Scale shape: candidate generation is the existing broadcast top-k;
     pairwise sims are per-query k² pairs (k=20 → 380 rows/query),
-    computed with the same JVM cosine expression as relevance — the
+    scored by the same :func:`_cosine` as relevance — the
     Python kernel only runs the k_select-step greedy over those
     integers (bounded per-query work, no floats cross the boundary).
     Output ``(query_id, neighbor_id, mmr_rank)``.
@@ -1963,19 +1857,25 @@ def mmr_rerank(
         F.round(F.col("cos_sim") * scale).cast("long").alias("rel_q"),
     )
     emb = candidates.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+        _vec_norm(vec_col).alias("cn"),
     )
+    # Only `topk` neighbors join: zero-norm vectors are already gone.
     a = rel.join(emb, "neighbor_id").select(
         "query_id",
         F.col("neighbor_id").alias("id_a"),
         F.col("rel_q").alias("rel_a"),
         F.col("cv").alias("va"),
+        F.col("cn").alias("na"),
     )
     b = rel.join(emb, "neighbor_id").select(
         "query_id",
         F.col("neighbor_id").alias("id_b"),
         F.col("cv").alias("vb"),
+        F.col("cn").alias("nb"),
     )
+    sim = _cosine(digits, "va", "vb", "na", "nb")
     pairs = (
         a.join(b, "query_id")
         .filter(F.col("id_a") != F.col("id_b"))
@@ -1984,9 +1884,7 @@ def mmr_rerank(
             "id_a",
             "rel_a",
             "id_b",
-            F.round(F.round(cosine(F.col("va"), F.col("vb")), digits) * scale)
-            .cast("long")
-            .alias("sim_q"),
+            F.round(sim * scale).cast("long").alias("sim_q"),
         )
     )
     # rel-only rows keep single-candidate queries alive in the kernel

@@ -29,17 +29,14 @@ reuses `ivfpq_ann`'s DuckDB mirror verbatim.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkgraft.functions.expr import sql_ident as _sql_ident
-
 from sparkgraft.operators.similarity import (
-    _adc_lookup,
-    _adc_tables,
-    _dot,
-    _norm,
-    _norm_sql,
+    _adc_queries,
+    _adc_rerank,
+    _drop_zero_norm,
+    _vec_norm,
     assign_nearest,
     assign_nearest_multi,
     pq_encode,
@@ -63,7 +60,7 @@ def write_ann_index(
         F.col(id_col).alias("neighbor_id"),
         assign_nearest(vec_col, centroids).alias("part"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-        F.expr(_norm_sql(_sql_ident(vec_col))).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
         pq_encode(vec_col, codebooks).alias("codes"),
     )
     enc.write.partitionBy("part").mode("overwrite").parquet(
@@ -110,7 +107,7 @@ def append_ann_index(
         F.col(id_col).alias("neighbor_id"),
         assign_nearest(vec_col, centroids).alias("part"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-        F.expr(_norm_sql(_sql_ident(vec_col))).alias("cn"),
+        _vec_norm(vec_col).alias("cn"),
         pq_encode(vec_col, codebooks).alias("codes"),
     )
     enc.write.partitionBy("part").mode("append").parquet(
@@ -233,8 +230,8 @@ def ivfpq_topk_indexed(
     probed-cluster set (bounded by n_clusters) filters the codes scan
     BEFORE the join — a literal ``part IN (...)`` predicate Spark
     pushes into parquet partition pruning, so only probed clusters'
-    files are read.  ADC + exact rerank are the same expressions as
-    the in-memory operator."""
+    files are read.  ADC + exact rerank are the in-memory operator's
+    (``similarity._adc_rerank``)."""
     centroids, codebooks, codes = read_ann_index(
         queries.sparkSession, index_dir
     )
@@ -243,55 +240,18 @@ def ivfpq_topk_indexed(
         # Logical deletes exclude BEFORE the ADC shortlist, so served
         # results exactly equal an index that never held those vectors.
         codes = codes.join(F.broadcast(tomb), "neighbor_id", "left_anti")
-    m = len(codebooks)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            assign_nearest_multi(vec_col, centroids, nprobe)
-        ).alias("part"),
-        F.col(vec_col).alias("qv"),
-        F.expr(_norm_sql(_sql_ident(vec_col))).alias("qn"),
-        _adc_tables(vec_col, codebooks).alias("tabs"),
-    )
+    probes = assign_nearest_multi(vec_col, centroids, nprobe)
+    q = _adc_queries(queries, codebooks, id_col, vec_col, probes)
     # Driver-side probed-part list: |queries| x nprobe ids, bounded by
     # n_clusters — the price of a STATIC partition filter on the scan.
     probed = sorted(
         {r["part"] for r in q.select("part").distinct().collect()}
     )
-    pruned = codes.filter(F.col("part").isin(probed))
+    pruned = _drop_zero_norm(codes.filter(F.col("part").isin(probed)), "cn")
     pairs = pruned.join(F.broadcast(q), "part").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        "qv",
-        "cv",
-        "qn",
-        "cn",
-        # Exact 1e9-scaled LONG (see _adc_lookup) — no re-round.
-        _adc_lookup(F.col("tabs"), F.col("codes"), m).alias("approx_dist"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    top = scored.withColumn("arnk", F.row_number().over(w1)).filter(
-        F.col("arnk") <= shortlist
-    )
-    exact = top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-            digits,
-        ).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= k
-    )
+    return _adc_rerank(pairs, len(codebooks), shortlist, k, digits)
 
 
 def _tombstones(spark: SparkSession, index_dir: str) -> "DataFrame | None":

@@ -689,3 +689,41 @@ def test_qint_topk_membership_tracks_float_topk(spark):
     b = _topk_sets(brute_force_topk_qint(q, emb, k=10))
     for qid in a:
         assert len(a[qid] - b[qid]) <= 1, (qid, a[qid], b[qid])
+
+
+def test_zero_norm_vectors_are_never_scored(spark):
+    """A zero-norm vector has no cosine.  Each exact-cosine operator
+    drops it before the pair join, so it is neither a query nor a
+    neighbor, instead of failing the whole query with ANSI
+    DIVIDE_BY_ZERO; the dedup verdict keeps it as a non-duplicate."""
+    from sparkgraft.operators.similarity import (
+        brute_force_topk,
+        mmr_rerank,
+        partitioned_topk,
+        semantic_dedup_labeled,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, 0, [1.0, 0.0]),
+            (2, 0, [0.0, 0.0]),
+            (3, 0, [0.6, 0.8]),
+            (4, 0, [0.0, 1.0]),
+        ],
+        "vec_id long, label int, embedding array<double>",
+    )
+    for out in (
+        brute_force_topk(df, df, k=3),
+        partitioned_topk(df, df, k=3),
+        mmr_rerank(df, df, k_candidates=3, k_select=2),
+    ):
+        rows = out.collect()
+        # queries 1, 3, 4 each keep both non-self, non-zero neighbors
+        assert len(rows) == 6, rows
+        assert all(2 not in (r["query_id"], r["neighbor_id"]) for r in rows)
+    verdict = {
+        r["vec_id"]: r["is_duplicate"]
+        for r in semantic_dedup_labeled(df, "label").collect()
+    }
+    assert sorted(verdict) == [1, 2, 3, 4]
+    assert verdict[2] is False

@@ -24,6 +24,9 @@ Rationale per setting:
   broadcasting them removes the shuffle entirely.
 - Arrow enabled: every Pandas-UDF hot path (report parsing, embedding
   kernels) moves data in Arrow batches, not pickled rows.
+- Local masters only: Python workers fork from ``sparkgraft.pydaemon`` (no
+  per-task ``pyspark.zip`` re-read), found via ``PYTHONPATH`` from any working
+  directory.  On a cluster ``--py-files`` reach workers after the daemon starts.
 """
 
 from __future__ import annotations
@@ -80,6 +83,9 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(24 * 1024, ram_mb // 3)}m"),
         )
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = builder.config("spark.python.daemon.module", "sparkgraft.pydaemon")
+        builder = builder.config("spark.executorEnv.PYTHONPATH", root)
     conf = dict(DEFAULT_CONF)
     if extra_conf:
         conf.update(extra_conf)

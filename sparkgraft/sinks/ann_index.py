@@ -96,8 +96,8 @@ def append_ann_index(
 
     Because assignment/encode are pure functions of (vector, frozen
     metadata), the appended index EXACTLY equals a full rebuild over
-    old ∪ new with the same centroids/codebooks — asserted in
-    tests/test_ann_index_append.py by comparing serving results."""
+    old ∪ new with the same centroids/codebooks; serving results are compared
+    in tests/test_round4_ops.py::test_ann_index_append_equals_full_rebuild."""
     centroids, codebooks, _ = read_ann_index(
         vectors.sparkSession, index_dir
     )

@@ -330,8 +330,6 @@ def bloom_keep(
     path."""
     import hashlib
 
-    from pyspark.sql import Column as _Col
-
     from sparkgraft.operators.scale import _bloom_pos, _shiftright_var
 
     if hashes < 1:

@@ -948,27 +948,23 @@ def q_crack_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # similarity search, text analysis over documents/embeddings.
 # --------------------------------------------------------------------------
 
-def _corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ planted near-duplicates (every 10th doc with its
-    first two words dropped, id offset +1000000) — a deterministic
-    corpus where near-dup detection provably has work to do."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = (
-        docs.filter(F.col("doc_id") % 10 == 0)
-        .select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.array_join(
-                F.slice(F.split(F.col("text"), r"\s+"), 3, 100000), " "
-            ).alias("text"),
-        )
+def _planted_neardups(docs: DataFrame) -> DataFrame:
+    """Planted near-duplicates of ``documents``: every 10th doc with
+    its first two words dropped, id offset +1000000 — deterministic
+    work for the near-dup and leakage queries."""
+    return docs.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.array_join(
+            F.slice(F.split(F.col("text"), r"\s+"), 3, 100000), " "
+        ).alias("text"),
     )
-    return docs.unionByName(dups)
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (shingle→sign→band→bucket-join→verify)."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return T.minhash_dedup_pairs(
-        _corpus_with_near_dups(spark, sf_dir),
+        docs.unionByName(_planted_neardups(docs)),
         shingle_k=3,
         num_hashes=12,
         bands=2,
@@ -1574,17 +1570,12 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 10th doc + genuinely-new reversed docs) deduped against the
     documents corpus as history — cross-side MinHash buckets only."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    w = F.split(F.col("text"), r"\s+")
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.array_join(F.slice(w, 3, 100000), " ").alias("text"),
-    )
     fresh = docs.filter(F.col("doc_id") % 10 == 5).select(
         (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.array_join(F.reverse(w), " ").alias("text"),
+        F.array_join(F.reverse(F.split(F.col("text"), r"\s+")), " ").alias("text"),
     )
     return T.incremental_dedup(
-        dups.unionByName(fresh),
+        _planted_neardups(docs).unionByName(fresh),
         docs,
         shingle_k=3,
         num_hashes=12,
@@ -1598,78 +1589,25 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs before training: hash-split the corpus (plus planted
     near-dups of every 10th doc, so leakage provably exists), then
     flag each HOLDOUT document that near-duplicates a TRAIN document.
-    Composition of hash_split + incremental_dedup: cross-side MinHash
-    buckets only (never train×train), so cost scales with the bucket
-    collisions, not |train|×|holdout|."""
+    Composition of hash_split + incremental_dedup (holdout as the new
+    side, train as history): cross-side MinHash buckets only (never
+    train×train), so cost scales with the bucket collisions, not
+    |train|×|holdout|."""
     from sparkgraft.operators.scale import hash_split
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    w = F.split(F.col("text"), r"\s+")
-    planted = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.array_join(F.slice(w, 3, 100000), " ").alias("text"),
-    )
     tagged = hash_split(
-        docs.unionByName(planted), ["doc_id"], train_frac=0.5
+        docs.unionByName(_planted_neardups(docs)), ["doc_id"], train_frac=0.5
     )
-    # Both sides prepped in ONE shingle+signature pass over the tagged
-    # union (r14, guide §2.4): incremental_dedup would minhash_prep
-    # each side separately — two scans of the union, two persisted
-    # shingle tables, the hash_split evaluated twice.  Filtering the
-    # side tag after shingling commutes with shingling (per-row), so
-    # the banded keys and verify verdicts are bit-identical.
-    from sparkgraft.operators.scale import widen_narrow_scan
-    from sparkgraft.operators.textops import (
-        crossside_verdicts,
-        lsh_bands,
-        minhash_signature,
-        tokenize,
-        word_shingles,
-    )
-
-    num_hashes, bands = 12, 2
-    base_all = (
-        widen_narrow_scan(tagged)
-        .select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(
-                word_shingles(tokenize(F.col("text")), 3)
-            ).alias("sh"),
-            (F.col("split") == "train").alias("__train"),
-        )
-        .persist()
-    )
-    sig = base_all.select(
-        "id", "__train", *minhash_signature("sh", num_hashes)
-    )
-    # banded_all feeds BOTH candidate sides — persist it (the
-    # signature table discipline), or the md5 signature pass re-runs
-    # once per side (measured: +0.6 s at sf0.1 unpersisted).
-    banded_all = sig.select(
-        "id",
-        "__train",
-        F.explode(
-            lsh_bands(
-                [f"mh_{j}" for j in range(num_hashes)],
-                bands,
-                num_hashes // bands,
-            )
-        ).alias("bb"),
-    ).select(
-        "id",
-        "__train",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    ).persist()
-    is_train = F.col("__train")
-    out = crossside_verdicts(
-        base_all.filter(~is_train).select("id", "sh"),
-        banded_all.filter(~is_train).select("id", "band", "bucket"),
-        base_all.filter(is_train).select("id", "sh"),
-        banded_all.filter(is_train).select("id", "band", "bucket"),
-        base_all.filter(~is_train).select(F.col("id").alias("new_id")),
+    split = F.col("split")
+    out = T.incremental_dedup(
+        tagged.filter(split == "holdout"),
+        tagged.filter(split == "train"),
+        shingle_k=3,
+        num_hashes=12,
+        bands=2,
         min_jaccard=0.5,
-    ).withColumnRenamed("new_id", "doc_id")
+    )
     return out.select(
         "doc_id",
         F.col("is_duplicate").alias("leaked"),

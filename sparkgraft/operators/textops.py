@@ -24,6 +24,7 @@ from sparkgraft.functions.expr import sql_ident
 from sparkgraft.operators.stats import exact_ratio
 
 HEX_HIGH = list("89abcdef")  # md5 nibble with top bit set
+_SIDE = "_sg_side"  # private side tag that minhash_prep carries
 
 
 def tokenize(text: Column) -> Column:
@@ -32,13 +33,24 @@ def tokenize(text: Column) -> Column:
     return F.split(text, r"\s+")
 
 
+def _bind(arr: Column, body) -> Column:
+    """``body(arr)`` with ``arr`` evaluated once per row.  A ``transform``
+    lambda that names an outer array expression re-evaluates it at every
+    position (O(n²) per row); as the lambda variable of a one-element
+    ``transform`` it is evaluated once."""
+    return F.transform(F.array(arr), body)[0]
+
+
 def word_shingles(words: Column, k: int) -> Column:
     """k-word shingles as strings; empty array when the doc is shorter
     than k words."""
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), n - F.lit(k - 1))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), " "))
-    return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
+    def _shingles(w: Column) -> Column:
+        n = F.size(w)
+        idx = F.sequence(F.lit(1), n - F.lit(k - 1))
+        sh = F.transform(idx, lambda i: F.array_join(F.slice(w, i, k), " "))
+        return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
+
+    return _bind(words, _shingles)
 
 
 def char_shingles(text: Column, k: int) -> Column:
@@ -134,32 +146,9 @@ def minhash_dedup_pairs(
     32-hex bucket keys + ids); the verify join re-reads shingle sets for
     the *candidate pairs only*, which LSH keeps near-linear.
     """
-    from sparkgraft.operators.scale import widen_narrow_scan
-
-    rows = num_hashes // bands
-    # CPU-heavy per-row work (k x hashes md5 per doc) must not inherit
-    # a NARROW scan partitioning: a single-file scan is one task, which
-    # serializes the whole signature computation.
-    docs = widen_narrow_scan(docs)
-    # The shingle+signature pipeline feeds four plan branches (two sides
-    # of the candidate self-join, two verify lookups) — persist it so the
-    # md5-heavy work runs once.  The cached form is compact: id + shingle
-    # array / id + band buckets.
-    base = docs.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(tokenize(F.col(text_col)), shingle_k)).alias(
-            "sh"
-        ),
-    ).persist()
-    sig = base.select("id", "sh", *minhash_signature("sh", num_hashes))
-    banded = sig.select(
-        "id",
-        F.explode(
-            lsh_bands([f"mh_{j}" for j in range(num_hashes)], bands, rows)
-        ).alias("bb"),
-    ).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    ).persist()
+    base, banded = minhash_prep(
+        docs, id_col, text_col, shingle_k, num_hashes, bands
+    )
     # Candidate generation shuffles ONLY (band, bucket, id) — the heavy
     # shingle arrays stay out of the self-join; pairs are deduped before
     # any verification work.
@@ -392,15 +381,14 @@ def winnow_fingerprints(
     (id, fingerprint) table ready for an equi-join dedup.
     """
     sh = char_shingles(F.col(text_col), k)
-    hashes = F.transform(sh, lambda s: F.md5(s))
-    n = F.size(hashes)
-    idx = F.sequence(F.lit(1), n - F.lit(window - 1))
-    mins = F.when(
-        n >= window,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.array_min(F.slice(hashes, i, window)))
-        ),
-    ).otherwise(F.array_distinct(hashes))
+
+    def _mins(h: Column) -> Column:
+        n = F.size(h)
+        idx = F.sequence(F.lit(1), n - F.lit(window - 1))
+        per_window = F.transform(idx, lambda i: F.array_min(F.slice(h, i, window)))
+        return F.array_distinct(F.when(n >= window, per_window).otherwise(h))
+
+    mins = _bind(F.transform(sh, lambda s: F.md5(s)), _mins)
     return docs.select(
         F.col(id_col), F.explode(mins).alias("fingerprint")
     )
@@ -719,13 +707,14 @@ def duplicate_spans(
     from sparkgraft.operators.scale import widen_narrow_scan
 
     k = window_tokens
-    toks = tokenize(F.col(text_col))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), n - F.lit(k - 1))
-    wins = F.when(
-        n >= k,
-        F.transform(idx, lambda i: F.md5(F.array_join(F.slice(toks, i, k), " "))),
-    ).otherwise(F.array().cast("array<string>"))
+
+    def _wins(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.sequence(F.lit(1), n - F.lit(k - 1))
+        w = F.transform(idx, lambda i: F.md5(F.array_join(F.slice(toks, i, k), " ")))
+        return F.when(n >= k, w).otherwise(F.array().cast("array<string>"))
+
+    wins = _bind(tokenize(F.col(text_col)), _wins)
     exploded = widen_narrow_scan(docs).select(
         F.col(id_col).alias("id"), F.posexplode(wins).alias("start", "win_hash")
     )
@@ -875,20 +864,22 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap
-    toks = tokenize(F.col(text_col))
-    n = F.size(toks)
-    extra = F.greatest(F.lit(0), n - F.lit(chunk_tokens))
-    n_chunks = (
-        F.lit(1)
-        + F.floor((extra + F.lit(step - 1)).cast("double") / F.lit(float(step)))
-    ).cast("int")
-    idx = F.sequence(F.lit(0), n_chunks - F.lit(1))
-    chunks = F.transform(
-        idx,
-        lambda i: F.array_join(
-            F.slice(toks, i * F.lit(step) + F.lit(1), chunk_tokens), " "
-        ),
-    )
+
+    def _chunks(toks: Column) -> Column:
+        n = F.size(toks)
+        extra = F.greatest(F.lit(0), n - F.lit(chunk_tokens))
+        n_chunks = F.lit(1) + F.floor(
+            (extra + F.lit(step - 1)).cast("double") / F.lit(float(step))
+        ).cast("int")
+        idx = F.sequence(F.lit(0), n_chunks - F.lit(1))
+        return F.transform(
+            idx,
+            lambda i: F.array_join(
+                F.slice(toks, i * F.lit(step) + F.lit(1), chunk_tokens), " "
+            ),
+        )
+
+    chunks = _bind(tokenize(F.col(text_col)), _chunks)
     return docs.select(
         F.col(id_col),
         F.posexplode(chunks).alias("chunk_id", "chunk_text"),
@@ -1047,10 +1038,16 @@ def minhash_prep(
     bucket) LSH keys.  This pair IS the persistable near-dup index: a
     production ingest pipeline writes it once per batch and appends,
     instead of re-shingling history every day (see
-    ``streaming.pipeline.dedup_admission`` for the streaming form)."""
+    ``streaming.pipeline.dedup_admission`` for the streaming form).
+
+    Persist rule: both tables come back persisted, because every caller
+    reads ``banded`` at least twice; whoever owns the action unpersists
+    them (``dedup_admission`` does at batch end).  A repeat of the same
+    plan reuses the cached entry rather than adding one."""
     from sparkgraft.operators.scale import widen_narrow_scan
 
-    rows = num_hashes // bands
+    # incremental_dedup's side tag rides along both tables.
+    tag = [_SIDE] if _SIDE in df.columns else []
     # Shingling + the md5 minhashes per doc are CPU-dense and run at
     # the scan's parallelism — widen a narrow scan first (no-op on a
     # production-wide one).
@@ -1059,16 +1056,13 @@ def minhash_prep(
         F.array_distinct(
             word_shingles(tokenize(F.col(text_col)), shingle_k)
         ).alias("sh"),
+        *tag,
     ).persist()
-    sig = base.select("id", "sh", *minhash_signature("sh", num_hashes))
-    banded = sig.select(
-        "id",
-        F.explode(
-            lsh_bands([f"mh_{j}" for j in range(num_hashes)], bands, rows)
-        ).alias("bb"),
-    ).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+    sig = base.select("id", *tag, *minhash_signature("sh", num_hashes))
+    bb = lsh_bands([f"mh_{j}" for j in range(num_hashes)], bands, num_hashes // bands)
+    banded = sig.select("id", *tag, F.explode(bb).alias("bb")).select(
+        "id", *tag, "bb.band", "bb.bucket"
+    ).persist()
     return base, banded
 
 
@@ -1155,19 +1149,24 @@ def incremental_dedup(
     with ``dup_of`` = the smallest matching history id (NULL when
     admitted).
     """
+    # One prep over the tagged union (one scan, one persisted shingle
+    # table): filtering on the tag commutes with per-row shingling, so
+    # the per-side views give the verdicts of two separate preps.
+    def side(df: DataFrame, new: bool) -> DataFrame:
+        return df.select(id_col, text_col, F.lit(new).alias(_SIDE))
 
-    new_base, new_banded = minhash_prep(
-        new_docs, id_col, text_col, shingle_k, num_hashes, bands
+    base, banded = minhash_prep(
+        side(new_docs, True).unionByName(side(history, False)),
+        id_col, text_col, shingle_k, num_hashes, bands,
     )
-    hist_base, hist_banded = minhash_prep(
-        history, id_col, text_col, shingle_k, num_hashes, bands
-    )
+    is_new = F.col(_SIDE)
+    new_base = base.filter(is_new).drop(_SIDE)
     out = crossside_verdicts(
         new_base,
-        new_banded,
-        hist_base,
-        hist_banded,
-        new_docs.select(F.col(id_col).alias("new_id")),
+        banded.filter(is_new).drop(_SIDE),
+        base.filter(~is_new).drop(_SIDE),
+        banded.filter(~is_new).drop(_SIDE),
+        new_base.select(F.col("id").alias("new_id")),
         min_jaccard,
     )
     return out.withColumnRenamed("new_id", id_col)

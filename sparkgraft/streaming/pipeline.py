@@ -501,7 +501,6 @@ def dedup_admission(
         new_base, new_banded = minhash_prep(
             batch, id_col, text_col, shingle_k, num_hashes, bands
         )
-        new_base = new_base.persist()
         base_schema = new_base.schema.add("_batch_id", "long")
         banded_schema = new_banded.schema.add("_batch_id", "long")
         hist_base_all = _read_or_empty(spark, base_dir, base_schema)
@@ -572,8 +571,8 @@ def dedup_admission(
                     .partitionBy("_batch_id")
                     .parquet(banded_dir)
                 )
-        verdicts.unpersist()
-        new_base.unpersist()
+        for df in (verdicts, new_base, new_banded):
+            df.unpersist()
 
     return _drain(stream, on_batch, checkpoint_dir)
 

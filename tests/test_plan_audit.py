@@ -212,14 +212,52 @@ def test_minhash_verify_joins_never_broadcast_corpus(spark):
     """The 32x-soak OOM fix is pinned: the exact-Jaccard verify joins
     must be shuffled sort-merge (spillable), never a broadcast of the
     corpus-side shingle table — whatever the size estimates say."""
-    df = entrymod.q_minhash_dedup(spark, SF_DIR)
-    plan = audit.explain_str(df)
     import re
 
-    # Every join whose key list carries id_a/id_b (the verify joins)
-    # must be a SortMergeJoin.
-    for m in re.finditer(r"(\w+Join)\w* \[(id_[ab])[#\d]*\]", plan):
-        assert m.group(1) == "SortMergeJoin", plan
+    for q in (
+        entrymod.q_minhash_dedup,
+        entrymod.q_incremental_dedup,
+        entrymod.q_split_leakage,
+    ):
+        plan = audit.explain_str(q(spark, SF_DIR))
+        # Every join whose key list carries id_a/id_b or new_id/hist_id
+        # (the verify joins) must be a SortMergeJoin.
+        keys = re.findall(
+            r"(\w+Join)\w* \[(id_[ab]|new_id|hist_id)#\d+L?\]", plan
+        )
+        assert keys and all(j == "SortMergeJoin" for j, _ in keys), plan
+
+
+def test_incremental_dedup_preps_once(spark):
+    """Both sides of incremental_dedup come from ONE minhash_prep over
+    the tagged union: the plan reads one cached shingle table."""
+    jvm = spark.sparkContext._jvm
+    plan = entrymod.q_incremental_dedup(spark, SF_DIR)._jdf.queryExecution()
+    leaves = plan.optimizedPlan().collectLeaves()
+    builders = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() != "InMemoryRelation":
+            continue
+        names = [leaf.output().apply(j).name() for j in range(leaf.output().size())]
+        if "sh" in names:
+            builders.add(jvm.System.identityHashCode(leaf.cacheBuilder()))
+    assert len(builders) == 1, plan.optimizedPlan().toString()
+
+
+def test_neardup_queries_repeat_without_new_storage(spark):
+    """A repeated near-dup query reuses its cached prep: the second
+    call adds no persistent RDD to the session."""
+    jsc = spark.sparkContext._jsc
+    for q in (
+        entrymod.q_minhash_dedup,
+        entrymod.q_incremental_dedup,
+        entrymod.q_split_leakage,
+    ):
+        q(spark, SF_DIR).collect()
+        before = jsc.getPersistentRDDs().size()
+        q(spark, SF_DIR).collect()
+        assert jsc.getPersistentRDDs().size() == before, q.__name__
 
 
 def test_maxsim_query_side_broadcasts(spark):

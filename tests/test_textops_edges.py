@@ -20,6 +20,24 @@ def test_short_docs_produce_empty_shingles(spark):
     assert got == {1: 0, 2: 0, 3: 2}
 
 
+def test_builders_evaluate_their_input_array_once(spark):
+    """A ``transform`` lambda that names an outer array expression
+    re-evaluates it at every position, O(n²) per document.  Each
+    builder names its tokenized (``split``) or hashed (``md5``) array
+    once; before the fix the counts were 3 (shingles, spans), 2
+    (chunks) and 4 (winnow md5).  Plans only: no Spark job runs."""
+    assert str(T.word_shingles(T.tokenize(F.col("text")), 3)).count("split(") == 1
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+
+    def plan(out):
+        return out._jdf.queryExecution().analyzed().toString()
+
+    assert plan(T.winnow_fingerprints(df)).count("md5(") == 1
+    for out in (T.duplicate_spans(df), T.chunk_documents(df)):
+        gen = [ln for ln in plan(out).splitlines() if "posexplode(" in ln]
+        assert gen and all(ln.count("split(") == 1 for ln in gen), plan(out)
+
+
 def test_minhash_ignores_sub_threshold_pairs(spark):
     # Disjoint vocab docs: no pair may survive the jaccard verify.
     df = spark.createDataFrame(

@@ -2674,20 +2674,23 @@ def _multi_version_summary(spark: SparkSession, t: str, n_versions: int) -> Data
     every version whose manifest lists it (append/merge versions carry
     parent files forward, so file sets overlap), and one grouped
     aggregate replaces ``n_versions`` global ones — N scans + N
-    exchanges + union -> 1 scan + 1 exchange.  Precondition: every
-    version holds at least one row — the grouped aggregate emits no
-    row for an empty version.  Both callers stage fixed commits that
+    exchanges + union -> 1 scan + 1 exchange.  Preconditions: the
+    table has at least ``n_versions`` versions, and every version
+    holds at least one row — the grouped aggregate emits no row for an
+    empty version.  Both callers stage fixed commits that
     all have rows; under that precondition the counts and exact
     decimal spend sums equal the read-each-snapshot form (same
     multiset of rows per version, order-free decimal sum)."""
-    from sparkgraft.sinks.versioned import _read_manifest
+    from itertools import islice
+
+    from sparkgraft.sinks.versioned import committed_manifests
 
     import os as _os
 
     file_versions: dict[str, list[int]] = {}
-    for v in range(n_versions):
-        for f in _read_manifest(t, v)["files"]:
-            file_versions.setdefault(f, []).append(v)
+    for m in islice(committed_manifests(t), n_versions):
+        for f in m["files"]:
+            file_versions.setdefault(f, []).append(m["version"])
     paths = [f"{t}/{f}" for f in sorted(file_versions)]
     # Keyed on the BASENAME (token-unique by the commit protocol), so
     # the lookup is robust to the URI scheme input_file_name() emits.

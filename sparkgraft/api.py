@@ -158,7 +158,6 @@ from sparkgraft.operators.stats import (
     ks_test_binned,
     latest_row_fallback,
     latest_rows,
-    max_by_key,
     drift_report,
     profile_columns,
     robust_outlier_stats,

@@ -1345,6 +1345,16 @@ def pq_codebooks_from_labels(
     ]
 
 
+def _bind_doubles(v: str, body: str) -> str:
+    """SQL text of ``body`` with lambda variable ``vd`` bound to column
+    ``v`` cast to ``array<double>`` once per row (textops' ``_bind``
+    idiom), not once per centroid lambda that names the cast."""
+    return (
+        f"transform(array(transform({v}, x -> cast(x as double))), "
+        f"vd -> {body})[0]"
+    )
+
+
 def pq_encode(
     vec: str,
     codebooks: list[list[tuple[int, list[float]]]],
@@ -1358,15 +1368,14 @@ def pq_encode(
     sub = len(codebooks[0][0][1])
     dim = sub * len(codebooks)
     v = _sql_ident(vec)
-    vd = f"transform({v}, x -> cast(x as double))"
     codes = ", ".join(
         "array_min({d}).cluster".format(
-            d=_centroid_dists_sql(f"slice({vd}, {s * sub + 1}, {sub})", cb, digits)
+            d=_centroid_dists_sql(f"slice(vd, {s * sub + 1}, {sub})", cb, digits)
         )
         for s, cb in enumerate(codebooks)
     )
     return F.expr(
-        f"CASE WHEN size({v}) = {dim} THEN array({codes}) "
+        f"CASE WHEN size({v}) = {dim} THEN {_bind_doubles(v, f'array({codes})')} "
         f"ELSE raise_error(format_string("
         f"'pq_encode: embedding length %s != codebook dim {dim}', "
         f"size({v}))) END"
@@ -1413,7 +1422,6 @@ def _adc_tables(
     BIT-IDENTICAL to scoring against decoded sub-centroids — the
     shortlist, the oracle SQL, and every tie-break are unchanged."""
     sub = len(codebooks[0][0][1])
-    vd = f"transform({_sql_ident(qv)}, x -> cast(x as double))"
     tabs = []
     for s, cb in enumerate(codebooks):
         ctab = _literal_vec_table_sql(cb, "code")
@@ -1421,12 +1429,12 @@ def _adc_tables(
             f"transform({ctab}, c -> named_struct("
             f"'key', c.code, "
             f"'value', round(aggregate(zip_with("
-            f"slice({vd}, {s * sub + 1}, {sub}), c.vec, "
+            f"slice(vd, {s * sub + 1}, {sub}), c.vec, "
             f"(a, b) -> (a - b) * (a - b)), "
             f"0.0D, (acc, x) -> acc + x), {int(digits)})))"
         )
         tabs.append(f"map_from_entries({entries})")
-    return F.expr("array({})".format(", ".join(tabs)))
+    return F.expr(_bind_doubles(_sql_ident(qv), f"array({', '.join(tabs)})"))
 
 
 def _adc_lookup(tabs: Column, codes: Column, m: int) -> Column:

@@ -244,26 +244,6 @@ def latest_row_fallback(
     )
 
 
-def max_by_key(
-    df: DataFrame,
-    keys: Sequence[str],
-    payload: str | Column,
-    order: str | Column,
-) -> DataFrame:
-    """A5 — ``max_by``/``min_by`` projection (newest payload per key).
-
-    Reference: Pipeline.py:145-160 (min over (ts, path) tuples),
-    uploader/main.py:35-42 (newest file by mtime), restapi/app_fs.py:137.
-    Single partial+final aggregate — cheaper than the window variant when
-    only one payload column is needed.
-    """
-    p = F.col(payload) if isinstance(payload, str) else payload
-    o = F.col(order) if isinstance(order, str) else order
-    return df.groupBy(*keys).agg(
-        F.max_by(p, o).alias("latest"), F.max(o).alias("latest_order")
-    )
-
-
 def windowed_channel_stats(
     df: DataFrame,
     ts: str = "ts",

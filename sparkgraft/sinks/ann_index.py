@@ -41,6 +41,12 @@ from sparkgraft.operators.similarity import (
     assign_nearest_multi,
     pq_encode,
 )
+from sparkgraft.sinks.tombstones import (
+    append_tombstones,
+    compact,
+    read_tombstones,
+    tombstone_dir,
+)
 
 
 def write_ann_index(
@@ -235,7 +241,9 @@ def ivfpq_topk_indexed(
     centroids, codebooks, codes = read_ann_index(
         queries.sparkSession, index_dir
     )
-    tomb = _tombstones(queries.sparkSession, index_dir)
+    tomb = read_tombstones(
+        queries.sparkSession, [tombstone_dir(index_dir)], "neighbor_id"
+    )
     if tomb is not None:
         # Logical deletes exclude BEFORE the ADC shortlist, so served
         # results exactly equal an index that never held those vectors.
@@ -254,19 +262,6 @@ def ivfpq_topk_indexed(
     return _adc_rerank(pairs, len(codebooks), shortlist, k, digits)
 
 
-def _tombstones(spark: SparkSession, index_dir: str) -> "DataFrame | None":
-    """The index's logical-delete set (one ``neighbor_id`` per row), or
-    None when nothing was ever deleted."""
-    import os
-
-    p = f"{index_dir}/tombstones"
-    if not os.path.isdir(p) or not any(
-        n.endswith(".parquet") for n in os.listdir(p)
-    ):
-        return None
-    return spark.read.parquet(p).select("neighbor_id").distinct()
-
-
 def delete_ann_index(spark: SparkSession, index_dir: str, ids) -> None:
     """Right-to-be-forgotten for the vector index (the GDPR leg a
     training-data lakehouse needs BEYOND the fact tables — a deleted
@@ -280,72 +275,21 @@ def delete_ann_index(spark: SparkSession, index_dir: str, ids) -> None:
     :func:`compact_ann_index` — the delete/vacuum split mirrors
     sinks/versioned.py's delete_versioned + vacuum.
 
-    ``ids`` may be an iterable of ints or a one-column DataFrame
-    (any column name — it is renamed, matching delete_dedup_index)."""
-    df = (
-        ids
-        if isinstance(ids, DataFrame)
-        else spark.createDataFrame(
-            [(int(i),) for i in ids], "neighbor_id long"
-        )
-    )
-    df.toDF("neighbor_id").write.mode("append").parquet(
-        f"{index_dir}/tombstones"
-    )
+    ``ids`` may be an iterable of ints (empty: a no-op) or a
+    one-column DataFrame (any column name — it is renamed, matching
+    delete_dedup_index)."""
+    append_tombstones(spark, index_dir, ids, "neighbor_id", long_ids=True)
 
 
 def compact_ann_index(spark: SparkSession, index_dir: str) -> int:
     """PHYSICAL forgetting for the vector index: rewrite ONLY the
-    cluster partitions that hold tombstoned vectors (bounded by the
-    tombstone set's cluster spread — the IVF partitioning localizes
-    the rewrite exactly as commit-log stats localize
+    cluster partitions that hold tombstoned vectors (the IVF
+    partitioning bounds the rewrite as commit-log stats bound
     delete_versioned's), drop partitions emptied entirely, then clear
-    the tombstone set.  Serving results are unchanged (the logical
-    delete already excluded the rows); after this the bytes are gone.
-    Returns the number of cluster partitions rewritten."""
-    import os
-    import shutil
-
-    tomb = _tombstones(spark, index_dir)
-    if tomb is None:
-        return 0
-    codes_dir = f"{index_dir}/codes"
-    codes = spark.read.parquet(codes_dir)
-    # bounded collect: affected clusters <= n_clusters
-    affected = sorted(
-        r["part"]
-        for r in codes.join(F.broadcast(tomb), "neighbor_id")
-        .select("part")
-        .distinct()
-        .collect()
+    the tombstone set — the crash-safe swap of ``sinks/tombstones.py``.
+    Serving results are unchanged; after this the bytes are gone.
+    Deleting EVERY vector leaves one zero-row partition, so reads keep
+    working.  Returns the number of cluster partitions rewritten."""
+    return compact(
+        spark, index_dir, ["codes"], "part", "neighbor_id", keep_schema=True
     )
-    if affected:
-        remain = (
-            spark.read.parquet(codes_dir)
-            .filter(F.col("part").isin(affected))
-            .join(F.broadcast(tomb), "neighbor_id", "left_anti")
-        )
-        # parquet can't lazily overwrite its own input: stage the
-        # surviving rows, then swap the affected partition dirs
-        staging = f"{index_dir}/codes_staging"
-        remain.write.partitionBy("part").mode("overwrite").parquet(staging)
-        for p in affected:
-            dst = os.path.join(codes_dir, f"part={p}")
-            src = os.path.join(staging, f"part={p}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                os.replace(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        # Deleting EVERY vector may empty every partition — leave a
-        # zero-row schema-carrying file so reads keep working (the
-        # GDPR delete-all end state; see bm25's _ensure_nonempty_dir).
-        if not any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(codes_dir)
-            for f in fs
-        ):
-            spark.createDataFrame([], codes.schema).write.mode(
-                "overwrite"
-            ).parquet(codes_dir)
-    shutil.rmtree(f"{index_dir}/tombstones", ignore_errors=True)
-    return len(affected)

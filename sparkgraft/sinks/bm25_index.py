@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkgraft.operators.textops import tokenize
+from sparkgraft.sinks.tombstones import id_frame, read_tombstones
 
 
 def _term_bucket(term: Column, n_buckets: int) -> Column:
@@ -496,7 +497,7 @@ def bm25_topk_indexed(
         .filter(F.col("bucket").isin(buckets) & F.col("term").isin(qset))
         .select("term", "id", "dl", "tf")
     )
-    tomb = _bm25_tombstones(spark, index_dir)
+    tomb = read_tombstones(spark, _live_paths(index_dir, "tombstones"), "id")
     if tomb is not None:
         # logically-deleted docs drop before scoring; df/stats were
         # adjusted at delete time, so scores equal a rebuilt index
@@ -546,26 +547,6 @@ def bm25_topk_indexed(
     )
 
 
-def _bm25_tombstones(spark: SparkSession, index_dir: str) -> "DataFrame | None":
-    """The index's logical-delete set (one ``id`` per row), or None —
-    resolved through any committed journal (a compact's pending
-    ``clear`` means the tombstones are already folded into the staged
-    postings, so the set is empty)."""
-    import os
-
-    paths = [
-        p
-        for p in _live_paths(index_dir, "tombstones")
-        if any(n.endswith(".parquet") for n in os.listdir(p))
-    ]
-    if not paths:
-        return None
-    out = spark.read.parquet(paths[0])
-    for p in paths[1:]:
-        out = out.unionByName(spark.read.parquet(p))
-    return out.select("id").distinct()
-
-
 def delete_bm25_index(
     spark: SparkSession,
     index_dir: str,
@@ -601,15 +582,14 @@ def delete_bm25_index(
 
     _repair_bm25_index(index_dir)
     n_buckets = _index_buckets(spark, index_dir, n_buckets)
-    ids_df = (
-        ids
-        if isinstance(ids, DataFrame)
-        else spark.createDataFrame([(int(i),) for i in ids], "id long")
-    ).toDF("id").distinct()
+    ids_df = id_frame(spark, ids, "id", long_ids=True)
+    if ids_df is None:
+        return
+    ids_df = ids_df.distinct()
     # Idempotence: a retried/overlapping GDPR batch must not decrement
     # df/stats twice for an already-tombstoned (not yet compacted) id —
     # only ids NEW to the tombstone set participate in the subtraction.
-    prior = _bm25_tombstones(spark, index_dir)
+    prior = read_tombstones(spark, _live_paths(index_dir, "tombstones"), "id")
     if prior is not None:
         ids_df = ids_df.join(F.broadcast(prior), "id", "left_anti")
     ids_df = ids_df.localCheckpoint()  # id-list-sized; referenced 4x
@@ -675,7 +655,7 @@ def compact_bm25_index(spark: SparkSession, index_dir: str) -> int:
     anti-join is harmless) or vice versa.  Returns the number of
     postings rows removed."""
     _repair_bm25_index(index_dir)
-    tomb = _bm25_tombstones(spark, index_dir)
+    tomb = read_tombstones(spark, _live_paths(index_dir, "tombstones"), "id")
     if tomb is None:
         return 0
     postings = spark.read.parquet(f"{index_dir}/postings")

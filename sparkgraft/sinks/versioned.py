@@ -47,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -95,6 +96,28 @@ def latest_version(table_dir: str) -> int | None:
 def _read_manifest(table_dir: str, version: int) -> dict:
     with open(_manifest_path(table_dir, version)) as fh:
         return json.load(fh)
+
+
+def committed_manifests(
+    table_dir: str, newest_first: bool = False
+) -> Iterator[dict]:
+    """Every committed manifest up to the :func:`latest_version` seen
+    when the walk starts, oldest first unless ``newest_first``."""
+    v = latest_version(table_dir)
+    if v is None:
+        return
+    for i in range(v, -1, -1) if newest_first else range(v + 1):
+        yield _read_manifest(table_dir, i)
+
+
+def committed_batches(table_dir: str) -> set:
+    """Batch ids in the committed manifests: the streaming sinks' replay
+    ledger."""
+    return {
+        m["batch_id"]
+        for m in committed_manifests(table_dir)
+        if m.get("batch_id") is not None
+    }
 
 
 def _stats_path(table_dir: str, version: int) -> str:
@@ -913,21 +936,15 @@ def upsert_versioned(
 def table_history(table_dir: str) -> list[dict]:
     """All committed versions, oldest first: (version, parent,
     operation, n_files) — the audit trail."""
-    out = []
-    v = latest_version(table_dir)
-    if v is None:
-        return out
-    for i in range(v + 1):
-        m = _read_manifest(table_dir, i)
-        out.append(
-            {
-                "version": m["version"],
-                "parent": m["parent"],
-                "operation": m["operation"],
-                "n_files": len(m["files"]),
-            }
-        )
-    return out
+    return [
+        {
+            "version": m["version"],
+            "parent": m["parent"],
+            "operation": m["operation"],
+            "n_files": len(m["files"]),
+        }
+        for m in committed_manifests(table_dir)
+    ]
 
 
 def compact_table(
@@ -997,16 +1014,15 @@ def vacuum(
     of age.  Pass 0 only when no writer can be live."""
     import time
 
-    newest = latest_version(table_dir)
-    if newest is None:
+    manifests = list(committed_manifests(table_dir))
+    if not manifests:
         return []
     keep = set()
     referenced = set()
-    for v in range(0, newest + 1):
-        files = _read_manifest(table_dir, v)["files"]
-        referenced.update(files)
-        if v >= newest - keep_versions + 1:
-            keep.update(files)
+    for m in manifests:
+        referenced.update(m["files"])
+        if m["version"] > manifests[-1]["version"] - keep_versions:
+            keep.update(m["files"])
     data_dir = os.path.join(table_dir, "data")
     now = time.time()
     deleted = []

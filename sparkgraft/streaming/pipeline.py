@@ -487,6 +487,7 @@ def dedup_admission(
     an existing index, keep the original checkpoint.
     """
     from sparkgraft.operators.textops import crossside_verdicts, minhash_prep
+    from sparkgraft.sinks.tombstones import read_tombstones, tombstone_dir
 
     base_dir = os.path.join(history_dir, "base")
     banded_dir = os.path.join(history_dir, "banded")
@@ -511,7 +512,7 @@ def dedup_admission(
         # Right-to-be-forgotten: tombstoned history docs stop matching
         # immediately (logical delete, O(ids) — see delete_dedup_index;
         # physical shingle removal is compact_dedup_index).
-        tomb = _dedup_tombstones(spark, history_dir)
+        tomb = read_tombstones(spark, [tombstone_dir(history_dir)], "id")
         if tomb is not None:
             hist_base = hist_base.join(F.broadcast(tomb), "id", "left_anti")
             hist_banded = hist_banded.join(
@@ -577,14 +578,6 @@ def dedup_admission(
     return _drain(stream, on_batch, checkpoint_dir)
 
 
-def _dedup_tombstones(spark, history_dir: str):
-    """Distinct tombstoned ids of the dedup-admission index, or None."""
-    p = os.path.join(history_dir, "tombstones")
-    if os.path.isdir(p):
-        return spark.read.parquet(p).select("id").distinct()
-    return None
-
-
 def _compacted_batch_ids(spark, history_dir: str) -> set:
     """Batch ids fully emptied by compact_dedup_index (bounded: one
     entry per forgotten-out batch)."""
@@ -608,74 +601,34 @@ def delete_dedup_index(spark, history_dir: str, ids) -> None:
     ``ids`` may be a non-empty iterable of id values or a one-column
     DataFrame matching the ingest's ``id_col`` type; an empty iterable
     is a no-op (schema inference needs at least one value)."""
-    from pyspark.sql import DataFrame as _DF
+    from sparkgraft.sinks.tombstones import append_tombstones
 
-    if not isinstance(ids, _DF):
-        rows = [(i,) for i in ids]
-        if not rows:
-            return
-        ids = spark.createDataFrame(rows, ["id"])
-    ids.toDF("id").write.mode("append").parquet(
-        f"{history_dir}/tombstones"
-    )
+    append_tombstones(spark, history_dir, ids, "id", long_ids=False)
 
 
 def compact_dedup_index(spark, history_dir: str) -> int:
     """PHYSICAL forgetting for the dedup-admission index: rewrite ONLY
     the ``_batch_id`` partitions holding tombstoned rows (the appends
-    are batch-partitioned, so the rewrite is bounded by the forgotten
-    docs' batch spread — the ann_index cluster-partition discipline),
-    drop partitions emptied entirely, record fully-emptied batches in
-    the ``compacted_batches`` ledger (replay idempotence survives the
-    empty-batch corner), then clear the tombstone set.  Verdicts are
-    unchanged (the logical delete already excluded the rows); after
-    this the forgotten shingle bytes are gone.  Returns the number of
-    partition directories rewritten or dropped."""
-    tomb = _dedup_tombstones(spark, history_dir)
-    if tomb is None:
-        return 0
-    n_touched = 0
-    emptied: set[int] = set()
-    for sub in ("base", "banded"):
-        table_dir = os.path.join(history_dir, sub)
-        if not os.path.isdir(table_dir):
-            continue
-        t = spark.read.parquet(table_dir)
-        # bounded collect: one row per batch containing forgotten docs
-        affected = sorted(
-            r["_batch_id"]
-            for r in t.join(F.broadcast(tomb), "id")
-            .select("_batch_id")
-            .distinct()
-            .collect()
-        )
-        if not affected:
-            continue
-        remain = (
-            spark.read.parquet(table_dir)
-            .filter(F.col("_batch_id").isin(affected))
-            .join(F.broadcast(tomb), "id", "left_anti")
-        )
-        staging = table_dir + "_staging"
-        remain.write.partitionBy("_batch_id").mode("overwrite").parquet(
-            staging
-        )
-        for b in affected:
-            dst = os.path.join(table_dir, f"_batch_id={b}")
-            src = os.path.join(staging, f"_batch_id={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                os.replace(src, dst)
-            else:
-                emptied.add(int(b))
-            n_touched += 1
-        shutil.rmtree(staging, ignore_errors=True)
-    if emptied:
-        spark.createDataFrame(
-            [(b,) for b in sorted(emptied)], "_batch_id long"
-        ).write.mode("append").parquet(f"{history_dir}/compacted_batches")
-    shutil.rmtree(f"{history_dir}/tombstones", ignore_errors=True)
-    return n_touched
+    are batch-partitioned, so the forgotten docs' batch spread bounds
+    the rewrite), drop partitions emptied entirely, record fully-
+    emptied batches in the ``compacted_batches`` ledger (replay
+    idempotence survives the empty-batch corner), then clear the
+    tombstone set — the crash-safe swap of ``sinks/tombstones.py``.
+    Verdicts are unchanged; after this the forgotten shingle bytes are
+    gone.  Returns the number of partition directories rewritten or
+    dropped."""
+    from sparkgraft.sinks.tombstones import compact
+
+    def record(emptied: set) -> None:
+        if emptied:
+            spark.createDataFrame(
+                [(b,) for b in sorted(emptied)], "_batch_id long"
+            ).write.mode("append").parquet(f"{history_dir}/compacted_batches")
+
+    return compact(
+        spark, history_dir, ["base", "banded"], "_batch_id", "id",
+        on_swapped=record,
+    )
 
 
 def _merge_sketch(spark, sk, base_rows, gc, schema_str):
@@ -1422,34 +1375,14 @@ def versioned_sink(
     reclaims.  Returns the started StreamingQuery.
     """
     from sparkgraft.sinks.versioned import (
-        _read_manifest,
+        committed_batches,
+        committed_manifests,
         compact_table,
-        latest_version,
         write_versioned,
     )
 
-    def _ledger(tdir: str) -> set:
-        got: set[int] = set()
-        v0 = latest_version(tdir)
-        if v0 is not None:
-            for v in range(v0 + 1):
-                bid = _read_manifest(tdir, v).get("batch_id")
-                if bid is not None:
-                    got.add(bid)
-        return got
-
-    committed = _ledger(table_dir)
-    committed_q = _ledger(quarantine_dir) if quarantine_dir else set()
-
-    def _n_appends(tdir: str) -> int:
-        v0 = latest_version(tdir)
-        if v0 is None:
-            return 0
-        return sum(
-            1
-            for v in range(v0 + 1)
-            if _read_manifest(tdir, v)["operation"] == "append"
-        )
+    committed = committed_batches(table_dir)
+    committed_q = committed_batches(quarantine_dir) if quarantine_dir else set()
 
     def _appends_at_last_compact(tdir: str) -> int:
         """Append count recorded by the newest compaction commit
@@ -1458,18 +1391,18 @@ def versioned_sink(
         crash between the Nth append and its compaction (or attaching
         to a table already past the threshold) compacts on the NEXT
         append instead of deferring a full extra cycle to 2N."""
-        v0 = latest_version(tdir)
-        if v0 is None:
-            return 0
-        for v in range(v0, -1, -1):
-            at = _read_manifest(tdir, v).get("appends_at_compact")
-            if at is not None:
-                return at
+        for m in committed_manifests(tdir, newest_first=True):
+            if m.get("appends_at_compact") is not None:
+                return m["appends_at_compact"]
         return 0
 
     # Append count rebuilds from the manifests (replay-stable, same
     # discipline as the batch ledger) and advances in memory.
-    appends = [_n_appends(table_dir) if auto_compact_every else 0]
+    appends = [
+        sum(m["operation"] == "append" for m in committed_manifests(table_dir))
+        if auto_compact_every
+        else 0
+    ]
     compacted_at = [
         _appends_at_last_compact(table_dir) if auto_compact_every else 0
     ]
@@ -1568,19 +1501,13 @@ def view_maintainer(
     """
     from sparkgraft.operators.merge import cdc_group_delta
     from sparkgraft.sinks.versioned import (
-        _read_manifest,
+        committed_batches,
         latest_version,
         read_versioned,
         write_versioned,
     )
 
-    committed: set[int] = set()
-    v0 = latest_version(view_dir)
-    if v0 is not None:
-        for v in range(v0 + 1):
-            bid = _read_manifest(view_dir, v).get("batch_id")
-            if bid is not None:
-                committed.add(bid)
+    committed = committed_batches(view_dir)
 
     compare_cols = list(dict.fromkeys([*group_cols, *sum_cols]))
 
@@ -1684,19 +1611,13 @@ def merge_sink(
     from pyspark.sql import Window
 
     from sparkgraft.sinks.versioned import (
-        _read_manifest,
+        committed_batches,
         latest_version,
         upsert_versioned,
         write_versioned,
     )
 
-    committed: set[int] = set()
-    v0 = latest_version(table_dir)
-    if v0 is not None:
-        for v in range(v0 + 1):
-            bid = _read_manifest(table_dir, v).get("batch_id")
-            if bid is not None:
-                committed.add(bid)
+    committed = committed_batches(table_dir)
 
     def on_batch(batch, batch_id: int) -> None:
         if batch_id in committed or batch.isEmpty():

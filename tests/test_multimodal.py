@@ -4,6 +4,8 @@ stats, plus image-feature and audio-frame-sample kernels."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +20,7 @@ from sparkgraft.operators.multimodal import (
     image_features,
 )
 from sparkgraft.operators.stats import channel_stats
+from sparkgraft.sources.readers import list_files
 
 
 def _ole(unix_s: float) -> float:
@@ -33,9 +36,11 @@ def test_sgrf_decode_to_channel_stats(spark, tmp_path):
             [_ole(t0 + 0.02), 3.0, 30.0],
         ]
     )
-    (tmp_path / "Logger1_2023-11-14_22-13-20.dat").write_bytes(
-        encode_sample_matrix(["T-T1", "BS_X"], 100.0, mat)
-    )
+    dat = tmp_path / "Logger1_2023-11-14_22-13-20.dat"
+    dat.write_bytes(encode_sample_matrix(["T-T1", "BS_X"], 100.0, mat))
+    # S8 file ledger: metadata-only listing agrees with the filesystem.
+    (ledger,) = list_files(spark, str(tmp_path)).collect()
+    assert (ledger["name"], ledger["size"]) == (dat.name, os.stat(dat).st_size)
     binf = spark.read.format("binaryFile").load(str(tmp_path))
     samples = decode_sample_files(binf)
     rows = samples.orderBy("channel", "ts").collect()

@@ -2675,10 +2675,10 @@ def _multi_version_summary(spark: SparkSession, t: str, n_versions: int) -> Data
     parent files forward, so file sets overlap), and one grouped
     aggregate replaces ``n_versions`` global ones — N scans + N
     exchanges + union -> 1 scan + 1 exchange.  Preconditions: the
-    table has at least ``n_versions`` versions, and every version
-    holds at least one row — the grouped aggregate emits no row for an
-    empty version.  Both callers stage fixed commits that
-    all have rows; under that precondition the counts and exact
+    table has at least ``n_versions`` versions (ValueError otherwise),
+    and every version holds at least one row — the grouped aggregate
+    emits no row for an empty version.  Both callers stage fixed
+    commits that all have rows; under that precondition the counts and exact
     decimal spend sums equal the read-each-snapshot form (same
     multiset of rows per version, order-free decimal sum)."""
     from itertools import islice
@@ -2687,8 +2687,11 @@ def _multi_version_summary(spark: SparkSession, t: str, n_versions: int) -> Data
 
     import os as _os
 
+    ms = list(islice(committed_manifests(t), n_versions))
+    if len(ms) != n_versions:
+        raise ValueError(f"{t} has {len(ms)} versions, need {n_versions}")
     file_versions: dict[str, list[int]] = {}
-    for m in islice(committed_manifests(t), n_versions):
+    for m in ms:
         for f in m["files"]:
             file_versions.setdefault(f, []).append(m["version"])
     paths = [f"{t}/{f}" for f in sorted(file_versions)]

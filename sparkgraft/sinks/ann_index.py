@@ -45,6 +45,7 @@ from sparkgraft.sinks.tombstones import (
     append_tombstones,
     compact,
     read_tombstones,
+    recover,
     tombstone_dir,
 )
 
@@ -62,6 +63,7 @@ def write_ann_index(
     from sparkgraft.operators.scale import widen_narrow_scan
 
     spark = vectors.sparkSession
+    recover(index_dir, ["codes"])
     enc = widen_narrow_scan(vectors).select(
         F.col(id_col).alias("neighbor_id"),
         assign_nearest(vec_col, centroids).alias("part"),
@@ -109,6 +111,7 @@ def append_ann_index(
     )
     from sparkgraft.operators.scale import widen_narrow_scan
 
+    recover(index_dir, ["codes"])
     enc = widen_narrow_scan(vectors).select(
         F.col(id_col).alias("neighbor_id"),
         assign_nearest(vec_col, centroids).alias("part"),
@@ -278,6 +281,7 @@ def delete_ann_index(spark: SparkSession, index_dir: str, ids) -> None:
     ``ids`` may be an iterable of ints (empty: a no-op) or a
     one-column DataFrame (any column name — it is renamed, matching
     delete_dedup_index)."""
+    recover(index_dir, ["codes"])
     append_tombstones(spark, index_dir, ids, "neighbor_id", long_ids=True)
 
 

@@ -8,12 +8,14 @@ that serving anti-joins.  :func:`compact` rewrites only the partitions
 holding tombstoned ids into ``<table>_staging`` and swaps them in.
 The swap moves each live partition to ``<table>_trash`` before its
 staged copy moves in; the trash is deleted after every swap, and the
-tombstones after the trash.  A compaction starts by restoring each
-trash entry whose live partition is missing (a crash between the two
-moves, or a partition an unfinished compaction emptied) and deleting
-the rest.  The restored rows are still tombstoned, so the compaction
-removes them again; because the tombstones outlive the trash, a
-restore never brings back a row whose tombstone is gone.
+tombstones after the trash.  :func:`recover` restores each trash entry
+whose live partition is missing (a crash between the two moves, or a
+partition an unfinished compaction emptied) and deletes the rest.
+Every mutator of an index runs it before it writes, so a write never
+creates a live partition that would shadow a parked one.  The restored
+rows are still tombstoned, so the next compaction removes them again;
+because the tombstones outlive the trash, a restore never brings back
+a row whose tombstone is gone.
 """
 
 from __future__ import annotations
@@ -72,17 +74,21 @@ def _partitions(table_dir: str, part_col: str) -> set[str]:
     }
 
 
-def _recover(table_dir: str) -> None:
-    trash = f"{table_dir}_trash"
-    if not os.path.isdir(trash):
-        return
-    for name in os.listdir(trash):
-        live = os.path.join(table_dir, name)
-        if os.path.isdir(live):
-            shutil.rmtree(os.path.join(trash, name))
-        else:
-            os.replace(os.path.join(trash, name), live)
-    os.rmdir(trash)
+def recover(index_dir: str, tables: list[str]) -> None:
+    """Undo the swap of a compaction that died: put back each parked
+    partition of ``<index_dir>/<table>`` whose live copy is missing."""
+    for table in tables:
+        table_dir = os.path.join(index_dir, table)
+        trash = f"{table_dir}_trash"
+        if not os.path.isdir(trash):
+            continue
+        for name in os.listdir(trash):
+            live = os.path.join(table_dir, name)
+            if os.path.isdir(live):
+                shutil.rmtree(os.path.join(trash, name))
+            else:
+                os.replace(os.path.join(trash, name), live)
+        os.rmdir(trash)
 
 
 def compact(
@@ -96,9 +102,8 @@ def compact(
     ``on_swapped`` gets the ``part_col`` values dropped in any table,
     after the last swap and before the trash is deleted.  Returns the
     number of partitions rewritten or dropped across the tables."""
+    recover(index_dir, tables)
     table_dirs = [os.path.join(index_dir, t) for t in tables]
-    for t in table_dirs:
-        _recover(t)
     tomb = read_tombstones(spark, [tombstone_dir(index_dir)], col)
     if tomb is None:
         return 0

@@ -98,15 +98,13 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
-def committed_manifests(
-    table_dir: str, newest_first: bool = False
-) -> Iterator[dict]:
+def committed_manifests(table_dir: str) -> Iterator[dict]:
     """Every committed manifest up to the :func:`latest_version` seen
-    when the walk starts, oldest first unless ``newest_first``."""
+    when the walk starts, oldest first."""
     v = latest_version(table_dir)
     if v is None:
         return
-    for i in range(v, -1, -1) if newest_first else range(v + 1):
+    for i in range(v + 1):
         yield _read_manifest(table_dir, i)
 
 

@@ -487,7 +487,7 @@ def dedup_admission(
     an existing index, keep the original checkpoint.
     """
     from sparkgraft.operators.textops import crossside_verdicts, minhash_prep
-    from sparkgraft.sinks.tombstones import read_tombstones, tombstone_dir
+    from sparkgraft.sinks.tombstones import read_tombstones, recover, tombstone_dir
 
     base_dir = os.path.join(history_dir, "base")
     banded_dir = os.path.join(history_dir, "banded")
@@ -499,6 +499,7 @@ def dedup_admission(
 
     def on_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
+        recover(history_dir, ["base", "banded"])
         new_base, new_banded = minhash_prep(
             batch, id_col, text_col, shingle_k, num_hashes, bands
         )
@@ -601,8 +602,9 @@ def delete_dedup_index(spark, history_dir: str, ids) -> None:
     ``ids`` may be a non-empty iterable of id values or a one-column
     DataFrame matching the ingest's ``id_col`` type; an empty iterable
     is a no-op (schema inference needs at least one value)."""
-    from sparkgraft.sinks.tombstones import append_tombstones
+    from sparkgraft.sinks.tombstones import append_tombstones, recover
 
+    recover(history_dir, ["base", "banded"])
     append_tombstones(spark, history_dir, ids, "id", long_ids=False)
 
 
@@ -1381,30 +1383,26 @@ def versioned_sink(
         write_versioned,
     )
 
-    committed = committed_batches(table_dir)
+    ms = list(committed_manifests(table_dir))
+    committed = {m["batch_id"] for m in ms if m.get("batch_id") is not None}
     committed_q = committed_batches(quarantine_dir) if quarantine_dir else set()
-
-    def _appends_at_last_compact(tdir: str) -> int:
-        """Append count recorded by the newest compaction commit
-        (``appends_at_compact`` in its manifest) — 0 when the table has
-        never compacted.  Rebuilt from manifests so recovery from a
-        crash between the Nth append and its compaction (or attaching
-        to a table already past the threshold) compacts on the NEXT
-        append instead of deferring a full extra cycle to 2N."""
-        for m in committed_manifests(tdir, newest_first=True):
-            if m.get("appends_at_compact") is not None:
-                return m["appends_at_compact"]
-        return 0
-
-    # Append count rebuilds from the manifests (replay-stable, same
-    # discipline as the batch ledger) and advances in memory.
-    appends = [
-        sum(m["operation"] == "append" for m in committed_manifests(table_dir))
-        if auto_compact_every
-        else 0
-    ]
+    # Append count and the append count recorded by the newest
+    # compaction commit (``appends_at_compact``; 0 when the table has
+    # never compacted) rebuild from the manifests (replay-stable, same
+    # discipline as the batch ledger) and advance in memory.  So
+    # recovery from a crash between the Nth append and its compaction
+    # (or attaching to a table already past the threshold) compacts on
+    # the NEXT append instead of deferring a full extra cycle to 2N.
+    appends = [sum(m["operation"] == "append" for m in ms)]
     compacted_at = [
-        _appends_at_last_compact(table_dir) if auto_compact_every else 0
+        next(
+            (
+                m["appends_at_compact"]
+                for m in reversed(ms)
+                if m.get("appends_at_compact") is not None
+            ),
+            0,
+        )
     ]
 
     def on_batch(batch, batch_id: int) -> None:

@@ -245,6 +245,24 @@ def test_incremental_dedup_preps_once(spark):
     assert len(builders) == 1, plan.optimizedPlan().toString()
 
 
+def _settled_persistent_rdds(spark) -> int:
+    """Persistent RDD count once the unreferenced RDDs that earlier
+    tests persisted are gone: a JVM GC hands them to Spark's
+    ContextCleaner, which unpersists them asynchronously, so without
+    this a GC during the measured call lowers the count."""
+    import gc
+    import time
+
+    jsc = spark.sparkContext._jsc
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    counts = [None, jsc.getPersistentRDDs().size()]
+    while counts[-1] != counts[-2] and len(counts) < 40:
+        time.sleep(0.25)
+        counts.append(jsc.getPersistentRDDs().size())
+    return counts[-1]
+
+
 def test_neardup_queries_repeat_without_new_storage(spark):
     """A repeated near-dup query reuses its cached prep: the second
     call adds no persistent RDD to the session."""
@@ -255,7 +273,7 @@ def test_neardup_queries_repeat_without_new_storage(spark):
         entrymod.q_split_leakage,
     ):
         q(spark, SF_DIR).collect()
-        before = jsc.getPersistentRDDs().size()
+        before = _settled_persistent_rdds(spark)
         q(spark, SF_DIR).collect()
         assert jsc.getPersistentRDDs().size() == before, q.__name__
 

@@ -4810,44 +4810,30 @@ def q_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter file skipping (layout.write_bloom_manifest /
-    bloom_keep): the ts-sorted staged events table gains per-file
-    Blooms on user_id; 5 point lookups read only bloom-surviving files
-    (pruning asserted in tests/test_layout.py), then aggregate.
-    Skipping is false-negative-free, so the plain-SQL oracle is
-    exact."""
-    from sparkgraft.sinks.layout import (
-        bloom_keep,
-        read_skipping_blooms,
-        write_bloom_manifest,
-        write_with_stats,
-    )
+    """Bloom-filter file skipping (sinks/versioned.py bloom_cols /
+    read_versioned_bloom): the ts-sorted staged events table commits
+    per-file Blooms on user_id; 5 point lookups read only the
+    bloom-surviving files in ONE batched read (pruning asserted in
+    tests/test_versioned.py), then aggregate.  Skipping is
+    false-negative-free, so the plain-SQL oracle is exact."""
+    from sparkgraft.sinks.versioned import read_versioned_bloom, write_versioned
 
     def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="sparkgraft_bloomskip_") + "/events"
-        write_with_stats(
-            _t(spark, sf_dir, "events"), path, ["ts"], sort_col="ts",
+        write_versioned(
+            _t(spark, sf_dir, "events"), path, mode="overwrite",
+            stats_cols=["ts"], bloom_cols=["user_id"], sort_col="ts",
             n_files=8,
         )
-        write_bloom_manifest(spark, path, ["user_id"])
         return path
 
     path = _artifact("bloom_skipping_dir", spark, sf_dir, build)
-    # BATCHED point lookups (round-5 steady-state fix): one pruned read
-    # over the UNION of the per-id bloom predicates, one aggregate —
-    # the 5-sequential-sub-query form paid the manifest/scan overhead
-    # 5x (2.1 s steady-state at sf0.1; this form is sub-second).
-    # Result-identical: the union of surviving files is a superset for
-    # every id, and the row filter is exact.
-    uids = (3, 17, 42, 71, 99)
-    keep = bloom_keep("user_id", uids[0])
-    for uid in uids[1:]:
-        keep = keep | bloom_keep("user_id", uid)
+    uids = [3, 17, 42, 71, 99]
     return (
-        read_skipping_blooms(spark, path, keep)
-        .filter(F.col("user_id").isin(list(uids)))
+        read_versioned_bloom(spark, path, {"user_id": uids})
+        .filter(F.col("user_id").isin(uids))
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -5175,23 +5161,23 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-level data skipping (sinks/layout.py write_with_stats /
-    read_skipping): events staged once per (session, sf_dir) as a
-    ts-range-sorted table + min/max manifest; a 3-day window reads ONLY
-    the manifest-surviving files (pruning asserted in
-    tests/test_layout.py), then
-    the exact channel-stats aggregate runs on the pruned scan.  The
-    skipping contract — pruned-read ∘ filter ≡ full-scan ∘ filter —
-    makes the plain-SQL oracle exact."""
-    from sparkgraft.sinks.layout import read_skipping, write_with_stats
+    """File-level data skipping (sinks/versioned.py stats_cols /
+    read_versioned_skipping): events staged once per (session, sf_dir)
+    as a ts-range-sorted versioned table whose commit carries per-file
+    min/max stats; a 3-day window reads ONLY the stats-surviving files
+    (pruning asserted in tests/test_versioned.py), then the exact
+    channel-stats aggregate runs on the pruned scan.  The skipping
+    contract — pruned-read ∘ filter ≡ full-scan ∘ filter — makes the
+    plain-SQL oracle exact."""
+    from sparkgraft.sinks.versioned import read_versioned_skipping, write_versioned
 
     def build():
         import tempfile
 
         path = tempfile.mkdtemp(prefix="sparkgraft_skip_") + "/events"
-        write_with_stats(
-            _t(spark, sf_dir, "events"), path, ["ts", "value"],
-            sort_col="ts", n_files=8,
+        write_versioned(
+            _t(spark, sf_dir, "events"), path, mode="overwrite",
+            stats_cols=["ts", "value"], sort_col="ts", n_files=8,
         )
         return path
 
@@ -5199,7 +5185,7 @@ def q_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.lit("2024-01-10").cast("timestamp")
     hi = F.lit("2024-01-13").cast("timestamp")
     keep = (F.col("max_ts") >= lo) & (F.col("min_ts") <= hi)
-    pruned = read_skipping(spark, path, keep).filter(
+    pruned = read_versioned_skipping(spark, path, keep).filter(
         F.col("ts").between(lo, hi)
     )
     return S.channel_stats(pruned, ["event_type"], "value").withColumnsRenamed(

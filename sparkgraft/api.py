@@ -252,6 +252,7 @@ from sparkgraft.sinks.kv import (
     write_stats_csv,
 )
 from sparkgraft.sinks.versioned import (
+    bloom_keep,
     compact_table,
     delete_versioned,
     latest_version,
@@ -264,15 +265,8 @@ from sparkgraft.sinks.versioned import (
     write_versioned,
 )
 from sparkgraft.sinks.layout import (
-    append_with_stats,
-    bloom_keep,
     compact_directory,
-    read_skipping_blooms,
-    write_bloom_manifest,
-    prune_files,
-    read_skipping,
     write_partitioned,
-    write_with_stats,
     write_zordered,
     zorder_key,
 )

@@ -106,12 +106,12 @@ def append_ann_index(
     metadata), the appended index EXACTLY equals a full rebuild over
     old ∪ new with the same centroids/codebooks; serving results are compared
     in tests/test_round4_ops.py::test_ann_index_append_equals_full_rebuild."""
-    centroids, codebooks, _ = read_ann_index(
-        vectors.sparkSession, index_dir
-    )
     from sparkgraft.operators.scale import widen_narrow_scan
 
     recover(index_dir, ["codes"])
+    centroids, codebooks, _ = read_ann_index(
+        vectors.sparkSession, index_dir
+    )
     enc = widen_narrow_scan(vectors).select(
         F.col(id_col).alias("neighbor_id"),
         assign_nearest(vec_col, centroids).alias("part"),
@@ -181,7 +181,19 @@ def read_ann_index(
     m*k rows of floats, the same class as the centroid fit), codes stay
     a lazy partitioned scan.  Memoized per (session, dir, content
     version); mutations bump the stat-based version; unversionable
-    paths (remote URIs) read fresh every call."""
+    paths (remote URIs) read fresh every call.
+
+    Raises while ``codes_trash`` exists: a compaction is running or
+    crashed with partitions parked there, and ``codes`` alone would
+    silently miss their vectors."""
+    import os
+
+    if os.path.isdir(f"{index_dir}/codes_trash"):
+        raise RuntimeError(
+            f"{index_dir}: a compaction is running or crashed (codes_trash "
+            "holds parked partitions); compact_ann_index or any ANN "
+            "mutator restores the index"
+        )
     ver = _index_version(index_dir)
     key = (
         spark.sparkContext.applicationId,

@@ -12,9 +12,14 @@ Layout under ``table_dir``:
   the operation ("overwrite" | "append"), and the parent version.
 - ``_manifests/_latest``          pointer file holding the newest
   committed version number.
+- ``_manifests/v<version>_stats-<token>.parquet`` and
+  ``..._blooms-<token>.parquet``   the version's data-skipping index:
+  one row per manifest file with its min/max/null-count stats
+  (``stats_cols``) or its Bloom bitmaps (``bloom_cols``), named in the
+  manifest as ``stats_file`` / ``bloom_file``.
 
 Commit protocol (optimistic concurrency): data files (token-unique
-names) and the stats table (token-unique, recorded as ``stats_file``
+names) and the per-file stats/Bloom tables (token-unique, recorded
 in the manifest) are fully written first; then the writer CLAIMS the
 version by creating ``v<N>.json`` via an atomic put-if-absent
 (``os.link`` from a fully-written temp file — complete content AND
@@ -47,9 +52,13 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from sparkgraft.operators.scale import _bloom_pos, _shiftright_var
+from sparkgraft.sinks.layout import zorder_key
 
 
 class CommitConflictError(RuntimeError):
@@ -98,6 +107,14 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _snapshot(table_dir: str, version: int | None) -> tuple[int, dict]:
+    """(version, manifest) of ``version``, the latest by default."""
+    v = latest_version(table_dir) if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"no committed version in {table_dir}")
+    return v, _read_manifest(table_dir, v)
+
+
 def committed_manifests(table_dir: str) -> Iterator[dict]:
     """Every committed manifest up to the :func:`latest_version` seen
     when the walk starts, oldest first."""
@@ -118,32 +135,64 @@ def committed_batches(table_dir: str) -> set:
     }
 
 
-def _stats_path(table_dir: str, version: int) -> str:
-    """Stats table location for a version: the manifest's
-    ``stats_file`` when recorded (token-unique name — concurrent
-    losers can never have clobbered it), else the legacy fixed name
-    (pre-OCC tables)."""
-    default = os.path.join(
-        _manifest_dir(table_dir), f"v{version}_stats.parquet"
-    )
-    mpath = _manifest_path(table_dir, version)
-    if os.path.exists(mpath):
-        sf = _read_manifest(table_dir, version).get("stats_file")
-        if sf:
-            return os.path.join(_manifest_dir(table_dir), sf)
-    return default
+def _side_table(table_dir: str, man: dict, key: str) -> str | None:
+    """Location of a commit's per-file table, ``key`` = ``stats_file``
+    or ``bloom_file`` (token-unique names recorded in the manifest, so
+    a concurrent loser can never have clobbered one), or None when the
+    commit wrote none."""
+    name = man.get(key)
+    return os.path.join(_manifest_dir(table_dir), name) if name else None
+
+
+def manifest_local_df(spark: SparkSession, path: str) -> DataFrame:
+    """A per-file stats/Bloom table as a LOCAL relation: the tables are
+    metadata-sized (one row per data file), so reading them
+    driver-side via pyarrow and re-entering them as a LocalRelation
+    lets a prune's predicate + collect fold to a driver-local
+    LocalTableScan — ZERO jobs per prune, no AQE stage round-trips —
+    while still re-reading the table from parquet on every call
+    (nothing is cached across invocations).  Arrow→Spark type mapping
+    is exact for the table's column classes (strings, longs, doubles,
+    UTC-adjusted timestamps, array<long> bitmaps) — pinned against the
+    distributed read in tests/test_layout.py.  Any surprise (non-local
+    path, unreadable footer) falls back to the distributed read."""
+    try:
+        import pyarrow.parquet as pq
+
+        return spark.createDataFrame(pq.read_table(path))
+    except Exception:
+        return spark.read.parquet(path)
+
+
+def _scan(spark: SparkSession, table_dir: str, rel_files: list[str]) -> DataFrame:
+    return spark.read.parquet(*[os.path.join(table_dir, f) for f in rel_files])
+
+
+def _pruned(
+    spark: SparkSession, table_dir: str, version: int, rel_files
+) -> DataFrame:
+    """The files a skipping predicate kept, or the snapshot's empty
+    frame (zero rows, the table's columns) when it kept none."""
+    if not rel_files:
+        return read_versioned(spark, table_dir, version).limit(0)
+    return _scan(spark, table_dir, sorted(rel_files))
+
+
+def _rel_file(table_dir: str) -> Column:
+    """``input_file_name()`` as the table-relative ``file`` key of the
+    per-file tables, so the table directory can move."""
+    prefix = os.path.abspath(table_dir) + os.sep
+    return F.replace(
+        F.replace(F.input_file_name(), F.lit("file://"), F.lit("")),
+        F.lit(prefix),
+        F.lit(""),
+    ).alias("file")
 
 
 def _file_stats(spark: SparkSession, table_dir: str, rel_files: list[str],
                 stats_cols: list[str]) -> DataFrame:
     """Per-file (min, max, null-count, n_rows) over exactly
-    ``rel_files`` — one distributed pass, one manifest row per file.
-    ``file`` is stored table-relative so the table directory can
-    move."""
-    from pyspark.sql import functions as F
-
-    paths = [os.path.join(table_dir, f) for f in rel_files]
-    written = spark.read.parquet(*paths)
+    ``rel_files`` — one distributed pass, one row per file."""
     aggs = []
     for c in stats_cols:
         aggs += [
@@ -153,17 +202,14 @@ def _file_stats(spark: SparkSession, table_dir: str, rel_files: list[str],
                 f"nulls_{c}"
             ),
         ]
-    prefix = os.path.abspath(table_dir) + os.sep
-    return written.groupBy(
-        F.replace(
-            F.replace(F.input_file_name(), F.lit("file://"), F.lit("")),
-            F.lit(prefix),
-            F.lit(""),
-        ).alias("file")
-    ).agg(F.count("*").alias("n_rows"), *aggs)
+    return (
+        _scan(spark, table_dir, rel_files)
+        .groupBy(_rel_file(table_dir))
+        .agg(F.count("*").alias("n_rows"), *aggs)
+    )
 
 
-def _file_blooms_rel(
+def _file_blooms(
     spark: SparkSession,
     table_dir: str,
     rel_files: list[str],
@@ -172,24 +218,105 @@ def _file_blooms_rel(
     hashes: int,
     salt: str,
 ) -> DataFrame:
-    """Per-file Bloom bitmaps over exactly ``rel_files`` (layout.
-    _file_blooms with the versioned table's relative file naming) —
-    one distributed pass, one row per file."""
-    from pyspark.sql import functions as F
+    """Per-file Bloom bitmaps over exactly ``rel_files``: the
+    scale.bloom_bitmap construction grouped by file — (file,
+    bloom_<col> array<long>), one distributed pass, one row per file."""
+    written = _scan(spark, table_dir, rel_files)
+    n_words = bits // 64
+    out = None
+    for c in cols:
+        positions = F.array(
+            *[_bloom_pos(h, F.col(c), bits, salt) for h in range(hashes)]
+        )
+        words = written.select(
+            _rel_file(table_dir), F.explode(positions).alias("pos")
+        ).select(
+            "file",
+            (F.col("pos") / 64).cast("int").alias("word_idx"),
+            F.expr("shiftleft(1L, cast(pmod(pos, 64) as int))").alias("bit"),
+        )
+        per_word = words.groupBy("file", "word_idx").agg(
+            F.bit_or("bit").alias("w")
+        )
+        bm = per_word.groupBy("file").agg(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(n_words - 1)),
+                lambda i: F.coalesce(
+                    F.element_at(
+                        F.map_from_entries(
+                            F.collect_list(F.struct("word_idx", "w"))
+                        ),
+                        i,
+                    ),
+                    F.lit(0).cast("long"),
+                ),
+            ).alias(f"bloom_{c}")
+        )
+        out = bm if out is None else out.join(bm, "file")
+    return out
 
-    from sparkgraft.sinks.layout import _file_blooms
 
-    paths = [os.path.join(table_dir, f) for f in rel_files]
-    bm = _file_blooms(spark.read.parquet(*paths), cols, bits, hashes, salt)
-    prefix = os.path.abspath(table_dir) + os.sep
-    return bm.withColumn(
-        "file",
-        F.replace(
-            F.replace(F.col("file"), F.lit("file://"), F.lit("")),
-            F.lit(prefix),
-            F.lit(""),
-        ),
-    )
+def bloom_keep(
+    col_name: str,
+    value,
+    bits: int = 4096,
+    hashes: int = 3,
+    salt: str = "bloom",
+) -> Column:
+    """Bloom-table predicate for ``col = value``: true iff every hash
+    position's bit is set in the file's ``bloom_<col>`` bitmap — i.e.
+    the file MIGHT contain the value (the caller's row filter stays
+    exact).
+
+    For int/str values the hash positions are CONSTANTS — computed
+    driver-side with the same md5 recipe ``_bloom_pos`` evaluates
+    (``pmod(conv(substr(md5('h|salt|value'),1,8),16,10), bits)``;
+    python md5 of the identical string, bit-identical by
+    construction) and rendered as one SQL text, instead of ``hashes``
+    md5/conv/shift expression trees per value: a 5-value IN-lookup
+    built ~500 py4j expression nodes per call, the dominant cost of
+    bloom_travel's query construction.  Column-typed values keep the
+    expression path."""
+    import hashlib
+
+    if hashes < 1:
+        # Degenerate config: without this the expression path would
+        # return None and the fast path an unparseable '()'.
+        raise ValueError(f"bloom_keep: hashes must be >= 1, got {hashes}")
+    # EXACT types only: an int subclass whose str()
+    # differs from Spark's cast-to-string (e.g. IntEnum on older
+    # Pythons) would hash a different string than the expression path
+    # and silently prune the WRONG files — false negatives.  bool is
+    # an int subclass and is excluded by the same rule.
+    if type(value) in (int, str):
+        tests = []
+        for h in range(hashes):
+            p = (
+                int(
+                    hashlib.md5(
+                        f"{h}|{salt}|{value}".encode()
+                    ).hexdigest()[:8],
+                    16,
+                )
+                % bits
+            )
+            tests.append(
+                f"(shiftright(element_at(`bloom_{col_name}`, "
+                f"{p // 64 + 1}), {p % 64}) & 1) = 1"
+            )
+        return F.expr("(" + " AND ".join(tests) + ")")
+    cond = None
+    for h in range(hashes):
+        pos = _bloom_pos(h, F.lit(value), bits, salt)
+        word = F.element_at(
+            F.col(f"bloom_{col_name}"), (pos / 64).cast("int") + F.lit(1)
+        )
+        test = (
+            _shiftright_var(word, F.pmod(pos, F.lit(64))).bitwiseAND(F.lit(1))
+            == 1
+        )
+        cond = test if cond is None else (cond & test)
+    return cond
 
 
 def _bloom_config(man: dict) -> "dict | None":
@@ -209,7 +336,7 @@ def write_versioned(
     table_dir: str,
     mode: str = "append",
     stats_cols: "list[str] | None" = None,
-    sort_col: str | None = None,
+    sort_col: "str | Column | None" = None,
     n_files: int | None = None,
     extra_meta: "dict | None" = None,
     retries: int = 20,
@@ -230,10 +357,12 @@ def write_versioned(
     :func:`read_versioned_skipping` prunes a time-travel read with a
     stats predicate.  ``sort_col``/``n_files`` range-partition + sort
     the write so each file covers a tight range (what makes the stats
-    selective — see layout.write_with_stats).
+    selective; an unsorted write gives every file the full range).
+    ``sort_col`` is a column name or any Column: a :func:`zorder_key`
+    gives files tight ranges on EVERY interleaved dimension, so one
+    stats table prunes range filters on any of them.
 
-    ``bloom_cols`` adds per-file Bloom bitmaps to the commit log
-    (layout.write_bloom_manifest composed into the commit, the
+    ``bloom_cols`` adds per-file Bloom bitmaps to the commit log (the
     Delta/Iceberg bloom-filter-index move): EQUALITY skipping for
     point lookups on high-cardinality unsorted columns that min/max
     stats can't prune.  Once enabled, every descendant commit
@@ -253,10 +382,6 @@ def write_versioned(
     version = 0 if parent is None else parent + 1
     new_files = _land_files(df, table_dir, version, sort_col, n_files)
     for attempt in range(retries + 1):
-        if mode == "append" and parent is not None:
-            files = _read_manifest(table_dir, parent)["files"] + new_files
-        else:
-            files = new_files
         carry = (
             _read_manifest(table_dir, parent)["files"]
             if mode == "append" and parent is not None
@@ -264,8 +389,8 @@ def write_versioned(
         )
         try:
             _commit(
-                df.sparkSession, table_dir, version, parent, mode, files,
-                stats_cols, new_files, carry, extra_meta,
+                df.sparkSession, table_dir, version, parent, mode,
+                carry + new_files, stats_cols, new_files, carry, extra_meta,
                 bloom_cols=bloom_cols,
             )
             return version
@@ -282,7 +407,7 @@ def _land_files(
     df: DataFrame,
     table_dir: str,
     version: int,
-    sort_col: str | None = None,
+    sort_col: "str | Column | None" = None,
     n_files: int | None = None,
 ) -> list[str]:
     """Stage ``df``'s parquet files and rename them under the version
@@ -297,9 +422,7 @@ def _land_files(
     staging = os.path.join(table_dir, "data", f"_staging_v{version}-{token}")
     w = df
     if sort_col is not None:
-        from pyspark.sql import functions as F
-
-        key = F.col(sort_col)
+        key = F.col(sort_col) if isinstance(sort_col, str) else sort_col
         w = df.repartitionByRange(n_files or 4, key).sortWithinPartitions(key)
     elif n_files is not None:
         # n_files without sort_col still bounds the file count (the
@@ -334,6 +457,44 @@ def _remove_files(table_dir: str, rel_files: list[str]) -> None:
             pass
 
 
+def _per_file_table(
+    spark: SparkSession,
+    table_dir: str,
+    name: str,
+    parent_table: str | None,
+    new_files: list[str],
+    carried_files: list[str],
+    build: Callable[[list[str]], DataFrame],
+) -> str | None:
+    """Write a commit's per-file table (stats or Blooms) as ``name``
+    under the manifest dir and return ``name``, or None for a commit
+    without files.  Carried files copy their rows from
+    ``parent_table`` (None when the parent wrote none or under another
+    config); the carried files it lacks and the new files are computed
+    by ``build`` — one scan of exactly those files, never a history
+    rescan — so the table covers EVERY manifest file."""
+    parts, fresh = [], list(carried_files)
+    if carried_files and parent_table:
+        rows = spark.read.parquet(parent_table).filter(
+            F.col("file").isin(carried_files)
+        )
+        # bounded collect: one row per carried file
+        have = {r["file"] for r in rows.select("file").collect()}
+        fresh = [f for f in carried_files if f not in have]
+        if have:
+            parts.append(rows)
+    fresh += new_files
+    if fresh:
+        parts.append(build(fresh))
+    if not parts:
+        return None
+    table = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    table.write.mode("overwrite").parquet(
+        os.path.join(_manifest_dir(table_dir), name)
+    )
+    return name
+
+
 def _commit(
     spark: SparkSession,
     table_dir: str,
@@ -346,141 +507,51 @@ def _commit(
     carried_files: list[str],
     extra_meta: "dict | None" = None,
     bloom_cols: "list[str] | None" = None,
-    bloom_bits: int = 4096,
-    bloom_hashes: int = 3,
-    bloom_salt: str = "bloom",
 ) -> None:
-    """Commit metadata for an already-landed version: stats (new files
-    computed fresh, carried files' rows copied from the parent stats
-    table) land first under a token-unique name, then the manifest
-    CLAIMS the version via atomic put-if-absent (``os.link``) — the
-    commit point; a lost race raises :class:`CommitConflictError`
-    after cleaning up this writer's stats table.  The ``_latest``
-    pointer flips last (monotone cache; readers scan forward).
+    """Commit metadata for an already-landed version: the per-file
+    stats and Bloom tables land first under token-unique names, then
+    the manifest CLAIMS the version via atomic put-if-absent
+    (``os.link``) — the commit point; a lost race raises
+    :class:`CommitConflictError` after cleaning up this writer's
+    tables.  The ``_latest`` pointer flips last (monotone cache;
+    readers scan forward).
 
-    Coverage invariant: when ``stats_cols`` is set, the committed stats
-    table covers EVERY file in the manifest.  Carried files whose
-    parent stats are missing, incomplete, or computed over different
-    columns get their stats recomputed here (one scan of exactly those
-    files) instead of silently committing a manifest that claims stats
+    Coverage invariant: a committed stats or Bloom table covers EVERY
+    file in the manifest (:func:`_per_file_table`).  Carried files'
+    rows are copied from the parent only when it indexed them under
+    the same stats columns / Bloom config; otherwise they are
+    recomputed instead of silently committing a manifest that claims
     coverage it doesn't have — read_versioned_skipping's superset
-    guarantee and stats_summary's exactness both depend on it."""
+    guarantee, read_versioned_bloom's no-false-negative guarantee and
+    stats_summary's exactness all depend on it."""
     os.makedirs(_manifest_dir(table_dir), exist_ok=True)
     token = uuid.uuid4().hex[:8]
+    pman = {} if parent is None else _read_manifest(table_dir, parent)
     stats_file = None
     if stats_cols:
-        from pyspark.sql import functions as F
-
-        stats = None
-        if new_files:
-            stats = _file_stats(spark, table_dir, new_files, list(stats_cols))
-        if carried_files:
-            carried_stats = None
-            missing = list(carried_files)
-            if parent is not None and os.path.exists(
-                _stats_path(table_dir, parent)
-            ):
-                parent_cols = _read_manifest(table_dir, parent).get(
-                    "stats_cols"
-                )
-                if parent_cols == list(stats_cols):
-                    parent_stats = spark.read.parquet(
-                        _stats_path(table_dir, parent)
-                    ).filter(F.col("file").isin(carried_files))
-                    # bounded collect: one row per carried file
-                    have = {
-                        r["file"]
-                        for r in parent_stats.select("file").collect()
-                    }
-                    missing = [f for f in carried_files if f not in have]
-                    if len(missing) < len(carried_files):
-                        carried_stats = parent_stats
-            if missing:
-                fresh = _file_stats(
-                    spark, table_dir, missing, list(stats_cols)
-                )
-                carried_stats = (
-                    fresh
-                    if carried_stats is None
-                    else carried_stats.unionByName(fresh)
-                )
-            stats = (
-                carried_stats
-                if stats is None
-                else carried_stats.unionByName(stats)
-            )
-        if stats is not None:
-            stats_file = f"v{version}_stats-{token}.parquet"
-            stats.write.mode("overwrite").parquet(
-                os.path.join(_manifest_dir(table_dir), stats_file)
-            )
-    # Bloom manifest (EQUALITY skipping beside the min/max stats):
-    # explicit ``bloom_cols`` enables the index; None INHERITS the
-    # parent commit's bloom config, so append/COW/compact commits keep
-    # point-lookup pruning alive without re-opting-in (Delta
-    # bloom-filter-index persistence).  Coverage invariant mirrors
-    # stats: the bloom table covers EVERY manifest file — carried
-    # files missing from the parent's bloom table (or indexed under a
-    # different config) are recomputed here, one bounded scan.
+        stats_file = _per_file_table(
+            spark, table_dir, f"v{version}_stats-{token}.parquet",
+            _side_table(table_dir, pman, "stats_file")
+            if pman.get("stats_cols") == list(stats_cols)
+            else None,
+            new_files, carried_files,
+            lambda fs: _file_stats(spark, table_dir, fs, list(stats_cols)),
+        )
+    # Explicit ``bloom_cols`` enables the Bloom index (default bits,
+    # hashes and salt); None INHERITS the parent commit's config, so
+    # append/COW/compact commits keep point-lookup pruning alive
+    # without re-opting-in (Delta bloom-filter-index persistence).
+    bcfg = _bloom_config({"bloom_cols": bloom_cols} if bloom_cols else pman)
     bloom_file = None
-    if bloom_cols:
-        bcfg = {
-            "cols": list(bloom_cols), "bits": bloom_bits,
-            "hashes": bloom_hashes, "salt": bloom_salt,
-        }
-    elif parent is not None:
-        bcfg = _bloom_config(_read_manifest(table_dir, parent))
-    else:
-        bcfg = None
     if bcfg:
-        from pyspark.sql import functions as F
-
-        blooms = None
-        if new_files:
-            blooms = _file_blooms_rel(spark, table_dir, new_files, **bcfg)
-        if carried_files:
-            carried_bm = None
-            missing = list(carried_files)
-            if parent is not None:
-                pman = _read_manifest(table_dir, parent)
-                ppath = (
-                    os.path.join(_manifest_dir(table_dir), pman["bloom_file"])
-                    if pman.get("bloom_file")
-                    else None
-                )
-                if (
-                    _bloom_config(pman) == bcfg
-                    and ppath
-                    and os.path.exists(ppath)
-                ):
-                    parent_bm = spark.read.parquet(ppath).filter(
-                        F.col("file").isin(carried_files)
-                    )
-                    # bounded collect: one row per carried file
-                    have = {
-                        r["file"]
-                        for r in parent_bm.select("file").collect()
-                    }
-                    missing = [f for f in carried_files if f not in have]
-                    if len(missing) < len(carried_files):
-                        carried_bm = parent_bm
-            if missing:
-                fresh = _file_blooms_rel(spark, table_dir, missing, **bcfg)
-                carried_bm = (
-                    fresh
-                    if carried_bm is None
-                    else carried_bm.unionByName(fresh)
-                )
-            blooms = (
-                carried_bm
-                if blooms is None
-                else carried_bm.unionByName(blooms)
-            )
-        if blooms is not None:
-            bloom_file = f"v{version}_blooms-{token}.parquet"
-            blooms.write.mode("overwrite").parquet(
-                os.path.join(_manifest_dir(table_dir), bloom_file)
-            )
+        bloom_file = _per_file_table(
+            spark, table_dir, f"v{version}_blooms-{token}.parquet",
+            _side_table(table_dir, pman, "bloom_file")
+            if _bloom_config(pman) == bcfg
+            else None,
+            new_files, carried_files,
+            lambda fs: _file_blooms(spark, table_dir, fs, **bcfg),
+        )
     manifest = {
         "version": version,
         "parent": parent,
@@ -560,10 +631,7 @@ def read_versioned(
     (an appended version may carry new columns; older files read them
     as NULL — Delta/Iceberg add-column parity) at the cost of reading
     every file's footer."""
-    v = latest_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    manifest = _read_manifest(table_dir, v)
+    v, manifest = _snapshot(table_dir, version)
     if not manifest["files"]:
         raise FileNotFoundError(f"version {v} of {table_dir} is empty")
     paths = [os.path.join(table_dir, f) for f in manifest["files"]]
@@ -581,18 +649,15 @@ def stats_summary(
     table alone, zero data files opened (the Delta 'SELECT count(*)'
     optimization).  One row; column set mirrors the commit's
     stats_cols.  Exactness asserted against full scans in tests."""
-    from pyspark.sql import functions as F
-
-    v = latest_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    man = _read_manifest(table_dir, v)
+    v, man = _snapshot(table_dir, version)
     cols = man.get("stats_cols")
     if not cols:
         raise ValueError(
             f"version {v} of {table_dir} was committed without stats_cols"
         )
-    stats = spark.read.parquet(_stats_path(table_dir, v))
+    path = _side_table(table_dir, man, "stats_file")
+    if path is None:
+        raise FileNotFoundError(f"version {v} of {table_dir} is empty")
     aggs = [F.sum("n_rows").alias("n_rows")]
     for c in cols:
         aggs += [
@@ -600,7 +665,7 @@ def stats_summary(
             F.max(f"max_{c}").alias(f"max_{c}"),
             F.sum(f"nulls_{c}").alias(f"nulls_{c}"),
         ]
-    return stats.agg(*aggs)
+    return spark.read.parquet(path).agg(*aggs)
 
 
 def read_versioned_skipping(
@@ -611,26 +676,25 @@ def read_versioned_skipping(
 ) -> DataFrame:
     """Time travel WITH data skipping: scan only the files of snapshot
     ``version`` whose commit-log stats survive the ``keep`` predicate
-    (over ``min_*``/``max_*``/``nulls_*``/``n_rows`` — same contract as
-    layout.prune_files).  Skipping is a superset guarantee, so
+    over ``min_*``/``max_*``/``nulls_*``/``n_rows``; the standard range
+    predicate for ``col BETWEEN lo AND hi`` is ``(max_col >= lo) AND
+    (min_col <= hi)``.  Skipping is a superset guarantee, so
     ``read_versioned_skipping(...).filter(p)`` ≡
     ``read_versioned(...).filter(p)`` with fewer files opened (both
-    asserted in tests/test_versioned.py).  The version must have been
-    committed with ``stats_cols``."""
-    v = latest_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if not _read_manifest(table_dir, v).get("stats_cols"):
+    asserted in tests/test_versioned.py); a predicate that keeps no
+    file gives zero rows with the table's columns.  The version must
+    have been committed with ``stats_cols``."""
+    v, man = _snapshot(table_dir, version)
+    if not man.get("stats_cols"):
         raise ValueError(
             f"version {v} of {table_dir} was committed without stats_cols"
         )
-    from sparkgraft.sinks.layout import manifest_local_df
-
-    stats = manifest_local_df(spark, _stats_path(table_dir, v))
-    rel = sorted(r["file"] for r in stats.filter(keep).select("file").collect())
-    if not rel:
-        return read_versioned(spark, table_dir, v).limit(0)
-    return spark.read.parquet(*[os.path.join(table_dir, f) for f in rel])
+    path = _side_table(table_dir, man, "stats_file")
+    rel = [] if path is None else [
+        r["file"]
+        for r in manifest_local_df(spark, path).filter(keep).select("file").collect()
+    ]
+    return _pruned(spark, table_dir, v, rel)
 
 
 def read_versioned_bloom(
@@ -657,14 +721,7 @@ def read_versioned_bloom(
     coverage invariant makes this unreachable for tables written by
     this module).  The version must descend from a commit with
     ``bloom_cols`` covering every queried column."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import bloom_keep
-
-    v = latest_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    man = _read_manifest(table_dir, v)
+    v, man = _snapshot(table_dir, version)
     bcfg = _bloom_config(man)
     if bcfg is None or any(c not in bcfg["cols"] for c in eq):
         raise ValueError(
@@ -689,12 +746,11 @@ def read_versioned_bloom(
             term = t_ if term is None else (term | t_)
         keep = term if keep is None else (keep & term)
     indexed, kept = set(), set()
-    if man.get("bloom_file"):
-        from sparkgraft.sinks.layout import manifest_local_df
-
-        bm = manifest_local_df(
-            spark, os.path.join(_manifest_dir(table_dir), man["bloom_file"])
-        ).filter(F.col("file").isin(man["files"]))
+    path = _side_table(table_dir, man, "bloom_file")
+    if path:
+        bm = manifest_local_df(spark, path).filter(
+            F.col("file").isin(man["files"])
+        )
         # ONE bounded collect (one row per manifest file) carrying the
         # keep verdict — previously two sequential driver round-trips
         # (r13 optimization round, guide §1; NULL verdicts — files
@@ -703,14 +759,11 @@ def read_versioned_bloom(
         rows = bm.select("file", keep.alias("__keep")).collect()
         indexed = {r["file"] for r in rows}
         kept = {r["file"] for r in rows if r["__keep"]}
-    rel = sorted(kept | (set(man["files"]) - indexed))
-    if not rel:
-        return read_versioned(spark, table_dir, v).limit(0)
-    return spark.read.parquet(*[os.path.join(table_dir, f) for f in rel])
+    return _pruned(spark, table_dir, v, kept | (set(man["files"]) - indexed))
 
 
 def _touched_files(
-    spark: SparkSession, table_dir: str, version: int, stats_keep
+    spark: SparkSession, table_dir: str, man: dict, stats_keep
 ) -> tuple[list[str], list[str]]:
     """Split a snapshot's files into (touched, untouched) under a
     commit-log stats predicate: untouched files PROVABLY contain no
@@ -718,14 +771,10 @@ def _touched_files(
     the child version unrewritten.  Files not covered by the stats
     table (or with NULL stats) are conservatively touched — the
     bloom-manifest staleness discipline."""
-    man = _read_manifest(table_dir, version)
-    if stats_keep is None or not man.get("stats_cols"):
+    path = _side_table(table_dir, man, "stats_file")
+    if stats_keep is None or path is None:
         return list(man["files"]), []
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import manifest_local_df
-
-    stats = manifest_local_df(spark, _stats_path(table_dir, version))
+    stats = manifest_local_df(spark, path)
     rows = stats.withColumn("_keep", stats_keep).select("file", "_keep").collect()
     keep_map = {r["file"]: r["_keep"] for r in rows}
     touched, untouched = [], []
@@ -742,7 +791,7 @@ def delete_versioned(
     table_dir: str,
     predicate,
     stats_keep=None,
-    sort_col: str | None = None,
+    sort_col: "str | Column | None" = None,
     n_files: int | None = None,
     retries: int = 20,
 ) -> int:
@@ -762,22 +811,18 @@ def delete_versioned(
     Concurrency: the deleted row set depends on the parent snapshot,
     so a commit conflict RE-PLANS against the new parent (the loser's
     landed files are removed), up to ``retries`` times."""
-    from pyspark.sql import functions as F
-
     parent = latest_version(table_dir)
     if parent is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     for attempt in range(retries + 1):
         man = _read_manifest(table_dir, parent)
         version = parent + 1
-        touched, untouched = _touched_files(
-            spark, table_dir, parent, stats_keep
-        )
+        touched, untouched = _touched_files(spark, table_dir, man, stats_keep)
         new_files: list[str] = []
         if touched:
-            remain = spark.read.parquet(
-                *[os.path.join(table_dir, f) for f in touched]
-            ).filter(~F.coalesce(predicate, F.lit(False)))
+            remain = _scan(spark, table_dir, touched).filter(
+                ~F.coalesce(predicate, F.lit(False))
+            )
             new_files = _land_files(
                 remain, table_dir, version, sort_col, n_files
             )
@@ -802,7 +847,7 @@ def upsert_versioned(
     source: DataFrame,
     key_cols: list[str],
     stats_keep=None,
-    sort_col: str | None = None,
+    sort_col: "str | Column | None" = None,
     n_files: int | None = None,
     extra_meta: "dict | None" = None,
     retries: int = 20,
@@ -835,8 +880,6 @@ def upsert_versioned(
     landed files are removed), up to ``retries`` times — two writers
     merging different keys against the same parent both land, serially
     ordered, with neither update lost."""
-    from pyspark.sql import functions as F
-
     parent = latest_version(table_dir)
     if parent is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
@@ -903,14 +946,9 @@ def upsert_versioned(
                     conj = term if conj is None else (conj & term)
                 stats_keep = conj
         version = parent + 1
-        touched, untouched = _touched_files(
-            spark, table_dir, parent, stats_keep
-        )
+        touched, untouched = _touched_files(spark, table_dir, man, stats_keep)
         if touched:
-            target = spark.read.parquet(
-                *[os.path.join(table_dir, f) for f in touched]
-            )
-            merged = target.join(
+            merged = _scan(spark, table_dir, touched).join(
                 source.select(*key_cols), key_cols, "left_anti"
             ).unionByName(source)
         else:
@@ -962,31 +1000,18 @@ def compact_table(
 
     ``zorder_cols`` = OPTIMIZE ZORDER parity: the rewrite range-
     partitions + sorts on the interleaved Morton key
-    (layout.zorder_key; columns must be integer-quantized), so with
+    (:func:`zorder_key`; columns must be integer-quantized), so with
     ``stats_cols`` the recommitted per-file stats prune range filters
     on EVERY interleaved dimension."""
-    latest = read_versioned(spark, table_dir)
-    if zorder_cols:
-        from pyspark.sql import functions as F
-
-        from sparkgraft.sinks.layout import zorder_key
-
-        keyed = latest.withColumn(
-            "_zkey",
-            zorder_key([F.col(c) for c in zorder_cols], zorder_bits),
-        )
-        compacted = (
-            keyed.repartitionByRange(target_files, "_zkey")
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-        )
-        return write_versioned(
-            compacted, table_dir, mode="overwrite", stats_cols=stats_cols,
-            extra_meta=extra_meta,
-        )
+    zkey = (
+        zorder_key([F.col(c) for c in zorder_cols], zorder_bits)
+        if zorder_cols
+        else None
+    )
     return write_versioned(
-        latest.coalesce(target_files), table_dir, mode="overwrite",
-        stats_cols=stats_cols, extra_meta=extra_meta,
+        read_versioned(spark, table_dir), table_dir, mode="overwrite",
+        stats_cols=stats_cols, sort_col=zkey, n_files=target_files,
+        extra_meta=extra_meta,
     )
 
 

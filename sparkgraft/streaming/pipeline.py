@@ -1197,15 +1197,11 @@ def cdc_feed(
         stats, missing/NULL stats rows, or a file overlapping on all
         columns) returns False and the caller falls back to the full
         diff — an over-approximation, never a missed collision."""
-        from sparkgraft.sinks.versioned import _read_manifest, _stats_path
+        from sparkgraft.sinks.versioned import _read_manifest, _side_table
 
         pman = _read_manifest(table_dir, parent)
-        if not pman.get("stats_cols") or any(
-            k not in pman["stats_cols"] for k in key_cols
-        ):
-            return False
-        spath = _stats_path(table_dir, parent)
-        if not os.path.exists(spath):
+        spath = _side_table(table_dir, pman, "stats_file")
+        if spath is None or any(k not in pman["stats_cols"] for k in key_cols):
             return False
         aggs = []
         for k in key_cols:

@@ -56,6 +56,8 @@ def _codes_ids(spark, idx):
 
 def test_ann_compact_crash_loses_no_live_vector(spark, tmp_path, monkeypatch):
     vecs, idx, logical = _ann_after_crash(spark, tmp_path, monkeypatch)
+    with pytest.raises(RuntimeError, match="compaction is running or crashed"):
+        _serve_ann(vecs, idx)  # never a silent miss of the parked vectors
 
     assert compact_ann_index(spark, idx) == 1
     assert _codes_ids(spark, idx) == [i for i in range(60) if i != 7]

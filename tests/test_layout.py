@@ -146,160 +146,6 @@ def test_zorder_tightens_rowgroup_stats_on_both_dims(spark, tmp_path):
     assert z["y"] < x["y"] / 2, (z, x)
 
 
-def test_file_skipping_prunes_and_preserves_results(spark, tmp_path):
-    """write_with_stats + read_skipping: the pruned read opens strictly
-    fewer files yet filtered results equal the full scan's."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import (
-        prune_files,
-        read_skipping,
-        write_with_stats,
-    )
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    ev = read_table(spark, SF_DIR, "events")
-    path = str(tmp_path / "ev_stats")
-    write_with_stats(ev, path, ["ts", "value"], sort_col="ts", n_files=8)
-
-    man = spark.read.parquet(f"{path}/_stats")
-    total_files = man.count()
-    assert total_files >= 6  # the range partitioning actually split
-
-    lo, hi = "2024-01-10", "2024-01-12"
-    keep = (F.col("max_ts") >= F.lit(lo).cast("timestamp")) & (
-        F.col("min_ts") <= F.lit(hi).cast("timestamp")
-    )
-    kept = prune_files(spark, path, keep)
-    assert 0 < len(kept) < total_files  # skipping really skips
-
-    row_filter = F.col("ts").between(
-        F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
-    )
-    got = sorted(
-        tuple(r)
-        for r in read_skipping(spark, path, keep).filter(row_filter).collect()
-    )
-    want = sorted(
-        tuple(r) for r in spark.read.parquet(path).filter(row_filter).collect()
-    )
-    assert got == want and got
-
-    # Manifest row counts reconcile with the table.
-    assert man.agg(F.sum("n_rows")).first()[0] == ev.count()
-
-    # Empty-selection predicate yields an empty frame with the schema.
-    nothing = read_skipping(
-        spark, path, F.col("max_value") < F.lit(-1e18)
-    )
-    assert nothing.count() == 0
-    assert nothing.columns == spark.read.parquet(path).columns
-
-
-def test_append_with_stats_equals_rebuild(spark, tmp_path):
-    """Incremental manifest append ≡ from-scratch manifest over
-    old ∪ new; history files and their manifest rows untouched."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import (
-        append_with_stats,
-        read_skipping,
-        write_with_stats,
-    )
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    ev = read_table(spark, SF_DIR, "events")
-    old = ev.filter(F.col("ts") < F.lit("2024-01-16").cast("timestamp"))
-    new = ev.filter(F.col("ts") >= F.lit("2024-01-16").cast("timestamp"))
-
-    inc = str(tmp_path / "inc")
-    write_with_stats(old, inc, ["ts"], sort_col="ts", n_files=4)
-    man_before = {
-        r["file"]: tuple(r)
-        for r in spark.read.parquet(f"{inc}/_stats").collect()
-    }
-    append_with_stats(new, inc, ["ts"], sort_col="ts", n_files=4)
-    man_after = {
-        r["file"]: tuple(r)
-        for r in spark.read.parquet(f"{inc}/_stats").collect()
-    }
-
-    # Old manifest rows unchanged; new rows cover exactly the new files.
-    for f, row in man_before.items():
-        assert man_after[f] == row
-    assert len(man_after) > len(man_before)
-    assert spark.read.parquet(inc).count() == ev.count()
-    assert (
-        sum(r[1] for r in man_after.values()) == ev.count()
-    )  # n_rows reconciles
-
-    # The merged manifest's stats prune correctly: a ts window landing
-    # in the appended half reads only post-append files, and filtered
-    # results equal the full scan.
-    lo = F.lit("2024-01-20").cast("timestamp")
-    hi = F.lit("2024-01-22").cast("timestamp")
-    keep = (F.col("max_ts") >= lo) & (F.col("min_ts") <= hi)
-    row_filter = F.col("ts").between(lo, hi)
-    got = sorted(
-        tuple(r)
-        for r in read_skipping(spark, inc, keep).filter(row_filter).collect()
-    )
-    want = sorted(
-        tuple(r) for r in spark.read.parquet(inc).filter(row_filter).collect()
-    )
-    assert got == want and got
-
-
-def test_zorder_manifest_prunes_on_both_dimensions(spark, tmp_path):
-    """Z-order sort key + stats manifest: ONE layout serves range
-    filters on EITHER interleaved dimension — both prune files, both
-    preserve results."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import (
-        prune_files,
-        read_skipping,
-        write_with_stats,
-        zorder_key,
-    )
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    ev = read_table(spark, SF_DIR, "events")
-    # Quantize both dims to small non-negative ints for interleaving.
-    day = F.dayofmonth("ts").cast("long")          # 1..31 → 5 bits
-    ubkt = F.pmod(F.col("user_id"), 32).cast("long")
-    zkey = zorder_key([day, ubkt], bits=5)
-    path = str(tmp_path / "ev_z")
-    write_with_stats(
-        ev.withColumn("day", day).withColumn("ubkt", ubkt),
-        path,
-        ["day", "ubkt"],
-        sort_col=zkey,
-        n_files=16,
-    )
-    total = spark.read.parquet(f"{path}/_stats").count()
-
-    for col, lo, hi in (("day", 3, 6), ("ubkt", 10, 13)):
-        keep = (F.col(f"max_{col}") >= lo) & (F.col(f"min_{col}") <= hi)
-        kept = prune_files(spark, path, keep)
-        assert 0 < len(kept) < total, (col, len(kept), total)
-        row_filter = F.col(col).between(lo, hi)
-        got = sorted(
-            tuple(r)
-            for r in read_skipping(spark, path, keep)
-            .filter(row_filter)
-            .collect()
-        )
-        want = sorted(
-            tuple(r)
-            for r in spark.read.parquet(path).filter(row_filter).collect()
-        )
-        assert got == want and got
-
-
 def test_manifest_local_df_matches_distributed_read(spark, tmp_path):
     """Round-14: prune decisions read manifests as a driver-local
     LocalRelation (zero jobs) — pin schema and values, including the
@@ -308,7 +154,7 @@ def test_manifest_local_df_matches_distributed_read(spark, tmp_path):
     and confirm the filter+collect plan is a LocalTableScan."""
     from pyspark.sql import functions as F
 
-    from sparkgraft.sinks.layout import manifest_local_df
+    from sparkgraft.sinks.versioned import manifest_local_df
 
     p = str(tmp_path / "manifest")
     spark.range(5).select(
@@ -359,7 +205,7 @@ def test_bloom_keep_python_positions_match_sql_expression(spark):
     from pyspark.sql import functions as F
 
     from sparkgraft.operators.scale import _bloom_pos
-    from sparkgraft.sinks.layout import bloom_keep
+    from sparkgraft.sinks.versioned import bloom_keep
 
     values = [
         0, 1, -1, 7, -42, 2**31, -(2**31), 2**62, 999999937,
@@ -393,99 +239,3 @@ def test_bloom_keep_python_positions_match_sql_expression(spark):
         bloom_keep("user_id", 7, hashes=0)
     with pytest.raises(ValueError, match="hashes"):
         bloom_keep("user_id", F.col("x"), hashes=0)
-
-
-def test_bloom_manifest_prunes_point_lookups(spark, tmp_path):
-    """Per-file Blooms prune `col = value` where min/max can't (high-
-    cardinality unsorted column spans every file's range); zero false
-    negatives across a planted probe set."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import (
-        bloom_keep,
-        read_skipping_blooms,
-        write_bloom_manifest,
-        write_with_stats,
-    )
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    ev = read_table(spark, SF_DIR, "events")
-    path = str(tmp_path / "ev_bloom")
-    # sort by ts → event_id is scattered; range stats on event_id are
-    # useless, exactly the case blooms exist for
-    write_with_stats(ev, path, ["ts"], sort_col="ts", n_files=8)
-    write_bloom_manifest(spark, path, ["event_id"])
-    total = spark.read.parquet(f"{path}/_blooms").count()
-    assert total >= 6
-
-    ids = [r["event_id"] for r in ev.limit(20).collect()]
-    pruned_any = False
-    for eid in ids[:5]:
-        keep = bloom_keep("event_id", eid)
-        got = sorted(
-            tuple(r)
-            for r in read_skipping_blooms(spark, path, keep)
-            .filter(F.col("event_id") == eid)
-            .collect()
-        )
-        want = sorted(
-            tuple(r)
-            for r in spark.read.parquet(path)
-            .filter(F.col("event_id") == eid)
-            .collect()
-        )
-        assert got == want and got  # no false negatives
-        man = spark.read.parquet(f"{path}/_blooms")
-        n_kept = man.filter(keep).count()
-        if n_kept < total:
-            pruned_any = True
-    assert pruned_any  # blooms actually discriminate
-
-
-def test_bloom_staleness_guard_never_false_negative(spark, tmp_path):
-    """Files appended after the bloom build are unindexed — the reader
-    must scan them unconditionally until the manifest is rebuilt."""
-    from pyspark.sql import functions as F
-
-    from sparkgraft.sinks.layout import (
-        append_with_stats,
-        bloom_keep,
-        read_skipping_blooms,
-        write_bloom_manifest,
-        write_with_stats,
-    )
-    from sparkgraft.sources.readers import read_table
-    from tests.conftest import SF_DIR
-
-    ev = read_table(spark, SF_DIR, "events")
-    old = ev.filter(F.col("event_id") % 2 == 0)
-    new = ev.filter(F.col("event_id") % 2 == 1)
-    path = str(tmp_path / "ev_stale")
-    write_with_stats(old, path, ["ts"], sort_col="ts", n_files=4)
-    write_bloom_manifest(spark, path, ["event_id"])
-    append_with_stats(new, path, ["ts"], sort_col="ts", n_files=4)
-
-    # Probe an id that lives ONLY in the appended (unindexed) half.
-    eid = new.select("event_id").orderBy("event_id").first()[0]
-    got = (
-        read_skipping_blooms(spark, path, bloom_keep("event_id", eid))
-        .filter(F.col("event_id") == eid)
-        .count()
-    )
-    want = spark.read.parquet(path).filter(F.col("event_id") == eid).count()
-    assert got == want and got > 0
-
-    # After a rebuild, the same probe prunes again (fewer files kept
-    # than the table holds) with identical results.
-    write_bloom_manifest(spark, path, ["event_id"])
-    man = spark.read.parquet(f"{path}/_blooms")
-    assert man.count() == len(
-        set(spark.read.parquet(path).inputFiles())
-    )
-    got2 = (
-        read_skipping_blooms(spark, path, bloom_keep("event_id", eid))
-        .filter(F.col("event_id") == eid)
-        .count()
-    )
-    assert got2 == want

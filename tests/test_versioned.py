@@ -8,12 +8,21 @@ import os
 import pytest
 
 from sparkgraft.sinks.versioned import (
+    _read_manifest,
+    _side_table,
     latest_version,
     read_versioned,
     table_history,
     vacuum,
     write_versioned,
 )
+
+
+def _stats_table(table_dir, version):
+    """The per-file stats table a committed version recorded."""
+    return _side_table(
+        table_dir, _read_manifest(table_dir, version), "stats_file"
+    )
 
 
 def df_of(spark, ids):
@@ -150,6 +159,46 @@ def test_versioned_stats_skipping_prunes_and_is_transparent(spark, tmp_path):
         .collect()
     )
     assert a == b and len(a) == hi - lo + 1
+    # a predicate no file survives: zero rows with the table's columns
+    nothing = read_versioned_skipping(
+        spark, t, F.col("max_k") < F.lit(-1), version=0
+    )
+    assert nothing.count() == 0 and nothing.columns == ["k", "v"]
+
+
+def test_zorder_sort_col_with_stats_prunes_both_dims(spark, tmp_path):
+    """A zorder_key sort_col and stats_cols in ONE write_versioned: the
+    commit's per-file stats prune range filters on EITHER interleaved
+    dimension, and both pruned reads stay exact."""
+    from pyspark.sql import functions as F
+
+    from sparkgraft.sinks.layout import zorder_key
+    from sparkgraft.sinks.versioned import read_versioned_skipping
+    from sparkgraft.sources.readers import read_table
+    from tests.conftest import SF_DIR
+
+    ev = read_table(spark, SF_DIR, "events").select(
+        "event_id",
+        F.dayofmonth("ts").cast("long").alias("day"),
+        F.pmod(F.col("user_id"), 32).cast("long").alias("ubkt"),
+    )
+    t = str(tmp_path / "vt")
+    write_versioned(
+        ev, t, mode="overwrite", stats_cols=["day", "ubkt"],
+        sort_col=zorder_key([F.col("day"), F.col("ubkt")], bits=5),
+        n_files=16,
+    )
+    total = len(_read_manifest(t, 0)["files"])
+    for col, lo, hi in (("day", 3, 6), ("ubkt", 10, 13)):
+        keep = (F.col(f"max_{col}") >= lo) & (F.col(f"min_{col}") <= hi)
+        pruned = read_versioned_skipping(spark, t, keep)
+        assert 0 < len(pruned.inputFiles()) < total, (col, total)
+        row_filter = F.col(col).between(lo, hi)
+        got = sorted(map(tuple, pruned.filter(row_filter).collect()))
+        want = sorted(
+            map(tuple, read_versioned(spark, t).filter(row_filter).collect())
+        )
+        assert got == want and got
 
 
 def test_versioned_stats_append_carries_parent_stats(spark, tmp_path):
@@ -159,7 +208,6 @@ def test_versioned_stats_append_carries_parent_stats(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkgraft.sinks.versioned import (
-        _stats_path,
         read_versioned,
         read_versioned_skipping,
         write_versioned,
@@ -176,8 +224,8 @@ def test_versioned_stats_append_carries_parent_stats(spark, tmp_path):
                     sort_col="k", n_files=4)
     write_versioned(extra, t, mode="append", stats_cols=["k"],
                     sort_col="k", n_files=2)
-    s0 = spark.read.parquet(_stats_path(t, 0))
-    s1 = spark.read.parquet(_stats_path(t, 1))
+    s0 = spark.read.parquet(_stats_table(t, 0))
+    s1 = spark.read.parquet(_stats_table(t, 1))
     assert s1.count() == s0.count() + 2  # parent rows carried + 2 new
     # v1 stats describe exactly v1's manifest files
     man_files = set(read_versioned(spark, t, version=1).inputFiles())
@@ -825,7 +873,6 @@ def test_commit_recomputes_missing_carried_stats(spark, tmp_path):
 
     from sparkgraft.sinks.versioned import (
         _read_manifest,
-        _stats_path,
         read_versioned,
         read_versioned_skipping,
         stats_summary,
@@ -843,7 +890,7 @@ def test_commit_recomputes_missing_carried_stats(spark, tmp_path):
     write_versioned(extra, t, mode="append", stats_cols=["k"],
                     sort_col="k", n_files=2)
     man = _read_manifest(t, 1)
-    stats = spark.read.parquet(_stats_path(t, 1))
+    stats = spark.read.parquet(_stats_table(t, 1))
     covered = {r["file"] for r in stats.select("file").collect()}
     assert covered == set(man["files"])  # EVERY manifest file has stats
     s = stats_summary(spark, t).first()
@@ -864,7 +911,6 @@ def test_commit_recomputes_carried_stats_on_column_mismatch(spark, tmp_path):
     the child's — a mismatch recomputes instead of committing a stats
     table with mixed column meanings."""
     from sparkgraft.sinks.versioned import (
-        _stats_path,
         stats_summary,
         write_versioned,
     )
@@ -878,7 +924,7 @@ def test_commit_recomputes_carried_stats_on_column_mismatch(spark, tmp_path):
         spark.createDataFrame([(100, 5.0)], "k long, v double"),
         t, mode="append", stats_cols=["k"],
     )
-    stats = spark.read.parquet(_stats_path(t, 1))
+    stats = spark.read.parquet(_stats_table(t, 1))
     assert {"min_k", "max_k", "nulls_k"} <= set(stats.columns)
     s = stats_summary(spark, t).first()
     assert s["n_rows"] == 101 and s["min_k"] == 0 and s["max_k"] == 100
@@ -1155,7 +1201,6 @@ def test_commit_conflict_detected_and_loser_cleaned(spark, tmp_path):
         _commit,
         _land_files,
         _read_manifest,
-        _stats_path,
         latest_version,
         read_versioned,
         write_versioned,
@@ -1179,7 +1224,7 @@ def test_commit_conflict_detected_and_loser_cleaned(spark, tmp_path):
     # ... A claims v1 first and wins;
     _commit(spark, t, 1, 0, "append", man0["files"] + fa, ["k"], fa,
             man0["files"])
-    winner_stats = _stats_path(t, 1)
+    winner_stats = _stats_table(t, 1)
     # ... B's claim of the same version must conflict, not overwrite.
     with pytest.raises(CommitConflictError):
         _commit(spark, t, 1, 0, "append", man0["files"] + fb, ["k"], fb,
@@ -1187,7 +1232,7 @@ def test_commit_conflict_detected_and_loser_cleaned(spark, tmp_path):
     # Winner's commit is intact: manifest lists A's files, stats path
     # unchanged and readable, no leftover loser stats directories.
     assert _read_manifest(t, 1)["files"] == man0["files"] + fa
-    assert _stats_path(t, 1) == winner_stats
+    assert _stats_table(t, 1) == winner_stats
     assert os.path.exists(winner_stats)
     stats_dirs = glob.glob(os.path.join(t, "_manifests", "v1_stats-*"))
     assert stats_dirs == [winner_stats]
@@ -1449,6 +1494,36 @@ def test_bloom_manifest_in_commit_log_prunes_time_travel(spark, tmp_path):
         tuple(r) for r in read_versioned(spark, t).collect()
     )
     assert len(full) == 401 and (137, -1.0) in full
+
+
+def test_bloom_enabled_on_append_covers_unindexed_parent(spark, tmp_path):
+    """An append that first turns on bloom_cols over a parent committed
+    without Blooms indexes the carried files too (the commit's coverage
+    rule), so an id living only in the parent's files is still found."""
+    from pyspark.sql import functions as F
+
+    from sparkgraft.sinks.versioned import read_versioned_bloom
+    from sparkgraft.sources.readers import read_table
+    from tests.conftest import SF_DIR
+
+    ev = read_table(spark, SF_DIR, "events")
+    old = ev.filter(F.col("event_id") % 2 == 0)
+    new = ev.filter(F.col("event_id") % 2 == 1)
+    t = str(tmp_path / "vt")
+    write_versioned(old, t, mode="overwrite", stats_cols=["ts"],
+                    sort_col="ts", n_files=4)
+    write_versioned(new, t, mode="append", stats_cols=["ts"],
+                    bloom_cols=["event_id"], sort_col="ts", n_files=4)
+    man = _read_manifest(t, 1)
+    bm = spark.read.parquet(_side_table(t, man, "bloom_file"))
+    assert {r["file"] for r in bm.select("file").collect()} == set(man["files"])
+
+    eid = old.select("event_id").orderBy("event_id").first()[0]
+    hit = read_versioned_bloom(spark, t, {"event_id": eid})
+    got = hit.filter(F.col("event_id") == eid).count()
+    want = read_versioned(spark, t).filter(F.col("event_id") == eid).count()
+    assert got == want and got > 0
+    assert len(hit.inputFiles()) < len(man["files"])  # pruning is real
 
 
 def test_gdpr_delete_propagates_and_vacuum_forgets(spark, tmp_path):

@@ -14,6 +14,7 @@ rounded on BOTH sides at a precision far above the engines' noise floor.
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
 import shutil
@@ -58,9 +59,19 @@ def _artifact(
     return _ARTIFACTS[key]
 
 
+# Directories that ``_artifact_dir`` fixtures were staged in.
+_ARTIFACT_DIRS: list[str] = []
+
+
 def clear_artifacts() -> None:
-    """Drop every memoized artifact (e.g. after stopping a session)."""
+    """Drop every memoized artifact (e.g. after stopping a session) and
+    delete the directories staged for them.  Also runs at exit."""
     _ARTIFACTS.clear()
+    while _ARTIFACT_DIRS:
+        shutil.rmtree(_ARTIFACT_DIRS.pop(), ignore_errors=True)
+
+
+atexit.register(clear_artifacts)
 
 
 def _scratch_rows(
@@ -73,6 +84,21 @@ def _scratch_rows(
     def run():
         with tempfile.TemporaryDirectory(prefix=f"sparkgraft_{name}_") as tmp:
             return build(tmp)
+
+    return _artifact(name, spark, sf_dir, run)
+
+
+def _artifact_dir(
+    name: str, spark: SparkSession, sf_dir: str, build: Callable[[str], object]
+):
+    """``_artifact`` for a fixture staged on disk: ``build(tmp)`` writes
+    into a fresh ``sparkgraft_<name>_`` directory that lives until
+    :func:`clear_artifacts`."""
+
+    def run():
+        tmp = tempfile.mkdtemp(prefix=f"sparkgraft_{name}_")
+        _ARTIFACT_DIRS.append(tmp)
+        return build(tmp)
 
     return _artifact(name, spark, sf_dir, run)
 
@@ -1889,11 +1915,10 @@ def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim: the round trip must be bit-identical to the in-memory
     operator."""
     import os
-    import tempfile
 
     from sparkgraft.sinks.ann_index import ivfpq_topk_indexed, write_ann_index
 
-    def build():
+    def build(idx):
         emb = _t(spark, sf_dir, "embeddings")
         cents = _ivf_centroids(spark, sf_dir)
         sub = len(cents[0][1]) // 8
@@ -1901,11 +1926,10 @@ def q_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(c, v[s * sub : (s + 1) * sub]) for c, v in cents]
             for s in range(8)
         ]
-        idx = tempfile.mkdtemp(prefix="sparkgraft_annidx_")
         write_ann_index(idx, emb, cents, cbs)
         return idx
 
-    idx = _artifact("ann_index_dir", spark, sf_dir, build)
+    idx = _artifact_dir("ann_index_dir", spark, sf_dir, build)
     emb = _t(spark, sf_dir, "embeddings")
     return ivfpq_topk_indexed(
         emb.filter(F.col("vec_id") < 10),
@@ -1928,8 +1952,6 @@ def q_ann_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted inline), and both must equal an index that never held
     those vectors: the oracle is ivfpq_ann's full DuckDB mirror with
     the ids excluded from the candidate side."""
-    import tempfile
-
     from sparkgraft.sinks.ann_index import (
         compact_ann_index,
         delete_ann_index,
@@ -1939,7 +1961,7 @@ def q_ann_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     forget = [11, 13, 17]
 
-    def build():
+    def build(idx):
         emb = _t(spark, sf_dir, "embeddings")
         cents = _ivf_centroids(spark, sf_dir)
         sub = len(cents[0][1]) // 8
@@ -1947,12 +1969,11 @@ def q_ann_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(c, v[s * sub : (s + 1) * sub]) for c, v in cents]
             for s in range(8)
         ]
-        idx = tempfile.mkdtemp(prefix="sparkgraft_annforget_")
         write_ann_index(idx, emb, cents, cbs)
         delete_ann_index(spark, idx, forget)
         return idx
 
-    idx = _artifact("ann_forget_dir", spark, sf_dir, build)
+    idx = _artifact_dir("ann_forget_dir", spark, sf_dir, build)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
 
@@ -2744,12 +2765,9 @@ def q_snapshot_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _snapshot_table(spark: SparkSession, sf_dir: str) -> str:
     """snapshot_travel's versioned orders table (three commits), staged
     once per (session, sf_dir); versioned_reads reads it too."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import write_versioned
 
-    def build():
-        t = tempfile.mkdtemp(prefix="sparkgraft_vtbl_")
+    def build(t):
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -2771,7 +2789,7 @@ def _snapshot_table(spark: SparkSession, sf_dir: str) -> str:
         )
         return t
 
-    return _artifact("snapshot_table", spark, sf_dir, build)
+    return _artifact_dir("snapshot_table", spark, sf_dir, build)
 
 
 def _unigram_pieces_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2835,16 +2853,13 @@ def q_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact scoring — same fixture as bm25_search, so its DuckDB oracle
     applies verbatim: the round trip must be bit-identical to the
     in-memory operator."""
-    import tempfile
-
     from sparkgraft.sinks.bm25_index import bm25_topk_indexed, write_bm25_index
 
-    def build():
-        idx = tempfile.mkdtemp(prefix="sparkgraft_bm25idx_")
+    def build(idx):
         write_bm25_index(idx, _t(spark, sf_dir, "documents"))
         return idx
 
-    idx = _artifact("bm25_index_dir", spark, sf_dir, build)
+    idx = _artifact_dir("bm25_index_dir", spark, sf_dir, build)
     return bm25_topk_indexed(spark, idx, ["hash", "join", "vector"], k=10)
 
 
@@ -2862,7 +2877,6 @@ def q_bm25_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus minus the ids: the oracle recomputes the full BM25
     pipeline on the filtered corpus."""
     import os
-    import tempfile
 
     from sparkgraft.sinks.bm25_index import (
         bm25_topk_indexed,
@@ -2873,13 +2887,12 @@ def q_bm25_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     forget = [459, 292, 476]
 
-    def build():
-        idx = tempfile.mkdtemp(prefix="sparkgraft_bm25forget_")
+    def build(idx):
         write_bm25_index(idx, _t(spark, sf_dir, "documents"))
         delete_bm25_index(spark, idx, forget)
         return idx
 
-    idx = _artifact("bm25_forget_dir", spark, sf_dir, build)
+    idx = _artifact_dir("bm25_forget_dir", spark, sf_dir, build)
 
     def serve():
         return bm25_topk_indexed(
@@ -3441,8 +3454,6 @@ def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (two 10-minute "files" of 100 Hz-style samples), once per
     (session, sf_dir).
     """
-    import tempfile
-
     import numpy as np
 
     from sparkgraft.operators.multimodal import (
@@ -3451,10 +3462,9 @@ def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkgraft.sinks.kv import register_image, stats_to_kv
 
-    def build():
+    def build(tmp):
         events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 1000)
         pdf = events.select("event_id", "value").orderBy("event_id").toPandas()
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_e1_")
         half = len(pdf) // 2
         for i, chunk in enumerate((pdf[:half], pdf[half:])):
             n = len(chunk)
@@ -3471,7 +3481,7 @@ def q_e1_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(blob)
         return tmp
 
-    tmp = _artifact("e1_flagship", spark, sf_dir, build)
+    tmp = _artifact_dir("e1_flagship", spark, sf_dir, build)
 
     samples = decode_sample_files(
         spark.read.format("binaryFile").load(tmp)
@@ -4178,11 +4188,9 @@ def _backfill_landing(spark: SparkSession, sf_dir: str) -> str:
     events slice), staged once per (session, sf_dir).  Also read by the
     pruning assert in tests/test_layout.py, so that test never globs
     /tmp, where stale dirs from other sessions linger."""
-    import tempfile
-
-    def build():
+    def build(tmp):
         events = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-        landing = tempfile.mkdtemp(prefix="sparkgraft_backfill_") + "/landing"
+        landing = f"{tmp}/landing"
         (
             events.select(
                 "event_id",
@@ -4196,7 +4204,7 @@ def _backfill_landing(spark: SparkSession, sf_dir: str) -> str:
         )
         return landing
 
-    return _artifact("backfill_landing", spark, sf_dir, build)
+    return _artifact_dir("backfill_landing", spark, sf_dir, build)
 
 
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4676,12 +4684,9 @@ def q_version_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _version_cdc_table(spark: SparkSession, sf_dir: str) -> str:
     """version_cdc's two-commit versioned orders table, staged once per
     (session, sf_dir); stream_cdc drains the same commits."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import write_versioned
 
-    def build():
-        t = tempfile.mkdtemp(prefix="sparkgraft_cdc_")
+    def build(t):
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
@@ -4697,7 +4702,7 @@ def _version_cdc_table(spark: SparkSession, sf_dir: str) -> str:
         write_versioned(v1, t, mode="overwrite")
         return t
 
-    return _artifact("version_cdc_table", spark, sf_dir, build)
+    return _artifact_dir("version_cdc_table", spark, sf_dir, build)
 
 
 SQL_QUANTIFIED = """
@@ -4818,10 +4823,8 @@ def q_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     false-negative-free, so the plain-SQL oracle is exact."""
     from sparkgraft.sinks.versioned import read_versioned_bloom, write_versioned
 
-    def build():
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sparkgraft_bloomskip_") + "/events"
+    def build(tmp):
+        path = f"{tmp}/events"
         write_versioned(
             _t(spark, sf_dir, "events"), path, mode="overwrite",
             stats_cols=["ts"], bloom_cols=["user_id"], sort_col="ts",
@@ -4829,7 +4832,7 @@ def q_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return path
 
-    path = _artifact("bloom_skipping_dir", spark, sf_dir, build)
+    path = _artifact_dir("bloom_skipping_dir", spark, sf_dir, build)
     uids = [3, 17, 42, 71, 99]
     return (
         read_versioned_bloom(spark, path, {"user_id": uids})
@@ -4860,10 +4863,8 @@ def q_bloom_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    def build():
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sparkgraft_bloomtravel_") + "/events"
+    def build(tmp):
+        path = f"{tmp}/events"
         ev = _t(spark, sf_dir, "events")
         write_versioned(
             ev.filter(F.col("event_id") % 2 == 0), path, mode="overwrite",
@@ -4876,7 +4877,7 @@ def q_bloom_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return path
 
-    path = _artifact("bloom_travel_dir", spark, sf_dir, build)
+    path = _artifact_dir("bloom_travel_dir", spark, sf_dir, build)
     uids = [3, 17, 42, 71, 99]
 
     def leg(df, method: str) -> DataFrame:
@@ -5171,17 +5172,15 @@ def q_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain-SQL oracle exact."""
     from sparkgraft.sinks.versioned import read_versioned_skipping, write_versioned
 
-    def build():
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sparkgraft_skip_") + "/events"
+    def build(tmp):
+        path = f"{tmp}/events"
         write_versioned(
             _t(spark, sf_dir, "events"), path, mode="overwrite",
             stats_cols=["ts", "value"], sort_col="ts", n_files=8,
         )
         return path
 
-    path = _artifact("file_skipping", spark, sf_dir, build)
+    path = _artifact_dir("file_skipping", spark, sf_dir, build)
     lo = F.lit("2024-01-10").cast("timestamp")
     hi = F.lit("2024-01-13").cast("timestamp")
     keep = (F.col("max_ts") >= lo) & (F.col("min_ts") <= hi)
@@ -5402,8 +5401,6 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source key range).  Every version then reads back through time
     travel and summarizes — deterministic slice definitions make the
     DuckDB mirror exact."""
-    import tempfile
-
     from sparkgraft.sinks.versioned import (
         delete_versioned,
         read_versioned,
@@ -5411,8 +5408,7 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    def build():
-        t = tempfile.mkdtemp(prefix="sparkgraft_vmerge_")
+    def build(t):
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -5441,7 +5437,7 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return t
 
-    t = _artifact("versioned_merge_table", spark, sf_dir, build)
+    t = _artifact_dir("versioned_merge_table", spark, sf_dir, build)
     return _multi_version_summary(spark, t, 3)
 
 
@@ -5749,11 +5745,14 @@ def q_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE sink witness (ORACLE-checked — round-5 verdict
     task 4): three ts-slices of events drain through ``merge_sink``
-    keyed by user_id with event_id as the within-batch order (globally
-    unique, so newest-per-key is deterministic); each micro-batch
-    commits ONE upsert version (batch 1 creates the table).  The final
-    table therefore holds, per user, the max-event_id row of the LAST
-    slice containing that user — plain slice algebra, SQL-exact.
+    keyed by user_id with event_id as the order (globally unique, so
+    newest-per-key is deterministic); each micro-batch commits ONE
+    upsert version (batch 1 creates the table).  Across batches a row
+    whose user is already stored with a larger event_id is late and
+    dropped, so the final table holds, per user, the max-event_id row
+    over all slices.  On the events fixture no user's max event_id in
+    the LAST slice containing it falls below an earlier slice's, so
+    that row is the last slice's — plain slice algebra, SQL-exact.
     Replay idempotence is asserted in tests/test_versioned.py.
     Fixture memoized per (session, sf_dir)."""
     from sparkgraft.sinks.versioned import read_versioned

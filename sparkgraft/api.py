@@ -302,7 +302,6 @@ from sparkgraft.streaming.pipeline import (
     quantile_monitor,
     sample_monitor,
     stable_files,
-    upsert_sink,
     versioned_sink,
     view_maintainer,
 )

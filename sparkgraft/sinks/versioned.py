@@ -52,6 +52,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+import warnings
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -155,12 +156,18 @@ def manifest_local_df(spark: SparkSession, path: str) -> DataFrame:
     is exact for the table's column classes (strings, longs, doubles,
     UTC-adjusted timestamps, array<long> bitmaps) — pinned against the
     distributed read in tests/test_layout.py.  Any surprise (non-local
-    path, unreadable footer) falls back to the distributed read."""
+    path, unreadable footer) falls back to the distributed read with a
+    warning naming the path and the exception class."""
     try:
         import pyarrow.parquet as pq
 
         return spark.createDataFrame(pq.read_table(path))
-    except Exception:
+    except Exception as exc:
+        warnings.warn(
+            f"manifest_local_df({path}): local read failed "
+            f"({type(exc).__name__}); falling back to spark.read.parquet",
+            stacklevel=2,
+        )
         return spark.read.parquet(path)
 
 
@@ -475,7 +482,7 @@ def _per_file_table(
     rescan — so the table covers EVERY manifest file."""
     parts, fresh = [], list(carried_files)
     if carried_files and parent_table:
-        rows = spark.read.parquet(parent_table).filter(
+        rows = manifest_local_df(spark, parent_table).filter(
             F.col("file").isin(carried_files)
         )
         # bounded collect: one row per carried file
@@ -762,6 +769,35 @@ def read_versioned_bloom(
     return _pruned(spark, table_dir, v, kept | (set(man["files"]) - indexed))
 
 
+def _key_range_keep(
+    source: DataFrame, key_cols: list[str], stats_cols
+) -> "Column | None":
+    """Stats predicate "this file may hold a key of ``source``": the
+    per-key-column overlap of each file's [min, max] with the source's
+    [lo, hi], ANDed over the key columns (composite keys prune
+    conjunctively: disjointness on ANY column proves no tuple
+    equality).  None when a key column has no commit-log stats;
+    ``F.lit(False)`` when a key column is entirely NULL in the source
+    (such rows never equal a stored key).  A file whose stats are NULL
+    makes the conjunction NULL, which :func:`_touched_files` counts as
+    touched — a missed pruning, never a missed match."""
+    if not key_cols or any(k not in (stats_cols or []) for k in key_cols):
+        return None
+    aggs = []
+    for k in key_cols:
+        aggs += [F.min(k).alias(f"lo_{k}"), F.max(k).alias(f"hi_{k}")]
+    bounds = source.agg(*aggs).first()
+    if any(bounds[f"lo_{k}"] is None for k in key_cols):
+        return F.lit(False)
+    conj = None
+    for k in key_cols:
+        term = (F.col(f"max_{k}") >= F.lit(bounds[f"lo_{k}"])) & (
+            F.col(f"min_{k}") <= F.lit(bounds[f"hi_{k}"])
+        )
+        conj = term if conj is None else (conj & term)
+    return conj
+
+
 def _touched_files(
     spark: SparkSession, table_dir: str, man: dict, stats_keep
 ) -> tuple[list[str], list[str]]:
@@ -906,45 +942,12 @@ def upsert_versioned(
     auto_keep = stats_keep is None
     for attempt in range(retries + 1):
         man = _read_manifest(table_dir, parent)
-        stats_cols = man.get("stats_cols") or []
         if auto_keep:
             # Re-derived per attempt: a conflict's new parent may carry
             # DIFFERENT stats_cols, and a stale predicate referencing
             # min_/max_ columns absent from the new stats table would
             # crash the retry instead of falling back to all-files.
-            stats_keep = None
-        if (
-            auto_keep
-            and key_cols
-            and all(k in stats_cols for k in key_cols)
-        ):
-            # Composite keys prune conjunctively: a file MAY contain a
-            # source key only if its [min, max] overlaps the source's
-            # range on EVERY key column — disjointness on ANY column
-            # proves no tuple equality (sound over-approximation).  A
-            # file whose stats are NULL on some column (all values
-            # NULL there — min/max ignore NULLs) makes the conjunction
-            # NULL, and _touched_files treats a NULL _keep as touched:
-            # such files are conservatively REWRITTEN, not pruned — a
-            # missed pruning, never a missed match (they can't match
-            # on the all-NULL column, but proving that isn't worth a
-            # special case for a degenerate stats shape).
-            aggs = []
-            for k in key_cols:
-                aggs += [F.min(k).alias(f"lo_{k}"), F.max(k).alias(f"hi_{k}")]
-            bounds = source.agg(*aggs).first()
-            if any(bounds[f"lo_{k}"] is None for k in key_cols):
-                # Some key column is entirely NULL in the source: no
-                # source row can match any target row — pure insert.
-                stats_keep = F.lit(False)
-            else:
-                conj = None
-                for k in key_cols:
-                    term = (
-                        F.col(f"max_{k}") >= F.lit(bounds[f"lo_{k}"])
-                    ) & (F.col(f"min_{k}") <= F.lit(bounds[f"hi_{k}"]))
-                    conj = term if conj is None else (conj & term)
-                stats_keep = conj
+            stats_keep = _key_range_keep(source, key_cols, man.get("stats_cols"))
         version = parent + 1
         touched, untouched = _touched_files(spark, table_dir, man, stats_keep)
         if touched:

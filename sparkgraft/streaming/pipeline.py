@@ -211,105 +211,6 @@ class FilePipeline:
         )
 
 
-def upsert_sink(
-    stream,
-    table_path: str,
-    key_cols: list[str],
-    order_col: str,
-    checkpoint_dir: str,
-):
-    """Exactly-once streaming upsert into a parquet table via
-    ``foreachBatch``: each micro-batch MERGEs (last-writer-wins on
-    ``order_col``, ACROSS batches — a later micro-batch carrying a
-    LATE row, i.e. an older ``order_col`` for a stored key, does NOT
-    overwrite newer stored state) and an in-table ``_batch_id`` ledger
-    makes replays idempotent — a batch that already landed is skipped,
-    so checkpoint recovery after a crash between "write" and "commit"
-    cannot double-apply (the classic foreachBatch at-least-once →
-    exactly-once upgrade).
-
-    Parquet stands in for the transactional table format a production
-    deployment would use (Delta/Iceberg MERGE INTO); the batch-ledger
-    + merge semantics are identical.  The parquet-level commit is two
-    overwrites (write ``_next``, then rewrite ``table_path``); a crash
-    during the second leaves ``_next`` as a complete copy, and the
-    read path falls back to it — only a transactional format removes
-    the residual window entirely (a partial ``table_path`` that still
-    parses would not trigger the fallback).
-
-    Returns the started StreamingQuery.
-    """
-
-    def _read_current(spark):
-        """The stored table, surviving a crash mid-commit: if
-        ``table_path`` is unreadable, ``table_path + "_next"`` was
-        written completely BEFORE the final overwrite started, so it
-        is the last committed state.  The fallback REPAIRS the torn
-        commit immediately (re-materializes ``table_path`` from
-        ``_next``) so every later batch reads from ``table_path`` —
-        otherwise the next merge would compute lazily from ``_next``
-        and then overwrite the very path it is reading ("Cannot
-        overwrite a path that is also being read from"), wedging the
-        stream after exactly the crash the fallback exists to survive.
-        None = first batch ever."""
-        try:
-            return spark.read.parquet(table_path)
-        except Exception as exc:
-            missing = (
-                "PATH_NOT_FOUND" in str(exc)
-                or "Path does not exist" in str(exc)
-            )
-            try:
-                recovered = spark.read.parquet(table_path + "_next")
-            except Exception:
-                if missing:
-                    return None  # genuinely first batch
-                raise exc
-            # Finish the interrupted second half of the commit, then
-            # serve the repaired table_path copy.
-            recovered.write.mode("overwrite").parquet(table_path)
-            return spark.read.parquet(table_path)
-
-    def apply_batch(batch, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        # Last-per-key within the batch (order_col desc) — the merge
-        # expects unique update keys.
-        w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-        tagged = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .withColumn("_batch_id", F.lit(batch_id))
-        )
-        current = _read_current(spark)
-        if current is None:
-            merged = tagged
-        else:
-            if current.filter(F.col("_batch_id") == batch_id).limit(1).count():
-                return  # replayed batch: already applied
-            # Cross-batch conflict resolution BY order_col (not by
-            # arrival): union stored + incoming, keep the newest row
-            # per key; _batch_id desc breaks exact order_col ties in
-            # favour of the later batch.
-            wx = Window.partitionBy(*key_cols).orderBy(
-                F.col(order_col).desc(), F.col("_batch_id").desc()
-            )
-            merged = (
-                current.unionByName(tagged)
-                .withColumn("_rn", F.row_number().over(wx))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        merged.write.mode("overwrite").parquet(table_path + "_next")
-        spark.read.parquet(table_path + "_next").write.mode(
-            "overwrite"
-        ).parquet(table_path)
-
-    return _drain(stream, apply_batch, checkpoint_dir)
-
-
 def _drain(stream, on_batch, checkpoint_dir: str):
     """Start ``on_batch`` as a ``foreachBatch`` query that drains what
     the source holds now (``Trigger.AvailableNow``), then stops."""
@@ -1111,7 +1012,6 @@ def cdc_feed(
     checkpoint_dir: str,
     sink,
     include_values: bool = False,
-    append_fast_path: bool = True,
 ):
     """Streaming change-data feed from versioned-table commits (the
     readChangeFeed analog for sinks/versioned.py): every committed
@@ -1134,28 +1034,29 @@ def cdc_feed(
     take a fast path — their changes are exactly the rows of their
     new files, read directly and emitted as 'added' with NO join
     touching the table (changed-rows-sized work).  The fast path is
-    only sound when the appended keys are NEW, so with
-    ``append_fast_path=True`` (default) it is taken only when that is
-    cheaply PROVABLE from the parent's commit-log stats (every key
-    column in stats_cols, and no parent file whose [min, max] overlaps
-    the fresh key range on ALL key columns — composite keys prune
-    conjunctively); otherwise the commit falls back to the full
-    snapshot_diff — a re-added existing key is then classified
-    correctly instead of double-counting as 'added'.  Callers that
-    guarantee the new-keys contract themselves (e.g. a versioned_sink
-    ingest keyed by a globally unique event id whose ranges interleave)
-    can pass ``append_fast_path="assume"`` to take the fast path
-    unconditionally; ``False`` disables it.  The first fallback logs a
-    warning (logger ``sparkgraft.streaming``) naming the table and the
-    remedies — the correctness is silent but the O(table)-per-commit
-    cost cliff should not be.  Overwrite/delete/merge commits always
-    run the full snapshot_diff (one co-partitioned full-outer join of
-    the two referenced snapshots).
+    only sound when the appended keys are NEW, so it is taken only
+    when that is cheaply PROVABLE from the parent's commit-log stats
+    (every key column in stats_cols, and no parent file whose
+    [min, max] overlaps the fresh key range on ALL key columns —
+    composite keys prune conjunctively); otherwise the commit falls
+    back to the full snapshot_diff — a re-added existing key is then
+    classified correctly instead of double-counting as 'added'.  The
+    first fallback logs a warning (logger ``sparkgraft.streaming``)
+    naming the table and the remedy, single-key ``stats_cols`` on the
+    table — the correctness is silent but the O(table)-per-commit cost
+    cliff should not be.  Overwrite/delete/merge commits always run
+    the full snapshot_diff (one co-partitioned full-outer join of the
+    two referenced snapshots).
 
     Returns the started StreamingQuery.
     """
     from sparkgraft.operators.merge import snapshot_diff
-    from sparkgraft.sinks.versioned import read_versioned
+    from sparkgraft.sinks.versioned import (
+        _key_range_keep,
+        _read_manifest,
+        _touched_files,
+        read_versioned,
+    )
 
     manifest_glob = os.path.join(table_dir, "_manifests")
     fallback_seen: list = []  # once-per-stream fallback-warning latch
@@ -1186,57 +1087,20 @@ def cdc_feed(
         )
 
     def _keys_provably_new(bs, parent: int, fresh_df) -> bool:
-        """Cheap new-keys validation for the append fast path: with
-        every key column in the parent's commit-log stats, the fresh
-        files' per-column key ranges are compared against every parent
-        file's [min, max] — a parent file can hold a colliding key
-        tuple only if it overlaps on EVERY key column (composite keys
-        prune conjunctively: disjointness on ANY column proves tuple
-        disjointness), so no file overlapping on all columns proves
-        every appended key new.  Not provable (key column without
-        stats, missing/NULL stats rows, or a file overlapping on all
-        columns) returns False and the caller falls back to the full
-        diff — an over-approximation, never a missed collision."""
-        from sparkgraft.sinks.versioned import _read_manifest, _side_table
-
+        """Cheap new-keys validation for the append fast path: the
+        fresh files' key-range predicate (versioned._key_range_keep)
+        keeps no parent file.  Not provable (a key column without
+        stats, a parent file the stats table lacks or with NULL stats,
+        or a file overlapping on every key column) returns False and
+        the caller falls back to the full diff — an over-approximation,
+        never a missed collision."""
         pman = _read_manifest(table_dir, parent)
-        spath = _side_table(table_dir, pman, "stats_file")
-        if spath is None or any(k not in pman["stats_cols"] for k in key_cols):
-            return False
-        aggs = []
-        for k in key_cols:
-            aggs += [F.min(k).alias(f"lo_{k}"), F.max(k).alias(f"hi_{k}")]
-        b = fresh_df.agg(*aggs).first()
-        if any(b[f"lo_{k}"] is None for k in key_cols):
-            # Some key column carries no non-NULL value in the fresh
-            # files: every appended row has a NULL there and can never
-            # equal a parent key tuple — vacuously new.
-            return True
-        stats = bs.read.parquet(spath).filter(
-            F.col("file").isin(pman["files"])
-        )
-        covered = stats.count() == len(pman["files"])
-        if not covered:
-            return False
-        overlap_all_cols = None
-        for k in key_cols:
-            term = (
-                F.col(f"min_{k}").isNull()
-                | F.col(f"max_{k}").isNull()
-                | (
-                    (F.col(f"max_{k}") >= F.lit(b[f"lo_{k}"]))
-                    & (F.col(f"min_{k}") <= F.lit(b[f"hi_{k}"]))
-                )
-            )
-            overlap_all_cols = (
-                term if overlap_all_cols is None else overlap_all_cols & term
-            )
-        overlap = stats.filter(overlap_all_cols).limit(1).count()
-        return overlap == 0
+        keep = _key_range_keep(fresh_df, key_cols, pman.get("stats_cols"))
+        return keep is not None and not _touched_files(
+            bs, table_dir, pman, keep
+        )[0]
 
     def on_batch(batch, batch_id: int) -> None:
-        from sparkgraft.sinks.versioned import _read_manifest
-
         bs = batch.sparkSession
         commits = sorted(
             (r["version"], r["parent"], r["operation"])
@@ -1264,14 +1128,9 @@ def cdc_feed(
             # changed) — read ONLY those files instead of full-outer-
             # joining two table-sized snapshots.  Sound only for NEW
             # keys: taken when the parent's commit-log stats prove the
-            # fresh key range disjoint, or unconditionally under
-            # "assume" (caller-guaranteed contract); otherwise the
-            # commit falls back to the full diff.
-            if (
-                append_fast_path
-                and operation == "append"
-                and parent is not None
-            ):
+            # fresh key range disjoint; otherwise the commit falls back
+            # to the full diff.
+            if operation == "append" and parent is not None:
                 man_new = set(_read_manifest(table_dir, version)["files"])
                 man_old = set(_read_manifest(table_dir, parent)["files"])
                 fresh = sorted(man_new - man_old)
@@ -1280,17 +1139,13 @@ def cdc_feed(
                 df = bs.read.parquet(
                     *[os.path.join(table_dir, f) for f in fresh]
                 )
-                if append_fast_path == "assume" or _keys_provably_new(
-                    bs, parent, df
-                ):
+                if _keys_provably_new(bs, parent, df):
                     d = _added_only(df, version)
                 else:
                     # Surface the cost cliff ONCE per stream: the
                     # fallback is correct but O(table) per commit
-                    # instead of O(changed rows) — operators should
-                    # either add single-key stats_cols to the table or
-                    # pass append_fast_path="assume" if they guarantee
-                    # the new-keys contract themselves.
+                    # instead of O(changed rows) — operators should add
+                    # single-key stats_cols to the table.
                     if not fallback_seen:
                         fallback_seen.append(version)
                         _LOG.warning(
@@ -1299,10 +1154,9 @@ def cdc_feed(
                             "missing key-column stats, or interleaved "
                             "key ranges) — falling back to the full "
                             "snapshot_diff, O(table) per append commit. "
-                            "Add single-key stats_cols to the table or "
-                            'pass append_fast_path="assume" if appended '
-                            "keys are guaranteed new. Logged once; "
-                            "later commits may fall back silently.",
+                            "Add single-key stats_cols to the table. "
+                            "Logged once; later commits may fall back "
+                            "silently.",
                             table_dir,
                             version,
                         )
@@ -1468,7 +1322,6 @@ def view_maintainer(
     key_cols: list[str],
     view_dir: str,
     checkpoint_dir: str,
-    append_fast_path: bool = True,
 ):
     """Incremental materialized-view maintenance (IVM): a per-group
     (n_rows, sum_<c>) aggregate view over a versioned table, updated
@@ -1486,12 +1339,11 @@ def view_maintainer(
     time-travelable.  Scale shape: per commit, work = one diff join of
     the two snapshots + a delta aggregate sized by the CHANGED rows +
     a view-sized merge join — never a full re-aggregation of the
-    table.  ``append_fast_path`` follows cdc_feed's validated default:
-    the adds-only shortcut is taken only when the commit-log stats
-    PROVE the appended keys new (or under "assume"), so an append that
-    re-adds an existing key is classified by the full diff instead of
-    silently double-counting in the view.  Returns the started
-    StreamingQuery.
+    table.  Appends follow cdc_feed's validated fast path: the
+    adds-only shortcut is taken only when the commit-log stats PROVE
+    the appended keys new, so an append that re-adds an existing key
+    is classified by the full diff instead of silently double-counting
+    in the view.  Returns the started StreamingQuery.
     """
     from sparkgraft.operators.merge import cdc_group_delta
     from sparkgraft.sinks.versioned import (
@@ -1574,7 +1426,6 @@ def view_maintainer(
         checkpoint_dir,
         apply_delta,
         include_values=True,
-        append_fast_path=append_fast_path,
     )
 
 
@@ -1588,30 +1439,62 @@ def merge_sink(
     sort_col: str | None = None,
     n_files: int | None = None,
 ):
-    """Streaming MERGE into a versioned table: each micro-batch
-    upserts (matched keys update, new keys insert) as ONE committed
-    version — ``upsert_sink``'s semantics on the transactional
-    primitive instead of bare parquet, with the touched-file set
+    """Streaming MERGE into a versioned table, the engine's streaming
+    upsert: each micro-batch upserts (matched keys update, new keys
+    insert) as ONE committed version, with the touched-file set
     stats-pruned by the source key range (upsert_versioned) so a
     narrow update batch rewrites a handful of files, not the table.
 
-    Within a batch the newest row per key wins by ``order_col``
-    (ties by nothing further — sources should be unique per
-    (key, order)).  Replay ledger: the committed-batch set rebuilds
-    from the manifests (the versioned_sink discipline).  The first
-    batch ever creates the table.  Returns the started
-    StreamingQuery.
+    The newest row per key wins by ``order_col``, within a batch and
+    across batches: a source row whose key is already stored with a
+    strictly newer ``order_col`` is a LATE row and is dropped before
+    the upsert, so it never overwrites newer stored state.  A NULL
+    order loses; an exact tie goes to the later batch (within a batch,
+    ties are broken by nothing further — sources should be unique per
+    (key, order)).  The late-row guard reads only the stored files the
+    source key range can hit (``read_versioned_skipping`` when every
+    key column has stats) and is planned against the snapshot it
+    reads: the sink must be the table's single writer.  A batch whose
+    rows are all late commits nothing.
+
+    Replay ledger: the committed-batch set rebuilds from the manifests
+    (the versioned_sink discipline).  The first batch ever creates the
+    table.  Returns the started StreamingQuery.
     """
     from pyspark.sql import Window
 
     from sparkgraft.sinks.versioned import (
+        _key_range_keep,
+        _snapshot,
         committed_batches,
         latest_version,
+        read_versioned,
+        read_versioned_skipping,
         upsert_versioned,
         write_versioned,
     )
 
     committed = committed_batches(table_dir)
+
+    def drop_late(spark, source):
+        """``source`` without the rows whose key is stored with a
+        strictly newer ``order_col``."""
+        version, man = _snapshot(table_dir, None)
+        if not man["files"]:
+            return source
+        keep = _key_range_keep(source, key_cols, man.get("stats_cols"))
+        stored = (
+            read_versioned(spark, table_dir, version)
+            if keep is None
+            else read_versioned_skipping(spark, table_dir, keep, version)
+        ).select(
+            *[F.col(k).alias(f"__stored_{k}") for k in key_cols],
+            F.col(order_col).alias("__stored_order"),
+        )
+        new, old = F.col(order_col), F.col("__stored_order")
+        on = [F.col(k) == F.col(f"__stored_{k}") for k in key_cols]
+        newer = (old > new) | (new.isNull() & old.isNotNull())
+        return source.join(stored, [*on, newer], "left_anti")
 
     def on_batch(batch, batch_id: int) -> None:
         if batch_id in committed or batch.isEmpty():
@@ -1629,6 +1512,9 @@ def merge_sink(
                 extra_meta={"batch_id": batch_id},
             )
         else:
+            source = drop_late(batch.sparkSession, source)
+            if source.isEmpty():
+                return
             upsert_versioned(
                 batch.sparkSession, table_dir, source, key_cols,
                 sort_col=sort_col, n_files=n_files,

@@ -188,8 +188,34 @@ def test_manifest_local_df_matches_distributed_read(spark, tmp_path):
     import pytest
     from pyspark.errors import AnalysisException
 
-    with pytest.raises(AnalysisException):
+    with pytest.raises(AnalysisException), pytest.warns(UserWarning):
         manifest_local_df(spark, str(tmp_path / "missing")).collect()
+
+
+def test_manifest_local_df_fallback_warns(spark, tmp_path, monkeypatch):
+    """A failed local read falls back to the distributed read and says
+    so: the warning names the path and the exception class, and the
+    rows are the distributed read's."""
+    import pyarrow.parquet as pq
+    import pytest
+
+    from sparkgraft.sinks.versioned import manifest_local_df
+
+    p = str(tmp_path / "manifest")
+    spark.range(3).selectExpr(
+        "concat('f', id) AS file", "id AS n_rows"
+    ).write.parquet(p)
+
+    def boom(*args, **kwargs):
+        raise OSError("unreadable footer")
+
+    monkeypatch.setattr(pq, "read_table", boom)
+    match = r"manifest_local_df\(.*manifest\).*OSError"
+    with pytest.warns(UserWarning, match=match):
+        got = manifest_local_df(spark, p)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark.read.parquet(p).collect())
+    )
 
 
 def test_bloom_keep_python_positions_match_sql_expression(spark):

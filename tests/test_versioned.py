@@ -33,6 +33,62 @@ def ids(df):
     return sorted(r["id"] for r in df.collect())
 
 
+def _per_version_diff(spark, t, key_cols, compare_cols, include_values=False):
+    """Reference CDC rows: every committed version's snapshot_diff
+    against its parent (an empty snapshot for version 0), both read
+    through read_versioned(version=...)."""
+    from pyspark.sql import functions as F
+
+    from sparkgraft.operators.merge import snapshot_diff
+    from sparkgraft.sinks.versioned import committed_manifests
+
+    rows = []
+    for man in committed_manifests(t):
+        new = read_versioned(spark, t, version=man["version"])
+        old = (
+            new.limit(0)
+            if man["parent"] is None
+            else read_versioned(spark, t, version=man["parent"])
+        )
+        diff = snapshot_diff(
+            old, new, key_cols, compare_cols, include_values=include_values
+        )
+        rows += [
+            tuple(r)
+            for r in diff.filter(F.col("change_type") != "unchanged")
+            .withColumn("_commit_version", F.lit(man["version"]))
+            .collect()
+        ]
+    return sorted(rows)
+
+
+def _drain_cdc(spark, t, key_cols, compare_cols, ckpt, caplog,
+               include_values=False):
+    """Drain cdc_feed over ``t``; returns its sorted rows and the
+    fallback warnings it logged (one at most, naming the first append
+    commit that could not take the fast path)."""
+    import logging
+
+    from sparkgraft.streaming.pipeline import cdc_feed
+
+    rows = []
+
+    def sink(df, batch_id):
+        rows.extend(tuple(r) for r in df.collect())
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="sparkgraft.streaming"):
+        q = cdc_feed(
+            spark, t, key_cols, compare_cols, ckpt, sink,
+            include_values=include_values,
+        )
+        q.awaitTermination(120)
+    warns = [
+        r.getMessage() for r in caplog.records if "failed the" in r.getMessage()
+    ]
+    return sorted(rows), warns
+
+
 def test_time_travel_across_versions(spark, tmp_path):
     t = str(tmp_path / "tbl")
     v0 = write_versioned(df_of(spark, [1, 2]), t, mode="overwrite")
@@ -783,7 +839,10 @@ def test_versioned_sink_expectations_quarantine(spark, tmp_path):
 
 def test_merge_sink_streaming_upsert(spark, tmp_path):
     """Streaming MERGE: per-batch upsert commits, last-writer-wins by
-    order_col within a batch, cross-batch updates land, replay after
+    order_col within a batch, cross-batch updates land, a LATE row (an
+    older order_col than the stored one, or a NULL order) does not
+    overwrite newer stored state while an order tie goes to the later
+    batch, an all-late batch commits nothing, and replay after
     checkpoint loss applies nothing twice."""
     import shutil
 
@@ -816,50 +875,50 @@ def test_merge_sink_streaming_upsert(spark, tmp_path):
     drain("c1")
     got = {r["k"]: r["v"] for r in read_versioned(spark, t).collect()}
     assert got == {1: 99, 2: 20, 3: 30}
-    v_after = latest_version(t)
 
-    # full replay: both batches re-deliver; the manifest ledger skips
+    # late (ord 1 < stored 3), NULL order, and a tie on ord
+    (src / "b3.csv").write_text("k,v,ord\n1,10,1\n2,21,\n3,31,1\n")
+    drain("c1")
+    got = {r["k"]: r["v"] for r in read_versioned(spark, t).collect()}
+    assert got == {1: 99, 2: 20, 3: 31}
+    v_after = latest_version(t)
+    (src / "b4.csv").write_text("k,v,ord\n1,5,2\n")  # every row late
+    drain("c1")
+    assert latest_version(t) == v_after
+
+    # full replay: every batch re-delivers; the manifest ledger skips
     shutil.rmtree(str(tmp_path / "c1"))
     drain("c1")
     assert latest_version(t) == v_after
     got = {r["k"]: r["v"] for r in read_versioned(spark, t).collect()}
-    assert got == {1: 99, 2: 20, 3: 30}
+    assert got == {1: 99, 2: 20, 3: 31}
 
 
-def test_cdc_feed_append_fast_path_equals_full_diff(spark, tmp_path):
+def test_cdc_feed_append_fast_path_equals_full_diff(spark, tmp_path, caplog):
     """The append fast path (new-files-only, no join) must emit rows
-    identical to the full snapshot_diff for a keyed append."""
-    from sparkgraft.sinks.versioned import write_versioned
-    from sparkgraft.streaming.pipeline import cdc_feed
-
+    identical to the per-version snapshot_diff for a keyed append; the
+    append's key range is disjoint, so it takes the fast path (no
+    fallback warning)."""
     t = str(tmp_path / "vt")
     write_versioned(
         spark.createDataFrame([(i, float(i)) for i in range(50)],
                               "k long, v double"),
-        t, mode="overwrite",
+        t, mode="overwrite", stats_cols=["k"],
     )
     write_versioned(
         spark.createDataFrame([(i, 1.0) for i in range(50, 80)],
                               "k long, v double"),
-        t, mode="append",
+        t, mode="append", stats_cols=["k"],
     )
-
-    def drain(ckpt, fast):
-        rows = []
-
-        def sink(df, batch_id):
-            rows.extend(sorted(tuple(r) for r in df.collect()))
-
-        q = cdc_feed(
-            spark, t, ["k"], ["v"], str(tmp_path / ckpt), sink,
-            include_values=True, append_fast_path=fast,
-        )
-        q.awaitTermination(120)
-        return sorted(rows)
-
-    fast = drain("cf", True)
-    slow = drain("cs", False)
-    assert fast == slow and len(fast) == 80
+    fast, warns = _drain_cdc(
+        spark, t, ["k"], ["v"], str(tmp_path / "cf"), caplog,
+        include_values=True,
+    )
+    assert warns == []
+    assert fast == _per_version_diff(
+        spark, t, ["k"], ["v"], include_values=True
+    )
+    assert len(fast) == 80
     added_v1 = [r for r in fast if r[-1] == 1]
     assert len(added_v1) == 30 and all(r[1] == "added" for r in added_v1)
 
@@ -991,16 +1050,11 @@ def test_cdc_append_fast_path_validates_new_keys_contract(
     spark, tmp_path, caplog
 ):
     """ADVICE r5: the append fast path must not emit a re-added
-    existing key as 'added' — with commit-log stats the default
-    validates the fresh key range and falls back to the full diff on
-    overlap; a provably disjoint append still takes the fast path.
-    ADVICE r6: the first fallback WARNS (once per stream) so the
+    existing key as 'added' — with commit-log stats the fresh key range
+    is validated and an overlapping append falls back to the full diff;
+    a provably disjoint append still takes the fast path.  ADVICE r6:
+    the first fallback WARNS (once per stream) so the
     O(table)-per-commit cost cliff is visible to operators."""
-    import logging
-
-    from sparkgraft.sinks.versioned import write_versioned
-    from sparkgraft.streaming.pipeline import cdc_feed
-
     t = str(tmp_path / "vt")
     write_versioned(
         spark.createDataFrame([(i, float(i)) for i in range(50)],
@@ -1014,45 +1068,26 @@ def test_cdc_append_fast_path_validates_new_keys_contract(
         t, mode="append", stats_cols=["k"], sort_col="k", n_files=1,
     )
     # ... v2: RE-ADDS key 10 with the same value (overlapping range ->
-    # full diff classifies it; the old unconditional fast path would
-    # have emitted a spurious 'added' for an unchanged key)
+    # full diff classifies it; an unconditional fast path would emit a
+    # spurious 'added' for an unchanged key)
     write_versioned(
         spark.createDataFrame([(10, 10.0)], "k long, v double"),
         t, mode="append", stats_cols=["k"],
     )
-
-    def drain(ckpt, fast):
-        rows = []
-
-        def sink(df, batch_id):
-            rows.extend(tuple(r) for r in df.collect())
-
-        q = cdc_feed(
-            spark, t, ["k"], ["v"], str(tmp_path / ckpt), sink,
-            append_fast_path=fast,
-        )
-        q.awaitTermination(120)
-        return sorted(rows)
-
-    with caplog.at_level(logging.WARNING, logger="sparkgraft.streaming"):
-        validated = drain("cv", True)
-    fallback_warns = [
-        r for r in caplog.records if "failed the" in r.getMessage()
-    ]
-    assert len(fallback_warns) == 1  # once per stream, not per commit
-    assert "append_fast_path" in fallback_warns[0].getMessage()
-    full = drain("cf", False)
-    assert validated == full
+    validated, warns = _drain_cdc(
+        spark, t, ["k"], ["v"], str(tmp_path / "cv"), caplog
+    )
+    # once per stream, not per commit; it names v2, so v1 (drained
+    # first) took the fast path
+    assert len(warns) == 1 and "append commit v2 " in warns[0], warns
+    assert "single-key stats_cols" in warns[0]
+    assert validated == _per_version_diff(spark, t, ["k"], ["v"])
     # v2's re-add of an unchanged key emits NOTHING (it is 'unchanged'
     # under the diff; note the duplicate row itself remains in the
     # table — CDC classification is about keys)
     assert [r for r in validated if r[-1] == 2] == []
     v1 = [r for r in validated if r[-1] == 1]
     assert len(v1) == 10 and all(r[1] == "added" for r in v1)
-    # "assume" preserves the unconditional fast path: v2 re-emits as added
-    assumed = drain("ca", "assume")
-    v2a = [r for r in assumed if r[-1] == 2]
-    assert len(v2a) == 1 and v2a[0][1] == "added"
 
 
 def test_versioned_sink_auto_compaction(spark, tmp_path):
@@ -1320,20 +1355,19 @@ def test_latest_version_scans_past_stale_pointer(spark, tmp_path):
         assert fh.read().strip() == "3"
 
 
-def test_composite_key_cdc_fast_path_and_merge_prune(spark, tmp_path):
+def test_composite_key_cdc_fast_path_and_merge_prune(spark, tmp_path, caplog):
     """Round-7 verdict task: composite keys prune conjunctively —
     disjointness on ANY stats column proves key-tuple disjointness.
     The CDC append fast path fires on a provably-disjoint two-column
-    append (validated == assume on an adds-only table), and a MERGE
-    keyed on two columns auto-prunes its touched set to the files
-    overlapping the source range on BOTH columns."""
+    append (no fallback warning for it), and a MERGE keyed on two
+    columns auto-prunes its touched set to the files overlapping the
+    source range on BOTH columns."""
     from sparkgraft.sinks.versioned import (
         _read_manifest,
         read_versioned,
         upsert_versioned,
         write_versioned,
     )
-    from sparkgraft.streaming.pipeline import cdc_feed
 
     t = str(tmp_path / "vt")
     # v0: (g, k) composite key; files range-split on k: [0..24], [25..49]
@@ -1366,32 +1400,16 @@ def test_composite_key_cdc_fast_path_and_merge_prune(spark, tmp_path):
         t, mode="append", stats_cols=["g", "k"], n_files=1,
     )
 
-    def drain(ckpt, fast):
-        rows = []
-
-        def sink(df, batch_id):
-            rows.extend(tuple(r) for r in df.collect())
-
-        q = cdc_feed(
-            spark, t, ["g", "k"], ["v"], str(tmp_path / ckpt), sink,
-            append_fast_path=fast,
-        )
-        q.awaitTermination(120)
-        return sorted(rows)
-
-    validated = drain("cv", True)
-    full = drain("cf", False)
-    assert validated == full
+    validated, warns = _drain_cdc(
+        spark, t, ["g", "k"], ["v"], str(tmp_path / "cv"), caplog
+    )
+    # the one fallback names v3: the conjunctive check TOOK the fast
+    # path on both disjoint appends (v1, v2), drained before it
+    assert len(warns) == 1 and "append commit v3 " in warns[0], warns
+    assert validated == _per_version_diff(spark, t, ["g", "k"], ["v"])
     assert [r for r in validated if r[-1] == 3] == []  # v3 re-add: unchanged
     assert len([r for r in validated if r[-1] == 1]) == 10
     assert len([r for r in validated if r[-1] == 2]) == 1
-    # v1 and v2 are adds-only, so "assume" (unconditional fast path)
-    # agrees with the validated run there — proving the conjunctive
-    # check actually TOOK the fast path on both disjoint appends.
-    assumed = drain("ca", "assume")
-    assert [r for r in assumed if r[-1] in (1, 2)] == [
-        r for r in validated if r[-1] in (1, 2)
-    ]
 
     # MERGE auto-prune on the composite key: source (g=1, k in 52..54)
     # overlaps only v1's file on both columns — the two v0 files and
